@@ -12,12 +12,7 @@ queries()    — 164 catalog queries: SURVEY.md §2.11 core (q1–q28), the
                embedding decontamination, Gopher gate, incremental
                dedup), the full 602-term location dictionary, k-means,
                and the reprocess idempotence invariant. ALL 164 carry
-               DuckDB oracles.
-               Ordered by verification priority (the driver checks the
-               first 50): see mbgspark/plans/catalog.py for the current
-               (round-14) staleness-rotation packing — oldest-cohort
-               entries first (the last 14 r10-cohort rows, then the r11
-               cohort), next cohort queued past the window.
+               DuckDB oracles, and parity is checked over all of them.
 oracle_sql() — matching DuckDB SQL per query.
 
 Implementation lives in the ``mbgspark`` package.

@@ -47,11 +47,6 @@ def clean_at_ingest(c: Column) -> Column:
     return _collapse_ws(c)
 
 
-def word_bounded_contains(text: Column, term: Column) -> Column:
-    """C7 (utils.py:368): ``\\b term \\b`` containment, term from a column."""
-    return text.rlike(F.concat(F.lit(r"\b"), term, F.lit(r"\b")))
-
-
 def normalize_separators(c: Column) -> Column:
     """C8 (utils.py:358-361): map ``- / \\ | _ , ; .`` to spaces pre-match."""
     return F.regexp_replace(c, r"[-/\\|_,;.]", " ")

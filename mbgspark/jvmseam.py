@@ -39,14 +39,15 @@ Seams (pin tests co-located in ``tests/test_jvmseam.py``):
    UTF-8 sidecar reads/writes that travel with the store on any Hadoop-
    compatible FS (local, HDFS, S3A) instead of assuming ``os.path``.
    Failure direction: loud AttributeError at the call site.
-5. ``app_shuffle_write_records`` — the core ``AppStatusStore`` stage
-   list via ``sc._jsc.sc().statusStore()``. App-cumulative
-   shuffle-write records, the per-BATCH work ledger for streaming
-   soaks (``executed_plan_metrics`` covers plans the caller drives
-   itself; a foreachBatch micro-batch's jobs are only visible here).
-   Snapshot-diff semantics; bounded by ``spark.ui.retainedStages``
-   (default 1000 — a soak's few hundred stages fit). Failure
-   direction: loud Py4JError in the soak and its pin test.
+5. ``app_shuffle_write_records`` / ``last_stage_id`` /
+   ``retained_stages`` — the core ``AppStatusStore`` stage list via
+   ``sc._jsc.sc().statusStore()``. Shuffle-write records (or any stage
+   metric) of the stages after a stage-id marker, the per-BATCH work
+   ledger for streaming soaks (``executed_plan_metrics`` covers plans
+   the caller drives itself; a foreachBatch micro-batch's jobs are only
+   visible here). Bounded by ``spark.ui.retainedStages`` (default
+   1000 — a soak's few hundred stages fit). Failure direction: loud
+   Py4JError in the soak and its pin test.
 """
 
 from __future__ import annotations
@@ -213,26 +214,41 @@ def fs_write_utf8(spark: SparkSession, path: str, data: str) -> None:
 
 
 # ----------------------------------------------- 5. app-level stage metrics ----
-def app_shuffle_write_records(spark: SparkSession) -> int:
-    """App-cumulative ``shuffleWriteRecords`` summed over every stage the
-    core AppStatusStore retains. Callers snapshot before/after a unit of
-    work (e.g. one streaming micro-batch) and diff — the load-independent
+def app_shuffle_write_records(
+    spark: SparkSession, after_stage: int = -1
+) -> int:
+    """``shuffleWriteRecords`` summed over the stages the core
+    AppStatusStore retains whose id is above ``after_stage``. Callers take
+    ``last_stage_id`` before a unit of work (e.g. one streaming
+    micro-batch) and pass it here afterwards — the load-independent
     per-batch work ledger the soak tools attach to crash/replay evidence.
+    Stage ids only grow and the store evicts the oldest stages first, so
+    the marker keeps the sum exact even when stages from before it are
+    evicted in between (a before/after diff of two app-wide sums is not).
 
     Uses the full ``stageList(statuses, details, taskMetrics,
     quantiles, taskStatus)`` signature (the zero-arg Scala overloads are
     default-argument synthetics py4j cannot resolve). Retention caveat:
     the store keeps ``spark.ui.retainedStages`` stages (default 1000);
-    diffs are exact while the app stays under that, which a soak's few
-    hundred stages do."""
-    total = 0
-    for stage in _retained_stages(spark):
-        total += stage.shuffleWriteRecords()
-    return int(total)
+    the sum misses stages after the marker only once that many stages
+    ran after it."""
+    return int(
+        sum(s.shuffleWriteRecords() for s in retained_stages(spark, after_stage))
+    )
 
 
-def _retained_stages(spark: SparkSession):
-    """Iterate the AppStatusStore's retained stage summaries."""
+def last_stage_id(spark: SparkSession) -> int:
+    """Highest stage id the AppStatusStore holds, -1 when it holds none:
+    the marker for ``app_shuffle_write_records``/``retained_stages``. The
+    listener bus is drained first, so a stage that already ran cannot
+    reach the store after the marker is taken and count as later work."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return max((s.stageId() for s in retained_stages(spark)), default=-1)
+
+
+def retained_stages(spark: SparkSession, after_stage: int = -1):
+    """Iterate the AppStatusStore's retained stage summaries (StageData)
+    whose id is above ``after_stage``."""
     gw = spark.sparkContext._gateway
     jvm = gw.jvm
     store = spark.sparkContext._jsc.sc().statusStore()
@@ -245,7 +261,9 @@ def _retained_stages(spark: SparkSession):
     )
     it = stages.iterator()
     while it.hasNext():
-        yield it.next()
+        stage = it.next()
+        if stage.stageId() > after_stage:
+            yield stage
 
 
 def assert_stage_retention_headroom(spark: SparkSession, frac: float = 0.8) -> int:
@@ -259,7 +277,7 @@ def assert_stage_retention_headroom(spark: SparkSession, frac: float = 0.8) -> i
 
     Returns the retained stage count (for logging)."""
     limit = int(spark.conf.get("spark.ui.retainedStages", "1000"))
-    n = sum(1 for _ in _retained_stages(spark))
+    n = sum(1 for _ in retained_stages(spark))
     if n > frac * limit:
         raise RuntimeError(
             f"AppStatusStore holds {n} stages, > {frac:.0%} of "

@@ -3,24 +3,27 @@
 Round 1 shipped the matching MECHANISM (operators/locate.py) over a 12-row
 sample dim; this module ships the reference's actual 38-province / 456-city
 dictionary (``mbgspark.locations_data``, from ``config/indonesia_locations
-.json``) flattened into one priority-ordered term table, plus a hybrid
-containment strategy that stays scalable at that dim size:
+.json``) flattened into one priority-ordered term table, plus two
+strategies whose per-row cost does not grow with the dictionary:
 
-- single-word terms (~85% of the table) match by token equi-join — explode
-  the text's tokens (split on non-word chars = the reference's \\b
-  boundary) once, hash-join against the broadcast dim, O(tokens) per row
-  regardless of dim size;
-- multi-word terms are prefiltered by their first token through the same
-  equi-join, then the rare candidates pay a \\b-bounded regexp verify —
-  never a corpus×terms nested loop;
-- first-match = global min(dict_order) over both candidate sets (the
-  tiered order encodes the reference's break structure — see
-  build_full_locations_dim), then one broadcast join back for
-  (province, city).
+- ``locate_compiled`` (the default up to a few thousand terms): one narrow
+  projection over constant bucketed maps — each token is looked up in one
+  small map, and the multi-word regexp verifies run only for rows holding
+  the first word of some multi-word term; zero joins, zero shuffles;
+- ``locate_hybrid`` (any dim size): single-word terms
+  (~85% of the table) match by token equi-join — explode the text's
+  tokens (split on non-word chars = the reference's \\b boundary) once,
+  hash-join against the broadcast dim; multi-word terms are prefiltered by
+  their first token through the same equi-join, then the rare candidates
+  pay a \\b-bounded regexp verify — never a corpus×terms nested loop;
+  first-match = global min over both candidate sets, then one broadcast
+  join back for (province, city).
 
-This replaces the 456-branch CASE chain for the full dictionary: the chain
-is O(|dim|) regexes per row (fine at 12 terms, the lifecycle's dim), the
-hybrid is O(tokens + |multiword|) with the heavy part a hash join.
+Both rank the dim by dict_order (the tiered order encodes the reference's
+break structure — see build_full_locations_dim) and return identical
+results. Both replace the 456-branch CASE chain for the full dictionary:
+the chain is O(|dim|) regexes per row (fine at 12 terms, the lifecycle's
+dim).
 
 Matching semantics flattened from ``detect_location_from_text``
 (utils.py:336-437) — see ``build_full_locations_dim``.
@@ -28,7 +31,7 @@ Matching semantics flattened from ``detect_location_from_text``
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mbgspark.locations_data import INDONESIA_LOCATIONS
@@ -207,6 +210,20 @@ def _term_pattern(term: str) -> str:
     return r"\b" + _re.escape(term) + r"\b"
 
 
+def _ranked(
+    dim_rows: list[tuple[str, str | None, int, str]],
+) -> list[tuple[str, str | None, int, str]]:
+    """The dim with each row's dict_order replaced by its 1-based rank in a
+    stable sort by dict_order: rows sharing an order keep dim order (the
+    first one wins, as in the CASE chain) and each keeps its own
+    (province, city)."""
+    by_order = sorted(range(len(dim_rows)), key=lambda i: dim_rows[i][2])
+    return [
+        (dim_rows[i][0], dim_rows[i][1], rank, dim_rows[i][3])
+        for rank, i in enumerate(by_order, 1)
+    ]
+
+
 def locate_hybrid(
     fact: DataFrame,
     dim_rows: list[tuple[str, str | None, int, str]],
@@ -215,8 +232,11 @@ def locate_hybrid(
 ) -> DataFrame:
     """First-match location detection against an arbitrary-size dim via the
     hybrid token-join + multiword-containment strategy (module docstring).
-    Returns fact columns + (province, city) — null when nothing matched."""
+    Returns fact columns + (province, city) — null when nothing matched.
+    Rows are matched by rank (``_ranked``), so dim rows sharing a
+    dict_order resolve like they do in ``locate_compiled``."""
     spark = fact.sparkSession
+    dim_rows = _ranked(dim_rows)
     # lookup rows built driver-side so multi-word terms carry a precomputed
     # re.escape'd \b-pattern (regexp verify below — \b is the reference's
     # boundary, and after prep the text still holds non-separator
@@ -300,6 +320,35 @@ def _sql_str(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+# Single-word terms, and the first words of multi-word terms, are probed
+# through LOCATE_BUCKETS small map literals picked by a key that Python
+# (for the terms) and Spark SQL (for the tokens) compute alike: len/ord and
+# length/ascii all count Unicode code points.
+LOCATE_BUCKETS = 64
+# the one entry of an otherwise empty bucket map: tokens are split on ' ',
+# so no token can equal a key holding a space
+EMPTY_BUCKET_KEY = " "
+
+
+def locate_bucket(token: str) -> int:
+    """0-based bucket of ``token`` — ``_bucket_probe``'s SQL key in Python."""
+    return (len(token) * 31 + (ord(token[0]) if token else 0)) % LOCATE_BUCKETS
+
+
+def _bucket_probe(entries: dict[str, int], var: str) -> str:
+    """SQL for ``entries[var]`` (NULL when absent) as an O(1) bucket pick
+    from a constant array of small maps, then a scan of that one map."""
+    buckets: list[list[str]] = [[] for _ in range(LOCATE_BUCKETS)]
+    for k, v in entries.items():
+        buckets[locate_bucket(k)].append(f"{_sql_str(k)},{v}")
+    maps = ",".join(
+        "map(" + (",".join(b) or f"{_sql_str(EMPTY_BUCKET_KEY)},0") + ")"
+        for b in buckets
+    )
+    key = f"pmod(length({var}) * 31 + ascii({var}), {LOCATE_BUCKETS}) + 1"
+    return f"element_at(element_at(array({maps}), {key}), {var})"
+
+
 def locate_compiled(
     fact: DataFrame,
     dim_rows: list[tuple[str, str | None, int, str]],
@@ -307,84 +356,86 @@ def locate_compiled(
     text_col: str,
 ) -> DataFrame:
     """First-match location detection compiled to ONE narrow projection —
-    zero joins, zero shuffles:
+    zero joins, zero shuffles. Every dim row is ranked (``_ranked``), the
+    first match is the least matching rank, and its cost per row is
+    O(tokens), not O(tokens × dictionary):
 
-    - single-word terms become a constant-folded ``map(term → dict_order)``
-      probed per token (`array_min(transform(split(t), t → element_at))` —
-      tokens from the translate-punctuation form = the reference's \\b
-      boundary, see ``token_form``),
-    - multi-word terms become an array of ``IF(contains(s, term),
-      IF(first/last-word token guards AND s RLIKE '\\bterm\\b', order,
-      NULL), NULL)`` branches — the plain substring ``contains`` is a
-      necessary condition that short-circuits the token guards and the
-      regexp to the rare candidate rows. The token guards
-      (``array_contains(__tk, word)`` for the term's first AND last word)
-      mirror locate_hybrid's equi-join prefilter + last-word guard: Java's
-      ASCII \\b would accept a term glued to a unicode letter
-      ('caféjakarta selatan') that the reference's unicode \\b rejects
-      (ADVICE r3),
-    - first match = ``least()`` of both minima,
-    - (province, city) resolved through a constant ``map(order → struct)``.
+    - single-word terms: each token of the translate-punctuation form
+      (the reference's \\b boundary, see ``token_form``) is probed in a
+      bucketed map literal (``_bucket_probe``: an O(1) key picks one of
+      ``LOCATE_BUCKETS`` maps of ~7 terms each, in place of a linear scan
+      of all 466);
+    - multi-word terms: ``__fw`` keeps the tokens that begin some
+      multi-word term (the same bucketed probe). Rows where it is empty —
+      most rows — skip every multi-word branch. Otherwise each first word
+      present gates its own terms' ``IF(contains(s, term), IF(last-word
+      token guard AND s RLIKE '\\bterm\\b', rank, NULL), NULL)``
+      branches. The token guards (first word through the gate, last word
+      through ``array_contains(__tk, word)``) mirror locate_hybrid's
+      equi-join prefilter + last-word guard: Java's ASCII \\b would
+      accept a term glued to a unicode letter ('caféjakarta selatan')
+      that the reference's unicode \\b rejects (ADVICE r3);
+    - first match = ``least()`` of both minima;
+    - (province, city) is read from a constant array indexed by rank.
 
-    At 602 terms this beats the join-based ``locate_hybrid`` ~2.5× at sf0.1
-    (exec 0.55 s vs 1.5 s) because nothing shuffles and prep is computed
-    once. The literal maps live in the plan, so this strategy caps at
-    dims of a few thousand terms — beyond that (or when the dim is itself
-    distributed data) use ``locate_hybrid``; both return identical results
+    The literals live in the plan, so this strategy caps at dims of a few
+    thousand terms — beyond that (or when the dim is itself distributed
+    data) use ``locate_hybrid``; both return identical results
     (equivalence pinned in tests)."""
-    singles = [(t, o) for p, c, o, t in dim_rows if " " not in t]
-    multis = [(t, o) for p, c, o, t in dim_rows if " " in t]
-    map_sql = "map(" + ",".join(f"{_sql_str(t)},{o}" for t, o in singles) + ")"
+    ranked = _ranked(dim_rows)
+    singles: dict[str, int] = {}
+    groups: dict[str, dict[str, int]] = {}
+    for _p, _c, r, t in ranked:
+        if " " in t:
+            groups.setdefault(t.split(" ")[0], {}).setdefault(t, r)
+        else:
+            singles.setdefault(t, r)
     single_min = (
-        f"array_min(transform(__tk,"
-        f" t -> element_at({map_sql}, t)))"
+        f"array_min(transform(__tk, t -> {_bucket_probe(singles, 't')}))"
     )
 
-    def _guards(t: str) -> str:
+    def _branch(t: str, r: int) -> str:
         words = t.split(" ")
-        first, last = words[0], words[-1]
-        g = f"array_contains(__tk, {_sql_str(first)})"
-        if last != first:
-            g += f" AND array_contains(__tk, {_sql_str(last)})"
-        return g
+        guard = f"__s RLIKE {_sql_str(_term_pattern(t))}"
+        if words[-1] != words[0]:
+            guard = f"array_contains(__tk, {_sql_str(words[-1])}) AND {guard}"
+        return f"IF(contains(__s, {_sql_str(t)}), IF({guard}, {r}, NULL), NULL)"
 
-    multi_min = "array_min(array(" + ",".join(
-        f"IF(contains(__s, {_sql_str(t)}),"
-        f" IF({_guards(t)} AND __s RLIKE {_sql_str(_term_pattern(t))},"
-        f" {o}, NULL), NULL)"
-        for t, o in multis
-    ) + "))"
-    out_map = "map(" + ",".join(
-        "{o}, named_struct('province', {p}, 'city', {c})".format(
-            o=o,
+    multi_min = "CAST(NULL AS INT)"
+    if groups:
+        gated = ",".join(
+            f"IF(array_contains(__fw, {_sql_str(w)}), array_min(array("
+            + ",".join(_branch(t, r) for t, r in terms.items())
+            + ")), NULL)"
+            for w, terms in groups.items()
+        )
+        multi_min = f"IF(size(__fw) = 0, NULL, array_min(array({gated})))"
+    first_words = {w: 1 for w in groups}
+    hits = "array(" + ",".join(
+        "named_struct('province', {p}, 'city', {c})".format(
             p=_sql_str(p),
             c=_sql_str(c) if c is not None else "CAST(NULL AS STRING)",
         )
-        for p, c, o, t in dim_rows
+        for p, c, _r, _t in ranked
     ) + ")"
     prepped = (
         fact.withColumn("__s", prep_location_text(F.col(text_col)))
         .withColumn("__t", token_form(F.col(text_col)))
         .withColumn("__tk", F.expr("split(__t, ' ')"))
+        .withColumn(
+            "__fw",
+            F.expr(
+                f"filter(__tk, t -> {_bucket_probe(first_words, 't')}"
+                " IS NOT NULL)"
+            ),
+        )
     )
     best = prepped.withColumn(
         "__o", F.expr(f"least({single_min}, {multi_min})")
     )
-    out = best.withColumn("__hit", F.expr(f"element_at({out_map}, __o)"))
+    out = best.withColumn("__hit", F.expr(f"element_at({hits}, __o)"))
     return out.select(
         *fact.columns,
         F.col("__hit.province").alias("province"),
         F.col("__hit.city").alias("city"),
-    )
-
-
-def default_locations_dim(spark: SparkSession) -> DataFrame:
-    """The full dictionary as the DEFAULT dim DataFrame (VERDICT r1 item 4);
-    the 12-row sample in schema.DEFAULT_LOCATIONS remains available for
-    small-dim paths (e.g. the lifecycle's compiled CASE chain)."""
-    from mbgspark.schema import LOCATIONS_DIM_SCHEMA  # noqa: F401  (shape doc)
-
-    return spark.createDataFrame(
-        build_full_locations_dim(),
-        "province string, city string, dict_order int, term string",
     )

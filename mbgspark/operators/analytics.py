@@ -29,17 +29,6 @@ def conditional_rollup(df: DataFrame, preds: dict[str, Column]) -> DataFrame:
     )
 
 
-def monthly_rollup(
-    df: DataFrame, ts_col: str, aggs: list[Column]
-) -> DataFrame:
-    """A7/T5: month partition rollup (utils.py:225-253)."""
-    return (
-        df.groupBy(F.date_trunc("month", F.col(ts_col)).alias("month"))
-        .agg(*aggs)
-        .orderBy("month")
-    )
-
-
 def daily_trend(df: DataFrame, ts_col: str, category_col: str) -> DataFrame:
     """A8 trend: per-day × category counts."""
     return (

@@ -448,38 +448,6 @@ def lsh_oversized_buckets(
     )
 
 
-def jaccard_verify(
-    shingled: DataFrame, pairs: DataFrame, id_col: str, threshold: float
-) -> DataFrame:
-    """Exact shingle-Jaccard on candidate pairs only (the cheap-to-expensive
-    two-pass plan the reference uses for location matching, utils.py:509-511).
-
-    intersection via equi-join on shingle; union = |A| + |B| − |A∩B|."""
-    counts = shingled.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    sh_a = shingled.select(F.col(id_col).alias("id_a"), F.col("shingle"))
-    sh_b = shingled.select(F.col(id_col).alias("id_b"), F.col("shingle"))
-    inter = (
-        pairs.join(sh_a, "id_a")
-        .join(sh_b, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    ca = counts.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    cb = counts.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(ca, "id_a")
-        .join(cb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 4
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
 def _shingles_of(toks: Column, k: int) -> Column:
     """Distinct k-word shingle ARRAY over a token-array column. ``toks``
     must be an ATTRIBUTE (an aliased column from its own projection), not

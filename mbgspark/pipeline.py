@@ -51,9 +51,10 @@ def detect_locations(df: DataFrame, dim, id_col: str = "_id") -> DataFrame:
     Strategy dispatch by dim size: small dims compile to the first-match
     CASE chain (one codegen'd pass, no join — right for the lifecycle's
     12-term dim); past ``_CASE_CHAIN_MAX_TERMS`` the O(|dim|) per-row regex
-    chain loses to the hybrid token-join + multiword-containment plan
-    (locations.locate_hybrid), which is how the full 602-term dictionary
-    runs by default. All strategies search the separator-translated text
+    chain loses to the O(tokens) bucketed-map projection
+    (locations.locate_compiled), which is how the full 602-term dictionary
+    runs, and past 4000 terms to the join-based locations.locate_hybrid.
+    All strategies search the separator-translated text
     (utils.py:358-361) so 'jakarta-selatan' matches the multi-word term on
     every path."""
     from mbgspark.locations import LOCATION_SEPARATORS
@@ -74,9 +75,8 @@ def detect_locations(df: DataFrame, dim, id_col: str = "_id") -> DataFrame:
         ]
         base = df.withColumn("__search", F.expr(search))
         # compiled constant-map projection up to a few thousand terms (zero
-        # shuffles, ~2.5x the hybrid's speed at the 602-term real dict);
-        # the join-based hybrid beyond, where plan-embedded literal maps
-        # stop being reasonable
+        # shuffles); the join-based hybrid beyond, where plan-embedded
+        # literal maps stop being reasonable
         strategy = locate_compiled if len(dicts) <= 4000 else locate_hybrid
         out = strategy(base, tuples, id_col, "__search")
         return out.drop("__search").withColumn(

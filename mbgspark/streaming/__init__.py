@@ -196,41 +196,53 @@ def start_merge_sink(
     ``max_records_per_file`` flows to ``write_partitioned``: at 100 TB a
     hot day is MANY part files under its partition directory, a store
     shape the bound produces automatically; the soak harness lowers it
-    to force that directory shape at test scale (tools/merge_soak.py)."""
+    to force that directory shape at test scale (tools/merge_soak.py).
+
+    Each batch is persisted for the length of ``_merge``: foreachBatch hands
+    over a LogicalRDD, which column pruning cannot see past, so every action
+    on it re-runs the whole upstream transform (for the lifecycle sink,
+    clean → label → locate) — once for the touched-partition collect in
+    ``merge_by_key`` and again for the write. A replayed batch is still
+    recomputed from the source, so exactly-once is unchanged."""
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch_df = batch_df.withColumn(
             "event_date", F.date_format("created_at", "yyyy-MM-dd")
-        )
-        # Only a genuinely-missing store means "first batch"; any other read
-        # failure (transient FS error, corrupt footer) must surface, not
-        # silently drop previously stored rows via the overwrite below.
-        if _store_exists(spark, store_path):
-            existing = spark.read.parquet(store_path)
-            # Partition-scoped merge: the window only needs to see store rows
-            # in the partitions this batch touches (a re-delivered key keeps
-            # its created_at, hence its partition — same contract as the
-            # reference's per-day collections, utils.py:583-584). The isin
-            # filter prunes at the store scan, so merge cost tracks touched
-            # days, not store size; dynamic partition overwrite then replaces
-            # only those same days.
-            merged = merge_by_key(
-                existing,
-                batch_df,
-                key=key,
-                order_col="scraped_at",
-                partition_col="event_date",
+        ).persist()
+        try:
+            # Only a genuinely-missing store means "first batch"; any other
+            # read failure (transient FS error, corrupt footer) must surface,
+            # not silently drop previously stored rows via the overwrite.
+            if _store_exists(spark, store_path):
+                existing = spark.read.parquet(store_path)
+                # Partition-scoped merge: the window only needs to see store
+                # rows in the partitions this batch touches (a re-delivered
+                # key keeps its created_at, hence its partition — same
+                # contract as the reference's per-day collections,
+                # utils.py:583-584). The isin filter prunes at the store
+                # scan, so merge cost tracks touched days, not store size;
+                # dynamic partition overwrite then replaces only those days.
+                merged = merge_by_key(
+                    existing,
+                    batch_df,
+                    key=key,
+                    order_col="scraped_at",
+                    partition_col="event_date",
+                )
+            else:
+                # no store yet — still dedup re-delivered keys in the batch
+                merged = keep_latest_per_key(
+                    batch_df, key=key, order_col="scraped_at"
+                )
+            write_partitioned(
+                merged,
+                store_path,
+                "event_date",
+                max_records_per_file=max_records_per_file,
             )
-        else:
-            # no store yet — still dedup re-delivered keys within the batch
-            merged = keep_latest_per_key(batch_df, key=key, order_col="scraped_at")
-        write_partitioned(
-            merged,
-            store_path,
-            "event_date",
-            max_records_per_file=max_records_per_file,
-        )
+        finally:
+            batch_df.unpersist()
 
     writer = stream.writeStream.foreachBatch(_merge).option(
         "checkpointLocation", checkpoint_path

@@ -175,16 +175,17 @@ def test_jvm_internals_confined_to_seam():
 
 
 def test_app_shuffle_records_seam_pinned(spark):
-    """Seam 5: app-cumulative shuffle-write records via the core
-    AppStatusStore. Snapshot-diff across one job whose shuffle record
+    """Seam 5: shuffle-write records via the core AppStatusStore. The
+    stages after a ``last_stage_id`` marker, one job whose shuffle record
     count is deterministic (partial agg of k = id % 10 over 4 input
-    partitions -> 4 x 10 partial rows) must equal exactly 40. A py4j
-    rename of statusStore/stageList fails here loudly."""
+    partitions -> 4 x 10 partial rows), must sum to exactly 40 — however
+    many older stages the store evicts meanwhile. A py4j rename of
+    statusStore/stageList fails here loudly."""
     import time
 
     from pyspark.sql import functions as F
 
-    before = jvmseam.app_shuffle_write_records(spark)
+    marker = jvmseam.last_stage_id(spark)
     (
         spark.range(0, 1000, 1, 4)
         .withColumn("k", F.col("id") % 10)
@@ -196,10 +197,10 @@ def test_app_shuffle_records_seam_pinned(spark):
     )
     # stage completion posts to the status store asynchronously
     deadline = time.time() + 10
-    delta = jvmseam.app_shuffle_write_records(spark) - before
+    delta = jvmseam.app_shuffle_write_records(spark, after_stage=marker)
     while delta < 40 and time.time() < deadline:
         time.sleep(0.2)
-        delta = jvmseam.app_shuffle_write_records(spark) - before
+        delta = jvmseam.app_shuffle_write_records(spark, after_stage=marker)
     assert delta == 40, delta
 
 

@@ -13,7 +13,10 @@ from __future__ import annotations
 
 from mbgspark.locations import (
     CITY_ABBREVIATIONS,
+    EMPTY_BUCKET_KEY,
+    LOCATE_BUCKETS,
     build_full_locations_dim,
+    locate_bucket,
     locate_compiled,
     locate_hybrid,
 )
@@ -98,16 +101,89 @@ def test_compiled_and_hybrid_strategies_agree(spark):
 
     rows = build_full_locations_dim()
     d = load_table(spark, "/root/testdata/sf0.001", "documents")
-    fact = d.select("doc_id", F.col("text"))
-    a = {
-        r["doc_id"]: (r["province"], r["city"])
-        for r in locate_compiled(fact, rows, "doc_id", "text").collect()
-    }
-    b = {
-        r["doc_id"]: (r["province"], r["city"])
-        for r in locate_hybrid(fact, rows, "doc_id", "text").collect()
-    }
-    assert a == b and len(a) > 0
+    edge = spark.createDataFrame(
+        list(enumerate(_EDGE_TEXTS, -len(_EDGE_TEXTS))),
+        "doc_id bigint, text string",
+    )
+    fact = d.select("doc_id", F.col("text")).unionByName(edge)
+
+    def run(strategy, dim):
+        return {
+            r["doc_id"]: (r["province"], r["city"])
+            for r in strategy(fact, dim, "doc_id", "text").collect()
+        }
+
+    a = run(locate_compiled, rows)
+    assert a == run(locate_hybrid, rows) and len(a) > len(_EDGE_TEXTS)
+    # dictionary rows that share a dict_order: each keeps its own
+    # (province, city), and among tied matches the earlier row wins
+    tied = [(p, c, o // 3, t) for p, c, o, t in rows]
+    assert run(locate_compiled, tied) == run(locate_hybrid, tied)
+    small = [
+        ("pa", "ca", 1, "alpha"),
+        ("pb", "cb", 1, "beta"),
+        ("pc", None, 0, "gamma delta"),
+        ("pd", "cd", 0, "delta"),
+    ]
+    tie_texts = ["beta", "beta alpha", "delta gamma", "gamma delta beta", "x"]
+    tie_fact = spark.createDataFrame(
+        list(enumerate(tie_texts)), "id bigint, text string"
+    )
+    for strategy in (locate_compiled, locate_hybrid):
+        got = {
+            r["id"]: (r["province"], r["city"])
+            for r in strategy(tie_fact, small, "id", "text").collect()
+        }
+        assert got == {
+            0: ("pb", "cb"),
+            1: ("pa", "ca"),
+            2: ("pd", "cd"),
+            3: ("pc", None),
+            4: (None, None),
+        }, strategy.__name__
+
+
+def _bucket_edge_tokens() -> list[str]:
+    """Non-term tokens aimed at the compiled strategy's bucketed lookup:
+    for every bucket, a token that lands in it without being a term — a
+    near miss of a term in a non-empty bucket (same length and first
+    letter), a repeated letter in an empty one, whose map holds only the
+    filler key."""
+    rows = build_full_locations_dim()
+    terms = {t for _p, _c, _o, t in rows}
+    singles = sorted(t for t in terms if " " not in t)
+    by_bucket: dict[int, str] = {}
+    for t in singles:
+        near = t[:-1] + ("x" if t[-1] != "x" else "q")
+        if near not in terms:
+            by_bucket.setdefault(locate_bucket(near), near)
+    for n in range(1, 40):
+        for ch in "abcdefghijklmnopqrstuvwxyz":
+            by_bucket.setdefault(locate_bucket(ch * n), ch * n)
+    assert len(by_bucket) == LOCATE_BUCKETS
+    assert not terms & set(by_bucket.values())
+    empty = set(range(LOCATE_BUCKETS)) - {locate_bucket(t) for t in singles}
+    assert empty, "no empty bucket left to exercise the filler key"
+    # tokens are split on ' ': a filler key holding one can never match
+    assert " " in EMPTY_BUCKET_KEY
+    return [by_bucket[b] for b in sorted(by_bucket)]
+
+
+# locate kernel edge cases, shared by the equivalence and reference tests
+_EDGE_TEXTS = [
+    "di  bandung",                       # double space: an empty token
+    "   ",
+    "jakarta  selatan",                  # double space inside a phrase
+    " ".join(_bucket_edge_tokens()),     # every bucket, no term
+    "bandunx di sby",                    # near miss next to a real term
+    "\u00fcber bandung",                 # non-ASCII first letters
+    "\u00e9lan \u4e2d\u6587 jakarta selatan",
+    "\U0001f600 sby \U0001f600",
+    "kota hujan",                        # first word present, phrase absent
+    "kalimantan raya",
+    "tanjung sungai muara",
+    "jawa xyz barat",
+]
 
 
 def _ref_detect(text):
@@ -202,6 +278,7 @@ def test_reference_loop_parity_fuzz(spark):
         "jakarta selatan\u00e9 asik",        # é-glued last word
         "caf\u00e9bandung",                  # é-glued single word → no match
         "bandung\u00e9",                     # trailing é-glue → no match
+        *_EDGE_TEXTS,
     ]
     fact = spark.createDataFrame(
         list(enumerate(texts)), "id bigint, text string"

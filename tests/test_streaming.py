@@ -1171,3 +1171,46 @@ def test_merge_sink_max_records_per_file_bounds_day_files(spark, tmp_path):
     files = [f for f in os.listdir(day) if f.endswith(".parquet")]
     assert len(files) == 3  # 6 rows / 2 per file
     assert spark.read.parquet(store).count() == 6
+
+
+def test_lifecycle_sink_transforms_each_batch_once(spark, tmp_path):
+    """Each lifecycle micro-batch runs clean → label → locate once: the
+    merge sink persists the batch, so the touched-partition collect and
+    the write share one pass. Read from the status store, the stages of a
+    micro-batch over an existing store read the source file's rows exactly
+    once — an unpersisted batch is a LogicalRDD that both actions re-read
+    from the file. Every other stage with input reads the persisted batch
+    back, which Spark counts as one record per cached column batch (one
+    here: a small file is one partition). The second file's days are new,
+    so the store scan prunes to nothing and adds no input records."""
+    from mbgspark import jvmseam
+    from mbgspark.streaming import start_etl_lifecycle_sink
+
+    def tweets(day, n):
+        return [
+            {
+                **R1,
+                "_id": f"{day}-{i}",
+                "text": f"program mbg di bandung bagus nomor {i}",
+                "created_at": f"2025-01-0{day}T10:00:00Z",
+                "scraped_at": f"2025-01-0{day}T11:00:00Z",
+            }
+            for i in range(n)
+        ]
+
+    src = tmp_path / "once_src"
+    store = str(tmp_path / "once_store")
+    ck = str(tmp_path / "once_ck")
+    for day, n in ((1, 30), (2, 20)):
+        _write_batch(src, tweets(day, n))
+        marker = jvmseam.last_stage_id(spark)
+        q = start_etl_lifecycle_sink(spark, str(src), store, ck, available_now=True)
+        q.awaitTermination(120)
+        jvmseam.last_stage_id(spark)  # drains the listener bus
+        reads = sorted(
+            s.inputRecords()
+            for s in jvmseam.retained_stages(spark, marker)
+            if s.inputRecords()
+        )
+        assert reads == [1] * (len(reads) - 1) + [n], (day, reads)
+    assert spark.read.parquet(store).count() == 50
