@@ -45,9 +45,10 @@ Seams (pin tests co-located in ``tests/test_jvmseam.py``):
    metric) of the stages after a stage-id marker, the per-BATCH work
    ledger for streaming soaks (``executed_plan_metrics`` covers plans
    the caller drives itself; a foreachBatch micro-batch's jobs are only
-   visible here). Bounded by ``spark.ui.retainedStages`` (default
-   1000 — a soak's few hundred stages fit). Failure direction: loud
-   Py4JError in the soak and its pin test.
+   visible here). The store evicts its oldest stages first, so a unit of
+   work stays exact as long as it runs fewer than
+   ``spark.ui.retainedStages`` stages (default 1000). Failure direction:
+   loud Py4JError in the soak and its pin test.
 """
 
 from __future__ import annotations
@@ -225,6 +226,8 @@ def app_shuffle_write_records(
     Stage ids only grow and the store evicts the oldest stages first, so
     the marker keeps the sum exact even when stages from before it are
     evicted in between (a before/after diff of two app-wide sums is not).
+    The listener bus is drained first, so every stage that already ran is
+    counted without polling.
 
     Uses the full ``stageList(statuses, details, taskMetrics,
     quantiles, taskStatus)`` signature (the zero-arg Scala overloads are
@@ -232,6 +235,7 @@ def app_shuffle_write_records(
     the store keeps ``spark.ui.retainedStages`` stages (default 1000);
     the sum misses stages after the marker only once that many stages
     ran after it."""
+    _drain_listener_bus(spark)
     return int(
         sum(s.shuffleWriteRecords() for s in retained_stages(spark, after_stage))
     )
@@ -242,8 +246,12 @@ def last_stage_id(spark: SparkSession) -> int:
     the marker for ``app_shuffle_write_records``/``retained_stages``. The
     listener bus is drained first, so a stage that already ran cannot
     reach the store after the marker is taken and count as later work."""
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    _drain_listener_bus(spark)
     return max((s.stageId() for s in retained_stages(spark)), default=-1)
+
+
+def _drain_listener_bus(spark: SparkSession) -> None:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
 
 
 def retained_stages(spark: SparkSession, after_stage: int = -1):
@@ -264,25 +272,3 @@ def retained_stages(spark: SparkSession, after_stage: int = -1):
         stage = it.next()
         if stage.stageId() > after_stage:
             yield stage
-
-
-def assert_stage_retention_headroom(spark: SparkSession, frac: float = 0.8) -> int:
-    """Guard for ``app_shuffle_write_records`` snapshot-diff users: the
-    app-cumulative sum is exact only while the AppStatusStore has evicted
-    NOTHING. Past ``spark.ui.retainedStages`` the store silently drops old
-    stages, so a before/after diff under-counts or goes negative and an
-    exact-work assertion (replay_xrec == batch_xrec) fails spuriously
-    (ADVICE r12). Fail loud while there is still headroom — long soaks
-    must raise the retention limit, not adjudicate a corrupted ledger.
-
-    Returns the retained stage count (for logging)."""
-    limit = int(spark.conf.get("spark.ui.retainedStages", "1000"))
-    n = sum(1 for _ in retained_stages(spark))
-    if n > frac * limit:
-        raise RuntimeError(
-            f"AppStatusStore holds {n} stages, > {frac:.0%} of "
-            f"spark.ui.retainedStages={limit}: the shuffle-record ledger "
-            "is about to lose exactness — raise spark.ui.retainedStages "
-            "for this soak"
-        )
-    return n

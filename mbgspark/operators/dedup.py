@@ -890,18 +890,6 @@ def minhash_near_dups_incremental(
         )
     else:
         c_bands, c_arrays = corpus_index
-        if c_arrays is None:
-            # BANDS-ONLY index (r5 hybrid, measured in the streaming-gate
-            # bench): candidate generation reads the persisted band rows
-            # — skipping the store-wide re-minhash, the expensive half —
-            # while the verify side re-derives shingle arrays from the
-            # corpus TEXT, which the repo's standing measurement says
-            # beats round-tripping materialized shingle arrays through
-            # parquet (~4× raw text on disk, scanned in full by the
-            # verify join)
-            c_arrays = with_shingle_array(
-                corpus, id_col, text_col, k, out="__shingles"
-            )
 
     pairs = incremental_candidate_pairs(
         b_bands,

@@ -429,8 +429,8 @@ def exact_quantiles_histogram(
     the only sort is the per-COLUMN cumulative window over DISTINCT
     values: bounded by value cardinality, not row count (exactly the
     builtin's buffer bound, sorted once instead of serialized per
-    partition per function). Measured (tools/quantile_ab.py, 6 quantiles
-    over 3 lineitem columns incl. near-unique l_extendedprice,
+    partition per function). Measured (SCALE.md round 13, "Builtin
+    ``percentile`` A/B": 6 quantiles over 3 lineitem columns incl. near-unique l_extendedprice,
     interleaved best-of-N, vs the honest array-form builtin
     ``percentile(c, array(qs))`` — ADVICE r13): builtin/histogram =
     0.8x at sf0.1 (builtin WINS small), 1.0x at sf1, 2.7x at sf10 —

@@ -48,14 +48,24 @@ def _write_small_file(spark: SparkSession, path: str, data: str) -> None:
     jvmseam.fs_write_utf8(spark, path, data)
 
 
-#: Sidecar filename at the index root recording the gate's on-disk layout
-#: contract: ``{"layout": "bucketed-v1"|"unbucketed-v0",
-#: "num_buckets": int|null, "index_arrays": bool}``. ``num_buckets`` is a
-#: MODULUS baked into every ``__bucket`` directory name — restarting with
-#: a different value would probe the wrong buckets and silently miss
-#: near-dups, so it is persisted on first write and validated on every
-#: restart instead of trusted as a parameter (ADVICE r6).
+#: Hash-bucket modulus of the indexed gate's band and shingle-array paths.
+#: It is baked into every ``__bucket`` directory name, so it is part of the
+#: on-disk layout, not a tuning knob.
+GATE_BUCKETS = 64
+
+#: Sidecar filename at the index root recording the gate's on-disk layout.
 GATE_META_FILE = "_gate_meta.json"
+
+#: The one layout ``start_neardup_gate_sink_indexed`` reads and writes:
+#: bucket-pruned band rows AND shingle arrays under ``GATE_BUCKETS``. The
+#: sidecar holds exactly this dict (key order included, so stores written
+#: by earlier versions of the gate open unchanged); any other recorded
+#: value fails fast.
+GATE_META = {
+    "layout": "bucketed-v1",
+    "num_buckets": GATE_BUCKETS,
+    "index_arrays": True,
+}
 
 
 def read_gate_meta(spark: SparkSession, index_path: str) -> dict | None:
@@ -310,16 +320,15 @@ def start_neardup_gate_sink(
 
     Dedup policy: a batch doc near-dupping ANY store doc is dropped; for
     batch-internal pairs the lower id survives (greedy, matching the
-    keep-first convention of the batch dedup operators). At production
-    scale the store side runs against the persisted MinHash index
-    (``build_minhash_index``) instead of re-reading raw text — BUT note
-    the index must be appended in the same foreachBatch as the store
-    (each admitted batch's band rows + shingle arrays), because a static
-    index goes stale against the growing store and a later batch would
-    re-admit near-dups of earlier admissions. That index-maintaining
-    variant is a composition of this gate with
-    ``minhash_near_dups_incremental(corpus_index=…)`` + two appends; the
-    self-contained re-read here is the bounded-gate-SF form.
+    keep-first convention of the batch dedup operators). The production
+    form is ``start_neardup_gate_sink_indexed``, which reads a persisted
+    MinHash index instead of re-reading raw text. This self-contained
+    re-read stays beside it for two reasons. It is the only gate whose
+    store is a fixpoint under a FRESH checkpoint: every batch reads the
+    whole store, so a restart that replays the source from the start
+    admits nothing twice, where the indexed gate can only refuse such a
+    restart. And it is the baseline ``tools/gate_bench.py`` measures the
+    indexed gate against.
 
     ``on_metrics(batch_id, {"oversized_buckets": n, "oversized_rows": n})``
     surfaces the LSH bucket-cap drops per micro-batch (VERDICT r4 item 4)
@@ -422,8 +431,6 @@ def start_neardup_gate_sink_indexed(
     threshold: float = 0.6,
     available_now: bool = False,
     on_metrics=None,
-    index_arrays: bool = True,
-    num_buckets: int = 64,
     compact_every: int | None = None,
     compact_target_files: int = 1,
 ) -> StreamingQuery:
@@ -433,20 +440,20 @@ def start_neardup_gate_sink_indexed(
     1. reads the persisted MinHash index — band rows + shingle arrays,
        the two ``build_minhash_index`` lineages — restricted by
        PARTITION PRUNING on two axes: batches strictly before this one
-       (``__gate_batch < N``) AND the hash buckets this batch actually
-       probes (``__band_bucket`` = hash of the band key for band rows;
-       ``__id_bucket`` = hash of the doc id for shingle arrays, pruned
-       to the CANDIDATES' buckets — near-dup candidates are rare, so
-       the verify read touches a handful of bucket directories instead
-       of the whole arrays store),
+       (``__gate_batch < N``) AND the ``__bucket`` directories this
+       batch actually probes (hash of the band key for band rows; hash
+       of the doc id for shingle arrays, pruned to the CANDIDATES'
+       buckets — near-dup candidates are rare, so the verify read
+       touches a handful of bucket directories instead of the whole
+       arrays store),
     2. generates candidates with ``incremental_candidate_pairs`` (batch
        × index band rows, never corpus × corpus; the corpus TEXT is
        never touched) and verifies them with ``verify_candidate_pairs``
        against the pruned arrays,
     3. writes the survivors to the store AND their own index rows to the
        index store — the store partitioned by ``__gate_batch`` = batch
-       id, the index paths sub-partitioned by their bucket column — all
-       with dynamic partition overwrite.
+       id, the index paths sub-partitioned by ``__bucket`` — each a
+       static overwrite of this batch's own partition directory.
 
     Exactly-once without markers or swaps: every write is an IDEMPOTENT
     overwrite of this batch's own partition. A crash anywhere mid-batch
@@ -464,34 +471,33 @@ def start_neardup_gate_sink_indexed(
     upsert and the sketch store's staged swap — is this variant's
     distinctive value.
 
-    MEASURED COST (see SCALE.md r6 row for the numbers of record): the
-    r5 un-bucketed form LOST to the plain re-read gate (9.8 s full /
-    7.6 s hybrid vs 6.9 s per batch at the 50k-doc stress) because its
-    verify join scanned the whole shingle-array store (~4× raw text on
-    disk) or re-scanned store text; bucket pruning removes exactly those
-    scans — per-batch cost is now the batch lineage + a band-row read of
-    the probed buckets + an arrays read of the CANDIDATE buckets only,
-    so it no longer grows with store text size at all, and the margin
-    over the plain gate widens as the store grows. Two driver-side
-    collects per batch are bucket LISTS (≤ ``num_buckets`` values each),
-    bounded metadata like the merge sink's touched-day list. Candidates
-    are persisted for the batch (probed by the bucket collect, the
-    verify join and all three writes) and unpersisted in a finally.
+    FRESH-CHECKPOINT RULE: the batch ids come from the checkpoint, so a
+    restart with a new checkpoint starts again at N = 0 and the ``< N``
+    read would hide every stored batch. Batch N therefore fails fast when
+    the store holds any ``__gate_batch`` partition above N; the compacted
+    ``-1`` base never trips it. Resume with the original checkpoint, or
+    first fold the store and both index paths into that base with
+    ``compact_gate_store``, which every batch of a new checkpoint reads.
+    (A store holding only batch 0 cannot be told apart from a replay of
+    batch 0.)
 
-    ``index_arrays=False`` is the bands-only HYBRID: candidates from the
-    pruned band index, verify shingles re-derived from store TEXT (full
-    store scan — the r5 measured-cheaper side when arrays were unpruned;
-    kept as the layout-compatibility mode for stores whose arrays index
-    wasn't materialized). ``num_buckets`` trades pruning granularity
-    against small-files overhead: each batch writes at most
-    min(rows, num_buckets) files per index path.
+    MEASURED COST (see SCALE.md r6 row for the numbers of record):
+    per-batch cost is the batch lineage + a band-row read of the probed
+    buckets + an arrays read of the CANDIDATE buckets only, so it does
+    not grow with store text size, and the margin over the plain re-read
+    gate widens as the store grows. Two driver-side collects per batch
+    are bucket LISTS (≤ ``GATE_BUCKETS`` values each), bounded metadata
+    like the merge sink's touched-day list. Candidates are persisted for
+    the batch (probed by the bucket collect, the verify join and all
+    three writes) and unpersisted in a finally. Each batch writes at
+    most min(rows, ``GATE_BUCKETS``) files per index path.
 
     Store readers see one extra ``__gate_batch`` partition column
     (ingestion metadata — drop it or use it as arrival lineage). The
-    index layout is ``{index_path}/bands`` (sub-partitioned by
-    ``__band_bucket``) + ``{index_path}/arrays`` (sub-partitioned by
-    ``__id_bucket``). Replay idempotence additionally holds at the
-    CONTENT level like the plain gate's: re-delivered docs exact-match
+    index layout is ``{index_path}/bands`` + ``{index_path}/arrays``,
+    each partitioned by ``__gate_batch`` and then ``__bucket``. Replay
+    idempotence additionally holds at the CONTENT level like the plain
+    gate's: re-delivered docs exact-match
     their indexed copies and are rejected. ``on_metrics`` is the plain
     gate's per-batch bucket-cap channel; under pruning its oversized
     counts cover the PROBED buckets — the only buckets where pair
@@ -499,21 +505,13 @@ def start_neardup_gate_sink_indexed(
     cheap by construction (the metrics lineage reads the index, not the
     corpus text).
 
-    LAYOUT CONTRACT (ADVICE r6, both mediums): the bucketed layout and
-    its modulus are load-bearing on-disk state, so the gate persists
-    ``{index_path}/_gate_meta.json`` = ``{"layout", "num_buckets",
-    "index_arrays"}`` on first contact and validates every restart
-    against it — a restart with a different ``num_buckets`` or
-    ``index_arrays`` fails fast instead of silently probing the wrong
-    buckets / silently admitting near-dups of the pre-upgrade corpus.
-    A meta-less store with existing band rows is a LEGACY index:
-    un-bucketed legacy (pre-bucketing layout) is adopted in place —
-    reads fall back to unpruned (correct, just not bucket-pruned),
-    writes continue un-bucketed, and the adopted layout is recorded in
-    a new meta file so the degradation is visible and permanent rather
-    than re-detected; bucketed legacy (bucket dirs present, modulus
-    unrecorded) fails fast with the migration instruction, because no
-    parameter value can be trusted to match the unknown modulus.
+    LAYOUT RULE: the gate writes ``{index_path}/_gate_meta.json`` =
+    ``GATE_META`` on first contact, before any data write, and on every
+    restart requires the recorded meta to equal it. Any other recorded
+    layout, and an index with band rows but no meta, fails fast naming
+    what is recorded: pruned reads under a different modulus or a
+    missing arrays path would silently admit near-dups. Such an index is
+    rebuilt from the store with ``build_minhash_index``.
 
     ``compact_every=N`` turns on in-line store maintenance: after a
     batch's writes, when the store holds ≥ N live batch partitions the
@@ -531,6 +529,8 @@ def start_neardup_gate_sink_indexed(
     sets this to its store's natural part count so the fold stays a
     directory of parallel-written parts (the same many-files shape
     tools/make_split.py exercises on the batch side)."""
+    import json
+
     from mbgspark.operators.dedup import (
         _oversized_metrics_row,
         build_minhash_index,
@@ -538,113 +538,53 @@ def start_neardup_gate_sink_indexed(
         minhash_near_dups,
         observed_or_direct,
         verify_candidate_pairs,
-        with_shingle_array,
     )
 
     bands_path = index_path.rstrip("/") + "/bands"
     arrays_path = index_path.rstrip("/") + "/arrays"
 
     def _band_bucket() -> Column:
-        return F.pmod(F.xxhash64("band_idx", "band_key"), F.lit(num_buckets))
+        return F.pmod(F.xxhash64("band_idx", "band_key"), F.lit(GATE_BUCKETS))
 
     def _id_bucket(col_name: str) -> Column:
-        return F.pmod(F.xxhash64(F.col(col_name)), F.lit(num_buckets))
+        return F.pmod(F.xxhash64(F.col(col_name)), F.lit(GATE_BUCKETS))
 
-    # Resolved once per query (the on-disk layout cannot change under a
-    # running gate — the gate is the only writer); holds "bucketed-v1"
-    # or "unbucketed-v0" after the first batch's meta resolution.
-    _layout: dict[str, str] = {}
+    # checked once per query: the gate is the index's only writer, so the
+    # on-disk layout cannot change under a running gate
+    _layout_checked: list[bool] = []
 
-    def _legacy_has_buckets(spark: SparkSession) -> bool:
-        fs, p = _fs_for(spark, bands_path)
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if st.isDirectory() and name.startswith("__gate_batch="):
-                for child in fs.listStatus(st.getPath()):
-                    child_name = child.getPath().getName()
-                    if child.isDirectory() and child_name.startswith("__bucket="):
-                        return True
-                return False
-        return False
-
-    def _resolve_layout(spark: SparkSession) -> str:
-        if "v" in _layout:
-            return _layout["v"]
+    def _check_layout(spark: SparkSession) -> None:
+        if _layout_checked:
+            return
         meta = read_gate_meta(spark, index_path)
-        if meta is not None:
-            if meta.get("index_arrays") != index_arrays:
-                raise ValueError(
-                    f"near-dup gate index at {index_path} was written with "
-                    f"index_arrays={meta.get('index_arrays')} but this gate "
-                    f"was started with index_arrays={index_arrays}; a "
-                    "mismatch silently breaks corpus dedup (missing array "
-                    "rows / a stale arrays path). Restart with the recorded "
-                    "value, or rebuild the index from the store."
-                )
-            if meta.get("layout") == "bucketed-v1" and meta.get(
-                "num_buckets"
-            ) != num_buckets:
-                raise ValueError(
-                    f"near-dup gate index at {index_path} was bucketed with "
-                    f"num_buckets={meta.get('num_buckets')} but this gate "
-                    f"was started with num_buckets={num_buckets}; the "
-                    "modulus is baked into the __bucket directory names, so "
-                    "pruned reads would probe the wrong buckets and miss "
-                    "near-dups. Restart with the recorded value."
-                )
-            _layout["v"] = meta["layout"]
-        elif not _store_exists(spark, bands_path):
-            # fresh store: record the layout contract BEFORE any data
-            # write, so every later crash window leaves meta present and
-            # meta-less-with-bands can only mean a legacy (pre-meta) store
-            write_gate_meta(
-                spark,
-                index_path,
-                {
-                    "layout": "bucketed-v1",
-                    "num_buckets": num_buckets,
-                    "index_arrays": index_arrays,
-                },
+        if meta is None and not _store_exists(spark, bands_path):
+            # fresh index: record the layout BEFORE any data write, so a
+            # later crash can never leave band rows without a meta
+            write_gate_meta(spark, index_path, GATE_META)
+        elif meta != GATE_META:
+            recorded = (
+                f"no {GATE_META_FILE} beside its band rows"
+                if meta is None
+                else f"{GATE_META_FILE} = {json.dumps(meta)}"
             )
-            _layout["v"] = "bucketed-v1"
-        elif _legacy_has_buckets(spark):
-            raise RuntimeError(
-                f"near-dup gate index at {index_path} has bucketed "
-                "__bucket= directories but no _gate_meta.json recording "
-                "the bucket count; pruned reads under a guessed modulus "
-                "would silently miss near-dups. If the original "
-                "num_buckets is known, write "
-                f"{index_path.rstrip('/')}/_gate_meta.json = "
-                '{"layout": "bucketed-v1", "num_buckets": <original>, '
-                f'"index_arrays": {str(index_arrays).lower()}}} and '
-                "restart; otherwise rebuild the index from the store."
+            raise ValueError(
+                f"near-dup gate index at {index_path} has {recorded}; this "
+                f"gate reads only {json.dumps(GATE_META)}. Rebuild the "
+                "index from the store with build_minhash_index."
             )
-        else:
-            # un-bucketed legacy index (pre-bucketing layout): adopt it —
-            # unpruned reads are correct (just slower), and recording the
-            # adoption keeps the store permanently consistent instead of
-            # mixing bucketed and un-bucketed batch partitions
-            if index_arrays and not _store_exists(spark, arrays_path):
-                raise RuntimeError(
-                    f"near-dup gate index at {index_path} is a legacy "
-                    "bands-only (hybrid) index with no shingle-arrays "
-                    "path; starting with index_arrays=True would silently "
-                    "drop every pre-existing corpus candidate in the "
-                    "verify join. Restart with index_arrays=False, or "
-                    "rebuild the index from the store with "
-                    "build_minhash_index."
-                )
-            write_gate_meta(
-                spark,
-                index_path,
-                {
-                    "layout": "unbucketed-v0",
-                    "num_buckets": None,
-                    "index_arrays": index_arrays,
-                },
-            )
-            _layout["v"] = "unbucketed-v0"
-        return _layout["v"]
+        _layout_checked.append(True)
+
+    def _store_batches(spark: SparkSession) -> list[int]:
+        # the __gate_batch ids of the store's partition directories
+        if not _store_exists(spark, store_path):
+            return []
+        fs, store_p = _fs_for(spark, store_path)
+        return [
+            int(st.getPath().getName().split("=", 1)[1])
+            for st in fs.listStatus(store_p)
+            if st.isDirectory()
+            and st.getPath().getName().startswith("__gate_batch=")
+        ]
 
     def _write_part(
         df: DataFrame, path: str, batch_id: int, bucket: Column | None = None
@@ -672,15 +612,38 @@ def start_neardup_gate_sink_indexed(
         else:
             df.write.mode("overwrite").parquet(target)
 
+    def _read_pruned(
+        spark: SparkSession, path: str, batch_id: int, buckets: list
+    ) -> DataFrame:
+        return (
+            spark.read.parquet(path)
+            .filter(
+                (F.col("__gate_batch") < batch_id)
+                & F.col("__bucket").isin(buckets)
+            )
+            .drop("__gate_batch", "__bucket")
+        )
+
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Observation
 
         spark = batch_df.sparkSession
+        _check_layout(spark)
+        later = [k for k in _store_batches(spark) if k > batch_id]
+        if later:
+            raise RuntimeError(
+                f"near-dup gate store at {store_path} already holds "
+                f"__gate_batch={max(later)} but this query is at batch "
+                f"{batch_id}: it was started with a fresh checkpoint, and "
+                "the __gate_batch < N read would hide the stored batches and "
+                "re-admit their documents. Restart with the original "
+                "checkpoint, or first fold the store and both index paths "
+                "into the -1 base with compact_gate_store."
+            )
         batch_df = batch_df.dropDuplicates([id_col])
         slim = batch_df.select(id_col, text_col)
         metrics: list[DataFrame] = [] if on_metrics else None
-        # ADVICE r5 (medium): the indexed branch reads bands + ONE other
-        # path (arrays in full-index mode, the store in hybrid mode). A
+        # ADVICE r5 (medium): the indexed branch reads bands + arrays. A
         # crash during the FIRST batch between the store write and the
         # later index writes can leave a subset of the three paths
         # existing; guarding only bands_path would send the replay into
@@ -692,10 +655,8 @@ def start_neardup_gate_sink_indexed(
         # the only batch that can be missing a path (later batches write
         # every path per batch, and partial partition N is invisible
         # behind the < N filter).
-        layout = _resolve_layout(spark)
-        bucketed = layout == "bucketed-v1"
         indexed_ready = _store_exists(spark, bands_path) and _store_exists(
-            spark, arrays_path if index_arrays else store_path
+            spark, arrays_path
         )
         keep: list[DataFrame] = []
         try:
@@ -703,7 +664,7 @@ def start_neardup_gate_sink_indexed(
                 b_bands, b_arrays = build_minhash_index(slim, id_col, text_col)
                 # prune the band-row read to the buckets this batch probes
                 # (corpus rows in any other bucket can't equi-join a batch
-                # row — bucket list, not keys, bounded by num_buckets),
+                # row — bucket list, not keys, bounded by GATE_BUCKETS),
                 # then fetch the candidate PAIRS themselves to the driver
                 # through ONE broadcast-join action: the batch band rows
                 # broadcast against the pruned index scan, no shuffle, no
@@ -715,29 +676,13 @@ def start_neardup_gate_sink_indexed(
                 # verifies EVERY candidate exactly instead of capping,
                 # strictly better recall on the batches small enough to
                 # take it).
-                if bucketed:
-                    probe_buckets = [
-                        r[0]
-                        for r in b_bands.select(_band_bucket().alias("__b"))
-                        .distinct()
-                        .collect()
-                    ]
-                    c_bands = (
-                        spark.read.parquet(bands_path)
-                        .filter(
-                            (F.col("__gate_batch") < batch_id)
-                            & F.col("__bucket").isin(probe_buckets)
-                        )
-                        .drop("__gate_batch", "__bucket")
-                    )
-                else:
-                    # adopted legacy layout: no bucket dirs to prune — the
-                    # batch filter is the only pruning axis
-                    c_bands = (
-                        spark.read.parquet(bands_path)
-                        .filter(F.col("__gate_batch") < batch_id)
-                        .drop("__gate_batch")
-                    )
+                probe_buckets = [
+                    r[0]
+                    for r in b_bands.select(_band_bucket().alias("__b"))
+                    .distinct()
+                    .collect()
+                ]
+                c_bands = _read_pruned(spark, bands_path, batch_id, probe_buckets)
                 cand_cap = 100_000
                 a_rows = b_bands.select(
                     "band_idx", "band_key", F.col(id_col).alias("id_a")
@@ -777,8 +722,7 @@ def start_neardup_gate_sink_indexed(
                         sorted(seen),
                         lean.select("id_a", "id_b", "match_source").schema,
                     )
-                    # corpus-side id-buckets, free from the collected rows;
-                    # [] ⇒ no corpus candidates at all this batch
+                    # corpus-side id-buckets, free from the collected rows
                     cand_buckets = sorted(
                         {r[3] for r in got_rows if r[2] == "corpus"}
                     )
@@ -794,50 +738,21 @@ def start_neardup_gate_sink_indexed(
                         b_bands, c_bands, id_col, metrics_out=metrics, spark=spark
                     ).persist()
                     keep.append(cand)
-                    if index_arrays and bucketed:
-                        cand_buckets = [
-                            r[0]
-                            for r in cand.filter(F.col("match_source") == "corpus")
-                            .select(_id_bucket("id_b").alias("__b"))
-                            .distinct()
-                            .collect()
-                        ]
-                    else:
-                        # the bucket list is only consumed by the bucketed
-                        # arrays pruning below — skip the extra distributed
-                        # action entirely in hybrid / legacy modes
-                        # (ADVICE r6 low #2); None ⇒ unknown, read unpruned
-                        cand_buckets = None
-                if index_arrays:
-                    # verify needs corpus shingles ONLY for candidate ids:
-                    # prune the arrays read to the candidates' id-buckets
-                    if cand_buckets == []:
-                        c_arrays = b_arrays.limit(0)
-                    elif bucketed and cand_buckets is not None:
-                        c_arrays = (
-                            spark.read.parquet(arrays_path)
-                            .filter(
-                                (F.col("__gate_batch") < batch_id)
-                                & F.col("__bucket").isin(cand_buckets)
-                            )
-                            .drop("__gate_batch", "__bucket")
-                        )
-                    else:
-                        c_arrays = (
-                            spark.read.parquet(arrays_path)
-                            .filter(F.col("__gate_batch") < batch_id)
-                            .drop("__gate_batch")
-                        )
-                else:
-                    # hybrid: verify shingles re-derived from store TEXT
-                    c_arrays = with_shingle_array(
-                        spark.read.parquet(store_path)
-                        .filter(F.col("__gate_batch") < batch_id)
-                        .select(id_col, text_col),
-                        id_col,
-                        text_col,
-                        out="__shingles",
-                    )
+                    cand_buckets = [
+                        r[0]
+                        for r in cand.filter(F.col("match_source") == "corpus")
+                        .select(_id_bucket("id_b").alias("__b"))
+                        .distinct()
+                        .collect()
+                    ]
+                # verify needs corpus shingles ONLY for candidate ids:
+                # prune the arrays read to the candidates' id-buckets
+                # ([] ⇒ no corpus candidates at all this batch)
+                c_arrays = (
+                    _read_pruned(spark, arrays_path, batch_id, cand_buckets)
+                    if cand_buckets
+                    else b_arrays.limit(0)
+                )
                 pairs = verify_candidate_pairs(
                     b_arrays.unionByName(c_arrays), cand, id_col, threshold
                 )
@@ -874,29 +789,16 @@ def start_neardup_gate_sink_indexed(
             # index reads
             survivors = survivors.persist()
             keep.append(survivors)
-            # dynamic overwrite writes nothing for an empty batch —
-            # partition N simply never exists, which reads the same as
-            # empty. Write order: store first, index paths after, bands
-            # LAST — bands is the branch trigger above, so a first-batch
-            # crash mid-sequence leaves either no bands (→ clean fallback
+            # Write order: store first, arrays next, bands LAST — bands
+            # is the branch trigger above, so a first-batch crash
+            # mid-sequence leaves either no bands (→ clean fallback
             # branch on replay) or a complete path set.
             s_bands, s_arrays = build_minhash_index(
                 survivors.select(id_col, text_col), id_col, text_col
             )
             _write_part(survivors, store_path, batch_id)
-            if index_arrays:
-                _write_part(
-                    s_arrays,
-                    arrays_path,
-                    batch_id,
-                    _id_bucket(id_col) if bucketed else None,
-                )
-            _write_part(
-                s_bands,
-                bands_path,
-                batch_id,
-                _band_bucket() if bucketed else None,
-            )
+            _write_part(s_arrays, arrays_path, batch_id, _id_bucket(id_col))
+            _write_part(s_bands, bands_path, batch_id, _band_bucket())
             if obs is not None:
                 # folded ride-along (zero survivors): getRowOrEmpty probe →
                 # direct evaluation — cheap here, the metrics lineage reads
@@ -920,20 +822,12 @@ def start_neardup_gate_sink_indexed(
                 # and partition N overwrites to empty). Crash
                 # mid-compaction heals via the staged snapshot's manifest
                 # on the next trigger.
-                fs, store_p = _fs_for(spark, store_path)
-                live = [
-                    st.getPath().getName()
-                    for st in fs.listStatus(store_p)
-                    if st.isDirectory()
-                    and st.getPath().getName().startswith("__gate_batch=")
-                    and st.getPath().getName() != "__gate_batch=-1"
-                ]
+                live = [k for k in _store_batches(spark) if k != -1]
                 if len(live) >= compact_every:
                     compact_gate_store(
                         spark, store_path, target_files=compact_target_files
                     )
-                    if index_arrays:
-                        compact_gate_store(spark, arrays_path)
+                    compact_gate_store(spark, arrays_path)
                     compact_gate_store(spark, bands_path)
         finally:
             for df_ in keep:

@@ -548,7 +548,13 @@ def test_indexed_neardup_gate_admits_once_and_replays_idempotently(spark, tmp_pa
     against the persisted MinHash index only (corpus text untouched),
     near-dups of stored docs are rejected, and a mid-batch crash
     (commit marker erased) replays to the identical store — partition-
-    scoped idempotent overwrites, no append duplication."""
+    scoped idempotent overwrites, no append duplication. A restart with a
+    FRESH checkpoint would start again at batch 0 and hide every stored
+    batch behind the __gate_batch < N read; it fails fast instead of
+    re-admitting doc 11."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
     from mbgspark.streaming import start_neardup_gate_sink_indexed
 
     src = tmp_path / "ig_src"
@@ -562,12 +568,11 @@ def test_indexed_neardup_gate_admits_once_and_replays_idempotently(spark, tmp_pa
 
     gate_metrics: list = []
 
-    def run():
+    def run(ck=ck):
         stream = spark.readStream.schema("doc_id long, text string").json(str(src))
         q = start_neardup_gate_sink_indexed(
             stream, store, index, str(ck), threshold=0.5, available_now=True,
             on_metrics=lambda bid, m: gate_metrics.append((bid, m)),
-            index_arrays=True,  # full-index mode: the arrays mirror below
         )
         q.awaitTermination(120)
         return sorted(r["doc_id"] for r in spark.read.parquet(store).collect())
@@ -609,41 +614,13 @@ def test_indexed_neardup_gate_admits_once_and_replays_idempotently(spark, tmp_pa
     assert len(gate_metrics) >= 3
     assert all(m["oversized_buckets"] == 0 for _, m in gate_metrics)
 
-
-def test_indexed_gate_hybrid_mode_matches_and_skips_arrays_store(spark, tmp_path):
-    """index_arrays=False (the default hybrid): candidates come from the
-    persisted band rows, verify shingles re-derive from store TEXT — same
-    admissions as the full-index mode, and no arrays store is written."""
-    import os
-
-    from mbgspark.streaming import start_neardup_gate_sink_indexed
-
-    src = tmp_path / "hg_src"
-    store = str(tmp_path / "hg_store")
-    index = str(tmp_path / "hg_index")
-    ck = str(tmp_path / "hg_ck")
-
-    base = "the quick brown fox jumps over the lazy dog near the river bank"
-    near = "quick brown fox jumps over the lazy dog near the river bank"
-
-    def run():
-        stream = spark.readStream.schema("doc_id long, text string").json(str(src))
-        q = start_neardup_gate_sink_indexed(
-            stream, store, index, ck, threshold=0.5, available_now=True,
-            index_arrays=False,
-        )
-        q.awaitTermination(120)
-        return sorted(r["doc_id"] for r in spark.read.parquet(store).collect())
-
-    _write_batch(src, [{"doc_id": 1, "text": base}])
-    assert run() == [1]
-    _write_batch(src, [
-        {"doc_id": 10, "text": near},  # near-dup of stored doc: rejected
-        {"doc_id": 11, "text": "fresh novel content with entirely new vocabulary tokens"},
-    ])
-    assert run() == [1, 11]
-    assert os.path.isdir(f"{index}/bands")
-    assert not os.path.exists(f"{index}/arrays")
+    # fresh checkpoint over the same source: its batch 0 holds every file,
+    # while the store already holds __gate_batch=1
+    with pytest.raises(StreamingQueryException, match="__gate_batch=1"):
+        run(tmp_path / "ig_ck_fresh")
+    assert sorted(r["doc_id"] for r in spark.read.parquet(store).collect()) == [
+        1, 3, 11,
+    ]
 
 
 def test_indexed_gate_recovers_from_first_batch_partial_write(spark, tmp_path):
@@ -652,67 +629,60 @@ def test_indexed_gate_recovers_from_first_batch_partial_write(spark, tmp_path):
     store/arrays not — the pre-fix trigger ordering). The replay must NOT
     take the indexed branch and die on a path-does-not-exist read; it
     falls back to the self-contained branch (equivalent for batch 0) and
-    converges to the correct store in both hybrid and full-index modes."""
+    converges to the correct store."""
     from pyspark.sql import functions as F
 
     from mbgspark.operators.dedup import build_minhash_index
     from mbgspark.streaming import (
+        GATE_BUCKETS,
+        GATE_META,
         start_neardup_gate_sink_indexed,
         write_gate_meta,
     )
 
     base = "the quick brown fox jumps over the lazy dog near the river bank"
     near = "quick brown fox jumps over the lazy dog near the river bank"
+    src = tmp_path / "pb_src"
+    store = str(tmp_path / "pb_store")
+    index = str(tmp_path / "pb_index")
+    ck = str(tmp_path / "pb_ck")
 
-    for mode_arrays in (False, True):
-        tag = "full" if mode_arrays else "hybrid"
-        src = tmp_path / f"pb_src_{tag}"
-        store = str(tmp_path / f"pb_store_{tag}")
-        index = str(tmp_path / f"pb_index_{tag}")
-        ck = str(tmp_path / f"pb_ck_{tag}")
+    # simulate the crash remnant: batch 0's bands partition exists,
+    # nothing else does. The meta sidecar is ALWAYS present in this
+    # window (r7: the gate records it at first contact, before any
+    # data write), so the remnant includes it.
+    write_gate_meta(spark, index, GATE_META)
+    remnant = spark.createDataFrame(
+        [(1, base), (3, "completely unrelated text about plan pruning")],
+        "doc_id long, text string",
+    )
+    b_bands, _ = build_minhash_index(remnant, "doc_id", "text")
+    (
+        b_bands.withColumn("__gate_batch", F.lit(0))
+        .withColumn(
+            "__bucket",
+            F.pmod(F.xxhash64("band_idx", "band_key"), F.lit(GATE_BUCKETS)),
+        )
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__gate_batch", "__bucket")
+        .parquet(f"{index}/bands")
+    )
 
-        # simulate the crash remnant: batch 0's bands partition exists,
-        # nothing else does. The meta sidecar is ALWAYS present in this
-        # window (r7: the gate records it at first contact, before any
-        # data write), so the remnant includes it.
-        write_gate_meta(
-            spark,
-            index,
-            {"layout": "bucketed-v1", "num_buckets": 64,
-             "index_arrays": mode_arrays},
-        )
-        remnant = spark.createDataFrame(
-            [(1, base), (3, "completely unrelated text about plan pruning")],
-            "doc_id long, text string",
-        )
-        b_bands, _ = build_minhash_index(remnant, "doc_id", "text")
-        (
-            b_bands.withColumn("__gate_batch", F.lit(0))
-            .withColumn(
-                "__bucket", F.pmod(F.xxhash64("band_idx", "band_key"), F.lit(64))
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__gate_batch", "__bucket")
-            .parquet(f"{index}/bands")
-        )
-
-        _write_batch(src, [
-            {"doc_id": 1, "text": base},
-            {"doc_id": 2, "text": near},
-            {"doc_id": 3, "text": "completely unrelated text about plan pruning"},
-        ])
-        stream = spark.readStream.schema("doc_id long, text string").json(str(src))
-        q = start_neardup_gate_sink_indexed(
-            stream, store, index, ck, threshold=0.5, available_now=True,
-            index_arrays=mode_arrays,
-        )
-        q.awaitTermination(120)
-        got = sorted(r["doc_id"] for r in spark.read.parquet(store).collect())
-        assert got == [1, 3], f"mode index_arrays={mode_arrays}: {got}"
-        # the replayed batch 0 overwrote the remnant partition in place
-        bands = spark.read.parquet(f"{index}/bands")
-        assert bands.select("__gate_batch").distinct().collect()[0][0] == 0
+    _write_batch(src, [
+        {"doc_id": 1, "text": base},
+        {"doc_id": 2, "text": near},
+        {"doc_id": 3, "text": "completely unrelated text about plan pruning"},
+    ])
+    stream = spark.readStream.schema("doc_id long, text string").json(str(src))
+    q = start_neardup_gate_sink_indexed(
+        stream, store, index, ck, threshold=0.5, available_now=True,
+    )
+    q.awaitTermination(120)
+    assert sorted(r["doc_id"] for r in spark.read.parquet(store).collect()) == [1, 3]
+    # the replayed batch 0 overwrote the remnant partition in place
+    bands = spark.read.parquet(f"{index}/bands")
+    assert bands.select("__gate_batch").distinct().collect()[0][0] == 0
 
 
 def test_compact_gate_store_preserves_gate_semantics(spark, tmp_path):
@@ -834,116 +804,67 @@ def test_compact_incomplete_staging_discarded_and_rebuilt(spark, tmp_path):
 
 
 def test_indexed_gate_meta_validates_restart_params(spark, tmp_path):
-    """ADVICE r6 (medium): num_buckets and index_arrays are baked into
-    the on-disk index layout, so the gate persists them in
-    _gate_meta.json on first contact and a restart with different values
-    fails fast instead of silently probing the wrong buckets or
+    """ADVICE r6 (medium): the bucket modulus and the arrays path are
+    baked into the on-disk index layout, so the gate records GATE_META in
+    _gate_meta.json on first contact — byte-for-byte the sidecar earlier
+    versions wrote — and a restart over any other recorded layout fails
+    fast, naming it, instead of silently probing the wrong buckets or
     silently admitting near-dups."""
     import json as _json
 
     import pytest
     from pyspark.errors import StreamingQueryException
 
-    from mbgspark.streaming import start_neardup_gate_sink_indexed
+    from mbgspark.streaming import (
+        GATE_META,
+        start_neardup_gate_sink_indexed,
+        write_gate_meta,
+    )
 
     src = tmp_path / "mv_src"
     store = str(tmp_path / "mv_store")
     index = str(tmp_path / "mv_index")
 
-    def run(ck_tag, **kw):
+    def run(ck_tag):
         stream = spark.readStream.schema("doc_id long, text string").json(str(src))
         q = start_neardup_gate_sink_indexed(
             stream, store, index, str(tmp_path / ck_tag), threshold=0.5,
-            available_now=True, **kw,
+            available_now=True,
         )
         q.awaitTermination(120)
 
     _write_batch(src, [{"doc_id": 1, "text": "the quick brown fox jumps over"}])
-    run("mv_ck0", num_buckets=64, index_arrays=True)
+    run("mv_ck0")
     with open(f"{index}/_gate_meta.json") as f:
-        meta = _json.load(f)
-    assert meta == {
-        "layout": "bucketed-v1", "num_buckets": 64, "index_arrays": True,
-    }
+        raw = f.read()
+    assert raw == (
+        '{"layout": "bucketed-v1", "num_buckets": 64, "index_arrays": true}'
+    )
+    assert _json.loads(raw) == GATE_META
 
     _write_batch(src, [{"doc_id": 2, "text": "entirely new second document"}])
-    with pytest.raises(StreamingQueryException, match="num_buckets=64"):
-        run("mv_ck1", num_buckets=32, index_arrays=True)
-    with pytest.raises(StreamingQueryException, match="index_arrays=True"):
-        run("mv_ck2", num_buckets=64, index_arrays=False)
-    # matching params keep working
-    run("mv_ck3", num_buckets=64, index_arrays=True)
+    for i, meta in enumerate([
+        {"layout": "bucketed-v1", "num_buckets": 32, "index_arrays": True},
+        {"layout": "bucketed-v1", "num_buckets": 64, "index_arrays": False},
+        {"layout": "unbucketed-v0", "num_buckets": None, "index_arrays": True},
+    ]):
+        write_gate_meta(spark, index, meta)
+        with pytest.raises(
+            StreamingQueryException, match="build_minhash_index"
+        ) as err:
+            run(f"mv_bad{i}")
+        assert _json.dumps(meta) in str(err.value)
+    # the recorded default keeps working
+    write_gate_meta(spark, index, GATE_META)
+    run("mv_ck0")
     got = sorted(r["doc_id"] for r in spark.read.parquet(store).collect())
     assert got == [1, 2]
 
 
-def test_indexed_gate_adopts_unbucketed_legacy_index(spark, tmp_path):
-    """ADVICE r6 (medium): a pre-bucketing index store (no __bucket=
-    dirs, no meta) must not stall the stream with an unresolved-column
-    read. The gate detects the legacy layout, adopts it (unpruned reads,
-    un-bucketed writes — correct, just not pruned), records the adoption
-    in a new meta file, and keeps rejecting near-dups of the legacy
-    corpus."""
-    import json as _json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from mbgspark.operators.dedup import build_minhash_index
-    from mbgspark.streaming import start_neardup_gate_sink_indexed
-
-    base = "the quick brown fox jumps over the lazy dog near the river bank"
-    near = "quick brown fox jumps over the lazy dog near the river bank"
-
-    src = tmp_path / "lg_src"
-    store = str(tmp_path / "lg_store")
-    index = str(tmp_path / "lg_index")
-
-    # legacy store: flat batch partitions, NO __bucket sub-dirs, no meta
-    legacy = spark.createDataFrame(
-        [(1, base), (2, "some unrelated legacy corpus document")],
-        "doc_id long, text string",
-    )
-    legacy.withColumn("__gate_batch", F.lit(-1)).write.partitionBy(
-        "__gate_batch"
-    ).parquet(store)
-    bands, arrays = build_minhash_index(legacy, "doc_id", "text")
-    bands.withColumn("__gate_batch", F.lit(-1)).write.partitionBy(
-        "__gate_batch"
-    ).parquet(f"{index}/bands")
-    arrays.withColumn("__gate_batch", F.lit(-1)).write.partitionBy(
-        "__gate_batch"
-    ).parquet(f"{index}/arrays")
-
-    _write_batch(src, [
-        {"doc_id": 10, "text": near},  # near-dup of LEGACY corpus doc
-        {"doc_id": 11, "text": "fresh novel content with new vocabulary"},
-    ])
-    q = start_neardup_gate_sink_indexed(
-        spark.readStream.schema("doc_id long, text string").json(str(src)),
-        store, index, str(tmp_path / "lg_ck"), threshold=0.5,
-        available_now=True, index_arrays=True,
-    )
-    q.awaitTermination(120)
-    got = sorted(r["doc_id"] for r in spark.read.parquet(store).collect())
-    assert got == [1, 2, 11]  # 10 rejected against the legacy corpus
-    with open(f"{index}/_gate_meta.json") as f:
-        assert _json.load(f)["layout"] == "unbucketed-v0"
-    # writes stayed layout-consistent: no __bucket dirs appeared
-    assert not any(
-        "__bucket=" in d
-        for root_, dirs_, _ in os.walk(f"{index}/bands")
-        for d in dirs_
-    )
-
-
 def test_indexed_gate_legacy_error_paths(spark, tmp_path):
-    """The two un-adoptable legacy shapes fail fast with migration
-    instructions instead of silently breaking dedup: (a) bands-only
-    legacy + index_arrays=True (pre-upgrade corpus candidates would
-    silently drop out of the verify join); (b) bucketed dirs with no
-    recorded modulus (pruning under a guessed num_buckets silently
-    misses near-dups)."""
+    """An index with band rows but no _gate_meta.json fails fast with the
+    rebuild instruction instead of guessing its layout: pruning under a
+    guessed modulus silently misses near-dups."""
     import pytest
     from pyspark.errors import StreamingQueryException
     from pyspark.sql import functions as F
@@ -956,25 +877,6 @@ def test_indexed_gate_legacy_error_paths(spark, tmp_path):
         "doc_id long, text string",
     )
     bands, _ = build_minhash_index(legacy, "doc_id", "text")
-
-    def run(store, index, ck, **kw):
-        src = tmp_path / f"{ck}_src"
-        _write_batch(src, [{"doc_id": 5, "text": "whatever new document"}])
-        q = start_neardup_gate_sink_indexed(
-            spark.readStream.schema("doc_id long, text string").json(str(src)),
-            str(tmp_path / store), str(tmp_path / index),
-            str(tmp_path / ck), available_now=True, **kw,
-        )
-        q.awaitTermination(120)
-
-    # (a) legacy bands-only, no arrays, started with index_arrays=True
-    bands.withColumn("__gate_batch", F.lit(-1)).write.partitionBy(
-        "__gate_batch"
-    ).parquet(str(tmp_path / "la_index" / "bands"))
-    with pytest.raises(StreamingQueryException, match="index_arrays=False"):
-        run("la_store", "la_index", "la_ck", index_arrays=True)
-
-    # (b) bucketed layout, no meta recording the modulus
     (
         bands.withColumn("__gate_batch", F.lit(-1))
         .withColumn(
@@ -983,8 +885,16 @@ def test_indexed_gate_legacy_error_paths(spark, tmp_path):
         .write.partitionBy("__gate_batch", "__bucket")
         .parquet(str(tmp_path / "lb_index" / "bands"))
     )
-    with pytest.raises(StreamingQueryException, match="_gate_meta.json"):
-        run("lb_store", "lb_index", "lb_ck", index_arrays=False)
+    src = tmp_path / "lb_src"
+    _write_batch(src, [{"doc_id": 5, "text": "whatever new document"}])
+    q = start_neardup_gate_sink_indexed(
+        spark.readStream.schema("doc_id long, text string").json(str(src)),
+        str(tmp_path / "lb_store"), str(tmp_path / "lb_index"),
+        str(tmp_path / "lb_ck"), available_now=True,
+    )
+    with pytest.raises(StreamingQueryException, match="no _gate_meta.json"):
+        q.awaitTermination(120)
+    assert not (tmp_path / "lb_store").exists()
 
 
 def test_indexed_gate_auto_compaction(spark, tmp_path):

@@ -1,8 +1,8 @@
 """Streaming near-dup gate cost comparison: plain re-read vs indexed
-(bands-only hybrid) vs indexed (bucket-pruned arrays, the default) vs
-pruned with in-line compaction (compact_every=2 — the fold fires after
-batch 1, so batch 2's time is the post-compaction cost and the final
-store counts must equal the plain pruned mode's).
+(the bucket-pruned index) vs pruned with in-line compaction
+(compact_every=2 — the fold fires after batch 1, so batch 2's time is the
+post-compaction cost and the final store counts must equal the plain
+pruned mode's).
 
 Methodology (r5 protocol, r6 pruned form added): seed a store of N docs
 (~40 random words each from a 40k-word vocab), then time THREE consecutive
@@ -10,9 +10,10 @@ Methodology (r5 protocol, r6 pruned form added): seed a store of N docs
 stored docs) against the same seeded corpus state per mode. The seed is
 written directly in each mode's on-disk layout (plain: bare parquet;
 indexed: __gate_batch=-1 partitions + bucketed index paths — the exact
-layout the gate itself writes, bucket expressions duplicated from
-start_neardup_gate_sink_indexed). Reported per-batch seconds include the
-availableNow stream start/stop overhead, identically for all modes.
+layout the gate itself writes under GATE_BUCKETS, bucket expressions
+duplicated from start_neardup_gate_sink_indexed). Reported per-batch
+seconds include the availableNow stream start/stop overhead, identically
+for all modes.
 
 Usage: python tools/gate_bench.py [N_docs ...]   (default: 50000 200000)
 Prints one JSON line per (store_size, mode).
@@ -34,13 +35,14 @@ from pyspark.sql import functions as F
 from mbgspark.operators.dedup import build_minhash_index
 from mbgspark.session import get_spark
 from mbgspark.streaming import (
+    GATE_BUCKETS,
+    GATE_META,
     start_neardup_gate_sink,
     start_neardup_gate_sink_indexed,
     write_gate_meta,
 )
 
 BASE = "/tmp/gate_bench"
-NUM_BUCKETS = 64
 
 
 def make_texts(n: int, seed: int = 7) -> list[str]:
@@ -96,33 +98,23 @@ def seed_mode(spark, texts: list[str], mode: str, root: str) -> None:
     (
         bands.withColumn("__gate_batch", F.lit(-1))
         .withColumn(
-            "__bucket", F.pmod(F.xxhash64("band_idx", "band_key"), F.lit(NUM_BUCKETS))
+            "__bucket", F.pmod(F.xxhash64("band_idx", "band_key"), F.lit(GATE_BUCKETS))
         )
         .repartition(F.col("__bucket"))  # ~1 file per bucket dir
         .write.mode("overwrite")
         .partitionBy("__gate_batch", "__bucket")
         .parquet(f"{root}/index/bands")
     )
-    if mode.startswith("pruned"):
-        (
-            arrays.withColumn("__gate_batch", F.lit(-1))
-            .withColumn("__bucket", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(NUM_BUCKETS)))
-            .repartition(F.col("__bucket"))
-            .write.mode("overwrite")
-            .partitionBy("__gate_batch", "__bucket")
-            .parquet(f"{root}/index/arrays")
-        )
-    # the gate validates the seeded layout against the index meta sidecar
-    # (r7: a bucketed store without meta is treated as un-migratable legacy)
-    write_gate_meta(
-        spark,
-        f"{root}/index",
-        {
-            "layout": "bucketed-v1",
-            "num_buckets": NUM_BUCKETS,
-            "index_arrays": mode.startswith("pruned"),
-        },
+    (
+        arrays.withColumn("__gate_batch", F.lit(-1))
+        .withColumn("__bucket", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(GATE_BUCKETS)))
+        .repartition(F.col("__bucket"))
+        .write.mode("overwrite")
+        .partitionBy("__gate_batch", "__bucket")
+        .parquet(f"{root}/index/arrays")
     )
+    # the gate fails fast on band rows without the layout meta sidecar
+    write_gate_meta(spark, f"{root}/index", GATE_META)
 
 
 def run_mode(spark, texts: list[str], mode: str, n: int) -> dict:
@@ -146,7 +138,6 @@ def run_mode(spark, texts: list[str], mode: str, n: int) -> dict:
             q = start_neardup_gate_sink_indexed(
                 stream, f"{root}/store", f"{root}/index", f"{root}/ck",
                 threshold=0.5, available_now=True,
-                index_arrays=mode.startswith("pruned"), num_buckets=NUM_BUCKETS,
                 # the compact mode folds mid-stream after 2 live batch
                 # partitions accumulate — batch 2's time is then the
                 # post-compaction cost of record (VERDICT r6 item 3)
@@ -164,7 +155,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     for n in sizes:
         texts = make_texts(n)
-        for mode in ("plain", "hybrid", "pruned", "pruned_compact"):
+        for mode in ("plain", "pruned", "pruned_compact"):
             print(json.dumps(run_mode(spark, texts, mode, n)), flush=True)
 
 

@@ -41,17 +41,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from gate_bench import (  # noqa: E402
-    NUM_BUCKETS,
     batch_docs,
     make_texts,
     seed_mode,
     write_batch_file,
 )
 
-from mbgspark.jvmseam import (  # noqa: E402
-    app_shuffle_write_records,
-    assert_stage_retention_headroom,
-)
+from mbgspark.jvmseam import app_shuffle_write_records, last_stage_id  # noqa: E402
 from mbgspark.session import get_spark  # noqa: E402
 from mbgspark.streaming import (  # noqa: E402
     compact_gate_store,
@@ -59,23 +55,6 @@ from mbgspark.streaming import (  # noqa: E402
 )
 
 BASE = "/tmp/gate_soak"
-
-
-def _settled_records(spark) -> int:
-    """App-cumulative shuffle-write records after async stage postings
-    settle (two reads 0.3 s apart agree) — per-batch work ledger. Fails
-    loud near the stage-retention limit, past which eviction silently
-    corrupts the snapshot diff (ADVICE r12)."""
-    assert_stage_retention_headroom(spark)
-    prev = app_shuffle_write_records(spark)
-    deadline = time.time() + 10
-    while time.time() < deadline:
-        time.sleep(0.3)
-        cur = app_shuffle_write_records(spark)
-        if cur == prev:
-            return cur
-        prev = cur
-    return prev
 
 
 def _live_dirs(path: str) -> list[str]:
@@ -101,10 +80,7 @@ def main() -> None:
     ce = int(sys.argv[3]) if len(sys.argv) > 3 else 3
     target_files = int(sys.argv[4]) if len(sys.argv) > 4 else 1
 
-    # exact-work ledger needs every stage retained (see _settled_records)
-    spark = get_spark(
-        "gate_soak", extra_conf={"spark.ui.retainedStages": "100000"}
-    )
+    spark = get_spark("gate_soak")
     spark.sparkContext.setLogLevel("ERROR")
 
     root = f"{BASE}/pruned_{n}"
@@ -124,7 +100,7 @@ def main() -> None:
             f"{root}/src"
         )
         t0 = time.time()
-        x0 = _settled_records(spark)
+        x0 = last_stage_id(spark)
         q = start_neardup_gate_sink_indexed(
             stream,
             store,
@@ -132,8 +108,6 @@ def main() -> None:
             ck,
             threshold=0.5,
             available_now=True,
-            index_arrays=True,
-            num_buckets=NUM_BUCKETS,
             compact_every=ce,
             compact_target_files=target_files,
         )
@@ -144,7 +118,7 @@ def main() -> None:
             q.stop()
             raise TimeoutError(f"batch {b}: gate sink still running after 1200 s")
         secs = round(time.time() - t0, 2)
-        xrec = _settled_records(spark) - x0
+        xrec = app_shuffle_write_records(spark, after_stage=x0)
         print(
             json.dumps(
                 {
@@ -199,10 +173,10 @@ def main() -> None:
             with open(f"{staging}/_COMPACT_MANIFEST.json", "w") as f:
                 json.dump({"dirs": dirs_at_snapshot}, f)
         extra.write.mode("overwrite").parquet(f"{twin_store}/__gate_batch=9999")
-        x0 = _settled_records(spark)
+        x0 = last_stage_id(spark)
         folded_1 = compact_gate_store(spark, twin_store, target_files=target_files)
         folded_2 = compact_gate_store(spark, twin_store, target_files=target_files)
-        compact_xrec = _settled_records(spark) - x0
+        compact_xrec = app_shuffle_write_records(spark, after_stage=x0)
         df = spark.read.parquet(twin_store)
         results[twin] = {
             "folded": [folded_1, folded_2],

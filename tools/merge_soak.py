@@ -59,29 +59,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from mbgspark.io import retention_sweep
-from mbgspark.jvmseam import (
-    app_shuffle_write_records,
-    assert_stage_retention_headroom,
-)
+from mbgspark.jvmseam import app_shuffle_write_records, last_stage_id
 from mbgspark.session import ensure_session_conf, get_spark
 from mbgspark.streaming import start_merge_sink
 
-
-def settled_records(spark) -> int:
-    """App-cumulative shuffle-write records, read after the async stage
-    postings settle (two consecutive reads 0.3 s apart agree). Fails loud
-    if the AppStatusStore is nearing its stage-retention limit — past it,
-    eviction silently corrupts the snapshot diff (ADVICE r12)."""
-    assert_stage_retention_headroom(spark)
-    prev = app_shuffle_write_records(spark)
-    deadline = time.time() + 10
-    while time.time() < deadline:
-        time.sleep(0.3)
-        cur = app_shuffle_write_records(spark)
-        if cur == prev:
-            return cur
-        prev = cur
-    return prev
 
 BASE = "/tmp/merge_soak"
 DAYS_PER_BATCH = 4  # each batch spans 4 consecutive days, advancing 2/batch
@@ -182,11 +163,7 @@ def main() -> None:
     batches = int(sys.argv[2]) if len(sys.argv) > 2 else 8
     mrpf = int(sys.argv[3]) if len(sys.argv) > 3 else 5_000
 
-    # the exact-work ledger needs every stage retained for the whole soak
-    # (see settled_records); default retention is 1000 stages
-    spark = get_spark(
-        "merge_soak", extra_conf={"spark.ui.retainedStages": "100000"}
-    )
+    spark = get_spark("merge_soak")
     # non-ANSI like every engine entry point: the content checksum SUMs
     # xxhash64 values, which must wrap, not raise
     ensure_session_conf(spark)
@@ -204,8 +181,10 @@ def main() -> None:
     crash_at = max(sweep_at + 1, 1) if batches >= 2 else None
     per_day = rows // DAYS_PER_BATCH  # rows a batch contributes to one day
     # per-batch WORK ledger (shuffle records written by each batch's
-    # merge jobs, app-snapshot diffed): seconds swing with neighbor
-    # load, records don't — the crash replay below must not just
+    # merge jobs, summed over the stages after a last_stage_id marker —
+    # exact however many older stages the status store evicts): seconds
+    # swing with neighbor load, records don't — the crash replay below
+    # must not just
     # converge to the same CONTENT, it must do the same WORK
     batch_xrec: dict[int, int] = {}
     for b in range(batches):
@@ -216,9 +195,9 @@ def main() -> None:
             # committed any day dir, so the visible store IS pre-batch)
             shutil.copytree(store, f"{BASE}/pre_b{b}_store")
         t0 = time.time()
-        x0 = settled_records(spark)
+        x0 = last_stage_id(spark)
         run_stream(spark, src, store, ck, mrpf)
-        batch_xrec[b] = settled_records(spark) - x0
+        batch_xrec[b] = app_shuffle_write_records(spark, after_stage=x0)
         counts = day_file_counts(store)
         # many-part bound: a day holds ≤ 2 batches' worth of rows (the
         # 2-day overlap), compacted to one task then split by mrpf
@@ -302,9 +281,9 @@ def main() -> None:
                 p = f"{ck}/commits/{f2}"
                 if os.path.exists(p):
                     os.remove(p)
-            x0 = settled_records(spark)
+            x0 = last_stage_id(spark)
             run_stream(spark, src, store, ck, mrpf)  # replays batch b only
-            replay_xrec = settled_records(spark) - x0
+            replay_xrec = app_shuffle_write_records(spark, after_stage=x0)
             replayed = content_hash(spark, store)
             assert replayed == post_hash, (
                 "mid-write crash replay diverged",
@@ -372,9 +351,9 @@ def main() -> None:
         p = f"{twin_ck}/commits/{f}"
         if os.path.exists(p):
             os.remove(p)
-    x0 = settled_records(spark)
+    x0 = last_stage_id(spark)
     run_stream(spark, src, twin_store, twin_ck, mrpf)
-    twin_xrec = settled_records(spark) - x0
+    twin_xrec = app_shuffle_write_records(spark, after_stage=x0)
     replayed = content_hash(spark, twin_store)
     same = replayed == final
     print(

@@ -5,9 +5,9 @@ items 1/7: dedup_minhash_lsh runs ~40 stages whose inter-stage gaps are
 For each named catalog row: run it once to warm (plan + JIT at the same
 SF, per bench.py's protocol rationale), then run it again and report
 
-- ``n_stages``: completed stages attributable to the timed run (retained
-  AppStatusStore stage count diff — exact while the app stays under
-  spark.ui.retainedStages, asserted via the jvmseam headroom guard);
+- ``n_stages``: stages attributable to the timed run (the retained
+  AppStatusStore stages after a ``jvmseam.last_stage_id`` marker — exact
+  however many older stages the store evicts);
 - ``stage_sec``: sum of per-stage (completionTime − firstTaskLaunchedTime)
   — the time tasks were actually running;
 - ``wall_sec``: the noop-sink wall. wall − stage_sec ≈ driver/AQE
@@ -26,15 +26,16 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from mbgspark.jvmseam import _retained_stages, assert_stage_retention_headroom
+from mbgspark.jvmseam import last_stage_id, retained_stages
 from mbgspark.plans.catalog import CATALOG
 from mbgspark.session import get_spark
 
 
-def _stage_snapshot(spark) -> dict[int, float]:
-    """{stageId: active_sec} for every retained completed stage."""
+def _stages_since(spark, marker: int) -> dict[int, float]:
+    """{stageId: active_sec} for every retained stage after ``marker``."""
+    last_stage_id(spark)  # drains the listener bus
     out: dict[int, float] = {}
-    for st in _retained_stages(spark):
+    for st in retained_stages(spark, marker):
         sid = int(st.stageId())
         try:
             t0 = st.firstTaskLaunchedTime()
@@ -62,15 +63,13 @@ def main() -> None:
         builder = CATALOG[name][0]
         spark.sparkContext.setJobDescription(f"census-warm: {name}")
         builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        before = _stage_snapshot(spark)
+        marker = last_stage_id(spark)
         spark.sparkContext.setJobDescription(f"census: {name}")
         t0 = time.time()
         builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
         wall = time.time() - t0
         spark.sparkContext.setJobDescription(None)
-        after = _stage_snapshot(spark)
-        assert_stage_retention_headroom(spark)
-        new = {sid: s for sid, s in after.items() if sid not in before}
+        new = _stages_since(spark, marker)
         print(
             json.dumps(
                 {
