@@ -98,76 +98,43 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 _FANOUT_MIN_BYTES = 4 * 1024 * 1024
 
 
-def fanout_scan(df: DataFrame) -> DataFrame:
-    """Spread a narrow scan across the session's cores IF it arrives in
-    fewer splits than the session has parallelism AND is big enough that
-    the exchange pays for itself — otherwise pass through untouched.
+def ensure_width(df: DataFrame, by: str | None = None, min_bytes: int = 0) -> DataFrame:
+    """Spread a narrow input across the session's cores — the engine's one
+    partition-width rule. Returns ``df`` untouched if it is streaming, if
+    ``min_bytes`` is set and the input's leaf bytes fall under it, or if
+    it already has at least ``defaultParallelism`` partitions; otherwise
+    repartitions to ``defaultParallelism``, hash-partitioned on ``by`` when
+    given, round-robin when not.
 
-    Scan parallelism is bounded by parquet ROW GROUPS, not by
-    ``files.maxPartitionBytes``: a single-row-group file is one task no
-    matter the split size, so a CPU-heavy pass (regex tokenize, shingle,
-    explode, HOF folds) over a small-corpus file serializes on one core
-    (measured: every documents.parquet the driver ships is one row group;
-    bigram scoring at sf1 spent its whole runtime single-task). The guard
-    repartitions only below session parallelism, so on a real multi-row-
-    group corpus — the only kind that exists at 100 TB — the condition is
-    false and the plan is untouched; locally the exchange moves just the
-    pre-tokenize rows (MBs). The size floor reads Catalyst's plan
-    statistics (parquet footer bytes — no job); if the probe fails on some
-    future plan shape, the guard assumes "big" and fans out, which is the
-    direction that can only cost a small exchange. Apply INSIDE operators
-    whose per-row work dominates their scan, on the narrowest projection
-    available.
-    """
-    if df.isStreaming:  # no static partitioning to probe; sources size
-        return df  # their own microbatches (maxFilesPerTrigger etc.)
-    # byte floor FIRST: it reads optimizer-plan footer stats only, while
-    # the split-count probe (df.rdd) forces full physical planning per
-    # call — ordering the cheap veto first makes the guard near-free on
-    # the small inputs that dominate plan-build time (r7 blemish note)
-    if _leaf_bytes(df) < _FANOUT_MIN_BYTES:
+    Why: parquet scan parallelism is bounded by ROW GROUPS, not by
+    ``files.maxPartitionBytes``, so a small single-row-group file arrives
+    as one task and any CPU-heavy per-row pass over it (tokenize, shingle,
+    minhash, the 600-term locate, a broadcast-crossJoin scorer whose
+    parallelism is its stream side's partition count) serializes on one
+    core (sf1 measured: bigram scoring wholly single-task;
+    contamination_embedding 148 s of 202 s on one core). A production
+    table arrives in many splits, so there the rule is a pass-through and
+    the plan is untouched.
+
+    ``min_bytes``: skip the exchange on inputs whose fixed cost it would
+    exceed. Row-local text operators pass ``_FANOUT_MIN_BYTES``. Callers
+    whose per-row work is heavy regardless of row size pass nothing — a
+    broadcast-join stream side does |broadcast| units of work per row, so
+    a 3 MB vector file can carry 4×10⁸ cosines. The byte check runs first
+    because it reads optimizer footer stats only, while the split-count
+    probe (``df.rdd``) forces physical planning.
+
+    ``by`` (r15): hash-partition on a unique row id instead of round-robin.
+    A downstream groupBy(``by``) then satisfies its ClusteredDistribution
+    from this exchange and plans none of its own (the minhash signature
+    groupBy, the contamination fold's per-id max), and the round-robin
+    sort-before-repartition is skipped; spread is equivalent for a unique
+    id. Apply on the narrowest projection available."""
+    if df.isStreaming:  # sources size their own micro-batches
+        return df
+    if min_bytes and _leaf_bytes(df) < min_bytes:
         return df
     n = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions() or 1) >= n:
-        return df
-    return df.repartition(n)
-
-
-def widen_narrow_scan(df: DataFrame, width: int = 16, by: str | None = None) -> DataFrame:
-    """Split-count-guarded twin of ``fanout_scan`` for operators whose
-    per-row work is heavy enough that widening pays even on sub-megabyte
-    inputs (shingle+minhash, the 600-term locate chain, bigram explodes —
-    measured at sf0.1: minhash 1.76 s unwidened vs 1.23 s at width 16, vs
-    ``fanout_scan``'s byte floor which would skip a 0.6 MB corpus): no
-    byte floor, width capped (the full session width over-schedules tiny
-    tasks — rep=32 measured 1.60 s on the same corpus).
-
-    The guard is the 100 TB property (r14): the catalog builders this
-    replaces called ``.repartition(min(16, parallelism))`` UNCONDITIONALLY
-    — correct on the single-split test-SF parquet, but a full round-robin
-    shuffle of the corpus (text payloads included) on any production
-    table, which always arrives in more splits than ``width`` and needs
-    no widening at all. Probing the scan's split count makes the exchange
-    exist exactly when it helps. The probe (``df.rdd``) forces physical
-    planning once per plan build — the same cost ``fanout_scan`` already
-    pays, amortized by the session plan cache.
-
-    ``by`` (r15): hash-partition on that column instead of round-robin.
-    Two wins when the caller has a unique row id: (1) any downstream
-    groupBy(``by``) satisfies its ClusteredDistribution from the widener
-    itself, so EnsureRequirements inserts NO aggregation exchange — the
-    minhash signature groupBy and contamination_check's per-doc hit
-    count ride the one widener shuffle (guide §2.4: two operations keyed
-    the same way share one exchange); (2) RoundRobinPartitioning pays a
-    local sort of every input partition before assignment
-    (spark.sql.execution.sortBeforeRepartition, needed for deterministic
-    retries — guide §2.5) which keyed hash partitioning never needs, and
-    the hash assignment is deterministic under retry by construction.
-    Spread is equivalent for a unique id (murmur3 over distinct keys).
-    Callers whose downstream keys on something else lose nothing: the
-    exchange exists either way at test SF and is skipped at production
-    widths."""
-    n = min(width, df.sparkSession.sparkContext.defaultParallelism)
     if (df.rdd.getNumPartitions() or 1) >= n:
         return df
     if by is not None:
@@ -318,31 +285,46 @@ def compact_store(
     store appended daily reads thousands of tiny footers per partition
     until compacted). Returns the number of files after compaction.
 
-    The rewrite goes through a temp sibling directory then an atomic-ish
-    rename (a reader mid-swap sees the old store or the new one, not a
-    half-written mix); partition values are preserved exactly. Run this
-    from the maintenance window of an ingest pipeline, not per-batch —
-    per-batch compaction is write amplification.
+    The rewrite goes to a ``__compact_tmp`` sibling, then two renames on
+    the session's Hadoop FS swap it in (store → ``__compact_old``, tmp →
+    store), so a reader never sees a half-written mix; partition values
+    are preserved exactly. A crash between the renames leaves no store at
+    ``path``: the next call finishes that swap first, and
+    ``streaming.start_merge_sink`` refuses to write while it is unfinished.
+    Run this from the maintenance window of an ingest pipeline, not
+    per-batch — per-batch compaction is write amplification.
     """
-    import os
-    import shutil
+    path = path.rstrip("/")
+    tmp, old = path + "__compact_tmp", path + "__compact_old"
+    fs, store_p = jvmseam.hadoop_fs(spark, path)
 
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + "__compact_tmp"
+    def _p(s: str):
+        return jvmseam.hadoop_path(spark, s)
+
+    def _rename(src: str, dst: str) -> None:
+        if not fs.rename(_p(src), _p(dst)):
+            raise RuntimeError(f"compact_store: failed to rename {src} to {dst}")
+
+    if not fs.exists(store_p) and fs.exists(_p(old)):
+        _rename(tmp, path)  # cut between the renames: tmp is the finished copy
+    if fs.exists(_p(old)):  # cut before the final delete: stale, and
+        fs.delete(_p(old), True)  # renaming onto a directory is FS-specific
+
     (
-        df.repartition(partition_col)
-        .write.mode("overwrite")
+        spark.read.parquet(path)
+        .repartition(partition_col)
+        .write.mode("overwrite")  # also replaces a tmp cut mid-write
         .option("maxRecordsPerFile", str(max_records_per_file))
         .partitionBy(partition_col)
         .parquet(tmp)
     )
-    old = path.rstrip("/") + "__compact_old"
-    shutil.move(path, old)
-    shutil.move(tmp, path)
-    shutil.rmtree(old)
+    _rename(path, old)
+    _rename(tmp, path)
+    fs.delete(_p(old), True)
     n = 0
-    for root, _dirs, files in os.walk(path):
-        n += sum(1 for f in files if f.endswith(".parquet"))
+    files = fs.listFiles(store_p, True)
+    while files.hasNext():
+        n += files.next().getPath().getName().endswith(".parquet")
     return n
 
 

@@ -21,8 +21,8 @@ Seams (pin tests co-located in ``tests/test_jvmseam.py``):
    .collectLeaves()`` stats. Sums LEAF-relation sizeInBytes (parquet
    footer bytes, no job); leaf stats, not the root's, because Project
    stats scale strings by schema default widths (~30× under-report on
-   text columns). Failure direction: ``None`` → ``io.fanout_scan``
-   assumes "big" and fans out, costing at most one tiny exchange.
+   text columns). Failure direction: ``None`` → ``io.ensure_width``'s
+   byte floor assumes "big" and widens, costing at most one tiny exchange.
 3. ``physical_plan_root`` / ``walk_plan`` / ``node_class`` /
    ``node_expressions`` / ``walk_expression`` — the pre-exchange
    physical plan tree via ``df._jdf.queryExecution().sparkPlan()``,
@@ -84,7 +84,7 @@ def leaf_size_bytes(df: DataFrame) -> int | None:
     """Sum of the optimized plan's LEAF-relation ``sizeInBytes`` (for
     parquet scans: file bytes straight from the footer index — no job).
     Returns ``None`` if the probe fails on some future plan shape so the
-    caller chooses its own safe direction (``fanout_scan`` assumes big)."""
+    caller chooses its own safe direction (``io.ensure_width`` assumes big)."""
     try:
         size = 0
         it = df._jdf.queryExecution().optimizedPlan().collectLeaves().iterator()

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from mbgspark.io import _FANOUT_MIN_BYTES, ensure_width
 from mbgspark.operators.dedup import with_word_shingles
 
 # ------------------------------------------------------- contamination ----
@@ -130,12 +131,10 @@ def with_repetition_stats(
     ``__toks`` — slices are lambda ARGUMENTS, evaluated once — and the
     run-length ``aggregate`` references only its own lambda variables.
 
-    Input rides ``io.fanout_scan`` (row-group-bounded scan parallelism —
-    see bigram_surprise; pass-through at real scale).
+    Input rides ``io.ensure_width`` with the byte floor (see
+    textstats.bigram_surprise; pass-through at real scale).
     """
-    from mbgspark.io import fanout_scan
-
-    df = fanout_scan(df.select(id_col, text_col))
+    df = ensure_width(df.select(id_col, text_col), min_bytes=_FANOUT_MIN_BYTES)
     toks = df.select(
         F.col(id_col),
         F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("__toks"),
@@ -562,11 +561,7 @@ def embedding_contamination(
       either scoring pass, and at real scale the answer is always
       "vectorized" anyway.
     """
-    from mbgspark.operators.dedup import (
-        cosine_sim_prenorm,
-        fanout_stream_side,
-        vec_norm,
-    )
+    from mbgspark.operators.dedup import cosine_sim_prenorm, vec_norm
 
     if strategy == "auto":
         pairs = corpus.count() * bench.count()
@@ -588,13 +583,13 @@ def embedding_contamination(
             vec_norm(F.col(vec_col)).alias("__bn"),
         )
     )
-    c = fanout_stream_side(
+    c = ensure_width(
         corpus.select(
             F.col(id_col),
             F.col(vec_col).alias("__cv"),
             vec_norm(F.col(vec_col)).alias("__cn"),
         ),
-        by=id_col,  # the groupBy-max below rides the fanout exchange (r15)
+        by=id_col,  # the groupBy-max below rides the widening exchange (r15)
     )
     return (
         c.crossJoin(b)
@@ -697,10 +692,8 @@ def _embedding_contamination_vectorized(
             out.loc[~mask, "max_bench_sim"] = None
             yield out
 
-    from mbgspark.operators.dedup import fanout_stream_side
-
     return (
-        fanout_stream_side(base)
+        ensure_width(base)
         .mapInPandas(_score, out_schema)
         .select(
             id_col,

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from mbgspark import jvmseam
+from mbgspark.io import _FANOUT_MIN_BYTES, ensure_width
 
 
 # ---------------------------------------------------------------- D1-D3 ----
@@ -85,9 +86,9 @@ def with_word_shingles(
     re-evaluate the regex split per array element (O(words²) per doc) —
     measured 13× slower at sf0.1.
 
-    Deliberately NOT behind ``io.fanout_scan``: every consumer (signature
+    Deliberately NOT behind ``io.ensure_width``: every consumer (signature
     min, intersection counts, band rows) aggregates right after the
-    explode and re-derives this lineage per consumer, so the fanout
+    explode and re-derives this lineage per consumer, so the widening
     exchange is paid once per consumer while the shuffle that follows
     already spreads the real work — measured at sf1 a consistent small
     LOSS for minhash_near_dups and dedup_incremental (4.2 → 4.5 s / 4.2 →
@@ -471,7 +472,7 @@ def with_shingle_array(
     preferred when per-doc shingle sets fit in a row (true for any sane doc:
     ~1 shingle per word). Tokens are split in their own projection — see
     with_word_shingles for why inlining the split into the lambda is 13×
-    slower, and for why neither builder sits behind ``io.fanout_scan``
+    slower, and for why neither builder sits behind ``io.ensure_width``
     (consumers aggregate immediately; measured loss at sf1)."""
     pre = df.select(
         F.col(id_col),
@@ -1060,11 +1061,9 @@ def simhash32(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
     Physical shape: explode(token) → explode(32 bit positions) → two hash
     aggregations — linear in corpus size, no cross join, shuffles on
-    (id, bit) then (id). Input rides ``io.fanout_scan`` (see
-    with_word_shingles)."""
-    from mbgspark.io import fanout_scan
-
-    df = fanout_scan(df.select(id_col, text_col))
+    (id, bit) then (id). Input rides ``io.ensure_width`` with the byte
+    floor (see textstats.bigram_surprise)."""
+    df = ensure_width(df.select(id_col, text_col), min_bytes=_FANOUT_MIN_BYTES)
     toks = df.select(
         F.col(id_col),
         F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("tok"),
@@ -1162,39 +1161,6 @@ def simhash_near_dups(
 # per-pair cost dominates. Measured r7 on 64-dim vectors at local[32]
 # (SCALE.md); shared by embedding_contamination and brute_force_topk.
 VECTORIZED_PAIR_CROSSOVER = 2_000_000
-
-
-def fanout_stream_side(c: DataFrame, by: str | None = None) -> DataFrame:
-    """Spread a narrow broadcast-join stream side across the session's cores.
-
-    Broadcast-crossJoin scoring parallelism equals the STREAM side's
-    partition count, and a small parquet corpus arrives as one partition —
-    serializing the whole n*m score pass on a single task (observed at sf1:
-    contamination_embedding spent 148 s of a 202 s bench on one core). The
-    extra exchange moves only the corpus rows (tiny next to the scored
-    frame); a corpus already at session parallelism passes through
-    untouched, so the big-data path adds nothing.
-
-    Deliberately NOT ``io.fanout_scan``: that guard gates on input BYTES
-    because scan-side per-row work is proportional to row size, but a
-    broadcast-join stream side does |broadcast| units of work per row —
-    a 3 MB vector file can carry 4×10⁸ cosines (the r6 sf1 incident), so
-    here small bytes never justify staying on one core.
-
-    ``by`` (r15, same device as ``io.widen_narrow_scan``'s keyed mode):
-    hash-partition on the stream side's unique id instead of
-    round-robin, so a downstream per-id reduction (the contamination
-    fold's groupBy-max) rides this exchange and plans none of its own —
-    and the round-robin-only sort-before-repartition is skipped. Spread
-    is equivalent for a unique id. Callers whose downstream keys on the
-    BROADCAST side (the top-k scorers' query_id windows) gain nothing
-    and stay round-robin."""
-    n = c.sparkSession.sparkContext.defaultParallelism
-    if (c.rdd.getNumPartitions() or 1) < n:
-        if by is not None:
-            return c.repartition(n, F.col(by))
-        return c.repartition(n)
-    return c
 
 
 def vec_norm(v: Column) -> Column:

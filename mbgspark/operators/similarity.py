@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from mbgspark.io import ensure_width
 from mbgspark.operators.dedup import cosine_sim, cosine_sim_prenorm, vec_norm
 
 
@@ -29,11 +30,6 @@ def similarity_topk(*args, **kwargs) -> DataFrame:
     should land on the cell-bucketed plan, not an accidental corpus-sized
     nested loop (VERDICT r1 item 6)."""
     return ivf_topk(*args, **kwargs)
-
-
-# shared with curation's embedding decontamination — one definition of the
-# "small parquet corpus arrives as ONE partition" guard
-from mbgspark.operators.dedup import fanout_stream_side as _fanout
 
 
 def brute_force_topk(
@@ -91,7 +87,7 @@ def brute_force_topk(
             vec_norm(F.col(vec_col)).alias("__qn"),
         )
     )
-    c = _fanout(
+    c = ensure_width(
         corpus.select(
             F.col(id_col).alias("match_id"),
             F.col(vec_col).alias("cv"),
@@ -237,9 +233,7 @@ def _brute_force_topk_vectorized(
                     out["match_label"].extend(mlab[sel])
             yield pd.DataFrame(out, columns=list(cand_schema_cols))
 
-    from mbgspark.operators.dedup import fanout_stream_side
-
-    cands = fanout_stream_side(base).mapInPandas(_score, cand_schema)
+    cands = ensure_width(base).mapInPandas(_score, cand_schema)
     if label_col:
         qmap = F.create_map(
             *[x for qid, ql in zip(qids, qlabels) for x in (F.lit(qid), F.lit(ql))]
@@ -322,7 +316,7 @@ def build_ivf_index(
     # sessions this engine pins, which would make the equal-sim tie-break
     # nondeterministic (ADVICE r10).
     scored = (
-        _fanout(
+        ensure_width(
             corpus.select(
                 F.col(id_col).alias("match_id"),
                 F.col(vec_col).alias("cv"),
@@ -706,7 +700,7 @@ def hard_negative_topk(
             F.col(label_col).alias("query_label"),
         )
     )
-    c = _fanout(
+    c = ensure_width(
         corpus.select(
             F.col(id_col).alias("match_id"),
             F.col(vec_col).alias("cv"),

@@ -12,6 +12,8 @@ import itertools
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mbgspark.io import _FANOUT_MIN_BYTES, ensure_width
+
 # per-process id source for registered UDTF/view names — deterministic,
 # monotonic, and unique across concurrent chunk_documents_udtf calls
 _UDTF_CALL_IDS = itertools.count()
@@ -191,14 +193,12 @@ def unigram_surprise(
 
     Emits (id, n_tokens, mean_surprise_micronats).
 
-    Both corpus passes sit behind ``io.fanout_scan`` (row-group-bounded
-    scan parallelism — see bigram_surprise; pass-through at real scale).
+    Both corpus passes sit behind ``io.ensure_width`` with the byte floor
+    (see bigram_surprise; pass-through at real scale).
     """
     from pyspark.sql import Window
 
-    from mbgspark.io import fanout_scan
-
-    df = fanout_scan(df.select(id_col, text_col))
+    df = ensure_width(df.select(id_col, text_col), min_bytes=_FANOUT_MIN_BYTES)
     toks = df.select(
         F.col(id_col),
         F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("__tok"),
@@ -270,13 +270,11 @@ def tfidf_top_terms(
     (score, token) list — row-local, no corpus-wide window, no global
     sort. Emits (id, rank, term, score_micro) rows, rank 1-based.
 
-    Input rides ``io.fanout_scan`` (row-group-bounded scan parallelism —
-    see bigram_surprise; pass-through at real scale)."""
+    Input rides ``io.ensure_width`` with the byte floor (see
+    bigram_surprise; pass-through at real scale)."""
     from pyspark.sql import Window
 
-    from mbgspark.io import fanout_scan
-
-    df = fanout_scan(df.select(id_col, text_col))
+    df = ensure_width(df.select(id_col, text_col), min_bytes=_FANOUT_MIN_BYTES)
     toks = df.select(
         F.col(id_col),
         F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("__tok"),
@@ -354,14 +352,12 @@ def gopher_quality_filter(
     detection uses translate-against-[a-z] length comparison — equivalent
     to `token contains [a-z]` but without a per-token regex engine call.
 
-    The one exception to "zero shuffles" is ``io.fanout_scan`` at the
+    The one exception to "zero shuffles" is ``io.ensure_width`` at the
     input: row-group-bounded scan parallelism serializes the tokenize on
     single-row-group corpus files (sf1 measured: whole query one task);
     the guard is a pass-through on any real multi-row-group corpus.
     """
-    from mbgspark.io import fanout_scan
-
-    df = fanout_scan(df.select(id_col, text_col))
+    df = ensure_width(df.select(id_col, text_col), min_bytes=_FANOUT_MIN_BYTES)
     t = F.trim(F.col(text_col))
     pre = df.select(
         F.col(id_col),
@@ -429,7 +425,8 @@ def gopher_quality_filter(
 LM_MODEL_DRIVER_CAP = 2_000_000
 
 #: Corpus leaf bytes (COMPRESSED file bytes — the parquet footer stats
-#: ``fanout_scan`` reads) above which the vectorized scoring pass pays
+#: ``io.ensure_width``'s byte floor reads) above which the vectorized
+#: scoring pass pays
 #: for its Python stage: measured wash at sf0.1 (0.6 MB documents file),
 #: 2.3× win at sf1 (6 MB), slight loss at sf0.01 — the crossover sits
 #: between the first two (SCALE.md r8 A/B table).
@@ -490,11 +487,11 @@ def bigram_surprise(
     Emits (id, n_bigrams, mean_bigram_surprise_micronats); docs with
     fewer than two tokens have no bigrams and are absent by definition.
 
-    All three corpus passes sit behind ``io.fanout_scan``: scan parallelism
-    is bounded by row groups, and a single-row-group corpus file would
-    serialize every tokenize/explode pass on one core (sf1 measured: the
-    whole 5.2 s runtime was single-task). At real scale the guard is a
-    pass-through.
+    All three corpus passes sit behind ``io.ensure_width`` with the byte
+    floor: scan parallelism is bounded by row groups, and a single-row-
+    group corpus file would serialize every tokenize/explode pass on one
+    core (sf1 measured: the whole 5.2 s runtime was single-task). At real
+    scale the guard is a pass-through.
 
     ``strategy``: ``"fold"`` is the all-JVM plan above. ``"vectorized"``
     keeps the model build (explode → groupBy → window) but replaces the
@@ -514,13 +511,12 @@ def bigram_surprise(
     cap IS the legality bound, exactly like the broadcast families).
     ``"auto"`` (default) picks vectorized when the corpus leaf bytes
     clear ``LM_VECTORIZED_MIN_BYTES`` (the measured crossover; the probe
-    is the same footer-stats read ``fanout_scan`` uses, no job) and the
-    model fits the cap.
+    is the same footer-stats read ``ensure_width``'s floor uses, no job)
+    and the model fits the cap.
     """
     from pyspark.sql import Window
 
     from mbgspark import jvmseam
-    from mbgspark.io import fanout_scan
 
     if strategy not in ("auto", "fold", "vectorized"):
         raise ValueError(f"unknown bigram_surprise strategy: {strategy!r}")
@@ -532,7 +528,7 @@ def bigram_surprise(
             else "fold"
         )
 
-    df = fanout_scan(df.select(id_col, text_col))
+    df = ensure_width(df.select(id_col, text_col), min_bytes=_FANOUT_MIN_BYTES)
     toks = F.filter(_tokens(F.col(text_col)), lambda x: x != "")
     pairs = F.expr(
         "zip_with(slice(__toks, 1, greatest(size(__toks) - 1, 0)), "
@@ -589,7 +585,7 @@ def _bigram_score_vectorized(
     """The scoring half of ``bigram_surprise(strategy="vectorized")``:
     broadcast the driver-fetched (w1, w2, sup_micronats) model and score
     every doc in one ``mapInPandas`` pass. ``df`` is the already
-    fanout-scanned (id, text) projection; output schema and absent-row
+    width-ensured (id, text) projection; output schema and absent-row
     semantics (docs with <2 tokens emit nothing) match the fold exactly —
     pinned by ``test_bigram_vectorized_matches_fold``.
 
@@ -751,11 +747,9 @@ def bm25_search(
     surface are hash-stable across engines. Emits the top-k
     (id, n_query_terms_hit, score_micro), ties broken by id.
 
-    Input rides ``io.fanout_scan`` (row-group-bounded scan parallelism —
-    see bigram_surprise; pass-through at real scale)."""
-    from mbgspark.io import fanout_scan
-
-    df = fanout_scan(df.select(id_col, text_col))
+    Input rides ``io.ensure_width`` with the byte floor (see
+    bigram_surprise; pass-through at real scale)."""
+    df = ensure_width(df.select(id_col, text_col), min_bytes=_FANOUT_MIN_BYTES)
     terms = [t.lower() for t in query_terms]
     toks = df.select(
         F.col(id_col),

@@ -27,7 +27,7 @@ from mbgspark.operators.curation import (
 )
 from mbgspark.functions.cleaning import strip_markup
 from mbgspark.operators.textstats import with_token_counts
-from mbgspark.io import widen_narrow_scan
+from mbgspark.io import ensure_width
 from mbgspark.plans.catalog_core import _t
 
 # --------------------------------------------------------- contamination --
@@ -37,7 +37,7 @@ def contamination_check(spark, sf_dir):
     """Benchmark decontamination: docs with doc_id % 41 == 0 stand in for
     the eval suite; every other document is flagged by distinct 3-gram
     overlap (>= 2 overlapping grams = contaminated)."""
-    d = widen_narrow_scan(
+    d = ensure_width(
         _t(spark, sf_dir, "documents"), by="doc_id"
     )  # widen the 1-split test-SF scan for the shingle explode; hash by
     # doc_id so the per-doc hit count rides the widener exchange (r15)
@@ -93,7 +93,7 @@ def repetition_stats(spark, sf_dir):
     core (measured 6.4 s of 7.2 s at sf0.1); repartitioning to the session
     width first makes it a wide map (same idiom as _dup_corpus). At
     production scale the scan has enough splits on its own."""
-    d = widen_narrow_scan(_t(spark, sf_dir, "documents"), by="doc_id")
+    d = ensure_width(_t(spark, sf_dir, "documents"), by="doc_id")
     return with_repetition_stats(d, "doc_id", "text").orderBy("doc_id")
 
 

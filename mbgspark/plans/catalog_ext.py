@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mbgspark.io import widen_narrow_scan
+from mbgspark.io import ensure_width
 from mbgspark.operators import dedup as dd
 from mbgspark.operators.multimodal import extract_features, frame_sample
 from mbgspark.operators.similarity import (
@@ -73,8 +73,8 @@ def _dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # hash-widen by id (r15): the minhash signature groupBy(id) rides the
-    # widener exchange instead of adding its own (see widen_narrow_scan)
-    return widen_narrow_scan(base.unionByName(pert), by="id")
+    # widener exchange instead of adding its own (see ensure_width)
+    return ensure_width(base.unionByName(pert), by="id")
 
 
 def dedup_exact(spark, sf_dir):
@@ -335,7 +335,7 @@ def dedup_incremental(spark, sf_dir):
     corpus = d.select(
         F.col("doc_id").alias("id"), F.lower(F.trim("text")).alias("t")
     )
-    corpus = widen_narrow_scan(corpus, by="id")  # sig groupBy rides (r15)
+    corpus = ensure_width(corpus, by="id")  # sig groupBy rides (r15)
     drop_first = F.lower(F.trim(F.expr("substring(text, instr(text, ' ') + 1)")))
     b1 = d.filter(F.col("doc_id") < 30).select(
         (F.col("doc_id") + 1000000).alias("id"), drop_first.alias("t")

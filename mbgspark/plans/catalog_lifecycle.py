@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from mbgspark.pipeline import run_etl
-from mbgspark.io import widen_narrow_scan
+from mbgspark.io import ensure_width
 from mbgspark.plans.catalog_core import _t
 from mbgspark.schema import DEFAULT_LOCATIONS
 
@@ -46,7 +46,7 @@ def etl_lifecycle(spark, sf_dir):
             " timestamp'2025-01-01 00:00:00')"
         ).alias("created_at"),
     )
-    raw = widen_narrow_scan(raw, by="_id")
+    raw = ensure_width(raw, by="_id")
     # ^ the small-file documents scan yields 1-2 splits, which would pin the
     # whole clean→locate→label map to 2 cores; a 5k-row shuffle buys wide
     # execution (measured at sf0.1: exec 0.77 s → 0.45 s). Production scans

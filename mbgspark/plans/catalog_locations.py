@@ -30,7 +30,7 @@ from mbgspark.locations import (
     build_full_locations_dim,
     locate_compiled,
 )
-from mbgspark.io import widen_narrow_scan
+from mbgspark.io import ensure_width
 from mbgspark.plans.catalog_core import _t
 
 _DIM_ROWS = build_full_locations_dim()
@@ -57,7 +57,7 @@ def _inject_expr():
 
 def locate_full_dim(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    fact = widen_narrow_scan(
+    fact = ensure_width(
         d.select(
             "doc_id", F.concat(F.col("text"), _inject_expr()).alias("text")
         ),

@@ -33,21 +33,6 @@ def _store_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(p))
 
 
-def _fs_for(spark: SparkSession, path: str):
-    return jvmseam.hadoop_fs(spark, path)
-
-
-def _read_small_file(spark: SparkSession, path: str) -> str | None:
-    """Read a small sidecar file (meta/manifest JSON) through the Hadoop
-    FS API so the gate's metadata travels with the store on any
-    filesystem (local, HDFS, object store), not just the driver's."""
-    return jvmseam.fs_read_utf8(spark, path)
-
-
-def _write_small_file(spark: SparkSession, path: str, data: str) -> None:
-    jvmseam.fs_write_utf8(spark, path, data)
-
-
 #: Hash-bucket modulus of the indexed gate's band and shingle-array paths.
 #: It is baked into every ``__bucket`` directory name, so it is part of the
 #: on-disk layout, not a tuning knob.
@@ -71,7 +56,7 @@ GATE_META = {
 def read_gate_meta(spark: SparkSession, index_path: str) -> dict | None:
     import json
 
-    raw = _read_small_file(
+    raw = jvmseam.fs_read_utf8(
         spark, index_path.rstrip("/") + "/" + GATE_META_FILE
     )
     return None if raw is None else json.loads(raw)
@@ -80,7 +65,7 @@ def read_gate_meta(spark: SparkSession, index_path: str) -> dict | None:
 def write_gate_meta(spark: SparkSession, index_path: str, meta: dict) -> None:
     import json
 
-    _write_small_file(
+    jvmseam.fs_write_utf8(
         spark, index_path.rstrip("/") + "/" + GATE_META_FILE, json.dumps(meta)
     )
 
@@ -241,6 +226,17 @@ def start_merge_sink(
                     partition_col="event_date",
                 )
             else:
+                # a compaction sibling beside a missing store is an
+                # io.compact_store swap cut between its two renames, not a
+                # first batch: writing now would replace the stored rows
+                for sib in ("__compact_old", "__compact_tmp"):
+                    if _store_exists(spark, store_path.rstrip("/") + sib):
+                        raise RuntimeError(
+                            f"merge sink: no store at {store_path} but its "
+                            f"{sib} sibling exists — an interrupted "
+                            "io.compact_store swap; re-run compact_store "
+                            "to finish it, then restart the stream"
+                        )
                 # no store yet — still dedup re-delivered keys in the batch
                 merged = keep_latest_per_key(
                     batch_df, key=key, order_col="scraped_at"
@@ -578,7 +574,7 @@ def start_neardup_gate_sink_indexed(
         # the __gate_batch ids of the store's partition directories
         if not _store_exists(spark, store_path):
             return []
-        fs, store_p = _fs_for(spark, store_path)
+        fs, store_p = jvmseam.hadoop_fs(spark, store_path)
         return [
             int(st.getPath().getName().split("=", 1)[1])
             for st in fs.listStatus(store_p)
@@ -919,7 +915,7 @@ def compact_gate_store(
     # records — any dir not in the manifest was written after the
     # snapshot and keeps its data by staying live
     if fs.exists(_p(staging + "/_SUCCESS")) and fs.exists(_p(manifest_path)):
-        raw = _read_small_file(spark, manifest_path)
+        raw = jvmseam.fs_read_utf8(spark, manifest_path)
         _swap(json.loads(raw)["dirs"])
         return 0
     if fs.exists(_p(staging)):
@@ -954,7 +950,7 @@ def compact_gate_store(
         )
     # commit marker pair: _SUCCESS (parquet committer) + the manifest —
     # written AFTER the data, so a crash in between reads as incomplete
-    _write_small_file(spark, manifest_path, json.dumps({"dirs": dirs}))
+    jvmseam.fs_write_utf8(spark, manifest_path, json.dumps({"dirs": dirs}))
     _swap(dirs)
     return len(dirs)
 

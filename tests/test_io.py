@@ -183,9 +183,12 @@ def test_compact_store_reduces_files_preserves_rows(spark, tmp_path):
         1 for _, _, fs in os.walk(store) for f in fs if f.endswith(".parquet")
     )
     rows_before = sorted(r["id"] for r in spark.read.parquet(store).collect())
+    # a stale sibling from a compaction cut before its final delete
+    spark.range(3).write.parquet(store + "__compact_old")
     after = compact_store(spark, store, "event_date")
     rows_after = sorted(r["id"] for r in spark.read.parquet(store).collect())
     assert rows_after == rows_before
+    assert not os.path.exists(store + "__compact_old")
     assert after <= 3  # one file per partition
     assert after < before
 
@@ -506,75 +509,78 @@ def test_mongo_fixture_flattens_with_reference_defaults(spark):
     assert flat["like_count"] == 3
 
 
-# ------------------------------------------------------------ fanout_scan ----
+# ----------------------------------------------------------- ensure_width ----
 
 
-def test_fanout_scan_gate(spark, monkeypatch):
-    """The scan-fanout guard fires only when BOTH conditions hold: fewer
-    partitions than session parallelism AND leaf bytes over the floor.
-    Small inputs pass through untouched (the exchange would cost more than
-    the single-core pass it parallelizes); big single-row-group inputs are
-    spread to session parallelism; an input already at parallelism is
-    untouched regardless of size (the 100 TB path adds nothing)."""
+def _check_ensure_width(spark, cases):
+    """Run ``(case, input, kwargs, widened?)`` rows through io.ensure_width.
+    An input that is not widened must come back as the SAME object (the
+    100 TB property: a production table with thousands of splits must
+    never pay a corpus-wide shuffle here); a widened one has exactly
+    ``defaultParallelism`` partitions and its values intact. With ``by``
+    the exchange is hash-keyed, so a downstream groupBy(by) plans no
+    exchange of its own."""
     import mbgspark.io as io
 
-    small = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    )
-    assert small.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
-    assert io.fanout_scan(small) is small  # under the byte floor
-
-    monkeypatch.setattr(io, "_FANOUT_MIN_BYTES", 1)
-    fanned = io.fanout_scan(small)
-    assert fanned is not small
-    assert (
-        fanned.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
-    )
-    # values survive the exchange untouched
-    assert fanned.count() == small.count()
-
-    wide = small.repartition(spark.sparkContext.defaultParallelism)
-    assert io.fanout_scan(wide) is wide  # already at parallelism
+    n = spark.sparkContext.defaultParallelism
+    for case, df, kwargs, widened in cases:
+        out = io.ensure_width(df, **kwargs)
+        if not widened:
+            assert out is df, case
+            continue
+        assert out is not df, case
+        assert out.rdd.getNumPartitions() == n, case
+        assert out.count() == df.count(), case  # values survive
+        plan = out.groupBy("doc_id").count()._jdf.queryExecution().executedPlan()
+        exchanges = plan.toString().count("Exchange")
+        if "by" in kwargs:  # the groupBy rides the keyed exchange
+            assert exchanges == 1, case
+        else:  # round-robin widening, then the groupBy's own exchange
+            assert exchanges == 2, case
 
 
-def test_widen_narrow_scan_gate(spark):
-    """The heavy-map widener (r14, replacing the catalog builders'
-    unconditional .repartition(min(16, parallelism))) fires ONLY on
-    inputs narrower than its width cap: a narrow scan is spread to
-    exactly min(16, parallelism) regardless of byte size (no byte floor —
-    shingle/minhash/locate per-row work pays for the exchange even on a
-    sub-MB corpus), and anything already at/over the cap passes through
-    UNTOUCHED — the 100 TB property: a production table with thousands
-    of splits must never pay a corpus-wide round-robin shuffle here."""
-    import mbgspark.io as io
-
-    cap = min(16, spark.sparkContext.defaultParallelism)
+def _narrow_and_wide(spark):
     narrow = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
     ).select("doc_id", "text")
-    assert narrow.rdd.getNumPartitions() < cap
-    widened = io.widen_narrow_scan(narrow)
-    assert widened is not narrow
-    assert widened.rdd.getNumPartitions() == cap
-    assert widened.count() == narrow.count()
+    assert narrow.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+    return narrow, narrow.repartition(spark.sparkContext.defaultParallelism)
 
-    wide = narrow.repartition(cap)
-    assert io.widen_narrow_scan(wide) is wide  # production shape: no-op
 
-    # keyed widener (r15): hash-partitions on the id column — a downstream
-    # groupBy(id) must plan NO exchange of its own (it rides the widener)
-    keyed = io.widen_narrow_scan(narrow, by="doc_id")
-    assert keyed.rdd.getNumPartitions() == cap
-    assert keyed.count() == narrow.count()
-    agg_plan = (
-        keyed.groupBy("doc_id")
-        .count()
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert agg_plan.count("Exchange") == 1  # the widener, nothing else
-    assert io.widen_narrow_scan(wide, by="doc_id") is wide  # gate still wins
+def test_fanout_scan_gate(spark):
+    """With a byte floor (the row-local text operators' call), ensure_width
+    widens only when BOTH conditions hold: fewer partitions than session
+    parallelism AND leaf bytes over the floor. Small inputs pass through
+    untouched (the exchange would cost more than the single-core pass it
+    parallelizes); an input already at parallelism is untouched regardless
+    of size."""
+    import mbgspark.io as io
+
+    narrow, wide = _narrow_and_wide(spark)
+    _check_ensure_width(spark, [
+        ("under the byte floor", narrow, {"min_bytes": io._FANOUT_MIN_BYTES}, False),
+        ("over the byte floor", narrow, {"min_bytes": 1}, True),
+        ("already at width", wide, {"min_bytes": 1}, False),
+        ("already at width, keyed", wide, {"by": "doc_id", "min_bytes": 1}, False),
+    ])
+
+
+def test_widen_narrow_scan_gate(spark):
+    """Without a byte floor (the heavy-map callers: shingle, minhash,
+    locate, broadcast-join scorers), ensure_width widens every narrow
+    input regardless of byte size, passes an already-wide or streaming
+    input through untouched, and with ``by`` hash-partitions on the id so
+    a downstream groupBy(id) rides the widener's exchange."""
+    narrow, wide = _narrow_and_wide(spark)
+    stream = spark.readStream.format("rate").load()
+    _check_ensure_width(spark, [
+        ("floor 0, narrow", narrow, {}, True),
+        ("keyed, narrow", narrow, {"by": "doc_id"}, True),
+        ("already at width", wide, {}, False),
+        ("already at width, keyed", wide, {"by": "doc_id"}, False),
+        ("streaming", stream, {}, False),
+        ("streaming, keyed", stream, {"by": "value"}, False),
+    ])
 
 
 def test_fanout_leaf_bytes_probe_is_live(spark):
@@ -600,7 +606,7 @@ def test_load_table_reads_directory_shaped_tables(spark, tmp_path):
     production layout; tools/make_split.py builds it at scale). load_table
     must read both shapes through the same path, and the directory shape
     must arrive with one split per part file so scans parallelize without
-    fanout_scan's exchange (r9, SCALE.md 'directory-shaped tables')."""
+    ensure_width's exchange (r9, SCALE.md 'directory-shaped tables')."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 

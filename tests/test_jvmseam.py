@@ -71,7 +71,7 @@ def test_observed_or_direct_routes_through_seam(spark):
 def test_leaf_bytes_probe_is_live(spark):
     """``leaf_size_bytes`` must return the REAL parquet footer size, not
     ``None``: if a PySpark upgrade breaks the py4j probe, this fails
-    loudly instead of the fanout gate silently fanning out every small
+    loudly instead of the width gate silently widening every small
     input (see the seam docstring for the failure direction)."""
     path = "/root/testdata/sf0.001/documents.parquet"
     df = spark.read.parquet(path).select("doc_id", "text")
@@ -79,7 +79,7 @@ def test_leaf_bytes_probe_is_live(spark):
     actual = os.path.getsize(path)
     assert probed is not None, (
         "leaf_size_bytes probe broke: collectLeaves/stats surface "
-        "renamed — fanout_scan now always fans out"
+        "renamed — io.ensure_width's byte floor now always widens"
     )
     assert 0 < probed <= actual * 3  # footer-derived, same order as the file
     assert probed >= actual // 3

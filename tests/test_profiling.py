@@ -287,7 +287,7 @@ def test_gopher_quality_is_row_local(spark):
     # aggregate, no sort — the gate is a pure scan-speed projection (the
     # former presentational orderBy re-executed the whole projection in
     # the range sampler; SCALE.md r7). The only exchange allowed is
-    # fanout_scan's RoundRobin guard (row-group-bounded parallelism —
+    # io.ensure_width's RoundRobin exchange (row-group-bounded parallelism —
     # fires on this single-row-group fixture, pass-through at scale);
     # anything hash/range-partitioned would mean a real shuffle crept in.
     df = spark.read.parquet(f"{SF}/documents.parquet")

@@ -543,6 +543,54 @@ def test_merge_sink_restarts_from_checkpoint_after_mid_batch_crash(spark, tmp_pa
     assert got == want
 
 
+def test_merge_sink_survives_compaction_cut_between_renames(spark, tmp_path):
+    """io.compact_store swaps the compacted copy in with two renames
+    (store → __compact_old, __compact_tmp → store). A crash between them
+    leaves NO store at the path; the next merge batch must not mistake
+    that for a first batch and overwrite the store with its own rows. The
+    crash state is built on disk exactly as the cut leaves it; the batch
+    fails, compact_store finishes the swap, and the replayed batch merges
+    on top of every old row."""
+    import os
+
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from mbgspark.io import compact_store
+
+    src = tmp_path / "cc_src"
+    store = str(tmp_path / "cc_store")
+    ck = str(tmp_path / "cc_ck")
+    _write_batch(src, [R1, R2])
+    start_merge_sink(
+        read_tweet_stream(spark, str(src)), store, ck, available_now=True
+    ).awaitTermination(120)
+
+    # the cut: compacted copy written, first rename done, second not
+    spark.read.parquet(store).repartition("event_date").write.partitionBy(
+        "event_date"
+    ).parquet(store + "__compact_tmp")
+    os.rename(store, store + "__compact_old")
+
+    r3 = {**R1, "_id": "3", "text": "third one", "created_at": "2025-01-03T09:00:00Z"}
+    _write_batch(src, [r3])
+    with pytest.raises(StreamingQueryException, match="__compact_"):
+        start_merge_sink(
+            read_tweet_stream(spark, str(src)), store, ck, available_now=True
+        ).awaitTermination(120)
+
+    compact_store(spark, store)  # finishes the interrupted swap
+    assert sorted(r["_id"] for r in spark.read.parquet(store).collect()) == ["1", "2"]
+    assert not os.path.exists(store + "__compact_old")
+    assert not os.path.exists(store + "__compact_tmp")
+
+    start_merge_sink(  # the failed batch replays from the checkpoint
+        read_tweet_stream(spark, str(src)), store, ck, available_now=True
+    ).awaitTermination(120)
+    got = sorted(r["_id"] for r in spark.read.parquet(store).collect())
+    assert got == ["1", "2", "3"]
+
+
 def test_indexed_neardup_gate_admits_once_and_replays_idempotently(spark, tmp_path):
     """The index-maintaining gate (production form): later batches gate
     against the persisted MinHash index only (corpus text untouched),

@@ -8,8 +8,9 @@ SF, per bench.py's protocol rationale), then run it again and report
 - ``n_stages``: stages attributable to the timed run (the retained
   AppStatusStore stages after a ``jvmseam.last_stage_id`` marker — exact
   however many older stages the store evicts);
-- ``stage_sec``: sum of per-stage (completionTime − firstTaskLaunchedTime)
-  — the time tasks were actually running;
+- ``stage_sec``: length of the union of the stages' (firstTaskLaunchedTime,
+  completionTime) intervals — the time tasks were actually running, each
+  second counted once however many stages ran concurrently in it;
 - ``wall_sec``: the noop-sink wall. wall − stage_sec ≈ driver/AQE
   re-planning + scheduling gaps, the overhead this census exists to see.
 
@@ -31,10 +32,28 @@ from mbgspark.plans.catalog import CATALOG
 from mbgspark.session import get_spark
 
 
-def _stages_since(spark, marker: int) -> dict[int, float]:
-    """{stageId: active_sec} for every retained stage after ``marker``."""
+def union_length(intervals: list[tuple[float, float]]) -> float:
+    """Length of the union of [start, end] intervals: overlapping stages
+    are counted once, not once per stage."""
+    total = 0.0
+    cur_a = cur_b = None
+    for a, b in sorted(intervals):
+        if cur_b is None or a > cur_b:
+            if cur_b is not None:
+                total += cur_b - cur_a
+            cur_a, cur_b = a, b
+        else:
+            cur_b = max(cur_b, b)
+    if cur_b is not None:
+        total += cur_b - cur_a
+    return total
+
+
+def _stages_since(spark, marker: int) -> dict[int, tuple[float, float] | None]:
+    """{stageId: (start_sec, end_sec)} for every retained stage after
+    ``marker`` that ran tasks (``None`` when its times cannot be read)."""
     last_stage_id(spark)  # drains the listener bus
-    out: dict[int, float] = {}
+    out: dict[int, tuple[float, float] | None] = {}
     for st in retained_stages(spark, marker):
         sid = int(st.stageId())
         try:
@@ -45,9 +64,9 @@ def _stages_since(spark, marker: int) -> dict[int, float]:
             # java.util.Date via py4j in Option wrappers
             ms0 = t0.get().getTime() if hasattr(t0, "get") else t0.getTime()
             ms1 = t1.get().getTime() if hasattr(t1, "get") else t1.getTime()
-            out[sid] = (ms1 - ms0) / 1000.0
+            out[sid] = (ms0 / 1000.0, ms1 / 1000.0)
         except Exception:
-            out[sid] = 0.0
+            out[sid] = None
     return out
 
 
@@ -75,7 +94,9 @@ def main() -> None:
                 {
                     "name": name,
                     "n_stages": len(new),
-                    "stage_sec": round(sum(new.values()), 3),
+                    "stage_sec": round(
+                        union_length([iv for iv in new.values() if iv]), 3
+                    ),
                     "wall_sec": round(wall, 3),
                 }
             )
