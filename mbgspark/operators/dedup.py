@@ -60,6 +60,48 @@ def keep_latest_per_key(
 
 
 # ------------------------------------------------- near-dup: shingling ----
+#
+# The MinHash/LSH builders below are written as SQL expression strings
+# (``selectExpr``, ``filter``/``F.expr`` with SQL lambda syntax), not as
+# per-element Python ``Column`` trees: in PySpark 4 every ``F.*`` call is
+# about 8 py4j round trips (function lookup, call-site origin, the call,
+# one ArrayList.add per list element), so a builder that composes Columns
+# element by element costs thousands of round trips of driver time per
+# plan, while one expression string is parsed by the JVM in one call.
+# ``tests/test_dedup.py`` pins the round-trip budget of the hot builders.
+
+
+def _q(name: str) -> str:
+    """Backtick-quote a column name for interpolation into a SQL
+    expression string."""
+    if "`" in name:
+        raise ValueError(
+            f"column names containing backticks are not supported: {name!r}"
+        )
+    return f"`{name}`"
+
+
+def _tokens(text_col: str) -> str:
+    """Token array of lower(trim(text)), split on Java ``\\s+``."""
+    return rf"split(lower(trim({_q(text_col)})), '\\s+')"
+
+
+def _shingles_of(toks: str, k: int) -> str:
+    """Distinct k-word shingle ARRAY over the token-array column ``toks``.
+    ``toks`` must be an ATTRIBUTE (a column aliased in its own
+    projection), not an inline expression: the split must never end up
+    inside a lambda body (the CollapseProject O(words²) trap — see
+    with_word_shingles). try_element_at, not element_at: for docs shorter
+    than k the tail shingle reads past the array, which must yield NULL
+    (concat_ws skips it) under ANSI sessions too — element_at would THROW
+    there."""
+    t = _q(toks)
+    words = ", ".join(f"try_element_at({t}, i + {j + 1})" for j in range(k))
+    return (
+        f"array_distinct(filter(transform(sequence(0, greatest(size({t}) - {k}, 0)),"
+        f" i -> concat_ws(' ', {words})), s -> s != ''))"
+    )
+
 
 def with_word_shingles(
     df: DataFrame,
@@ -67,7 +109,6 @@ def with_word_shingles(
     text_col: str,
     k: int = 3,
     out: str = "shingle",
-    carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Distinct k-word shingles of lower(trim(text)), one row per
     (id, shingle). Pure built-ins: split + sequence + transform +
@@ -94,62 +135,72 @@ def with_word_shingles(
     LOSS for minhash_near_dups and dedup_incremental (4.2 → 4.5 s / 4.2 →
     4.8 s steady-state A/B), unlike the row-local/windowed text operators
     where it wins 5×."""
-    toks = F.col("__toks")
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    # try_element_at, not element_at: for docs shorter than k the tail
-    # shingle reads past the array, which must yield NULL (concat_ws skips
-    # it) under ANSI sessions too — element_at would THROW there
-    shingles = F.transform(
-        idx, lambda i: F.concat_ws(" ", *[F.try_element_at(toks, i + j + 1) for j in range(k)])
-    )
-    pre = df.select(
-        F.col(id_col),
-        *[F.col(c) for c in carry],
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("__toks"),
-    )
-    return pre.select(
-        F.col(id_col),
-        *[F.col(c) for c in carry],
-        F.explode(
-            F.array_distinct(F.filter(shingles, lambda s: s != ""))
-        ).alias(out),
+    pre = df.selectExpr(_q(id_col), f"{_tokens(text_col)} AS __toks")
+    return pre.selectExpr(
+        _q(id_col), f"explode({_shingles_of('__toks', k)}) AS {_q(out)}"
     )
 
 
-def _sig_aggs(num_hashes: int, shingle_col: str = "shingle") -> list:
-    """THE MinHash hash-family definition — hash i = min over the doc's
-    shingles of the 15-hex-char (60-bit) md5 window starting at offset
-    2i. Every signature consumer (``minhash_signature``, the packed
-    aggregation in ``minhash_estimate_pairs``, and the DuckDB oracle's
-    _MINHASH_SIG_COLS) must agree on this expression exactly — bucketer
-    and estimator silently disagree otherwise — so it lives in one place.
+#: bits of one 15-hex-char signature window
+_WINDOW_MASK = (1 << 60) - 1
+#: two 15-char parses (chars 1–15 and 15–29) cover windows 0..7
+_MAX_HASHES = 8
 
-    The Spark side takes the min NUMERICALLY (conv the window to a
-    60-bit bigint): min over a mutable long buffer plans as a
-    whole-stage-codegen HashAggregate with map-side partial combine,
-    where min over a STRING buffer plans as ObjectHashAggregate, whose
-    128-key sort-based fallback degenerates to a full sort of every
-    shingle row per aggregation — measured 939 MB of sort spill PER
-    SIGNATURE PASS at sf10 (r12 two-decade ledger sweep). Fixed-width
-    lowercase hex is order-isomorphic to its numeric value, so
-    ``render_sig_hex`` reproduces the oracle's lexicographic string min
-    bit-for-bit (the oracle keeps the plain string min)."""
+
+def _hex_parses(hex32: str) -> list[str]:
+    """The two parses of a 32-char lowercase hex expression every
+    signature window is derived from: ``__p0`` = chars 1–15 and ``__p1``
+    = chars 15–29, each a 60-bit bigint."""
     return [
-        F.min(
-            F.conv(
-                F.substring(F.md5(F.col(shingle_col)), 2 * i + 1, 15), 16, 10
-            ).cast("long")
-        ).alias(f"h{i}")
-        for i in range(num_hashes)
+        f"CAST(conv(substring({hex32}, 1, 15), 16, 10) AS BIGINT) AS __p0",
+        f"CAST(conv(substring({hex32}, 15, 15), 16, 10) AS BIGINT) AS __p1",
     ]
 
 
-def _render_sig_hex(i: int) -> "F.Column":
-    """Render numeric hash ``h{i}`` back to the oracle's 15-hex-char
-    lowercase window string (hex() is uppercase and strips leading
-    zeros; lpad+lower restores the md5 substring exactly)."""
-    return F.lower(F.lpad(F.hex(F.col(f"h{i}")), 15, "0"))
+def _sig_window(i: int) -> str:
+    """Window i (hex chars 2i+1 .. 2i+15, as a 60-bit bigint) from the two
+    parses: its top 15−2i nibbles are __p0's low nibbles shifted up, its
+    low 2i+1 nibbles are __p1's top nibbles shifted down. Both sources
+    put char 15 at the same nibble (position 2i), so the OR is exact."""
+    return (
+        f"((shiftleft(__p0, {8 * i}) & {_WINDOW_MASK})"
+        f" | shiftright(__p1, {56 - 8 * i}))"
+    )
+
+
+def _render_sig_hex(h: str) -> str:
+    """Render a numeric window back to the oracle's 15-hex-char lowercase
+    window string (hex() is uppercase and strips leading zeros; lpad+lower
+    restores the md5 substring exactly)."""
+    return f"lower(lpad(hex({h}), 15, '0'))"
+
+
+def _sig_aggs(num_hashes: int) -> list[str]:
+    """THE MinHash hash-family definition — hash i = min over the doc's
+    shingles of the 15-hex-char (60-bit) md5 window starting at offset
+    2i, for i < 8. Every signature consumer (``minhash_signature``, and
+    through it ``minhash_estimate_pairs``, and the DuckDB oracle's
+    _MINHASH_SIG_COLS) must agree on these VALUES exactly — bucketer and
+    estimator silently disagree otherwise — so the definition lives in
+    one place.
+
+    The windows are not parsed one by one: ``_hex_parses`` parses
+    md5(shingle) TWICE per row, P0 = chars 1–15 and P1 = chars 15–29, and
+    window i = ((P0 << 8i) & (2^60−1)) | (P1 >> (56 − 8i)) is shifted
+    out of the two (``_sig_window``). Two parses cover windows 0..7 and
+    no more, hence the 8-window limit (``_MAX_HASHES``); the eight conv
+    calls they replace were most of the signature stage's per-row cost.
+
+    The Spark side takes the min NUMERICALLY (a 60-bit bigint): min over
+    a mutable long buffer plans as a whole-stage-codegen HashAggregate
+    with map-side partial combine, where min over a STRING buffer plans
+    as ObjectHashAggregate, whose 128-key sort-based fallback degenerates
+    to a full sort of every shingle row per aggregation — measured 939 MB
+    of sort spill PER SIGNATURE PASS at sf10 (r12 two-decade ledger
+    sweep). Fixed-width lowercase hex is order-isomorphic to its numeric
+    value, so ``_render_sig_hex`` reproduces the oracle's lexicographic
+    string min bit-for-bit (the oracle keeps the plain string min)."""
+    return [f"min({_sig_window(i)})" for i in range(num_hashes)]
 
 
 def minhash_signature(
@@ -157,86 +208,56 @@ def minhash_signature(
 ) -> DataFrame:
     """Portable MinHash: hash function i is the 15-hex-char window of
     md5(shingle) starting at offset 2i, so ONE md5 per shingle yields all
-    ``num_hashes`` (≤ 9) functions — 8× less hashing than independent
+    ``num_hashes`` functions — 8× less hashing than independent
     md5(i || shingle) per permutation, measured the dominant cost of the
-    near-dup pipeline. sig_i = min of window i over the doc's shingles
-    (numeric inside the agg — see ``_sig_aggs`` for why; rendered back
-    to the lexicographic-min hex string here): a valid min-wise family
-    for dedup purposes, and bit-identical across Spark, DuckDB, and
-    Python — the property the correctness oracle needs. Output: (id, sig
-    array<string>). One shuffle (groupBy id); the md5 is computed once
-    per input row under subexpression elimination."""
-    sig = shingled.groupBy(id_col).agg(*_sig_aggs(num_hashes, shingle_col))
-    return sig.select(
-        F.col(id_col),
-        F.array(*[_render_sig_hex(i) for i in range(num_hashes)]).alias("sig"),
+    near-dup pipeline. The md5 is parsed twice per shingle row and the
+    windows are shifted out of the two parses (see ``_sig_aggs``), which
+    caps ``num_hashes`` at 8: a larger value raises ``ValueError``.
+    sig_i = min of window i over the doc's shingles (numeric inside the
+    agg, rendered back to the lexicographic-min hex string in the
+    aggregate's result): a valid min-wise family for dedup purposes, and
+    bit-identical across Spark, DuckDB, and Python — the property the
+    correctness oracle needs. Output: (id, sig array<string>). One
+    shuffle (groupBy id); the md5 both parses read is computed once per
+    row under subexpression elimination."""
+    if not 1 <= num_hashes <= _MAX_HASHES:
+        raise ValueError(
+            f"num_hashes must be in 1..{_MAX_HASHES} (two md5 parses cover "
+            f"8 windows), got {num_hashes}"
+        )
+    parsed = shingled.selectExpr(
+        _q(id_col), *_hex_parses(f"md5({_q(shingle_col)})")
     )
+    sig = ", ".join(_render_sig_hex(m) for m in _sig_aggs(num_hashes))
+    return parsed.groupBy(id_col).agg(F.expr(f"array({sig}) AS sig"))
 
 
 def _lsh_band_rows(
-    signatures: DataFrame,
-    id_col: str,
-    bands: int,
-    rows_per_band: int,
-    carry: tuple[str, ...] = (),
+    signatures: DataFrame, id_col: str, bands: int, rows_per_band: int
 ) -> DataFrame:
     """(id, band_idx, band_key) rows: each signature window md5-folded into
     its band bucket key — the shared front half of candidate generation
     and the oversized-bucket monitor."""
-    return signatures.select(
-        F.col(id_col),
-        *[F.col(c) for c in carry],
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.md5(
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    F.element_at("sig", b * rows_per_band + r + 1)
-                                    for r in range(rows_per_band)
-                                ],
-                            )
-                        ).alias("band_key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select(id_col, *carry, "band.band_idx", "band.band_key")
+    structs = []
+    for b in range(bands):
+        windows = ", ".join(
+            f"element_at(sig, {b * rows_per_band + r + 1})"
+            for r in range(rows_per_band)
+        )
+        structs.append(
+            f"struct({b} AS band_idx, md5(concat_ws('|', {windows})) AS band_key)"
+        )
+    return signatures.selectExpr(_q(id_col), f"inline(array({', '.join(structs)}))")
 
 
-def _oversized_metrics_row(spark, sized: DataFrame | None, max_bucket_size):
-    """The one-row (oversized_buckets, oversized_rows) metrics frame for
-    the caller's observability fold — single-sourced so the candidate and
-    incremental paths can't drift. A global aggregate emits exactly one
-    row even on empty input (the AQE-elimination-proof shape), and the
-    sums are coalesced to 0 so an empty bucket frame (e.g. every doc
-    shorter than the shingle size) reports zeros, not NULLs. ``sized``
-    None means the cap is disabled — nothing can be dropped, literal
-    zeros."""
-    if sized is None:
-        return spark.range(1).select(
-            F.lit(0).cast("bigint").alias("oversized_buckets"),
-            F.lit(0).cast("bigint").alias("oversized_rows"),
-        )
-    return sized.agg(
-        F.coalesce(
-            F.sum(F.when(F.col("__n") > max_bucket_size, 1).otherwise(0)),
-            F.lit(0),
-        )
-        .cast("bigint")
-        .alias("oversized_buckets"),
-        F.coalesce(
-            F.sum(
-                F.when(F.col("__n") > max_bucket_size, F.col("__n")).otherwise(0)
-            ),
-            F.lit(0),
-        )
-        .cast("bigint")
-        .alias("oversized_rows"),
+def _oversized_metrics_row(spark) -> DataFrame:
+    """The one-row all-zero (oversized_buckets, oversized_rows) metrics
+    frame for a disabled cap (nothing can be dropped) — the same schema
+    ``_capped_bucket_rows`` folds from a real cap, so the caller's
+    observability fold reads one shape either way."""
+    return spark.range(1).selectExpr(
+        "CAST(0 AS BIGINT) AS oversized_buckets",
+        "CAST(0 AS BIGINT) AS oversized_rows",
     )
 
 
@@ -342,62 +363,14 @@ def lsh_candidate_pairs(
     caller's anti-join) came up runtime-empty and AQE dropped the
     then-unreferenced observed subtree, stages-already-executed
     notwithstanding."""
-    band_rows = _lsh_band_rows(signatures, id_col, bands, rows_per_band)
-    # Bucket sizes via a KEYED WINDOW over the one band exchange, not a
-    # separate groupBy + anti-join (the r12 reshape). The first
-    # implementation sized buckets in their own aggregation lineage and
-    # anti-joined the blacklist; per-consumer pruning defeated exchange
-    # reuse, so the whole signature pipeline recomputed per lineage and
-    # the band rows shuffled twice (~4M of the 6.9M sf10 ledger records).
-    # The window count rides the ONE band-bucket exchange that pair
-    # generation needs anyway (the pair rollup below groups by the same
-    # keys), so sizing costs zero additional shuffle — and it bounds the
-    # rollup: WHEN THE CAP IS SET, the n <= cap filter runs BEFORE any
-    # bucket's ids are packed into an array, so no viral bucket is ever
-    # materialized in an aggregation buffer (with max_bucket_size=None
-    # that guarantee does not hold — see the docstring's None caveat).
-    # It also makes the n >= 2 filter free: ~94%
-    # of band rows sit in singleton buckets (random 128-bit keys) that
-    # can never mint a pair. Same cap semantics: pairs come only from
-    # buckets with 2 <= n <= cap.
-    w = Window.partitionBy("band_idx", "band_key")
-    counted = band_rows.withColumn("__n", F.count("*").over(w))
-    if max_bucket_size is not None:
-        over = counted.filter(F.col("__n") > max_bucket_size)
-        if metrics_out is not None:
-            # same one-row global-aggregate contract as
-            # _oversized_metrics_row (AQE-elimination-proof, zeros on
-            # empty), computed from the window-counted rows: row count
-            # IS oversized_rows; buckets need the distinct key count
-            metrics_out.append(
-                over.agg(
-                    F.count_distinct(F.struct("band_idx", "band_key"))
-                    .cast("bigint")
-                    .alias("oversized_buckets"),
-                    F.count(F.lit(1)).cast("bigint").alias("oversized_rows"),
-                )
-            )
-        if on_oversized is not None:
-            on_oversized(
-                over.select(
-                    "band_idx",
-                    "band_key",
-                    F.col("__n").cast("bigint").alias("bucket_n"),
-                ).distinct()
-            )
-        eligible = counted.filter(
-            (F.col("__n") >= 2) & (F.col("__n") <= max_bucket_size)
-        ).drop("__n")
-    else:
-        if metrics_out is not None:
-            metrics_out.append(
-                _oversized_metrics_row(signatures.sparkSession, None, None)
-            )
-        eligible = counted.filter(F.col("__n") >= 2).drop("__n")
+    eligible = _capped_bucket_rows(
+        _lsh_band_rows(signatures, id_col, bands, rows_per_band),
+        max_bucket_size, on_oversized, metrics_out, signatures.sparkSession,
+    )
     # Pair generation (r14): pack each eligible bucket's ids into ONE
     # sorted array (a collect_list bounded by the cap when one is set —
-    # the window filter above has already dropped every bucket larger
-    # than the cap, so no viral bucket is materialized and the r12
+    # _capped_bucket_rows' window filter has already dropped every bucket
+    # larger than the cap, so no viral bucket is materialized and the r12
     # unbounded-collect_list spill class cannot recur; under
     # max_bucket_size=None the list and its pair array are unbounded —
     # see the docstring) and emit each id's pairs with its successors
@@ -417,18 +390,68 @@ def lsh_candidate_pairs(
     # null id compares null and drops — exactly the old join predicate's
     # a.id < b.id semantics.
     lists = eligible.groupBy("band_idx", "band_key").agg(
-        F.array_sort(F.collect_list(F.col(id_col))).alias("__ids")
+        F.expr(f"array_sort(collect_list({_q(id_col)})) AS __ids")
     )
-    pair_expr = (
-        "flatten(transform(__ids, x ->"
-        " transform(filter(__ids, y -> y > x),"
-        "           y -> struct(x AS id_a, y AS id_b))))"
+    return lists.selectExpr(
+        "inline(flatten(transform(__ids, x ->"
+        " transform(filter(__ids, y -> y > x), y -> struct(x AS id_a, y AS id_b)))))"
+    ).distinct()
+
+
+def _capped_bucket_rows(
+    band_rows: DataFrame,
+    max_bucket_size: int | None,
+    on_oversized,
+    metrics_out: list | None,
+    spark,
+) -> DataFrame:
+    """The band rows of buckets with 2 <= n <= cap (n >= 2 when the cap
+    is None), with the oversized-bucket monitoring of
+    ``lsh_candidate_pairs`` (``on_oversized``, ``metrics_out``) —
+    single-sourced so the candidate and incremental paths can't drift.
+
+    Bucket sizes via a KEYED WINDOW over the one band exchange, not a
+    separate groupBy + anti-join (the r12 reshape). The first
+    implementation sized buckets in their own aggregation lineage and
+    anti-joined the blacklist; per-consumer pruning defeated exchange
+    reuse, so the whole signature pipeline recomputed per lineage and the
+    band rows shuffled twice (~4M of the 6.9M sf10 ledger records). The
+    window count rides the ONE band-bucket exchange that pair generation
+    needs anyway (the pair rollup / bucket join after it keys on the same
+    columns), so sizing costs zero additional shuffle — and it bounds the
+    rollup: WHEN THE CAP IS SET, the n <= cap filter runs BEFORE any
+    bucket's ids are packed into an array, so no viral bucket is ever
+    materialized in an aggregation buffer (with max_bucket_size=None that
+    guarantee does not hold — see lsh_candidate_pairs). It also makes the
+    n >= 2 filter free: ~94% of band rows sit in singleton buckets
+    (random 128-bit keys) that can never mint a pair."""
+    counted = band_rows.selectExpr(
+        "*", "count(1) OVER (PARTITION BY band_idx, band_key) AS __n"
     )
-    return (
-        lists.select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .distinct()
-    )
+    if max_bucket_size is None:
+        if metrics_out is not None:
+            metrics_out.append(_oversized_metrics_row(spark))
+        return counted.filter("__n >= 2").drop("__n")
+    over = counted.filter(f"__n > {max_bucket_size}")
+    if metrics_out is not None:
+        # a one-row global aggregate (AQE-elimination-proof: it emits one
+        # row even on empty input), computed from the window-counted
+        # rows: row count IS oversized_rows; buckets need the distinct
+        # key count
+        metrics_out.append(
+            over.selectExpr(
+                "CAST(count(DISTINCT struct(band_idx, band_key)) AS BIGINT)"
+                " AS oversized_buckets",
+                "CAST(count(1) AS BIGINT) AS oversized_rows",
+            )
+        )
+    if on_oversized is not None:
+        on_oversized(
+            over.selectExpr(
+                "band_idx", "band_key", "CAST(__n AS BIGINT) AS bucket_n"
+            ).distinct()
+        )
+    return counted.filter(f"__n >= 2 AND __n <= {max_bucket_size}").drop("__n")
 
 
 def lsh_oversized_buckets(
@@ -444,24 +467,9 @@ def lsh_oversized_buckets(
     return (
         _lsh_band_rows(signatures, id_col, bands, rows_per_band)
         .groupBy("band_idx", "band_key")
-        .agg(F.count("*").cast("bigint").alias("bucket_n"))
-        .filter(F.col("bucket_n") > max_bucket_size)
+        .agg(F.expr("CAST(count(1) AS BIGINT) AS bucket_n"))
+        .filter(f"bucket_n > {max_bucket_size}")
     )
-
-
-def _shingles_of(toks: Column, k: int) -> Column:
-    """Distinct k-word shingle ARRAY over a token-array column. ``toks``
-    must be an ATTRIBUTE (an aliased column from its own projection), not
-    an inline expression: the split must never end up inside a lambda
-    body (the CollapseProject O(words²) trap — see with_word_shingles).
-    try_element_at, not element_at: NULL past the end (ANSI-safe),
-    concat_ws skips it."""
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    sh = F.transform(
-        idx, lambda i: F.concat_ws(" ", *[F.try_element_at(toks, i + j + 1) for j in range(k)])
-    )
-    return F.array_distinct(F.filter(sh, lambda s: s != ""))
 
 
 def with_shingle_array(
@@ -474,14 +482,8 @@ def with_shingle_array(
     with_word_shingles for why inlining the split into the lambda is 13×
     slower, and for why neither builder sits behind ``io.ensure_width``
     (consumers aggregate immediately; measured loss at sf1)."""
-    pre = df.select(
-        F.col(id_col),
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("__toks"),
-    )
-    return pre.select(
-        F.col(id_col),
-        _shingles_of(F.col("__toks"), k).alias(out),
-    )
+    pre = df.selectExpr(_q(id_col), f"{_tokens(text_col)} AS __toks")
+    return pre.selectExpr(_q(id_col), f"{_shingles_of('__toks', k)} AS {_q(out)}")
 
 
 def candidate_ids(pairs: DataFrame, id_col: str) -> DataFrame:
@@ -494,10 +496,7 @@ def candidate_ids(pairs: DataFrame, id_col: str) -> DataFrame:
     to walk, stage-cache bookkeeping, and planning time — measured as
     part of the minhash stage-count drop (37 → 25 stages with the
     verify-side trims)."""
-    return (
-        pairs.select(F.explode(F.array("id_a", "id_b")).alias(id_col))
-        .distinct()
-    )
+    return pairs.selectExpr(f"explode(array(id_a, id_b)) AS {_q(id_col)}").distinct()
 
 
 def jaccard_verify_arrays(
@@ -506,7 +505,6 @@ def jaccard_verify_arrays(
     id_col: str,
     threshold: float,
     arr_col: str = "shingles",
-    carry: tuple[str, ...] = (),
     prefiltered: bool = False,
 ) -> DataFrame:
     """Exact shingle-Jaccard on candidate pairs via per-doc shingle ARRAYS:
@@ -535,21 +533,26 @@ def jaccard_verify_arrays(
     Callers passing UNFILTERED arrays (the distributed ngram path) keep
     the default: there the pre-join is what keeps the id_b build side
     candidate-sized."""
-    aa = arrays.select(F.col(id_col).alias("id_a"), F.col(arr_col).alias("__sa"))
-    bb = arrays.select(F.col(id_col).alias("id_b"), F.col(arr_col).alias("__sb"))
+    aa = arrays.selectExpr(f"{_q(id_col)} AS id_a", f"{_q(arr_col)} AS __sa")
+    bb = arrays.selectExpr(f"{_q(id_col)} AS id_b", f"{_q(arr_col)} AS __sb")
     j = aa.join(pairs, "id_a")
     bb_cand = bb if prefiltered else bb.join(pairs.select("id_b").distinct(), "id_b")
-    j2 = j.join(bb_cand, "id_b")
-    inter = F.size(F.array_intersect("__sa", "__sb"))
+    return _jaccard_at_least(
+        j.join(bb_cand, "id_b"), threshold, "id_a", "id_b", "jaccard"
+    )
+
+
+def _jaccard_at_least(joined: DataFrame, threshold: float, *cols: str) -> DataFrame:
+    """The ``cols`` of the rows of a (__sa, __sb) shingle-array pair frame
+    whose exact Jaccard, rounded to 4 places as ``jaccard``, is at least
+    ``threshold`` — the one verify kernel both verify paths share."""
+    inter = "size(array_intersect(__sa, __sb))"
     return (
-        j2.withColumn(
-            "jaccard",
-            F.round(
-                inter / (F.size("__sa") + F.size("__sb") - inter), 4
-            ),
+        joined.selectExpr(
+            "*", f"round({inter} / (size(__sa) + size(__sb) - {inter}), 4) AS jaccard"
         )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard", *carry)
+        .filter(f"jaccard >= {float(threshold)!r}D")
+        .select(*cols)
     )
 
 
@@ -745,7 +748,7 @@ def minhash_near_dups(
     # −29% shuffle bytes; the only observable shift is that an all-null-
     # id phantom row no longer counts toward bucket-cap sizes, which the
     # non-null contract makes unreachable).
-    df = df.filter(F.col(id_col).isNotNull())
+    df = df.filter(f"{_q(id_col)} IS NOT NULL")
     shingled = with_word_shingles(df, id_col, text_col, k)
     # The signature aggregation is SKINNY on purpose (min() windows only,
     # classic partial-combining HashAggregate). The first implementation
@@ -880,12 +883,12 @@ def minhash_near_dups_incremental(
     # 2.45 → 2.34 s). Output-invariant: null-id rows can never reach the
     # output (the verify equi-joins drop them). A caller-provided
     # corpus_index is trusted as built.
-    batch = batch.filter(F.col(id_col).isNotNull())
+    batch = batch.filter(f"{_q(id_col)} IS NOT NULL")
     b_bands, b_arrays = build_minhash_index(
         batch, id_col, text_col, k, num_hashes, bands
     )
     if corpus_index is None:
-        corpus = corpus.filter(F.col(id_col).isNotNull())
+        corpus = corpus.filter(f"{_q(id_col)} IS NOT NULL")
         c_bands, c_arrays = build_minhash_index(
             corpus, id_col, text_col, k, num_hashes, bands
         )
@@ -924,66 +927,30 @@ def incremental_candidate_pairs(
     When the corpus band rows are a pruned read (only buckets the batch
     probes), the guard's oversized counts cover the PROBED buckets — the
     buckets where pair suppression can actually happen this batch."""
-    band_rows = b_bands.withColumn("__side", F.lit("b")).unionByName(
-        c_bands.withColumn("__side", F.lit("c"))
+    band_rows = b_bands.selectExpr("*", "'b' AS __side").unionByName(
+        c_bands.selectExpr("*", "'c' AS __side")
     )
-
     # combined (batch+corpus) bucket population: a viral corpus bucket
-    # joined by even one batch row would emit bucket_n pairs per doc.
-    # Sizing rides a keyed window over the join's own exchange — same
-    # r12 reshape (and rationale) as ``lsh_candidate_pairs``: zero extra
-    # shuffle, no per-consumer recompute of the band lineage, and the
+    # joined by even one batch row would emit bucket_n pairs per doc. The
     # n >= 2 filter drops singleton buckets before the join.
-    w = Window.partitionBy("band_idx", "band_key")
-    counted = band_rows.withColumn("__n", F.count("*").over(w))
-    if max_bucket_size is not None:
-        over = counted.filter(F.col("__n") > max_bucket_size)
-        if metrics_out is not None:
-            metrics_out.append(
-                over.agg(
-                    F.count_distinct(F.struct("band_idx", "band_key"))
-                    .cast("bigint")
-                    .alias("oversized_buckets"),
-                    F.count(F.lit(1)).cast("bigint").alias("oversized_rows"),
-                )
-            )
-        if on_oversized is not None:
-            on_oversized(
-                over.select(
-                    "band_idx",
-                    "band_key",
-                    F.col("__n").cast("bigint").alias("bucket_n"),
-                ).distinct()
-            )
-        band_rows = counted.filter(
-            (F.col("__n") >= 2) & (F.col("__n") <= max_bucket_size)
-        ).drop("__n")
-    else:
-        if metrics_out is not None:
-            metrics_out.append(_oversized_metrics_row(spark, None, None))
-        band_rows = counted.filter(F.col("__n") >= 2).drop("__n")
-
+    band_rows = _capped_bucket_rows(
+        band_rows, max_bucket_size, on_oversized, metrics_out, spark
+    )
     # ONE bucket join: batch rows against ALL rows, corpus-corpus pairs
     # excluded by the side predicate — never generated, never filtered out
-    a = band_rows.filter(F.col("__side") == "b").select(
-        "band_idx", "band_key", F.col(id_col).alias("id_a")
+    a = band_rows.filter("__side = 'b'").selectExpr(
+        "band_idx", "band_key", f"{_q(id_col)} AS id_a"
     )
-    b = band_rows.select(
-        "band_idx", "band_key", F.col(id_col).alias("id_b"),
-        F.col("__side").alias("__side_b"),
+    b = band_rows.selectExpr(
+        "band_idx", "band_key", f"{_q(id_col)} AS id_b", "__side AS __side_b"
     )
     return (
         a.join(b, ["band_idx", "band_key"])
-        .filter(
-            (F.col("__side_b") == "c")
-            | ((F.col("__side_b") == "b") & (F.col("id_a") < F.col("id_b")))
-        )
-        .select(
+        .filter("__side_b = 'c' OR (__side_b = 'b' AND id_a < id_b)")
+        .selectExpr(
             "id_a",
             "id_b",
-            F.when(F.col("__side_b") == "c", F.lit("corpus"))
-            .otherwise(F.lit("batch"))
-            .alias("match_source"),
+            "CASE WHEN __side_b = 'c' THEN 'corpus' ELSE 'batch' END AS match_source",
         )
         .distinct()
     )
@@ -1000,18 +967,11 @@ def verify_candidate_pairs(
     side is small by LSH construction, so AQE broadcasts it into both
     array joins and the (indexed or narrow-map) arrays are probed in
     place, never shuffled; match_source rides through."""
-    sa = arrays.select(F.col(id_col).alias("id_a"), F.col("__shingles").alias("__sa"))
-    sb = arrays.select(F.col(id_col).alias("id_b"), F.col("__shingles").alias("__sb"))
-    inter = F.size(F.array_intersect("__sa", "__sb"))
-    return (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(inter / (F.size("__sa") + F.size("__sb") - inter), 4),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard", "match_source")
+    sa = arrays.selectExpr(f"{_q(id_col)} AS id_a", "__shingles AS __sa")
+    sb = arrays.selectExpr(f"{_q(id_col)} AS id_b", "__shingles AS __sb")
+    return _jaccard_at_least(
+        pairs.join(sa, "id_a").join(sb, "id_b"),
+        threshold, "id_a", "id_b", "jaccard", "match_source",
     )
 
 
@@ -1537,25 +1497,17 @@ def minhash_estimate_pairs(
     arrays = (
         shingled.join(candidate_ids(pairs, id_col), id_col, "semi")
         .groupBy(id_col)
-        .agg(F.collect_list("shingle").alias("__shingles"))
+        .agg(F.expr("collect_list(shingle) AS __shingles"))
     )
     verified = jaccard_verify_arrays(
         arrays, pairs, id_col, threshold, "__shingles", prefiltered=True
     )
-    sa = sig.select(F.col(id_col).alias("id_a"), F.col("sig").alias("__sa"))
-    sb = sig.select(F.col(id_col).alias("id_b"), F.col("sig").alias("__sb"))
-    matches = F.size(
-        F.filter(F.zip_with("__sa", "__sb", lambda x, y: x == y), lambda m: m)
-    )
-    return (
-        verified.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            "jaccard",
-            F.floor(matches * 10000 / F.lit(num_hashes))
-            .cast("bigint")
-            .alias("minhash_est_e4"),
-        )
+    sa = sig.selectExpr(f"{_q(id_col)} AS id_a", "sig AS __sa")
+    sb = sig.selectExpr(f"{_q(id_col)} AS id_b", "sig AS __sb")
+    return verified.join(sa, "id_a").join(sb, "id_b").selectExpr(
+        "id_a",
+        "id_b",
+        "jaccard",
+        "CAST(floor(size(filter(zip_with(__sa, __sb, (x, y) -> x = y), m -> m))"
+        f" * 10000 / {num_hashes}) AS BIGINT) AS minhash_est_e4",
     )

@@ -113,10 +113,12 @@ def dedup_minhash_lsh(spark, sf_dir):
     ).orderBy("id_a", "id_b")
 
 
-# 15-hex-char (60-bit) windows — must match operators/dedup._sig_aggs
-# exactly (the Spark side takes the min numerically for HashAggregate
+# 15-hex-char (60-bit) windows — the values must match
+# operators/dedup._sig_aggs exactly, not the expressions: the Spark side
+# parses each md5 twice (chars 1–15 and 15–29), shifts the eight windows
+# out of the two parses, takes the min numerically for HashAggregate
 # planning and renders back; fixed-width lowercase hex makes the string
-# min here identical)
+# min here identical
 _MINHASH_SIG_COLS = ",\n         ".join(
     f"min(substr(md5(shingle), {2 * i + 1}, 15)) AS h{i}" for i in range(8)
 )

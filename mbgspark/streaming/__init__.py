@@ -726,7 +726,7 @@ def start_neardup_gate_sink_indexed(
                         # the lean path caps nothing — every candidate is
                         # verified exactly, so the drop metrics are TRUE
                         # literal zeros
-                        metrics.append(_oversized_metrics_row(spark, None, None))
+                        metrics.append(_oversized_metrics_row(spark))
                 else:
                     # overflow: the distributed path with the bucket-size
                     # cap (and its real drop metrics)

@@ -507,3 +507,139 @@ def test_ngram_jaccard_auto_overflow_falls_back(spark, monkeypatch):
         tuple(r) for r in dd.ngram_jaccard_pairs(df, "id", "t", threshold=0.2).collect()
     )
     assert got2 == want
+
+
+def test_minhash_frames_keep_their_persisted_schema(spark):
+    """The indexed near-dup gate persists ``build_minhash_index`` output
+    under ``GATE_META`` and routes each band row to
+    ``pmod(xxhash64(band_idx, band_key), GATE_BUCKETS)``. A type drift in
+    the builders (band_idx int -> bigint, say) would silently re-bucket
+    the rows an earlier version wrote, and their near-duplicates would be
+    missed with no error — so the schemas (names, types, nullability) and
+    one doc's band buckets are pinned here."""
+    from pyspark.sql.types import (
+        ArrayType,
+        IntegerType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from mbgspark.streaming import GATE_BUCKETS, GATE_META
+
+    assert GATE_META["layout"] == "bucketed-v1"
+    df = spark.createDataFrame([(1, "a b c d"), (2, "a b c e")], "id bigint, t string")
+    shingled = dd.with_word_shingles(df, "id", "t")
+    bands, arrays = dd.build_minhash_index(df, "id", "t")
+    id_field = StructField("id", LongType(), True)
+    assert shingled.schema == StructType(
+        [id_field, StructField("shingle", StringType(), False)]
+    )
+    assert dd.with_shingle_array(df, "id", "t").schema == StructType(
+        [id_field, StructField("shingles", ArrayType(StringType(), False), False)]
+    )
+    assert dd.minhash_signature(shingled, "id").schema == StructType(
+        [id_field, StructField("sig", ArrayType(StringType(), True), False)]
+    )
+    assert bands.schema == StructType(
+        [
+            id_field,
+            StructField("band_idx", IntegerType(), False),
+            StructField("band_key", StringType(), False),
+        ]
+    )
+    assert arrays.schema == StructType(
+        [id_field, StructField("__shingles", ArrayType(StringType(), False), False)]
+    )
+    got = sorted(
+        tuple(r)
+        for r in bands.filter("id = 1").selectExpr(
+            "band_idx",
+            "band_key",
+            f"pmod(xxhash64(band_idx, band_key), {GATE_BUCKETS}) AS bucket",
+        ).collect()
+    )
+    assert got == [
+        (0, "2e8d846d7e644fa1f5498118d3502e54", 4),
+        (1, "8986a69ff1cb7ba9a336e88571adf1ef", 41),
+        (2, "33ef99d3e1c51c7b881cd45f09743730", 10),
+        (3, "305cb3fd720c4a8feeb3b12348265839", 38),
+    ]
+
+
+def _py4j_calls(monkeypatch, build) -> int:
+    """py4j round trips made while ``build`` runs, counted on its second
+    run (the first warms lazily-resolved JVM handles). py4j's object-
+    release messages are excluded: their number follows Python GC timing,
+    which is also why GC is off while counting."""
+    import gc
+
+    from py4j import protocol
+    from py4j.clientserver import ClientServerConnection
+
+    build()
+    send = ClientServerConnection.send_command
+    calls = 0
+
+    def counting(self, command, *args, **kwargs):
+        nonlocal calls
+        if not command.startswith(protocol.MEMORY_COMMAND_NAME):
+            calls += 1
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    gc.disable()
+    try:
+        build()
+    finally:
+        gc.enable()
+        monkeypatch.setattr(ClientServerConnection, "send_command", send)
+    return calls
+
+
+def test_minhash_builders_py4j_budget(spark, monkeypatch):
+    """Driver plan-build cost of the near-dup builders, as py4j round
+    trips: a layer metric host load cannot move. The builders are SQL
+    expression strings; per-element Python Column trees cost about 8
+    round trips per ``F.*`` call (2 088 / 3 895 / 1 584 here when they
+    were built that way)."""
+    batch = spark.createDataFrame(
+        [(i, f"w{i % 7} alpha beta gamma delta {i % 3}") for i in range(20)],
+        "id bigint, t string",
+    )
+    corpus = spark.createDataFrame(
+        [(100 + i, f"w{i % 5} alpha beta gamma {i}") for i in range(20)],
+        "id bigint, t string",
+    )
+    budgets = {
+        "minhash_near_dups": (lambda: dd.minhash_near_dups(batch, "id", "t"), 600),
+        "minhash_near_dups_incremental": (
+            lambda: dd.minhash_near_dups_incremental(batch, corpus, "id", "t"),
+            600,
+        ),
+        "build_minhash_index": (lambda: dd.build_minhash_index(batch, "id", "t"), 200),
+    }
+    calls = {name: _py4j_calls(monkeypatch, b) for name, (b, _) in budgets.items()}
+    assert all(calls[name] <= cap for name, (_, cap) in budgets.items()), calls
+
+
+def test_minhash_builders_quote_names_and_reject_backticks(spark):
+    """Column names are interpolated into SQL expression strings
+    backtick-quoted, so non-identifier names work; a name that itself
+    holds a backtick cannot be quoted and raises, as does a signature
+    wider than the 8 windows two md5 parses cover."""
+    import pytest
+
+    texts = ["a b c d e f g h", "a b c d e f g x", "p q r s t u v w"]
+    plain = spark.createDataFrame(list(enumerate(texts)), "id bigint, t string")
+    odd = plain.toDF("doc id", "the-text")
+    got = dd.minhash_near_dups(odd, "doc id", "the-text", threshold=0.5).collect()
+    assert sorted(map(tuple, got)) == sorted(
+        map(tuple, dd.minhash_near_dups(plain, "id", "t", threshold=0.5).collect())
+    )
+    assert [tuple(r)[:2] for r in got] == [(0, 1)]
+    with pytest.raises(ValueError, match="backtick"):
+        dd.with_word_shingles(plain.toDF("id", "t`x"), "id", "t`x")
+    with pytest.raises(ValueError, match="num_hashes"):
+        dd.minhash_signature(dd.with_word_shingles(plain, "id", "t"), "id", 9)

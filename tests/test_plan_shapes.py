@@ -8,11 +8,14 @@ passes the oracle at sf0.01 but falls over at cluster scale — this file is
 the guard. (Plans are inspected unexecuted; the whole file runs in seconds.)
 """
 
+from pathlib import Path
+
 import pytest
 
 from mbgspark.plans.catalog import CATALOG
 
 SF = "/root/testdata/sf0.001"
+TOOLS = str(Path(__file__).resolve().parents[1] / "tools")
 
 
 def plan_of(spark, name: str) -> str:
@@ -593,7 +596,7 @@ def test_plan_lint_clean(spark):
     future round's manual audit."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import plan_lint
 
     findings = []
@@ -613,7 +616,7 @@ def test_plan_lint_flags_scanfed_sort(spark):
 
     from pyspark.sql import functions as F
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import plan_lint
 
     scan = spark.read.parquet(f"{SF}/orders.parquet")
@@ -642,7 +645,7 @@ def test_plan_lint_flags_lambda_inlined_scalar(spark):
 
     from pyspark.sql import functions as F
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import plan_lint
 
     df = spark.createDataFrame(
@@ -716,7 +719,7 @@ def test_scorer_bnlj_stream_sides_fanned(spark):
     a new unfanned BNLJ shows up as a bounded-count rise — both fail."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     from plan_lint import _SHUFFLE_INDUCING
 
     from mbgspark.jvmseam import node_class, physical_plan_root, walk_plan
@@ -776,7 +779,7 @@ def test_plan_lint_flags_bnlj_pair_recompute(spark):
 
     from pyspark.sql import functions as F
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import plan_lint
 
     d = spark.createDataFrame([(1, "spark streams")], "id int, text string")
@@ -843,7 +846,7 @@ def test_plan_lint_flags_scanfed_global_window(spark):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import plan_lint
 
     scan = spark.read.parquet(f"{SF}/orders.parquet")
@@ -917,7 +920,7 @@ def test_agg_audit_classifies_sort_class_aggregates(spark):
 
     from pyspark.sql import functions as F
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import agg_audit
 
     orders = spark.read.parquet(f"{SF}/orders.parquet")

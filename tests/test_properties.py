@@ -447,18 +447,56 @@ def test_ngram_driver_property_equivalence(spark, texts):
 @settings(max_examples=30, deadline=None, suppress_health_check=list(HealthCheck))
 def test_minhash_numeric_min_is_string_min(spark, windows):
     """The r12 hash family's load-bearing identity: for FIXED-WIDTH
-    lowercase hex, numeric min (conv -> bigint, the HashAggregate path)
+    lowercase hex, numeric min (a 60-bit bigint, the HashAggregate path)
     rendered back through lower(lpad(hex(...), 15, '0')) equals the
     lexicographic string min the DuckDB oracle computes. Property-pinned
-    over arbitrary 15-hex windows including all-zero and max values."""
+    over arbitrary 15-hex windows including all-zero and max values; the
+    numeric windows themselves come from two md5 parses, pinned by
+    ``test_minhash_two_parse_windows_equal_direct_parse``."""
     from mbgspark.operators.dedup import _render_sig_hex
 
     df = spark.createDataFrame([(w,) for w in windows], "w string")
     got = (
-        df.agg(
-            F.min(F.conv(F.col("w"), 16, 10).cast("long")).alias("h0")
-        )
-        .select(_render_sig_hex(0).alias("r"))
+        df.selectExpr("min(CAST(conv(w, 16, 10) AS BIGINT)) AS h0")
+        .selectExpr(f"{_render_sig_hex('h0')} AS r")
         .first()["r"]
     )
     assert got == min(windows)
+
+
+@given(
+    st.lists(
+        st.text(alphabet="0123456789abcdef", min_size=32, max_size=32),
+        min_size=1,
+        max_size=10,
+    )
+)
+@settings(max_examples=30, deadline=None, suppress_health_check=list(HealthCheck))
+def test_minhash_two_parse_windows_equal_direct_parse(spark, hexes):
+    """The signature kernel parses each 32-char md5 twice (chars 1–15 and
+    15–29) and shifts the eight 15-char windows out of the two parses.
+    Window i must equal the direct parse conv(substr(m, 2i+1, 15), 16, 10)
+    for every i in 0..7 — over arbitrary hex, all-'0', all-'f', and
+    variants that differ only at char 15, the nibble both parses share."""
+    from mbgspark.operators.dedup import _hex_parses, _sig_window
+
+    ms = hexes + ["0" * 32, "f" * 32]
+    ms += [m[:14] + c + m[15:] for m in ms for c in "078f"]
+    df = spark.createDataFrame([(m,) for m in ms], "m string")
+    rows = (
+        df.selectExpr("m", *_hex_parses("m"))
+        .selectExpr(
+            "m",
+            f"array({', '.join(_sig_window(i) for i in range(8))}) AS two",
+            "array("
+            + ", ".join(
+                f"CAST(conv(substr(m, {2 * i + 1}, 15), 16, 10) AS BIGINT)"
+                for i in range(8)
+            )
+            + ") AS direct",
+        )
+        .collect()
+    )
+    assert len(rows) == len(ms)
+    bad = [(r["m"], r["two"], r["direct"]) for r in rows if r["two"] != r["direct"]]
+    assert not bad, bad[:3]

@@ -4,8 +4,9 @@ walk against PySpark renames and pins the two properties the protocol
 relies on: records are exactly reproducible, and the bench-SF suite
 never spills."""
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 
 
 def test_ledger_deterministic_and_spill_free(spark):

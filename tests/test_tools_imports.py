@@ -1,13 +1,16 @@
 """The scripts under tools/ are not imported by any other test, so a rename
 in mbgspark can leave one of them unable to start. Walk each script's
 ``from mbgspark… import name`` statements (and its imports of sibling
-tools) and check that every name still resolves."""
+tools) and check that every name still resolves. Also check that no
+script or test puts an absolute path on ``sys.path``."""
 
 import ast
 import importlib
+import os
 from pathlib import Path
 
-TOOLS = Path(__file__).resolve().parent.parent / "tools"
+TESTS = Path(__file__).resolve().parent
+TOOLS = TESTS.parent / "tools"
 
 
 def _top_level_names(path: Path) -> set[str]:
@@ -53,3 +56,28 @@ def test_tools_imports_resolve():
                     f"{script.name}: {mod}.{n}" for n in names if n not in defined
                 ]
     assert not missing, missing
+
+
+def test_no_absolute_sys_path_literals():
+    """A script or test that puts an absolute checkout path on
+    ``sys.path`` imports THAT checkout's engine and tools when it runs
+    from any other checkout (a parent copy for an A/B, a CI workspace).
+    Paths must be derived from ``__file__``."""
+    found = []
+    for script in sorted([*TOOLS.glob("*.py"), *TESTS.glob("*.py")]):
+        for node in ast.walk(ast.parse(script.read_text())):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("insert", "append")
+                and ast.unparse(node.func.value) == "sys.path"
+            ):
+                continue
+            found += [
+                f"{script.parent.name}/{script.name}:{node.lineno}: {arg.value}"
+                for arg in node.args
+                if isinstance(arg, ast.Constant)
+                and isinstance(arg.value, str)
+                and os.path.isabs(arg.value)
+            ]
+    assert not found, found

@@ -27,7 +27,7 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mbgspark.io import TESTDATA_TABLES
 from mbgspark.session import get_spark
