@@ -272,6 +272,74 @@ def write_partitioned(
     )
 
 
+#: Siblings of a store while ``swap_store`` replaces it: the next
+#: generation is staged at ``path + _STAGED``, and the live store is
+#: renamed to ``path + _ASIDE`` while the staged copy takes its place.
+_STAGED, _ASIDE = "__compact_tmp", "__compact_old"
+
+
+def staged_path(path: str) -> str:
+    """Where a store's next generation is written (a complete parquet
+    job, ``_SUCCESS`` included) before ``swap_store`` puts it in place."""
+    return path.rstrip("/") + _STAGED
+
+
+def _swap_paths(spark: SparkSession, path: str):
+    path = path.rstrip("/")
+    fs, store = jvmseam.hadoop_fs(spark, path)
+    sibs = [jvmseam.hadoop_path(spark, path + s) for s in (_STAGED, _ASIDE)]
+    return (fs, store, *sibs)
+
+
+def _rename(fs, src, dst) -> None:
+    if not fs.rename(src, dst):
+        raise RuntimeError(f"store swap: failed to rename {src} to {dst}")
+
+
+def swap_store(spark: SparkSession, path: str) -> None:
+    """Replace the store at ``path`` with its committed ``staged_path``
+    copy by rename-aside on the session's Hadoop FS: rename the live
+    store aside, rename the staged copy in, delete the aside copy; a
+    failed rename raises. The live store is never deleted in place — a
+    recursive delete removes files one by one, and a crash inside it
+    leaves a partial store the next reader takes for a whole one. Every
+    crash point leaves the store or a committed staged copy, which
+    ``recover_store_swap`` resolves."""
+    fs, store, staged, aside = _swap_paths(spark, path)
+    had_store = bool(fs.exists(store))
+    if had_store:
+        _rename(fs, store, aside)
+    _rename(fs, staged, store)
+    if had_store:
+        fs.delete(aside, True)
+
+
+def recover_store_swap(spark: SparkSession, path: str) -> None:
+    """Finish a ``swap_store`` a crash cut; call it before reading the
+    store. No store but a committed staged copy (``_SUCCESS`` present) is
+    a cut between the renames: the staged copy is renamed in. An aside
+    copy beside the store is a cut before the final delete: it is
+    deleted, since renaming onto an existing directory is FS-specific."""
+    fs, store, staged, aside = _swap_paths(spark, path)
+    committed = jvmseam.hadoop_path(spark, staged_path(path) + "/_SUCCESS")
+    if not fs.exists(store) and fs.exists(committed):
+        _rename(fs, staged, store)
+    if fs.exists(aside) and fs.exists(store):
+        fs.delete(aside, True)
+
+
+def unfinished_swap(spark: SparkSession, path: str) -> str | None:
+    """The sibling of a ``swap_store`` cut at ``path`` (no store, but a
+    staged or aside sibling), else ``None``. A writer that would create a
+    missing store asks first: the stored rows are in the sibling."""
+    fs, store, staged, aside = _swap_paths(spark, path)
+    if not fs.exists(store):
+        for sib in (aside, staged):
+            if fs.exists(sib):
+                return sib.toString()
+    return None
+
+
 def compact_store(
     spark: SparkSession,
     path: str,
@@ -285,42 +353,25 @@ def compact_store(
     store appended daily reads thousands of tiny footers per partition
     until compacted). Returns the number of files after compaction.
 
-    The rewrite goes to a ``__compact_tmp`` sibling, then two renames on
-    the session's Hadoop FS swap it in (store → ``__compact_old``, tmp →
-    store), so a reader never sees a half-written mix; partition values
-    are preserved exactly. A crash between the renames leaves no store at
-    ``path``: the next call finishes that swap first, and
-    ``streaming.start_merge_sink`` refuses to write while it is unfinished.
+    The rewrite goes to ``staged_path(path)`` and ``swap_store`` renames
+    it in, so a reader never sees a half-written mix; partition values
+    are preserved exactly. Each call first runs ``recover_store_swap``,
+    which finishes a swap an earlier call left cut; while a swap is cut
+    between its renames, ``streaming.start_merge_sink`` refuses to write.
     Run this from the maintenance window of an ingest pipeline, not
     per-batch — per-batch compaction is write amplification.
     """
-    path = path.rstrip("/")
-    tmp, old = path + "__compact_tmp", path + "__compact_old"
-    fs, store_p = jvmseam.hadoop_fs(spark, path)
-
-    def _p(s: str):
-        return jvmseam.hadoop_path(spark, s)
-
-    def _rename(src: str, dst: str) -> None:
-        if not fs.rename(_p(src), _p(dst)):
-            raise RuntimeError(f"compact_store: failed to rename {src} to {dst}")
-
-    if not fs.exists(store_p) and fs.exists(_p(old)):
-        _rename(tmp, path)  # cut between the renames: tmp is the finished copy
-    if fs.exists(_p(old)):  # cut before the final delete: stale, and
-        fs.delete(_p(old), True)  # renaming onto a directory is FS-specific
-
+    recover_store_swap(spark, path)
     (
         spark.read.parquet(path)
         .repartition(partition_col)
-        .write.mode("overwrite")  # also replaces a tmp cut mid-write
+        .write.mode("overwrite")  # also replaces a staged copy cut mid-write
         .option("maxRecordsPerFile", str(max_records_per_file))
         .partitionBy(partition_col)
-        .parquet(tmp)
+        .parquet(staged_path(path))
     )
-    _rename(path, old)
-    _rename(tmp, path)
-    fs.delete(_p(old), True)
+    swap_store(spark, path)
+    fs, store_p = jvmseam.hadoop_fs(spark, path)
     n = 0
     files = fs.listFiles(store_p, True)
     while files.hasNext():

@@ -837,9 +837,7 @@ def curate_neardup_observed(
     ``.get`` detects that case (JVM ``getRowOrEmpty`` probe) and
     evaluates the one-row metrics aggregate directly, so a fully-empty
     curation still reports true counts instead of an opaque assertion."""
-    from pyspark.sql import Observation
-
-    from mbgspark.operators.dedup import ResilientObservation, minhash_near_dups
+    from mbgspark.operators.dedup import minhash_near_dups, observe_oversized
 
     w = Window.partitionBy(F.md5(F.lower(F.trim(F.col(text_col))))).orderBy(
         id_col
@@ -862,15 +860,8 @@ def curate_neardup_observed(
         metrics_out=metrics,
     )
     drop_ids = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    obs = Observation("curation_neardup_metrics")
-    mrow = metrics[0].observe(
-        obs,
-        F.max("oversized_buckets").alias("oversized_buckets"),
-        F.max("oversized_rows").alias("oversized_rows"),
+    return observe_oversized(
+        uniq.join(drop_ids, id_col, "left_anti"),
+        metrics[0],
+        "curation_neardup_metrics",
     )
-    survivors = (
-        uniq.join(drop_ids, id_col, "left_anti")
-        .crossJoin(F.broadcast(mrow))
-        .drop("oversized_buckets", "oversized_rows")
-    )
-    return survivors, ResilientObservation(obs, metrics[0])

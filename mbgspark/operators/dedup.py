@@ -304,6 +304,58 @@ class ResilientObservation:
         return observed_or_direct(self._obs, self._metrics_df)
 
 
+def observe_oversized(
+    survivors: DataFrame, metrics_df: DataFrame, name: str
+) -> tuple[DataFrame, ResilientObservation]:
+    """Ride the one-row oversized metrics frame (``metrics_out``) along
+    ``survivors``: observed as Observation ``name``, broadcast-crossJoined
+    in (×1) and its columns dropped, so an action on the returned frame
+    delivers the metrics. Returns that frame and the
+    ``ResilientObservation`` to read ``.get`` from after the action."""
+    from pyspark.sql import Observation
+
+    obs = Observation(name)
+    mrow = metrics_df.observe(
+        obs,
+        F.max("oversized_buckets").alias("oversized_buckets"),
+        F.max("oversized_rows").alias("oversized_rows"),
+    )
+    survivors = survivors.crossJoin(F.broadcast(mrow)).drop(
+        "oversized_buckets", "oversized_rows"
+    )
+    return survivors, ResilientObservation(obs, metrics_df)
+
+
+def report_oversized(
+    handle: ResilientObservation, on_metrics, batch_id: int
+) -> None:
+    """Pass an ``observe_oversized`` handle's counts to a gate's
+    ``on_metrics`` callback, after the write that carried the ride-along."""
+    got = handle.get
+    on_metrics(
+        batch_id,
+        {
+            "oversized_buckets": got.get("oversized_buckets") or 0,
+            "oversized_rows": got.get("oversized_rows") or 0,
+        },
+    )
+
+
+def incremental_drop_ids(pairs: DataFrame, id_col: str) -> DataFrame:
+    """Batch ids a near-dup gate drops for incremental verified pairs: a
+    ``corpus`` match drops its batch doc ``id_a``, a ``batch`` pair drops
+    ``id_b`` (the lower id survives)."""
+    return (
+        pairs.filter(F.col("match_source") == "corpus")
+        .select(F.col("id_a").alias(id_col))
+        .unionByName(
+            pairs.filter(F.col("match_source") == "batch")
+            .select(F.col("id_b").alias(id_col))
+        )
+        .distinct()
+    )
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame,
     id_col: str,

@@ -266,15 +266,13 @@ def snapshot_diff(
 # ------------------------------------------------------ numeric profiler ----
 
 
-def _value_histogram(
-    df: DataFrame, columns: list[str], keep_nulls: bool
-) -> DataFrame:
+def _value_histogram(df: DataFrame, columns: list[str]) -> DataFrame:
     """(column_name, __v, __cnt) value histogram for several numeric
     columns in ONE scan: explode the columns row-wise, map-side-combining
-    HashAggregate on (column, value). With ``keep_nulls`` the null values
-    of each column survive as a single ``__v IS NULL`` sentinel row per
-    column, so null counts ride the same histogram (``profile_numeric``
-    derives its moment stats from these rows — no second table scan)."""
+    HashAggregate on (column, value). The null values of each column
+    survive as a single ``__v IS NULL`` sentinel row per column, so null
+    counts ride the same histogram (``profile_numeric`` derives its
+    moment stats from these rows — no second table scan)."""
     pairs = df.select(
         F.explode(
             F.array(
@@ -288,49 +286,25 @@ def _value_histogram(
             )
         ).alias("p")
     ).select("p.*")
-    if not keep_nulls:
-        pairs = pairs.filter(F.col("__v").isNotNull())
     return pairs.groupBy("column_name", "__v").agg(
         F.count(F.lit(1)).alias("__cnt")
     )
 
 
 def _quantiles_from_histogram(
-    hist: DataFrame, qs: list[float], rng: DataFrame | None = None
+    hist: DataFrame, qs: list[float], rng: DataFrame
 ) -> DataFrame:
-    """Quantile pipeline over a ``_value_histogram`` frame (null-free):
+    """Quantile pipeline over a null-free ``_value_histogram`` frame:
     per-column cumulative rank → pick the two values bracketing position
     q·(n−1) → interpolate with Spark's own percentile formula.
 
     ``rng`` — (column_name, __mn, __mx) with the per-column min/max —
-    is computed from ``hist`` when absent. Callers that already
-    aggregate those moments (``profile_numeric``) pass their own frame
-    so the histogram has exactly one extra consumer and every consumer
+    comes from the caller's own moments rollup (``profile_numeric``), so
+    the histogram has exactly one extra consumer and every consumer
     reuses the SAME shuffle exchange: any consumer whose pruned copy of
     ``hist`` drops the inner aggregate (or a column of it) canonicalizes
     to a DIFFERENT exchange and ReuseExchange stops firing — the r12
-    profile_numeric 8-scan regression (VERDICT r12). Hence the guarded
-    min/max below."""
-    if rng is None:
-        # min/max take __v + 0.0·__cnt — value-identical (__cnt is
-        # count(1): finite, ≥ 1, never null), but the reference to
-        # __cnt, an OUTPUT of the inner (column, value) aggregate, is
-        # load-bearing twice over: (a) a bare min(__v)/max(__v) is
-        # duplicate-agnostic over the grouping key, so
-        # RemoveRedundantAggregates collapses the inner aggregate out of
-        # this branch and its exchange stops matching the histogram's —
-        # re-scanning the base table (the r12 8-scan regression); (b) a
-        # struct-rider guard (min(struct(__v, __cnt))) keeps the reuse
-        # but plans an immutable-buffer SortAggregate — the fat-agg
-        # class tools/agg_audit.py exists to catch. The arithmetic rider
-        # stays a double, so the whole rollup is one codegen
-        # HashAggregate. (Spark does not fold 0.0·x — unsound under
-        # null/NaN/Inf — and the plan-shape test pins both properties.)
-        guarded_v = F.col("__v") + F.lit(0.0) * F.col("__cnt")
-        rng = hist.groupBy("column_name").agg(
-            F.min(guarded_v).alias("__mn"),
-            F.max(guarded_v).alias("__mx"),
-        )
+    profile_numeric 8-scan regression (VERDICT r12)."""
     # Two-level cumulative rank (the corpus_shuffle_shards offsets
     # pattern): a single per-column window serializes the whole distinct
     # set through one task (measured 1.9 s alone on a 600k-distinct
@@ -412,39 +386,6 @@ def _quantiles_from_histogram(
             .alias(f"q{i}")
         )
     return cum.groupBy("column_name").agg(*sel[1:]).select("column_name", *post)
-
-
-def exact_quantiles_histogram(
-    df: DataFrame, columns: list[str], qs: list[float]
-) -> DataFrame:
-    """EXACT linear-interpolated quantiles for several columns in one
-    codegen pipeline: (column, value) histogram → per-column cumulative
-    rank → interpolate (see ``_quantiles_from_histogram``).
-
-    This is the scale shape for exact quantiles: Spark's builtin
-    ``percentile`` is a TypedImperativeAggregate that buffers the SAME
-    distinct-value→count map per function and serializes whole maps
-    through the shuffle — here the identical content flows as (column,
-    value, count) rows through a map-side-combining HashAggregate, and
-    the only sort is the per-COLUMN cumulative window over DISTINCT
-    values: bounded by value cardinality, not row count (exactly the
-    builtin's buffer bound, sorted once instead of serialized per
-    partition per function). Measured (SCALE.md round 13, "Builtin
-    ``percentile`` A/B": 6 quantiles over 3 lineitem columns incl. near-unique l_extendedprice,
-    interleaved best-of-N, vs the honest array-form builtin
-    ``percentile(c, array(qs))`` — ADVICE r13): builtin/histogram =
-    0.8x at sf0.1 (builtin WINS small), 1.0x at sf1, 2.7x at sf10 —
-    the crossover is ~sf1 and the gap widens with distinct count, as
-    the buffer-serialization argument predicts (SCALE.md r14
-    correction). Prefer the builtin below the crossover; this pipeline
-    is the scale/beyond-sf1 shape.
-
-    Output: one row per column that has ≥1 non-null value —
-    (column_name, q0, q1, …) as double, UNROUNDED (callers round).
-    All-null columns are simply absent (callers left-join)."""
-    return _quantiles_from_histogram(
-        _value_histogram(df, columns, keep_nulls=False), qs
-    )
 
 
 def profile_numeric(
@@ -530,14 +471,23 @@ def profile_numeric(
             .filter((F.col("n_values") + F.col("n_null")) > 0)
             .orderBy("column_name")
         )
-    hist = _value_histogram(df, columns, keep_nulls=True)
+    hist = _value_histogram(df, columns)
     nn_cnt = F.when(F.col("__v").isNotNull(), F.col("__cnt"))
-    # min/max take __v + 0.0·__cnt — value-identical, but the __cnt
-    # reference keeps RemoveRedundantAggregates from collapsing the inner
-    # histogram aggregate out of any pruned copy of this rollup (exchange
-    # reuse by construction) while staying a codegen HashAggregate; see
-    # _quantiles_from_histogram. Null sentinel rows yield null (null+x)
-    # and are skipped by min/max, exactly as intended.
+    # min/max take __v + 0.0·__cnt — value-identical (__cnt is count(1):
+    # finite, ≥ 1, never null), but the reference to __cnt, an OUTPUT of
+    # the inner (column, value) aggregate, is load-bearing twice over:
+    # (a) a bare min(__v)/max(__v) is duplicate-agnostic over the
+    # grouping key, so RemoveRedundantAggregates collapses the inner
+    # aggregate out of any pruned copy of this rollup and its exchange
+    # stops matching the histogram's — re-scanning the base table (the
+    # r12 8-scan regression); (b) a struct-rider guard
+    # (min(struct(__v, __cnt))) keeps the reuse but plans an
+    # immutable-buffer SortAggregate — the fat-agg class
+    # tools/agg_audit.py exists to catch. The arithmetic rider stays a
+    # double, so the whole rollup is one codegen HashAggregate. (Spark
+    # does not fold 0.0·x — unsound under null/NaN/Inf — and the
+    # plan-shape test pins both properties.) Null sentinel rows yield
+    # null (null+x) and are skipped by min/max, exactly as intended.
     guarded_v = F.col("__v") + F.lit(0.0) * F.col("__cnt")
     stats = hist.groupBy("column_name").agg(
         F.coalesce(F.sum(nn_cnt), F.lit(0)).cast("bigint").alias("n_values"),

@@ -21,7 +21,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from mbgspark import jvmseam
-from mbgspark.io import merge_by_key, write_partitioned
+from mbgspark.io import (
+    merge_by_key,
+    recover_store_swap,
+    staged_path,
+    swap_store,
+    unfinished_swap,
+    write_partitioned,
+)
 from mbgspark.operators.dedup import keep_latest_per_key
 from mbgspark.schema import TWEET_RAW_SCHEMA
 
@@ -33,10 +40,28 @@ def _store_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(p))
 
 
+def _start_foreach_batch(
+    stream: DataFrame, fn, checkpoint_path: str, available_now: bool
+) -> StreamingQuery:
+    """Start ``fn`` as the stream's foreachBatch sink, checkpointed at
+    ``checkpoint_path``; ``available_now`` drains what is there and stops."""
+    writer = stream.writeStream.foreachBatch(fn).option(
+        "checkpointLocation", checkpoint_path
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 #: Hash-bucket modulus of the indexed gate's band and shingle-array paths.
 #: It is baked into every ``__bucket`` directory name, so it is part of the
 #: on-disk layout, not a tuning knob.
 GATE_BUCKETS = 64
+
+#: Suffix of the sibling ``compact_gate_store`` stages a fold in. It
+#: sits beside the store, not inside it: a staged name like
+#: ``__gate_batch=-1__old`` would read as a partition.
+GATE_COMPACT_STAGING = ".__compact_staging"
 
 #: Sidecar filename at the index root recording the gate's on-disk layout.
 GATE_META_FILE = "_gate_meta.json"
@@ -226,17 +251,17 @@ def start_merge_sink(
                     partition_col="event_date",
                 )
             else:
-                # a compaction sibling beside a missing store is an
+                # a missing store beside a swap sibling is an
                 # io.compact_store swap cut between its two renames, not a
                 # first batch: writing now would replace the stored rows
-                for sib in ("__compact_old", "__compact_tmp"):
-                    if _store_exists(spark, store_path.rstrip("/") + sib):
-                        raise RuntimeError(
-                            f"merge sink: no store at {store_path} but its "
-                            f"{sib} sibling exists — an interrupted "
-                            "io.compact_store swap; re-run compact_store "
-                            "to finish it, then restart the stream"
-                        )
+                sib = unfinished_swap(spark, store_path)
+                if sib is not None:
+                    raise RuntimeError(
+                        f"merge sink: no store at {store_path} but {sib} "
+                        "exists — an interrupted io.compact_store swap; "
+                        "re-run compact_store to finish it, then restart "
+                        "the stream"
+                    )
                 # no store yet — still dedup re-delivered keys in the batch
                 merged = keep_latest_per_key(
                     batch_df, key=key, order_col="scraped_at"
@@ -250,12 +275,7 @@ def start_merge_sink(
         finally:
             batch_df.unpersist()
 
-    writer = stream.writeStream.foreachBatch(_merge).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream, _merge, checkpoint_path, available_now)
 
 
 def start_etl_lifecycle_sink(
@@ -345,14 +365,14 @@ def start_neardup_gate_sink(
     MinHash index so both the gate and the metrics read the index
     instead of re-shingling the store."""
     from mbgspark.operators.dedup import (
+        incremental_drop_ids,
         minhash_near_dups,
         minhash_near_dups_incremental,
-        observed_or_direct,
+        observe_oversized,
+        report_oversized,
     )
 
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Observation
-
         spark = batch_df.sparkSession
         batch_df = batch_df.dropDuplicates([id_col])
         slim = batch_df.select(id_col, text_col)
@@ -363,15 +383,7 @@ def start_neardup_gate_sink(
                 slim, corpus, id_col, text_col, threshold=threshold,
                 metrics_out=metrics,
             )
-            drop_ids = (
-                pairs.filter(F.col("match_source") == "corpus")
-                .select(F.col("id_a").alias(id_col))
-                .unionByName(
-                    pairs.filter(F.col("match_source") == "batch")
-                    .select(F.col("id_b").alias(id_col))
-                )
-                .distinct()
-            )
+            drop_ids = incremental_drop_ids(pairs, id_col)
         else:
             pairs = minhash_near_dups(
                 slim, id_col, text_col, threshold=threshold,
@@ -379,42 +391,20 @@ def start_neardup_gate_sink(
             )
             drop_ids = pairs.select(F.col("id_b").alias(id_col)).distinct()
         survivors = batch_df.join(drop_ids, id_col, "left_anti")
-        obs = None
+        handle = None
         if on_metrics:
-            obs = Observation(f"neardup_gate_{batch_id}")
-            mrow = metrics[0].observe(
-                obs,
-                F.max("oversized_buckets").alias("oversized_buckets"),
-                F.max("oversized_rows").alias("oversized_rows"),
-            )
-            survivors = survivors.crossJoin(F.broadcast(mrow)).drop(
-                "oversized_buckets", "oversized_rows"
+            survivors, handle = observe_oversized(
+                survivors, metrics[0], f"neardup_gate_{batch_id}"
             )
         survivors.write.mode("append").parquet(store_path)
-        if obs is not None:
-            # the ride-along can be folded away (AQE empty-relation
-            # propagation when the batch appends zero rows) and the
-            # metrics then never arrive. observed_or_direct probes the
-            # JVM getRowOrEmpty AFTER the append action — present row:
-            # normal decode; absent: evaluate the aggregate directly
-            # (TRUE capped counts; cost caveat in the docstring — this
-            # re-runs the band-bucket lineage). Real failures propagate
-            # instead of being converted into a recompute (ADVICE r5).
-            got = observed_or_direct(obs, metrics[0])
-            on_metrics(
-                batch_id,
-                {
-                    "oversized_buckets": got.get("oversized_buckets") or 0,
-                    "oversized_rows": got.get("oversized_rows") or 0,
-                },
-            )
+        if handle is not None:
+            # a zero-append batch folds the ride-along away; the handle
+            # then evaluates the aggregate directly (TRUE capped counts;
+            # cost caveat in the docstring — this re-runs the band-bucket
+            # lineage)
+            report_oversized(handle, on_metrics, batch_id)
 
-    writer = stream.writeStream.foreachBatch(_gate).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream, _gate, checkpoint_path, available_now)
 
 
 def start_neardup_gate_sink_indexed(
@@ -531,8 +521,10 @@ def start_neardup_gate_sink_indexed(
         _oversized_metrics_row,
         build_minhash_index,
         incremental_candidate_pairs,
+        incremental_drop_ids,
         minhash_near_dups,
-        observed_or_direct,
+        observe_oversized,
+        report_oversized,
         verify_candidate_pairs,
     )
 
@@ -621,8 +613,6 @@ def start_neardup_gate_sink_indexed(
         )
 
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Observation
-
         spark = batch_df.sparkSession
         _check_layout(spark)
         later = [k for k in _store_batches(spark) if k > batch_id]
@@ -752,15 +742,7 @@ def start_neardup_gate_sink_indexed(
                 pairs = verify_candidate_pairs(
                     b_arrays.unionByName(c_arrays), cand, id_col, threshold
                 )
-                drop_ids = (
-                    pairs.filter(F.col("match_source") == "corpus")
-                    .select(F.col("id_a").alias(id_col))
-                    .unionByName(
-                        pairs.filter(F.col("match_source") == "batch")
-                        .select(F.col("id_b").alias(id_col))
-                    )
-                    .distinct()
-                )
+                drop_ids = incremental_drop_ids(pairs, id_col)
             else:
                 pairs = minhash_near_dups(
                     slim, id_col, text_col, threshold=threshold,
@@ -768,16 +750,10 @@ def start_neardup_gate_sink_indexed(
                 )
                 drop_ids = pairs.select(F.col("id_b").alias(id_col)).distinct()
             survivors = batch_df.join(drop_ids, id_col, "left_anti")
-            obs = None
+            handle = None
             if on_metrics:
-                obs = Observation(f"neardup_gate_idx_{batch_id}")
-                mrow = metrics[0].observe(
-                    obs,
-                    F.max("oversized_buckets").alias("oversized_buckets"),
-                    F.max("oversized_rows").alias("oversized_rows"),
-                )
-                survivors = survivors.crossJoin(F.broadcast(mrow)).drop(
-                    "oversized_buckets", "oversized_rows"
+                survivors, handle = observe_oversized(
+                    survivors, metrics[0], f"neardup_gate_idx_{batch_id}"
                 )
             # micro-batch-sized: persist (post-observe, so the metrics
             # ride the one materializing action) so the three partition
@@ -795,18 +771,11 @@ def start_neardup_gate_sink_indexed(
             _write_part(survivors, store_path, batch_id)
             _write_part(s_arrays, arrays_path, batch_id, _id_bucket(id_col))
             _write_part(s_bands, bands_path, batch_id, _band_bucket())
-            if obs is not None:
-                # folded ride-along (zero survivors): getRowOrEmpty probe →
-                # direct evaluation — cheap here, the metrics lineage reads
-                # the index, not the corpus; real failures propagate
-                got = observed_or_direct(obs, metrics[0])
-                on_metrics(
-                    batch_id,
-                    {
-                        "oversized_buckets": got.get("oversized_buckets") or 0,
-                        "oversized_rows": got.get("oversized_rows") or 0,
-                    },
-                )
+            if handle is not None:
+                # a folded ride-along (zero survivors) is evaluated
+                # directly — cheap here, the metrics lineage reads the
+                # index, not the corpus
+                report_oversized(handle, on_metrics, batch_id)
             if compact_every:
                 # in-line maintenance: fold live batch partitions into the
                 # -1 base once enough accumulate. Runs strictly between
@@ -829,12 +798,7 @@ def start_neardup_gate_sink_indexed(
             for df_ in keep:
                 df_.unpersist()
 
-    writer = stream.writeStream.foreachBatch(_gate).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream, _gate, checkpoint_path, available_now)
 
 
 def compact_gate_store(
@@ -852,19 +816,21 @@ def compact_gate_store(
     O(batches × buckets) to O(buckets). Returns the number of batch
     partitions folded.
 
-    Crash-safe by the sketch sink's staged-swap discipline: the compacted
-    generation is written to a ``.__compact_staging`` sibling first
-    (outside the store, so readers never see a mixed layout), together
-    with a MANIFEST of exactly the batch directories it snapshots, then
-    those directories are deleted and the staging directory renamed to
-    ``__gate_batch=-1``. Every crash point resolves on the next call: a
-    staging dir bearing both ``_SUCCESS`` and the manifest is adopted —
-    the deletes are SCOPED TO THE MANIFEST (ADVICE r6: batches written
-    between a crashed compaction and the retry — e.g. by a restarted
-    stream — are NOT covered by the snapshot and must survive; they stay
-    in place as live partitions beside the promoted base, which is
-    exactly the store's normal mixed state). A staging dir missing
-    either marker is an incomplete remnant: discarded and rebuilt.
+    Crash-safe by a staged swap of its own (``io.swap_store`` replaces a
+    whole directory; this replaces a SET of partitions inside one): the
+    compacted generation is written to a ``GATE_COMPACT_STAGING``
+    sibling first (outside the store, so readers never see a mixed
+    layout), together with a MANIFEST of exactly the batch directories
+    it snapshots, then those directories are deleted and the staging
+    directory renamed to ``__gate_batch=-1``. Every crash point resolves
+    on the next call: a staging dir bearing both ``_SUCCESS`` and the
+    manifest is adopted — the deletes are SCOPED TO THE MANIFEST (ADVICE
+    r6: batches written between a crashed compaction and the retry —
+    e.g. by a restarted stream — are NOT covered by the snapshot and
+    must survive; they stay in place as live partitions beside the
+    promoted base, which is exactly the store's normal mixed state). A
+    staging dir missing either marker is an incomplete remnant:
+    discarded and rebuilt.
     Safe to run whenever no batch is concurrently WRITING — i.e. with
     the stream stopped, or from inside the gate's own foreachBatch
     (``compact_every``), which is the only writer.
@@ -878,7 +844,7 @@ def compact_gate_store(
     sub-partitioning)."""
     import json
 
-    staging = path.rstrip("/") + ".__compact_staging"
+    staging = path.rstrip("/") + GATE_COMPACT_STAGING
     manifest_path = staging + "/_COMPACT_MANIFEST.json"
     def _p(s: str):
         return jvmseam.hadoop_path(spark, s)
@@ -986,40 +952,20 @@ def start_cardinality_sink(
     live path (ADVICE r4: overwrite is delete-then-write — a crash
     between the two permanently loses every prior day's sketch, and the
     checkpoint will NOT replay old batches to rebuild them). Each fold
-    writes the next generation to a ``__staging`` sibling, then
-    delete-old + rename-staging — and the only crash window that leaves
-    the live path missing (between delete and rename) leaves a FULLY
-    COMMITTED staging generation behind, which the next fold's recovery
-    step renames into place before touching anything (completeness
-    attested by the parquet committer's _SUCCESS marker). Every crash
-    point therefore resolves to a complete store + an at-least-once
-    batch replay, which HLL-union idempotence absorbs. Staging also
-    removes the old read-while-overwriting-self hazard, so the fold
-    writes the plan directly instead of collecting rows through the
-    driver.
+    writes the next generation to ``io.staged_path`` and swaps it in
+    with ``io.swap_store`` — the same rename-aside protocol as
+    ``io.compact_store``, which never deletes the live store in place —
+    and starts with ``io.recover_store_swap``, which finishes any swap a
+    crash cut. Every crash point therefore resolves to a complete store
+    + an at-least-once batch replay, which HLL-union idempotence
+    absorbs. Staging also removes the read-while-overwriting-self
+    hazard, so the fold writes the plan directly instead of collecting
+    rows through the driver.
     """
-    staging_path = store_path.rstrip("/") + "__staging"
-
-    def _swap_in(spark: SparkSession) -> None:
-        fs, final_p = jvmseam.hadoop_fs(spark, store_path)
-        stage_p = jvmseam.hadoop_path(spark, staging_path)
-        if fs.exists(final_p) and not fs.delete(final_p, True):
-            raise RuntimeError(f"cardinality sink: failed to drop old {store_path}")
-        if not fs.rename(stage_p, final_p):
-            raise RuntimeError(
-                f"cardinality sink: failed to promote {staging_path} -> {store_path}"
-            )
-
-    def _staging_committed(spark: SparkSession) -> bool:
-        fs, marker = jvmseam.hadoop_fs(spark, staging_path + "/_SUCCESS")
-        return bool(fs.exists(marker))
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if not _store_exists(spark, store_path) and _staging_committed(spark):
-            # crashed between delete-old and rename: the staging
-            # generation IS the newest complete store — finish the swap
-            _swap_in(spark)
+        recover_store_swap(spark, store_path)
         day_sketches = batch_df.groupBy(
             F.coalesce(
                 F.date_format(ts_col, "yyyy-MM-dd"), F.lit("__unknown__")
@@ -1041,15 +987,12 @@ def start_cardinality_sink(
             out = day_sketches
         # stage the next generation (reads the live store, writes the
         # sibling — no self-overwrite), then swap it into place
-        out.coalesce(1).write.mode("overwrite").parquet(staging_path)
-        _swap_in(spark)
+        out.coalesce(1).write.mode("overwrite").parquet(
+            staged_path(store_path)
+        )
+        swap_store(spark, store_path)
 
-    writer = stream.writeStream.foreachBatch(_fold).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream, _fold, checkpoint_path, available_now)
 
 
 def start_drift_monitor_sink(
@@ -1099,9 +1042,4 @@ def start_drift_monitor_sink(
         )
         row.write.mode("append").parquet(store_path)
 
-    writer = stream.writeStream.foreachBatch(_score).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream, _score, checkpoint_path, available_now)

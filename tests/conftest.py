@@ -39,3 +39,69 @@ def tweets_raw(spark):
     from mbgspark.schema import TWEET_RAW_SCHEMA
 
     return spark.createDataFrame(rows, TWEET_RAW_SCHEMA)
+
+
+class _FaultFS:
+    """A Hadoop FileSystem proxy that forwards every call, except that it
+    crashes at one armed step: the first ``op`` call ("rename" or a
+    directory "delete") made after ``after_renames`` renames went
+    through. A crashing directory delete first removes one of the
+    directory's part files, the state a recursive delete cut partway
+    leaves on the local FS."""
+
+    def __init__(self, real, state):
+        self._real = real
+        self._state = state
+
+    def __getattr__(self, name):
+        return getattr(self._real, name)
+
+    def _armed(self, op) -> bool:
+        st = self._state
+        return st["op"] == op and st["renames"] >= st["after_renames"]
+
+    def rename(self, src, dst):
+        if self._armed("rename"):
+            raise RuntimeError(f"injected fault: rename {src} -> {dst}")
+        ok = self._real.rename(src, dst)
+        self._state["renames"] += 1
+        return ok
+
+    def delete(self, p, recursive):
+        real = self._real
+        if (
+            self._armed("delete")
+            and real.exists(p)
+            and real.getFileStatus(p).isDirectory()
+        ):
+            files = real.listFiles(p, True)
+            while files.hasNext():
+                f = files.next().getPath()
+                if f.getName().startswith("part-"):
+                    real.delete(f, False)
+                    break
+            raise RuntimeError(f"injected fault: delete {p}")
+        return real.delete(p, recursive)
+
+
+@pytest.fixture
+def fault_fs(monkeypatch):
+    """``arm(op, after_renames=0)`` routes ``jvmseam.hadoop_fs`` through a
+    ``_FaultFS`` until the returned ``disarm()`` is called — a crash
+    injected into the store-swap code, which raises ``RuntimeError``
+    ("injected fault") at the armed step."""
+    from mbgspark import jvmseam
+
+    real_hadoop_fs = jvmseam.hadoop_fs
+
+    def arm(op: str, after_renames: int = 0):
+        state = {"op": op, "after_renames": after_renames, "renames": 0}
+
+        def hadoop_fs(spark, path):
+            fs, p = real_hadoop_fs(spark, path)
+            return _FaultFS(fs, state), p
+
+        monkeypatch.setattr(jvmseam, "hadoop_fs", hadoop_fs)
+        return lambda: monkeypatch.setattr(jvmseam, "hadoop_fs", real_hadoop_fs)
+
+    return arm

@@ -161,8 +161,10 @@ def test_csv_roundtrip_with_schema_and_complex_guard(spark, tmp_path):
         write_csv(d.withColumn("arr", F.array("id")), str(tmp_path / "bad"))
 
 
-def test_compact_store_reduces_files_preserves_rows(spark, tmp_path):
+def test_compact_store_reduces_files_preserves_rows(spark, tmp_path, fault_fs):
     import os
+
+    import pytest
 
     from mbgspark.io import compact_store
 
@@ -183,12 +185,17 @@ def test_compact_store_reduces_files_preserves_rows(spark, tmp_path):
         1 for _, _, fs in os.walk(store) for f in fs if f.endswith(".parquet")
     )
     rows_before = sorted(r["id"] for r in spark.read.parquet(store).collect())
-    # a stale sibling from a compaction cut before its final delete
-    spark.range(3).write.parquet(store + "__compact_old")
+    # a stale aside sibling: a compaction cut inside its final delete,
+    # after both renames (the delete removes one part file, then dies)
+    disarm = fault_fs("delete", after_renames=1)
+    with pytest.raises(RuntimeError, match="injected fault"):
+        compact_store(spark, store, "event_date")
+    disarm()
+    assert len(os.listdir(tmp_path)) == 2  # the store and its stale sibling
     after = compact_store(spark, store, "event_date")
     rows_after = sorted(r["id"] for r in spark.read.parquet(store).collect())
     assert rows_after == rows_before
-    assert not os.path.exists(store + "__compact_old")
+    assert os.listdir(tmp_path) == ["frag_store"]
     assert after <= 3  # one file per partition
     assert after < before
 

@@ -6,6 +6,7 @@ import json
 from pyspark.sql import functions as F
 
 from mbgspark.streaming import (
+    GATE_COMPACT_STAGING,
     daily_counts_stream,
     dedup_stream,
     read_tweet_stream,
@@ -432,54 +433,110 @@ def test_drift_monitor_flags_shifted_batch(spark, tmp_path):
     assert mixed_psi > 250_000, mixed_psi
 
 
-def test_cardinality_sink_recovers_staged_generation_after_crash(spark, tmp_path):
-    """Crash-window recovery for the staged sketch-store swap (ADVICE
-    r4): if a crash lands between delete-old and rename-staging, the
-    live path is missing but the staging dir holds the fully-committed
-    newest generation — the next fold renames it into place before
-    folding, so no prior day's sketch is ever lost. Simulated by moving
-    the store into the staging path (the exact on-disk crash state)."""
-    import shutil
-
-    from mbgspark.streaming import read_tweet_stream, start_cardinality_sink
-
-    src = tmp_path / "crsrc"
-    store = str(tmp_path / "crstore")
-
-    def run(ckpt):
-        q = start_cardinality_sink(
-            read_tweet_stream(spark, str(src)),
-            store,
-            str(tmp_path / ckpt),
-            key_col="author_handle",
-            ts_col="created_at",
-            available_now=True,
-        )
-        q.awaitTermination(120)
-
-    day1 = [dict(R1, _id=str(i), author_handle=f"a{i % 3}") for i in range(10)]
-    _write_batch(src, day1)
-    run("cr_ck_a")
-
-    # simulate the crash: store vanished mid-swap, staging holds the
-    # committed generation
-    shutil.move(store, store + "__staging")
-    assert not (tmp_path / "crstore").exists()
-
-    day2 = [
-        dict(R2, _id=str(100 + i), author_handle=f"b{i % 5}") for i in range(10)
-    ]
-    _write_batch(src, day2)
-    run("cr_ck_b")
-
-    est = {
+def _sketch_estimates(spark, store):
+    return {
         r["day"]: r["est"]
         for r in spark.read.parquet(store)
         .select("day", F.hll_sketch_estimate("hll_sketch").alias("est"))
         .collect()
     }
+
+
+def _run_cardinality_sink(spark, src, store, ckpt):
+    from mbgspark.streaming import start_cardinality_sink
+
+    start_cardinality_sink(
+        read_tweet_stream(spark, str(src)),
+        store,
+        ckpt,
+        key_col="author_handle",
+        ts_col="created_at",
+        available_now=True,
+    ).awaitTermination(120)
+
+
+def test_cardinality_sink_recovers_staged_generation_after_crash(
+    spark, tmp_path, fault_fs
+):
+    """Crash-window recovery for the staged sketch-store swap (ADVICE
+    r4): if a crash lands between the swap's two renames (live store
+    aside, staged generation in), the live path is missing but the
+    staged copy is the fully-committed newest generation — the restarted
+    fold renames it into place before folding, so no prior day's sketch
+    is ever lost. The crash is injected into ``io.swap_store`` itself,
+    after its first rename."""
+    import os
+
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    src = tmp_path / "crsrc"
+    store = str(tmp_path / "crstore")
+    ck = str(tmp_path / "cr_ck")
+
+    day1 = [dict(R1, _id=str(i), author_handle=f"a{i % 3}") for i in range(10)]
+    _write_batch(src, day1)
+    _run_cardinality_sink(spark, src, store, ck)
+
+    day2 = [
+        dict(R2, _id=str(100 + i), author_handle=f"b{i % 5}") for i in range(10)
+    ]
+    _write_batch(src, day2)
+    disarm = fault_fs("rename", after_renames=1)
+    with pytest.raises(StreamingQueryException, match="injected fault"):
+        _run_cardinality_sink(spark, src, store, ck)
+    disarm()
+    # the crash state: store renamed aside, staged generation not yet in
+    assert not os.path.exists(store)
+
+    _run_cardinality_sink(spark, src, store, ck)  # batch 1 replays
     # day 1's sketches survived the crash; day 2 folded on top
-    assert est == {"2025-01-01": 3, "2025-01-02": 5}
+    assert _sketch_estimates(spark, store) == {"2025-01-01": 3, "2025-01-02": 5}
+    assert [p for p in os.listdir(tmp_path) if p.startswith("crstore")] == [
+        "crstore"
+    ]
+
+
+def test_cardinality_sink_partial_delete_keeps_every_day(
+    spark, tmp_path, fault_fs
+):
+    """A recursive delete on the local FS removes files one by one, so a
+    crash inside it leaves part of the directory behind. The fold's swap
+    must never delete the live store in place: a crash inside its
+    delete, which here removes one part file and then dies, must leave
+    every earlier day's sketch readable after the restart. The store
+    starts as two days backfilled one append each (one part file per
+    day), so a partial delete of the live store would drop a day that
+    the restarted fold then rewrites out of the store for good."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    src = tmp_path / "pdsrc"
+    store = str(tmp_path / "pdstore")
+    ck = str(tmp_path / "pd_ck")
+    for day, n in (("2025-01-01", 3), ("2025-01-02", 5)):
+        spark.createDataFrame(
+            [(day, f"{day}-a{i}") for i in range(n)], "day string, author string"
+        ).groupBy("day").agg(
+            F.hll_sketch_agg("author").alias("hll_sketch")
+        ).coalesce(1).write.mode("append").parquet(store)
+    assert _sketch_estimates(spark, store) == {"2025-01-01": 3, "2025-01-02": 5}
+
+    r3 = {**R1, "created_at": "2025-01-03T09:00:00Z"}
+    _write_batch(
+        src, [dict(r3, _id=str(i), author_handle=f"c{i % 2}") for i in range(6)]
+    )
+    disarm = fault_fs("delete")
+    with pytest.raises(StreamingQueryException, match="injected fault"):
+        _run_cardinality_sink(spark, src, store, ck)
+    disarm()
+
+    _run_cardinality_sink(spark, src, store, ck)  # the batch replays
+    assert _sketch_estimates(spark, store) == {
+        "2025-01-01": 3,
+        "2025-01-02": 5,
+        "2025-01-03": 2,
+    }
 
 
 def test_merge_sink_restarts_from_checkpoint_after_mid_batch_crash(spark, tmp_path):
@@ -543,14 +600,16 @@ def test_merge_sink_restarts_from_checkpoint_after_mid_batch_crash(spark, tmp_pa
     assert got == want
 
 
-def test_merge_sink_survives_compaction_cut_between_renames(spark, tmp_path):
+def test_merge_sink_survives_compaction_cut_between_renames(
+    spark, tmp_path, fault_fs
+):
     """io.compact_store swaps the compacted copy in with two renames
-    (store → __compact_old, __compact_tmp → store). A crash between them
-    leaves NO store at the path; the next merge batch must not mistake
-    that for a first batch and overwrite the store with its own rows. The
-    crash state is built on disk exactly as the cut leaves it; the batch
-    fails, compact_store finishes the swap, and the replayed batch merges
-    on top of every old row."""
+    (live store aside, staged copy in). A crash between them leaves NO
+    store at the path; the next merge batch must not mistake that for a
+    first batch and overwrite the store with its own rows. The crash is
+    injected into the swap after its first rename; the batch fails,
+    compact_store finishes the swap, and the replayed batch merges on
+    top of every old row."""
     import os
 
     import pytest
@@ -566,11 +625,12 @@ def test_merge_sink_survives_compaction_cut_between_renames(spark, tmp_path):
         read_tweet_stream(spark, str(src)), store, ck, available_now=True
     ).awaitTermination(120)
 
-    # the cut: compacted copy written, first rename done, second not
-    spark.read.parquet(store).repartition("event_date").write.partitionBy(
-        "event_date"
-    ).parquet(store + "__compact_tmp")
-    os.rename(store, store + "__compact_old")
+    # the cut: compacted copy staged, first rename done, second not
+    disarm = fault_fs("rename", after_renames=1)
+    with pytest.raises(RuntimeError, match="injected fault"):
+        compact_store(spark, store)
+    disarm()
+    assert not os.path.exists(store)
 
     r3 = {**R1, "_id": "3", "text": "third one", "created_at": "2025-01-03T09:00:00Z"}
     _write_batch(src, [r3])
@@ -581,8 +641,9 @@ def test_merge_sink_survives_compaction_cut_between_renames(spark, tmp_path):
 
     compact_store(spark, store)  # finishes the interrupted swap
     assert sorted(r["_id"] for r in spark.read.parquet(store).collect()) == ["1", "2"]
-    assert not os.path.exists(store + "__compact_old")
-    assert not os.path.exists(store + "__compact_tmp")
+    assert [p for p in os.listdir(tmp_path) if p.startswith("cc_store")] == [
+        "cc_store"
+    ]
 
     start_merge_sink(  # the failed batch replays from the checkpoint
         read_tweet_stream(spark, str(src)), store, ck, available_now=True
@@ -797,7 +858,7 @@ def test_compact_gate_store_preserves_gate_semantics(spark, tmp_path):
     import json as _json
 
     store = f"{tmp_path}/cc/store"
-    staging = store + ".__compact_staging"
+    staging = store + GATE_COMPACT_STAGING
     rows_before = sorted(
         r["doc_id"] for r in spark.read.parquet(store).collect()
     )
@@ -839,7 +900,7 @@ def test_compact_incomplete_staging_discarded_and_rebuilt(spark, tmp_path):
     spark.createDataFrame(
         [(1, "alpha"), (2, "beta")], "doc_id long, text string"
     ).write.parquet(f"{store}/__gate_batch=0")
-    staging = store + ".__compact_staging"
+    staging = store + GATE_COMPACT_STAGING
     # committed parquet (has _SUCCESS) but NO manifest
     spark.createDataFrame(
         [(50, "stale snapshot row")], "doc_id long, text string"

@@ -16,7 +16,8 @@ seconds include the availableNow stream start/stop overhead, identically
 for all modes.
 
 Usage: python tools/gate_bench.py [N_docs ...]   (default: 50000 200000)
-Prints one JSON line per (store_size, mode).
+Prints one JSON line per (store_size, mode). Scratch stores go under
+.bench_work/gate_bench in this checkout.
 """
 
 from __future__ import annotations
@@ -28,7 +29,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
@@ -42,7 +44,8 @@ from mbgspark.streaming import (
     write_gate_meta,
 )
 
-BASE = "/tmp/gate_bench"
+# under the checkout (git-ignored), so two checkouts can run side by side
+BASE = os.path.join(REPO, ".bench_work", "gate_bench")
 
 
 def make_texts(n: int, seed: int = 7) -> list[str]:

@@ -50,6 +50,7 @@ from gate_bench import (  # noqa: E402
 from mbgspark.jvmseam import app_shuffle_write_records, last_stage_id  # noqa: E402
 from mbgspark.session import get_spark  # noqa: E402
 from mbgspark.streaming import (  # noqa: E402
+    GATE_COMPACT_STAGING,
     compact_gate_store,
     start_neardup_gate_sink_indexed,
 )
@@ -150,7 +151,7 @@ def main() -> None:
         shutil.rmtree(twin_store, ignore_errors=True)
         shutil.copytree(store, twin_store)
         if twin == "crash":
-            staging = twin_store + ".__compact_staging"
+            staging = twin_store + GATE_COMPACT_STAGING
             # manifest scope = EVERY dir the snapshot subsumes, including
             # the old -1 base (what the real compaction records)
             dirs_at_snapshot = [
