@@ -20,6 +20,8 @@ engine-private hash functions.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -858,13 +860,14 @@ def build_minhash_index(
 ) -> tuple[DataFrame, DataFrame]:
     """The ingest-time MinHash index: (band_rows, shingle_arrays) for a
     corpus — the two lineages every incremental near-dup lookup needs.
-    Production persists BOTH (parquet partitioned by band_key prefix, or
-    .persist() for a resident corpus): Spark's ReuseExchange only
-    collapses duplicated subtrees whose canonical plans are identical,
-    and per-consumer column pruning makes them differ, so an UN-persisted
-    corpus lineage is recomputed once per plan consumer (measured: the
-    self-contained incremental path pays ~6 corpus passes). With the
-    index materialized, a batch lookup touches the corpus zero times."""
+    Production persists BOTH (on disk with ``write_minhash_index``, probed
+    with ``probe_minhash_index``; or .persist() for a resident corpus):
+    Spark's ReuseExchange only collapses duplicated subtrees whose
+    canonical plans are identical, and per-consumer column pruning makes
+    them differ, so an UN-persisted corpus lineage is recomputed once per
+    plan consumer (measured: the self-contained incremental path pays ~6
+    corpus passes). With the index materialized, a batch lookup touches
+    the corpus zero times."""
     rows_per_band = num_hashes // bands
     sig = minhash_signature(
         with_word_shingles(df, id_col, text_col, k), id_col, num_hashes
@@ -972,13 +975,14 @@ def incremental_candidate_pairs(
     """Candidate-generation half of ``minhash_near_dups_incremental``:
     batch band rows joined against (batch ∪ corpus) band rows under the
     combined bucket-size guard — never corpus × corpus. Split out (r6) so
-    index-pruning callers (the streaming indexed gate) can run an action
-    on the candidates (collect the touched id-buckets) BEFORE deciding
-    which corpus shingle arrays to read for verification; the one-plan
-    path above composes it directly with ``verify_candidate_pairs``.
-    When the corpus band rows are a pruned read (only buckets the batch
-    probes), the guard's oversized counts cover the PROBED buckets — the
-    buckets where pair suppression can actually happen this batch."""
+    ``probe_minhash_index`` can take it as its overflow path and run an
+    action on the candidates (collect the touched id-buckets) BEFORE
+    deciding which corpus shingle arrays to read for verification; the
+    one-plan path above composes it directly with
+    ``verify_candidate_pairs``. When the corpus band rows are a pruned
+    read (only buckets the batch probes), the guard's oversized counts
+    cover the PROBED buckets — the buckets where pair suppression can
+    actually happen this batch."""
     band_rows = b_bands.selectExpr("*", "'b' AS __side").unionByName(
         c_bands.selectExpr("*", "'c' AS __side")
     )
@@ -988,14 +992,22 @@ def incremental_candidate_pairs(
     band_rows = _capped_bucket_rows(
         band_rows, max_bucket_size, on_oversized, metrics_out, spark
     )
-    # ONE bucket join: batch rows against ALL rows, corpus-corpus pairs
-    # excluded by the side predicate — never generated, never filtered out
+    # ONE bucket join: batch rows against ALL rows
     a = band_rows.filter("__side = 'b'").selectExpr(
         "band_idx", "band_key", f"{_q(id_col)} AS id_a"
     )
     b = band_rows.selectExpr(
         "band_idx", "band_key", f"{_q(id_col)} AS id_b", "__side AS __side_b"
     )
+    return _side_pairs(a, b).distinct()
+
+
+def _side_pairs(a: DataFrame, b: DataFrame, *extra: str) -> DataFrame:
+    """The batch × (batch ∪ corpus) band-bucket join: ``a`` holds batch
+    rows as ``id_a``, ``b`` every row as ``id_b`` tagged ``__side_b``
+    'b' or 'c'. Corpus-corpus pairs are excluded by the side predicate —
+    never generated, never filtered out — and batch pairs keep
+    id_a < id_b. ``extra`` are further output expressions."""
     return (
         a.join(b, ["band_idx", "band_key"])
         .filter("__side_b = 'c' OR (__side_b = 'b' AND id_a < id_b)")
@@ -1003,8 +1015,8 @@ def incremental_candidate_pairs(
             "id_a",
             "id_b",
             "CASE WHEN __side_b = 'c' THEN 'corpus' ELSE 'batch' END AS match_source",
+            *extra,
         )
-        .distinct()
     )
 
 
@@ -1024,6 +1036,209 @@ def verify_candidate_pairs(
     return _jaccard_at_least(
         pairs.join(sa, "id_a").join(sb, "id_b"),
         threshold, "id_a", "id_b", "jaccard", "match_source",
+    )
+
+
+# -------------------------------------------------- persisted MinHash index ----
+# ``build_minhash_index`` output on disk, in generations: the layout the
+# streaming indexed gate (``streaming.start_neardup_gate_sink_indexed``)
+# keeps. ``{index}/bands`` and ``{index}/arrays`` are each partitioned by
+# ``__gate_batch`` (the generation) and then ``__bucket``, with the layout
+# recorded in the ``GATE_META_FILE`` sidecar at the index root. Check,
+# write and probe below are the only code that knows it.
+
+#: Hash-bucket modulus of the index's band and shingle-array paths. It is
+#: baked into every ``__bucket`` directory name, so it is part of the
+#: on-disk layout, not a tuning knob.
+GATE_BUCKETS = 64
+
+#: Sidecar filename at the index root recording the on-disk layout.
+GATE_META_FILE = "_gate_meta.json"
+
+#: The one layout the index is read and written in: bucket-pruned band rows
+#: AND shingle arrays under ``GATE_BUCKETS``. The sidecar holds exactly
+#: this dict (key order included, so indexes written by earlier versions
+#: open unchanged); any other recorded value fails fast.
+GATE_META = {
+    "layout": "bucketed-v1",
+    "num_buckets": GATE_BUCKETS,
+    "index_arrays": True,
+}
+
+#: Most candidate pairs ``probe_minhash_index`` collects through its lean
+#: broadcast join; above it the probe takes the distributed, bucket-capped
+#: ``incremental_candidate_pairs``.
+INDEX_PROBE_CAND_CAP = 100_000
+
+_BAND_BUCKET = f"pmod(xxhash64(band_idx, band_key), {GATE_BUCKETS})"
+
+
+def _id_bucket(id_col: str) -> str:
+    return f"pmod(xxhash64({_q(id_col)}), {GATE_BUCKETS})"
+
+
+def minhash_index_paths(index_path: str) -> tuple[str, str]:
+    """The (bands, arrays) directories of the index at ``index_path``."""
+    root = index_path.rstrip("/")
+    return root + "/bands", root + "/arrays"
+
+
+def check_minhash_index(spark, index_path: str) -> None:
+    """Record ``GATE_META`` in a fresh index's sidecar, or fail fast on an
+    index that records any other layout — or has band rows but no
+    sidecar: pruned reads under a different modulus or a missing arrays
+    path would silently miss near-dups. Call it before the first write,
+    so a later crash can never leave band rows without a sidecar."""
+    meta_path = index_path.rstrip("/") + "/" + GATE_META_FILE
+    raw = jvmseam.fs_read_utf8(spark, meta_path)
+    meta = None if raw is None else json.loads(raw)
+    fs, bands = jvmseam.hadoop_fs(spark, minhash_index_paths(index_path)[0])
+    if meta is None and not fs.exists(bands):
+        jvmseam.fs_write_utf8(spark, meta_path, json.dumps(GATE_META))
+    elif meta != GATE_META:
+        recorded = (
+            f"no {GATE_META_FILE} beside its band rows"
+            if meta is None
+            else f"{GATE_META_FILE} = {json.dumps(meta)}"
+        )
+        raise ValueError(
+            f"near-dup gate index at {index_path} has {recorded}; this "
+            f"gate reads only {json.dumps(GATE_META)}. Rebuild the "
+            "index from the store with build_minhash_index."
+        )
+
+
+def write_minhash_index(
+    index_path: str,
+    generation: int,
+    bands: DataFrame,
+    arrays: DataFrame,
+    id_col: str,
+) -> None:
+    """Write ``build_minhash_index``'s (bands, arrays) as generation
+    ``generation`` of the index at ``index_path``, each sub-partitioned by
+    ``__bucket``: the band key's hash bucket for band rows, the doc id's
+    for arrays.
+
+    Each is a STATIC overwrite of the generation's own directory (the
+    Hive-layout path readers discover as ``__gate_batch=G``), not a
+    dynamic-partition overwrite of the whole path: the commit then never
+    lists or stages the other generations (measured ~2× cheaper per write
+    at a 256-partition index), and a rewrite wipes the ENTIRE directory
+    of a partial earlier attempt instead of only the sub-partitions the
+    new rows touch. Rows are clustered by bucket first so each bucket dir
+    gets ~1 file per generation — without this every shuffle task holding
+    rows for a bucket emits its own file, and the pruned reads this
+    layout exists for drown in file-open overhead. Arrays are written
+    first and bands LAST, so a crash in between leaves no band rows for
+    the generation rather than band rows without arrays."""
+    bands_path, arrays_path = minhash_index_paths(index_path)
+    for df, path, bucket in (
+        (arrays, arrays_path, _id_bucket(id_col)),
+        (bands, bands_path, _BAND_BUCKET),
+    ):
+        (
+            df.withColumn("__bucket", F.expr(bucket))
+            .repartition(F.col("__bucket"))
+            .write.mode("overwrite")
+            .partitionBy("__bucket")
+            .parquet(f"{path}/__gate_batch={int(generation)}")
+        )
+
+
+def _read_before(spark, path: str, generation: int, buckets: list) -> DataFrame:
+    # generations strictly before ``generation``, pruned to ``buckets``
+    return (
+        spark.read.parquet(path)
+        .filter(
+            (F.col("__gate_batch") < generation) & F.col("__bucket").isin(buckets)
+        )
+        .drop("__gate_batch", "__bucket")
+    )
+
+
+def probe_minhash_index(
+    index_path: str,
+    generation: int,
+    b_bands: DataFrame,
+    b_arrays: DataFrame,
+    id_col: str,
+    threshold: float,
+    persisted: list,
+    metrics_out: list | None = None,
+) -> DataFrame:
+    """Verified near-dup pairs of a batch against the index's generations
+    ``< generation``, with the output of ``minhash_near_dups_incremental``:
+    (id_a, id_b, jaccard, match_source), id_a always a batch doc.
+    ``b_bands``/``b_arrays`` are the batch's ``build_minhash_index``
+    frames; the corpus text is never touched.
+
+    Both index reads are bucket-pruned. Band rows are read only from the
+    buckets the batch probes (a corpus row in any other bucket cannot
+    equi-join a batch row). The candidate PAIRS then come to the driver
+    through ONE broadcast-join action: the batch band rows broadcast
+    against the pruned scan, no shuffle, no distinct (duplicates across
+    bands dedupe driver-side). Shingle arrays are read only from the
+    corpus candidates' id buckets — near-dup candidates are rare, so the
+    verify read touches a handful of bucket directories. Two driver
+    collects are bucket LISTS (≤ ``GATE_BUCKETS`` values each).
+
+    Candidates are small by LSH construction; the limit
+    ``INDEX_PROBE_CAND_CAP`` + 1 guards the collect. The lean path caps
+    nothing — every candidate is verified exactly, so ``metrics_out``
+    gets literal zeros. On overflow the probe falls back to the
+    distributed ``incremental_candidate_pairs``, which applies the
+    bucket-size cap and reports its real drops; those candidates are
+    persisted and appended to ``persisted``, for the caller to unpersist
+    after its last action on the pairs."""
+    spark = b_bands.sparkSession
+    bands_path, arrays_path = minhash_index_paths(index_path)
+    probe_buckets = [
+        r[0]
+        for r in b_bands.selectExpr(f"{_BAND_BUCKET} AS __b").distinct().collect()
+    ]
+    c_bands = _read_before(spark, bands_path, generation, probe_buckets)
+    a_rows = b_bands.selectExpr("band_idx", "band_key", f"{_q(id_col)} AS id_a")
+    all_rows = b_bands.selectExpr(
+        "band_idx", "band_key", f"{_q(id_col)} AS id_b", "'b' AS __side_b"
+    ).unionByName(
+        c_bands.selectExpr(
+            "band_idx", "band_key", f"{_q(id_col)} AS id_b", "'c' AS __side_b"
+        )
+    )
+    lean = _side_pairs(
+        F.broadcast(a_rows), all_rows, f"{_id_bucket('id_b')} AS __b"
+    )
+    got_rows = lean.limit(INDEX_PROBE_CAND_CAP + 1).collect()
+    if len(got_rows) <= INDEX_PROBE_CAND_CAP:
+        cand = spark.createDataFrame(
+            sorted({(r[0], r[1], r[2]) for r in got_rows}),
+            lean.select("id_a", "id_b", "match_source").schema,
+        )
+        # corpus-side id buckets, free from the collected rows
+        cand_buckets = sorted({r[3] for r in got_rows if r[2] == "corpus"})
+        if metrics_out is not None:
+            metrics_out.append(_oversized_metrics_row(spark))
+    else:
+        cand = incremental_candidate_pairs(
+            b_bands, c_bands, id_col, metrics_out=metrics_out, spark=spark
+        ).persist()
+        persisted.append(cand)
+        cand_buckets = [
+            r[0]
+            for r in cand.filter("match_source = 'corpus'")
+            .selectExpr(f"{_id_bucket('id_b')} AS __b")
+            .distinct()
+            .collect()
+        ]
+    # [] ⇒ no corpus candidates at all this batch
+    c_arrays = (
+        _read_before(spark, arrays_path, generation, cand_buckets)
+        if cand_buckets
+        else b_arrays.limit(0)
+    )
+    return verify_candidate_pairs(
+        b_arrays.unionByName(c_arrays), cand, id_col, threshold
     )
 
 

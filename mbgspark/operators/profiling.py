@@ -746,7 +746,6 @@ def distribution_drift_psi(
     old: DataFrame,
     new: DataFrame,
     bucket_col: str,
-    old_pre_counted: bool = False,
 ) -> DataFrame:
     """Population Stability Index between two snapshots' distributions
     over a bucket column — THE drift alarm a production data pipeline
@@ -767,16 +766,8 @@ def distribution_drift_psi(
     micro-units BEFORE the sum (the repo-standard floor(x*1e6 + 0.5)
     device), so the output is exact-integer and hash-stable.
 
-    Emits one row: (n_buckets, psi_micro). ``old_pre_counted=True``
-    treats ``old`` as an already-aggregated (bucket, c1) frame — the
-    repeated-scoring mode (streaming monitor) aggregates its reference
-    ONCE instead of per call."""
-    if old_pre_counted:
-        oc = old.select(F.col(bucket_col).alias("b"), F.col("c1"))
-    else:
-        oc = old.groupBy(F.col(bucket_col).alias("b")).agg(
-            F.count("*").alias("c1")
-        )
+    Emits one row: (n_buckets, psi_micro)."""
+    oc = old.groupBy(F.col(bucket_col).alias("b")).agg(F.count("*").alias("c1"))
     nc = new.groupBy(F.col(bucket_col).alias("b")).agg(F.count("*").alias("c2"))
     joined = oc.join(nc, "b", "full_outer").select(
         "b",

@@ -16,7 +16,7 @@ to Structured Streaming primitives:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -53,46 +53,23 @@ def _start_foreach_batch(
     return writer.start()
 
 
-#: Hash-bucket modulus of the indexed gate's band and shingle-array paths.
-#: It is baked into every ``__bucket`` directory name, so it is part of the
-#: on-disk layout, not a tuning knob.
-GATE_BUCKETS = 64
-
 #: Suffix of the sibling ``compact_gate_store`` stages a fold in. It
 #: sits beside the store, not inside it: a staged name like
 #: ``__gate_batch=-1__old`` would read as a partition.
 GATE_COMPACT_STAGING = ".__compact_staging"
 
-#: Sidecar filename at the index root recording the gate's on-disk layout.
-GATE_META_FILE = "_gate_meta.json"
 
-#: The one layout ``start_neardup_gate_sink_indexed`` reads and writes:
-#: bucket-pruned band rows AND shingle arrays under ``GATE_BUCKETS``. The
-#: sidecar holds exactly this dict (key order included, so stores written
-#: by earlier versions of the gate open unchanged); any other recorded
-#: value fails fast.
-GATE_META = {
-    "layout": "bucketed-v1",
-    "num_buckets": GATE_BUCKETS,
-    "index_arrays": True,
-}
-
-
-def read_gate_meta(spark: SparkSession, index_path: str) -> dict | None:
-    import json
-
-    raw = jvmseam.fs_read_utf8(
-        spark, index_path.rstrip("/") + "/" + GATE_META_FILE
-    )
-    return None if raw is None else json.loads(raw)
-
-
-def write_gate_meta(spark: SparkSession, index_path: str, meta: dict) -> None:
-    import json
-
-    jvmseam.fs_write_utf8(
-        spark, index_path.rstrip("/") + "/" + GATE_META_FILE, json.dumps(meta)
-    )
+def _gate_batch_dirs(spark: SparkSession, path: str) -> list[str]:
+    """Names of the ``__gate_batch=N`` partition directories under
+    ``path`` (none when it does not exist)."""
+    fs, p = jvmseam.hadoop_fs(spark, path)
+    if not fs.exists(p):
+        return []
+    return [
+        st.getPath().getName()
+        for st in fs.listStatus(p)
+        if st.isDirectory() and st.getPath().getName().startswith("__gate_batch=")
+    ]
 
 
 def read_tweet_stream(spark: SparkSession, path: str, max_files_per_trigger: int | None = None) -> DataFrame:
@@ -420,26 +397,21 @@ def start_neardup_gate_sink_indexed(
     compact_every: int | None = None,
     compact_target_files: int = 1,
 ) -> StreamingQuery:
-    """The INDEX-MAINTAINING form of the near-dup ingest gate. Each
-    batch:
+    """The INDEX-MAINTAINING form of the near-dup ingest gate: the
+    plain gate's admission rule, checked against a persisted MinHash index
+    (``build_minhash_index`` band rows + shingle arrays) instead of the
+    store's text. The index format is ``dedup``'s; each batch:
 
-    1. reads the persisted MinHash index — band rows + shingle arrays,
-       the two ``build_minhash_index`` lineages — restricted by
-       PARTITION PRUNING on two axes: batches strictly before this one
-       (``__gate_batch < N``) AND the ``__bucket`` directories this
-       batch actually probes (hash of the band key for band rows; hash
-       of the doc id for shingle arrays, pruned to the CANDIDATES'
-       buckets — near-dup candidates are rare, so the verify read
-       touches a handful of bucket directories instead of the whole
-       arrays store),
-    2. generates candidates with ``incremental_candidate_pairs`` (batch
-       × index band rows, never corpus × corpus; the corpus TEXT is
-       never touched) and verifies them with ``verify_candidate_pairs``
-       against the pruned arrays,
-    3. writes the survivors to the store AND their own index rows to the
-       index store — the store partitioned by ``__gate_batch`` = batch
-       id, the index paths sub-partitioned by ``__bucket`` — each a
-       static overwrite of this batch's own partition directory.
+    1. probes the index with ``dedup.probe_minhash_index`` against the
+       generations strictly before this one (``__gate_batch < N``),
+       reading only the band buckets this batch probes and the shingle
+       arrays of the CANDIDATES' buckets — near-dup candidates are rare,
+       so the verify read touches a handful of bucket directories instead
+       of the whole arrays store; the corpus TEXT is never touched,
+    2. writes the survivors to the store, partitioned by ``__gate_batch``
+       = batch id, and their own index rows as generation N with
+       ``dedup.write_minhash_index`` — each a static overwrite of this
+       batch's own partition directory.
 
     Exactly-once without markers or swaps: every write is an IDEMPOTENT
     overwrite of this batch's own partition. A crash anywhere mid-batch
@@ -451,10 +423,10 @@ def start_neardup_gate_sink_indexed(
     asymmetric window is the FIRST batch, where only a subset of the
     three paths may exist after a crash; the gate therefore takes the
     indexed branch only when every path that branch reads exists, and
-    writes the branch-trigger path (bands) last (ADVICE r5). THAT
-    mechanism — partition-idempotent multi-sink writes, the third
-    exactly-once strategy in this module beside the merge sink's keyed
-    upsert and the sketch store's staged swap — is this variant's
+    the index writer writes the branch-trigger path (bands) last (ADVICE
+    r5). THAT mechanism — partition-idempotent multi-sink writes, the
+    third exactly-once strategy in this module beside the merge sink's
+    keyed upsert and the sketch store's staged swap — is this variant's
     distinctive value.
 
     FRESH-CHECKPOINT RULE: the batch ids come from the checkpoint, so a
@@ -471,17 +443,14 @@ def start_neardup_gate_sink_indexed(
     per-batch cost is the batch lineage + a band-row read of the probed
     buckets + an arrays read of the CANDIDATE buckets only, so it does
     not grow with store text size, and the margin over the plain re-read
-    gate widens as the store grows. Two driver-side collects per batch
-    are bucket LISTS (≤ ``GATE_BUCKETS`` values each), bounded metadata
-    like the merge sink's touched-day list. Candidates are persisted for
-    the batch (probed by the bucket collect, the verify join and all
-    three writes) and unpersisted in a finally. Each batch writes at
-    most min(rows, ``GATE_BUCKETS``) files per index path.
+    gate widens as the store grows. The survivors are persisted for the
+    batch (the metrics ride-along and all three writes read them) and
+    unpersisted in a finally, with the probe's overflow candidates. Each
+    batch writes at most min(rows, ``dedup.GATE_BUCKETS``) files per
+    index path.
 
     Store readers see one extra ``__gate_batch`` partition column
-    (ingestion metadata — drop it or use it as arrival lineage). The
-    index layout is ``{index_path}/bands`` + ``{index_path}/arrays``,
-    each partitioned by ``__gate_batch`` and then ``__bucket``. Replay
+    (ingestion metadata — drop it or use it as arrival lineage). Replay
     idempotence additionally holds at the CONTENT level like the plain
     gate's: re-delivered docs exact-match
     their indexed copies and are rejected. ``on_metrics`` is the plain
@@ -491,13 +460,12 @@ def start_neardup_gate_sink_indexed(
     cheap by construction (the metrics lineage reads the index, not the
     corpus text).
 
-    LAYOUT RULE: the gate writes ``{index_path}/_gate_meta.json`` =
-    ``GATE_META`` on first contact, before any data write, and on every
-    restart requires the recorded meta to equal it. Any other recorded
-    layout, and an index with band rows but no meta, fails fast naming
-    what is recorded: pruned reads under a different modulus or a
-    missing arrays path would silently admit near-dups. Such an index is
-    rebuilt from the store with ``build_minhash_index``.
+    LAYOUT RULE: the first batch of a query runs
+    ``dedup.check_minhash_index`` before any data write: a fresh index
+    gets the ``dedup.GATE_META`` sidecar; any other recorded layout, and
+    an index with band rows but no sidecar, fails fast naming what is
+    recorded. Such an index is rebuilt from the store with
+    ``build_minhash_index``.
 
     ``compact_every=N`` turns on in-line store maintenance: after a
     batch's writes, when the store holds ≥ N live batch partitions the
@@ -515,111 +483,35 @@ def start_neardup_gate_sink_indexed(
     sets this to its store's natural part count so the fold stays a
     directory of parallel-written parts (the same many-files shape
     tools/make_split.py exercises on the batch side)."""
-    import json
-
     from mbgspark.operators.dedup import (
-        _oversized_metrics_row,
         build_minhash_index,
-        incremental_candidate_pairs,
+        check_minhash_index,
         incremental_drop_ids,
+        minhash_index_paths,
         minhash_near_dups,
         observe_oversized,
+        probe_minhash_index,
         report_oversized,
-        verify_candidate_pairs,
+        write_minhash_index,
     )
 
-    bands_path = index_path.rstrip("/") + "/bands"
-    arrays_path = index_path.rstrip("/") + "/arrays"
-
-    def _band_bucket() -> Column:
-        return F.pmod(F.xxhash64("band_idx", "band_key"), F.lit(GATE_BUCKETS))
-
-    def _id_bucket(col_name: str) -> Column:
-        return F.pmod(F.xxhash64(F.col(col_name)), F.lit(GATE_BUCKETS))
-
+    bands_path, arrays_path = minhash_index_paths(index_path)
     # checked once per query: the gate is the index's only writer, so the
     # on-disk layout cannot change under a running gate
-    _layout_checked: list[bool] = []
-
-    def _check_layout(spark: SparkSession) -> None:
-        if _layout_checked:
-            return
-        meta = read_gate_meta(spark, index_path)
-        if meta is None and not _store_exists(spark, bands_path):
-            # fresh index: record the layout BEFORE any data write, so a
-            # later crash can never leave band rows without a meta
-            write_gate_meta(spark, index_path, GATE_META)
-        elif meta != GATE_META:
-            recorded = (
-                f"no {GATE_META_FILE} beside its band rows"
-                if meta is None
-                else f"{GATE_META_FILE} = {json.dumps(meta)}"
-            )
-            raise ValueError(
-                f"near-dup gate index at {index_path} has {recorded}; this "
-                f"gate reads only {json.dumps(GATE_META)}. Rebuild the "
-                "index from the store with build_minhash_index."
-            )
-        _layout_checked.append(True)
-
-    def _store_batches(spark: SparkSession) -> list[int]:
-        # the __gate_batch ids of the store's partition directories
-        if not _store_exists(spark, store_path):
-            return []
-        fs, store_p = jvmseam.hadoop_fs(spark, store_path)
-        return [
-            int(st.getPath().getName().split("=", 1)[1])
-            for st in fs.listStatus(store_p)
-            if st.isDirectory()
-            and st.getPath().getName().startswith("__gate_batch=")
-        ]
-
-    def _write_part(
-        df: DataFrame, path: str, batch_id: int, bucket: Column | None = None
-    ) -> None:
-        # STATIC overwrite of this batch's own partition directory (the
-        # Hive-layout path readers discover as __gate_batch=N), not a
-        # dynamic-partition-overwrite of the whole store: the commit then
-        # never lists or stages the store's other partitions (measured
-        # ~2× cheaper per write at a 256-partition index), and a replay
-        # wipes the ENTIRE directory of a partial earlier attempt instead
-        # of only the sub-partitions the recomputed batch happens to
-        # touch. Bucketed paths cluster rows by bucket first so each
-        # bucket dir gets ~1 file per batch — without this every shuffle
-        # task holding rows for a bucket emits its own file, and the
-        # pruned reads this layout exists for drown in file-open overhead.
-        target = f"{path.rstrip('/')}/__gate_batch={int(batch_id)}"
-        if bucket is not None:
-            (
-                df.withColumn("__bucket", bucket)
-                .repartition(F.col("__bucket"))
-                .write.mode("overwrite")
-                .partitionBy("__bucket")
-                .parquet(target)
-            )
-        else:
-            df.write.mode("overwrite").parquet(target)
-
-    def _read_pruned(
-        spark: SparkSession, path: str, batch_id: int, buckets: list
-    ) -> DataFrame:
-        return (
-            spark.read.parquet(path)
-            .filter(
-                (F.col("__gate_batch") < batch_id)
-                & F.col("__bucket").isin(buckets)
-            )
-            .drop("__gate_batch", "__bucket")
-        )
+    layout_checked: list[bool] = []
 
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        _check_layout(spark)
-        later = [k for k in _store_batches(spark) if k > batch_id]
-        if later:
+        if not layout_checked:
+            check_minhash_index(spark, index_path)
+            layout_checked.append(True)
+        stored = [
+            int(d.split("=", 1)[1]) for d in _gate_batch_dirs(spark, store_path)
+        ]
+        if max(stored, default=-1) > batch_id:
             raise RuntimeError(
                 f"near-dup gate store at {store_path} already holds "
-                f"__gate_batch={max(later)} but this query is at batch "
+                f"__gate_batch={max(stored)} but this query is at batch "
                 f"{batch_id}: it was started with a fresh checkpoint, and "
                 "the __gate_batch < N read would hide the stored batches and "
                 "re-admit their documents. Restart with the original "
@@ -648,99 +540,9 @@ def start_neardup_gate_sink_indexed(
         try:
             if indexed_ready:
                 b_bands, b_arrays = build_minhash_index(slim, id_col, text_col)
-                # prune the band-row read to the buckets this batch probes
-                # (corpus rows in any other bucket can't equi-join a batch
-                # row — bucket list, not keys, bounded by GATE_BUCKETS),
-                # then fetch the candidate PAIRS themselves to the driver
-                # through ONE broadcast-join action: the batch band rows
-                # broadcast against the pruned index scan, no shuffle, no
-                # distinct (duplicates across bands dedupe driver-side).
-                # Candidates are small by LSH construction; the
-                # limit(cap+1) guards the collect, and an overflow falls
-                # back to the fully distributed candidate path (which
-                # also applies the bucket-size cap — the lean path
-                # verifies EVERY candidate exactly instead of capping,
-                # strictly better recall on the batches small enough to
-                # take it).
-                probe_buckets = [
-                    r[0]
-                    for r in b_bands.select(_band_bucket().alias("__b"))
-                    .distinct()
-                    .collect()
-                ]
-                c_bands = _read_pruned(spark, bands_path, batch_id, probe_buckets)
-                cand_cap = 100_000
-                a_rows = b_bands.select(
-                    "band_idx", "band_key", F.col(id_col).alias("id_a")
-                )
-                all_rows = b_bands.select(
-                    "band_idx", "band_key", F.col(id_col).alias("id_b"),
-                    F.lit("b").alias("__side_b"),
-                ).unionByName(
-                    c_bands.select(
-                        "band_idx", "band_key", F.col(id_col).alias("id_b"),
-                        F.lit("c").alias("__side_b"),
-                    )
-                )
-                lean = (
-                    F.broadcast(a_rows)
-                    .join(all_rows, ["band_idx", "band_key"])
-                    .filter(
-                        (F.col("__side_b") == "c")
-                        | (
-                            (F.col("__side_b") == "b")
-                            & (F.col("id_a") < F.col("id_b"))
-                        )
-                    )
-                    .select(
-                        "id_a",
-                        "id_b",
-                        F.when(F.col("__side_b") == "c", F.lit("corpus"))
-                        .otherwise(F.lit("batch"))
-                        .alias("match_source"),
-                        _id_bucket("id_b").alias("__b"),
-                    )
-                )
-                got_rows = lean.limit(cand_cap + 1).collect()
-                if len(got_rows) <= cand_cap:
-                    seen = {(r[0], r[1], r[2]) for r in got_rows}
-                    cand = spark.createDataFrame(
-                        sorted(seen),
-                        lean.select("id_a", "id_b", "match_source").schema,
-                    )
-                    # corpus-side id-buckets, free from the collected rows
-                    cand_buckets = sorted(
-                        {r[3] for r in got_rows if r[2] == "corpus"}
-                    )
-                    if metrics is not None:
-                        # the lean path caps nothing — every candidate is
-                        # verified exactly, so the drop metrics are TRUE
-                        # literal zeros
-                        metrics.append(_oversized_metrics_row(spark))
-                else:
-                    # overflow: the distributed path with the bucket-size
-                    # cap (and its real drop metrics)
-                    cand = incremental_candidate_pairs(
-                        b_bands, c_bands, id_col, metrics_out=metrics, spark=spark
-                    ).persist()
-                    keep.append(cand)
-                    cand_buckets = [
-                        r[0]
-                        for r in cand.filter(F.col("match_source") == "corpus")
-                        .select(_id_bucket("id_b").alias("__b"))
-                        .distinct()
-                        .collect()
-                    ]
-                # verify needs corpus shingles ONLY for candidate ids:
-                # prune the arrays read to the candidates' id-buckets
-                # ([] ⇒ no corpus candidates at all this batch)
-                c_arrays = (
-                    _read_pruned(spark, arrays_path, batch_id, cand_buckets)
-                    if cand_buckets
-                    else b_arrays.limit(0)
-                )
-                pairs = verify_candidate_pairs(
-                    b_arrays.unionByName(c_arrays), cand, id_col, threshold
+                pairs = probe_minhash_index(
+                    index_path, batch_id, b_bands, b_arrays, id_col, threshold,
+                    persisted=keep, metrics_out=metrics,
                 )
                 drop_ids = incremental_drop_ids(pairs, id_col)
             else:
@@ -761,16 +563,19 @@ def start_neardup_gate_sink_indexed(
             # index reads
             survivors = survivors.persist()
             keep.append(survivors)
-            # Write order: store first, arrays next, bands LAST — bands
-            # is the branch trigger above, so a first-batch crash
-            # mid-sequence leaves either no bands (→ clean fallback
-            # branch on replay) or a complete path set.
+            # Write order: store first, then the index (arrays, bands
+            # LAST) — bands is the branch trigger above, so a first-batch
+            # crash mid-sequence leaves either no bands (→ clean fallback
+            # branch on replay) or a complete path set. The store write
+            # is a static overwrite of this batch's own directory, like
+            # the index writer's.
+            survivors.write.mode("overwrite").parquet(
+                f"{store_path.rstrip('/')}/__gate_batch={int(batch_id)}"
+            )
             s_bands, s_arrays = build_minhash_index(
                 survivors.select(id_col, text_col), id_col, text_col
             )
-            _write_part(survivors, store_path, batch_id)
-            _write_part(s_arrays, arrays_path, batch_id, _id_bucket(id_col))
-            _write_part(s_bands, bands_path, batch_id, _band_bucket())
+            write_minhash_index(index_path, batch_id, s_bands, s_arrays, id_col)
             if handle is not None:
                 # a folded ride-along (zero survivors) is evaluated
                 # directly — cheap here, the metrics lineage reads the
@@ -787,7 +592,11 @@ def start_neardup_gate_sink_indexed(
                 # and partition N overwrites to empty). Crash
                 # mid-compaction heals via the staged snapshot's manifest
                 # on the next trigger.
-                live = [k for k in _store_batches(spark) if k != -1]
+                live = [
+                    d
+                    for d in _gate_batch_dirs(spark, store_path)
+                    if d != "__gate_batch=-1"
+                ]
                 if len(live) >= compact_every:
                     compact_gate_store(
                         spark, store_path, target_files=compact_target_files
@@ -851,16 +660,6 @@ def compact_gate_store(
 
     fs, _ = jvmseam.hadoop_fs(spark, path)
 
-    def _batch_dirs() -> list[str]:
-        if not fs.exists(_p(path)):
-            return []
-        out = []
-        for st in fs.listStatus(_p(path)):
-            name = st.getPath().getName()
-            if st.isDirectory() and name.startswith("__gate_batch="):
-                out.append(name)
-        return out
-
     def _swap(dirs: list[str]) -> None:
         for d in dirs:
             tgt = _p(f"{path.rstrip('/')}/{d}")
@@ -887,7 +686,7 @@ def compact_gate_store(
     if fs.exists(_p(staging)):
         fs.delete(_p(staging), True)  # incomplete remnant
 
-    dirs = _batch_dirs()
+    dirs = _gate_batch_dirs(spark, path)
     if not dirs:
         return 0
     df = spark.read.parquet(path)
@@ -993,53 +792,3 @@ def start_cardinality_sink(
         swap_store(spark, store_path)
 
     return _start_foreach_batch(stream, _fold, checkpoint_path, available_now)
-
-
-def start_drift_monitor_sink(
-    stream: DataFrame,
-    reference: DataFrame,
-    store_path: str,
-    checkpoint_path: str,
-    bucket_col: str,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Streaming distribution-drift monitor: every micro-batch's
-    ``bucket_col`` distribution is scored against a STATIC reference
-    distribution with the PSI metric (``profiling.distribution_drift_psi``
-    — Laplace-smoothed over the bucket union, integer micro output) and
-    the per-batch result row is APPENDED to a drift log. This is the
-    alerting loop of the batch drift_psi query: the reference is the
-    blessed corpus snapshot (broadcast-sized after its one-time
-    aggregation), each batch costs one bounded bucket aggregate + the
-    tiny PSI join, and the log is what a pager threshold reads
-    (> 250000 micro = the classic 0.25 action level). Append-only with
-    batch_id in the row: a replayed batch writes a duplicate log row
-    rather than corrupting state — drift rows are observations, not
-    state, so dedup-on-read by (batch_id) is the consumer's contract."""
-    from mbgspark.operators.profiling import distribution_drift_psi
-
-    # aggregate + persist the reference distribution ONCE — every batch
-    # scores against the bounded (bucket, c1) frame, never re-scanning
-    # the blessed snapshot (review r4)
-    ref_counts = (
-        reference.select(F.col(bucket_col).alias("b"))
-        .groupBy("b")
-        .agg(F.count(F.lit(1)).alias("c1"))
-        .persist()
-    )
-    ref_counts.count()
-
-    def _score(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        cur = batch_df.select(F.col(bucket_col).alias("b"))
-        row = distribution_drift_psi(
-            ref_counts, cur, "b", old_pre_counted=True
-        ).select(
-            F.lit(batch_id).cast("bigint").alias("batch_id"),
-            "n_buckets",
-            "psi_micro",
-        )
-        row.write.mode("append").parquet(store_path)
-
-    return _start_foreach_batch(stream, _score, checkpoint_path, available_now)

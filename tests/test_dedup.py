@@ -509,14 +509,15 @@ def test_ngram_jaccard_auto_overflow_falls_back(spark, monkeypatch):
     assert got2 == want
 
 
-def test_minhash_frames_keep_their_persisted_schema(spark):
-    """The indexed near-dup gate persists ``build_minhash_index`` output
-    under ``GATE_META`` and routes each band row to
-    ``pmod(xxhash64(band_idx, band_key), GATE_BUCKETS)``. A type drift in
-    the builders (band_idx int -> bigint, say) would silently re-bucket
-    the rows an earlier version wrote, and their near-duplicates would be
-    missed with no error — so the schemas (names, types, nullability) and
-    one doc's band buckets are pinned here."""
+def test_minhash_frames_keep_their_persisted_schema(spark, tmp_path):
+    """``write_minhash_index`` persists ``build_minhash_index`` output
+    under ``GATE_META`` and routes each band row to a hash bucket of
+    (band_idx, band_key). A type drift in the builders (band_idx int ->
+    bigint, say) or in the writer's bucket expression would silently
+    re-bucket the rows an earlier version wrote, and their
+    near-duplicates would be missed with no error — so the schemas
+    (names, types, nullability) and one doc's band buckets, as written to
+    disk, are pinned here."""
     from pyspark.sql.types import (
         ArrayType,
         IntegerType,
@@ -526,9 +527,7 @@ def test_minhash_frames_keep_their_persisted_schema(spark):
         StructType,
     )
 
-    from mbgspark.streaming import GATE_BUCKETS, GATE_META
-
-    assert GATE_META["layout"] == "bucketed-v1"
+    assert dd.GATE_META["layout"] == "bucketed-v1"
     df = spark.createDataFrame([(1, "a b c d"), (2, "a b c e")], "id bigint, t string")
     shingled = dd.with_word_shingles(df, "id", "t")
     bands, arrays = dd.build_minhash_index(df, "id", "t")
@@ -552,13 +551,14 @@ def test_minhash_frames_keep_their_persisted_schema(spark):
     assert arrays.schema == StructType(
         [id_field, StructField("__shingles", ArrayType(StringType(), False), False)]
     )
+    index = str(tmp_path / "index")
+    dd.write_minhash_index(index, 0, bands, arrays, "id")
     got = sorted(
         tuple(r)
-        for r in bands.filter("id = 1").selectExpr(
-            "band_idx",
-            "band_key",
-            f"pmod(xxhash64(band_idx, band_key), {GATE_BUCKETS}) AS bucket",
-        ).collect()
+        for r in spark.read.parquet(f"{index}/bands")
+        .filter("id = 1")
+        .select("band_idx", "band_key", "__bucket")
+        .collect()
     )
     assert got == [
         (0, "2e8d846d7e644fa1f5498118d3502e54", 4),
@@ -566,6 +566,84 @@ def test_minhash_frames_keep_their_persisted_schema(spark):
         (2, "33ef99d3e1c51c7b881cd45f09743730", 10),
         (3, "305cb3fd720c4a8feeb3b12348265839", 38),
     ]
+
+
+def _probe_corpus_and_batch(spark, tmp_path):
+    """A 40-doc corpus written as generation -1 of an index, and a batch
+    holding a near-dup of corpus doc 3, an exact copy of corpus doc 7, a
+    batch-internal near-dup pair (102, 103) and a novel doc."""
+    import random
+
+    rng = random.Random(11)
+
+    def text():
+        return " ".join(f"w{rng.randrange(500)}" for _ in range(30))
+
+    corpus = [(i, text()) for i in range(40)]
+    novel = text()
+    batch = [
+        (100, "changed " + corpus[3][1].split(" ", 1)[1]),
+        (101, corpus[7][1]),
+        (102, novel),
+        (103, novel + " tail"),
+        (104, text()),
+    ]
+    c_df = spark.createDataFrame(corpus, "id bigint, t string")
+    b_df = spark.createDataFrame(batch, "id bigint, t string")
+    index = str(tmp_path / "index")
+    dd.check_minhash_index(spark, index)
+    dd.write_minhash_index(index, -1, *dd.build_minhash_index(c_df, "id", "t"), "id")
+    return index, c_df, b_df
+
+
+def _probe_pairs(index, b_df, persisted, metrics):
+    pairs = dd.probe_minhash_index(
+        index, 0, *dd.build_minhash_index(b_df, "id", "t"), "id", 0.5,
+        persisted, metrics_out=metrics,
+    )
+    return sorted(tuple(r) for r in pairs.collect())
+
+
+def test_probe_minhash_index_matches_self_contained_incremental(spark, tmp_path):
+    """Probing a corpus index written with ``write_minhash_index`` gives
+    the pairs ``minhash_near_dups_incremental`` computes from the corpus
+    text itself. The lean path caps nothing, persists nothing, and
+    reports zero drops."""
+    index, c_df, b_df = _probe_corpus_and_batch(spark, tmp_path)
+    persisted, metrics = [], []
+    got = _probe_pairs(index, b_df, persisted, metrics)
+    want = sorted(
+        tuple(r)
+        for r in dd.minhash_near_dups_incremental(
+            b_df, c_df, "id", "t", threshold=0.5
+        ).collect()
+    )
+    assert got == want
+    assert [(a, b, src) for a, b, _, src in got] == [
+        (100, 3, "corpus"), (101, 7, "corpus"), (102, 103, "batch"),
+    ]
+    assert got[1][2] == 1.0
+    assert persisted == []
+    assert tuple(metrics[0].first()) == (0, 0)
+
+
+def test_probe_minhash_index_overflow_path_matches_lean(spark, tmp_path, monkeypatch):
+    """With the candidate cap at 0 every probe with a candidate takes the
+    distributed, bucket-capped overflow path. On a corpus with no
+    oversized bucket its pairs equal the lean broadcast path's."""
+    index, _, b_df = _probe_corpus_and_batch(spark, tmp_path)
+    lean = _probe_pairs(index, b_df, [], None)
+    monkeypatch.setattr(dd, "INDEX_PROBE_CAND_CAP", 0)
+    persisted, metrics = [], []
+    try:
+        got = _probe_pairs(index, b_df, persisted, metrics)
+        assert len(persisted) == 1  # the overflow candidates, left to the caller
+        assert tuple(metrics[0].first()) == (0, 0)
+    finally:
+        for df in persisted:
+            df.unpersist()
+    assert len(lean) == 3
+    assert got == lean
 
 
 def _py4j_calls(monkeypatch, build) -> int:

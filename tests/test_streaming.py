@@ -392,47 +392,6 @@ def test_cardinality_sink_folds_sketches_and_replay_is_noop(spark, tmp_path):
     assert total == 8
 
 
-def test_drift_monitor_flags_shifted_batch(spark, tmp_path):
-    """A batch matching the reference author mix logs a near-zero PSI; a
-    skewed batch logs a PSI above the 0.25 action level."""
-    from mbgspark.streaming import read_tweet_stream, start_drift_monitor_sink
-
-    src = tmp_path / "dsrc"
-    store = str(tmp_path / "dstore")
-    reference = spark.createDataFrame(
-        [(f"a{i % 4}",) for i in range(400)], "author_handle string"
-    )
-
-    def run(ckpt):
-        q = start_drift_monitor_sink(
-            read_tweet_stream(spark, str(src)),
-            reference,
-            store,
-            str(tmp_path / ckpt),
-            bucket_col="author_handle",
-            available_now=True,
-        )
-        q.awaitTermination(120)
-
-    balanced = [dict(R1, _id=str(i), author_handle=f"a{i % 4}") for i in range(40)]
-    _write_batch(src, balanced)
-    run("ck1")
-    skewed = [dict(R1, _id=str(100 + i), author_handle="a0") for i in range(40)]
-    _write_batch(src, skewed)
-    run("ck2")
-
-    rows = sorted(
-        (r["batch_id"], r["psi_micro"]) for r in spark.read.parquet(store).collect()
-    )
-    # first run saw only the balanced batch; the second (fresh checkpoint)
-    # re-read both files as one batch dominated by the skew
-    assert len(rows) == 2
-    balanced_psi = rows[0][1]
-    mixed_psi = rows[1][1]
-    assert balanced_psi < 50_000, balanced_psi
-    assert mixed_psi > 250_000, mixed_psi
-
-
 def _sketch_estimates(spark, store):
     return {
         r["day"]: r["est"]
@@ -739,15 +698,14 @@ def test_indexed_gate_recovers_from_first_batch_partial_write(spark, tmp_path):
     take the indexed branch and die on a path-does-not-exist read; it
     falls back to the self-contained branch (equivalent for batch 0) and
     converges to the correct store."""
-    from pyspark.sql import functions as F
+    import shutil
 
-    from mbgspark.operators.dedup import build_minhash_index
-    from mbgspark.streaming import (
-        GATE_BUCKETS,
-        GATE_META,
-        start_neardup_gate_sink_indexed,
-        write_gate_meta,
+    from mbgspark.operators.dedup import (
+        build_minhash_index,
+        check_minhash_index,
+        write_minhash_index,
     )
+    from mbgspark.streaming import start_neardup_gate_sink_indexed
 
     base = "the quick brown fox jumps over the lazy dog near the river bank"
     near = "quick brown fox jumps over the lazy dog near the river bank"
@@ -760,23 +718,15 @@ def test_indexed_gate_recovers_from_first_batch_partial_write(spark, tmp_path):
     # nothing else does. The meta sidecar is ALWAYS present in this
     # window (r7: the gate records it at first contact, before any
     # data write), so the remnant includes it.
-    write_gate_meta(spark, index, GATE_META)
+    check_minhash_index(spark, index)
     remnant = spark.createDataFrame(
         [(1, base), (3, "completely unrelated text about plan pruning")],
         "doc_id long, text string",
     )
-    b_bands, _ = build_minhash_index(remnant, "doc_id", "text")
-    (
-        b_bands.withColumn("__gate_batch", F.lit(0))
-        .withColumn(
-            "__bucket",
-            F.pmod(F.xxhash64("band_idx", "band_key"), F.lit(GATE_BUCKETS)),
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__gate_batch", "__bucket")
-        .parquet(f"{index}/bands")
+    write_minhash_index(
+        index, 0, *build_minhash_index(remnant, "doc_id", "text"), "doc_id"
     )
+    shutil.rmtree(f"{index}/arrays")
 
     _write_batch(src, [
         {"doc_id": 1, "text": base},
@@ -924,11 +874,9 @@ def test_indexed_gate_meta_validates_restart_params(spark, tmp_path):
     import pytest
     from pyspark.errors import StreamingQueryException
 
-    from mbgspark.streaming import (
-        GATE_META,
-        start_neardup_gate_sink_indexed,
-        write_gate_meta,
-    )
+    from mbgspark import jvmseam
+    from mbgspark.operators.dedup import GATE_META, GATE_META_FILE
+    from mbgspark.streaming import start_neardup_gate_sink_indexed
 
     src = tmp_path / "mv_src"
     store = str(tmp_path / "mv_store")
@@ -957,14 +905,14 @@ def test_indexed_gate_meta_validates_restart_params(spark, tmp_path):
         {"layout": "bucketed-v1", "num_buckets": 64, "index_arrays": False},
         {"layout": "unbucketed-v0", "num_buckets": None, "index_arrays": True},
     ]):
-        write_gate_meta(spark, index, meta)
+        jvmseam.fs_write_utf8(spark, f"{index}/{GATE_META_FILE}", _json.dumps(meta))
         with pytest.raises(
             StreamingQueryException, match="build_minhash_index"
         ) as err:
             run(f"mv_bad{i}")
         assert _json.dumps(meta) in str(err.value)
     # the recorded default keeps working
-    write_gate_meta(spark, index, GATE_META)
+    jvmseam.fs_write_utf8(spark, f"{index}/{GATE_META_FILE}", _json.dumps(GATE_META))
     run("mv_ck0")
     got = sorted(r["doc_id"] for r in spark.read.parquet(store).collect())
     assert got == [1, 2]
@@ -976,23 +924,19 @@ def test_indexed_gate_legacy_error_paths(spark, tmp_path):
     guessed modulus silently misses near-dups."""
     import pytest
     from pyspark.errors import StreamingQueryException
-    from pyspark.sql import functions as F
 
-    from mbgspark.operators.dedup import build_minhash_index
+    from mbgspark.operators.dedup import build_minhash_index, write_minhash_index
     from mbgspark.streaming import start_neardup_gate_sink_indexed
 
     legacy = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the lazy dog")],
         "doc_id long, text string",
     )
-    bands, _ = build_minhash_index(legacy, "doc_id", "text")
-    (
-        bands.withColumn("__gate_batch", F.lit(-1))
-        .withColumn(
-            "__bucket", F.pmod(F.xxhash64("band_idx", "band_key"), F.lit(64))
-        )
-        .write.partitionBy("__gate_batch", "__bucket")
-        .parquet(str(tmp_path / "lb_index" / "bands"))
+    write_minhash_index(  # index rows written without the sidecar
+        str(tmp_path / "lb_index"),
+        -1,
+        *build_minhash_index(legacy, "doc_id", "text"),
+        "doc_id",
     )
     src = tmp_path / "lb_src"
     _write_batch(src, [{"doc_id": 5, "text": "whatever new document"}])

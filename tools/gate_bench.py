@@ -9,11 +9,10 @@ Methodology (r5 protocol, r6 pruned form added): seed a store of N docs
 100-doc availableNow batches per mode (90 novel docs + 10 near-dups of
 stored docs) against the same seeded corpus state per mode. The seed is
 written directly in each mode's on-disk layout (plain: bare parquet;
-indexed: __gate_batch=-1 partitions + bucketed index paths — the exact
-layout the gate itself writes under GATE_BUCKETS, bucket expressions
-duplicated from start_neardup_gate_sink_indexed). Reported per-batch
-seconds include the availableNow stream start/stop overhead, identically
-for all modes.
+indexed: a __gate_batch=-1 store partition, and the index written as
+generation -1 by dedup's check_minhash_index + write_minhash_index, the
+routines the gate itself uses). Reported per-batch seconds include the
+availableNow stream start/stop overhead, identically for all modes.
 
 Usage: python tools/gate_bench.py [N_docs ...]   (default: 50000 200000)
 Prints one JSON line per (store_size, mode). Scratch stores go under
@@ -34,15 +33,13 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
-from mbgspark.operators.dedup import build_minhash_index
-from mbgspark.session import get_spark
-from mbgspark.streaming import (
-    GATE_BUCKETS,
-    GATE_META,
-    start_neardup_gate_sink,
-    start_neardup_gate_sink_indexed,
-    write_gate_meta,
+from mbgspark.operators.dedup import (
+    build_minhash_index,
+    check_minhash_index,
+    write_minhash_index,
 )
+from mbgspark.session import get_spark
+from mbgspark.streaming import start_neardup_gate_sink, start_neardup_gate_sink_indexed
 
 # under the checkout (git-ignored), so two checkouts can run side by side
 BASE = os.path.join(REPO, ".bench_work", "gate_bench")
@@ -97,27 +94,10 @@ def seed_mode(spark, texts: list[str], mode: str, root: str) -> None:
     docs.withColumn("__gate_batch", F.lit(-1)).write.mode("overwrite").partitionBy(
         "__gate_batch"
     ).parquet(store)
-    bands, arrays = build_minhash_index(docs, "doc_id", "text")
-    (
-        bands.withColumn("__gate_batch", F.lit(-1))
-        .withColumn(
-            "__bucket", F.pmod(F.xxhash64("band_idx", "band_key"), F.lit(GATE_BUCKETS))
-        )
-        .repartition(F.col("__bucket"))  # ~1 file per bucket dir
-        .write.mode("overwrite")
-        .partitionBy("__gate_batch", "__bucket")
-        .parquet(f"{root}/index/bands")
-    )
-    (
-        arrays.withColumn("__gate_batch", F.lit(-1))
-        .withColumn("__bucket", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(GATE_BUCKETS)))
-        .repartition(F.col("__bucket"))
-        .write.mode("overwrite")
-        .partitionBy("__gate_batch", "__bucket")
-        .parquet(f"{root}/index/arrays")
-    )
     # the gate fails fast on band rows without the layout meta sidecar
-    write_gate_meta(spark, f"{root}/index", GATE_META)
+    check_minhash_index(spark, f"{root}/index")
+    bands, arrays = build_minhash_index(docs, "doc_id", "text")
+    write_minhash_index(f"{root}/index", -1, bands, arrays, "doc_id")
 
 
 def run_mode(spark, texts: list[str], mode: str, n: int) -> dict:

@@ -20,6 +20,7 @@ is the gate's own. Prints one JSON line per batch and one summary line.
 
 Usage: python tools/gate_soak.py [N_docs] [batches] [compact_every] [target_files]
        (defaults: 1000000 12 3 1)
+Scratch stores go under .bench_work/gate_soak in this checkout.
 
 ``target_files`` > 1 runs the soak in the DIRECTORY-SHAPED store mode
 (VERDICT r9 item 5): in-line compaction folds the flat store base to
@@ -37,7 +38,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from gate_bench import (  # noqa: E402
@@ -55,7 +57,8 @@ from mbgspark.streaming import (  # noqa: E402
     start_neardup_gate_sink_indexed,
 )
 
-BASE = "/tmp/gate_soak"
+# under the checkout (git-ignored), so two checkouts can run side by side
+BASE = os.path.join(REPO, ".bench_work", "gate_soak")
 
 
 def _live_dirs(path: str) -> list[str]:

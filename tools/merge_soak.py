@@ -43,7 +43,8 @@ exercises the update path, not just inserts.
 Usage: python tools/merge_soak.py [rows_per_batch] [batches] [max_rec_per_file]
        (defaults: 200000 8 5000)
 Prints one JSON line per phase and a summary; exits non-zero on any
-invariant violation.
+invariant violation. Scratch stores go under .bench_work/merge_soak in
+this checkout.
 """
 
 from __future__ import annotations
@@ -54,7 +55,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
@@ -64,7 +66,8 @@ from mbgspark.session import ensure_session_conf, get_spark
 from mbgspark.streaming import start_merge_sink
 
 
-BASE = "/tmp/merge_soak"
+# under the checkout (git-ignored), so two checkouts can run side by side
+BASE = os.path.join(REPO, ".bench_work", "merge_soak")
 DAYS_PER_BATCH = 4  # each batch spans 4 consecutive days, advancing 2/batch
 
 
