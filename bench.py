@@ -38,7 +38,7 @@ HEADLINE = [
     "q1", "q9", "q12", "q14", "q17", "q18r", "q19", "q22", "q24", "q26",
     "dedup_exact", "dedup_minhash_lsh", "ann_cosine_topk",
     "sentiment_pandas_udf", "etl_lifecycle",
-    # round 2: the full 602-term dictionary locate (hybrid token join)
+    # round 2: the full 602-term dictionary locate (compiled constant maps)
     "locate_full_dim",
     # round 3: curation suite joins the headline set (compare totals to r2
     # on the first 16 queries — these three are additive)

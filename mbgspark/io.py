@@ -217,31 +217,6 @@ def write_csv(
     df.write.mode(mode).option("header", str(header).lower()).csv(path)
 
 
-def read_orc_docs(spark: SparkSession, path_or_glob: str, schema=None) -> DataFrame:
-    """S1/S2 ORC twin of ``read_json_docs`` — the columnar interchange
-    format besides parquet a warehouse migration actually encounters."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path_or_glob)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """ORC export mirror of ``write_json``/``write_csv``."""
-    df.write.mode(mode).orc(path)
-
-
-def read_store_evolved(spark: SparkSession, path: str) -> DataFrame:
-    """Schema-evolution read: a long-lived store accretes columns over
-    time (an ingest adds a field; old files never get rewritten at
-    100 TB). ``mergeSchema`` unions the file schemas, so old rows surface
-    the new columns as NULL instead of the read failing or silently
-    binding the first-listed file's schema. Costs a footer read per file
-    at planning — use on evolved stores, not hot paths with a known
-    schema."""
-    return spark.read.option("mergeSchema", "true").parquet(path)
-
-
 def write_partitioned(
     df: DataFrame,
     path: str,

@@ -3,27 +3,14 @@
 Round 1 shipped the matching MECHANISM (operators/locate.py) over a 12-row
 sample dim; this module ships the reference's actual 38-province / 456-city
 dictionary (``mbgspark.locations_data``, from ``config/indonesia_locations
-.json``) flattened into one priority-ordered term table, plus two
-strategies whose per-row cost does not grow with the dictionary:
-
-- ``locate_compiled`` (the default up to a few thousand terms): one narrow
-  projection over constant bucketed maps — each token is looked up in one
-  small map, and the multi-word regexp verifies run only for rows holding
-  the first word of some multi-word term; zero joins, zero shuffles;
-- ``locate_hybrid`` (any dim size): single-word terms
-  (~85% of the table) match by token equi-join — explode the text's
-  tokens (split on non-word chars = the reference's \\b boundary) once,
-  hash-join against the broadcast dim; multi-word terms are prefiltered by
-  their first token through the same equi-join, then the rare candidates
-  pay a \\b-bounded regexp verify — never a corpus×terms nested loop;
-  first-match = global min over both candidate sets, then one broadcast
-  join back for (province, city).
-
-Both rank the dim by dict_order (the tiered order encodes the reference's
-break structure — see build_full_locations_dim) and return identical
-results. Both replace the 456-branch CASE chain for the full dictionary:
-the chain is O(|dim|) regexes per row (fine at 12 terms, the lifecycle's
-dim).
+.json``) flattened into one priority-ordered term table, plus
+``locate_compiled``, the one matcher every lifecycle dictionary runs
+through: one narrow projection over constant bucketed maps — each token is
+looked up in one small map, and the multi-word regexp verifies run only for
+rows holding the first word of some multi-word term; zero joins, zero
+shuffles, and a per-row cost that does not grow with the dictionary. It
+ranks the dim by dict_order (the tiered order encodes the reference's
+break structure — see build_full_locations_dim).
 
 Matching semantics flattened from ``detect_location_from_text``
 (utils.py:336-437) — see ``build_full_locations_dim``.
@@ -215,105 +202,13 @@ def _ranked(
 ) -> list[tuple[str, str | None, int, str]]:
     """The dim with each row's dict_order replaced by its 1-based rank in a
     stable sort by dict_order: rows sharing an order keep dim order (the
-    first one wins, as in the CASE chain) and each keeps its own
-    (province, city)."""
+    first one wins, as in the reference's first-match loop) and each keeps
+    its own (province, city)."""
     by_order = sorted(range(len(dim_rows)), key=lambda i: dim_rows[i][2])
     return [
         (dim_rows[i][0], dim_rows[i][1], rank, dim_rows[i][3])
         for rank, i in enumerate(by_order, 1)
     ]
-
-
-def locate_hybrid(
-    fact: DataFrame,
-    dim_rows: list[tuple[str, str | None, int, str]],
-    fact_id: str,
-    text_col: str,
-) -> DataFrame:
-    """First-match location detection against an arbitrary-size dim via the
-    hybrid token-join + multiword-containment strategy (module docstring).
-    Returns fact columns + (province, city) — null when nothing matched.
-    Rows are matched by rank (``_ranked``), so dim rows sharing a
-    dict_order resolve like they do in ``locate_compiled``."""
-    spark = fact.sparkSession
-    dim_rows = _ranked(dim_rows)
-    # lookup rows built driver-side so multi-word terms carry a precomputed
-    # re.escape'd \b-pattern (regexp verify below — \b is the reference's
-    # boundary, and after prep the text still holds non-separator
-    # punctuation that a plain ' term ' containment would miss)
-    lookup_rows = []
-    for _p, _c, o, t in dim_rows:
-        if " " in t:
-            words = t.split(" ")
-            lookup_rows.append((words[0], o, _term_pattern(t), words[-1]))
-        else:
-            lookup_rows.append((t, o, None, None))
-    lookup = F.broadcast(
-        spark.createDataFrame(
-            lookup_rows,
-            "__key string, dict_order int, __vpat string, __lastw string",
-        )
-    )
-
-    prepped = fact.select(
-        F.col(fact_id),
-        prep_location_text(F.col(text_col)).alias("__s"),
-        token_form(F.col(text_col)).alias("__t"),
-    )
-    toks = prepped.select(
-        fact_id,
-        F.explode(F.split(F.col("__t"), " ")).alias("__tok"),
-    )
-    # ONE broadcast lookup keyed by token serves both term classes, so the
-    # expensive corpus-wide token explode runs exactly once (two separate
-    # joins re-derive the explode per branch — measured ~2× the heavy path
-    # on a 100k-row corpus): single-word terms match directly (__vpat
-    # null); multi-word terms are keyed by their FIRST word as a candidate
-    # prefilter (\b t1 t2 \b matching implies t1 is a complete token) and
-    # only the rare candidates pay the regexp verify against the prepped
-    # text. The naive broadcast nested loop (every row × every multi-word
-    # term) costs |rows|·|multi| scans — measured 14.5 s on the
-    # same corpus where almost nothing matches.
-    matched = toks.join(lookup, toks["__tok"] == F.col("__key")).select(
-        fact_id, "dict_order", "__vpat", "__lastw"
-    )
-    hits_single = matched.filter(F.col("__vpat").isNull()).select(
-        fact_id, "dict_order"
-    )
-    cand = (
-        matched.filter(F.col("__vpat").isNotNull())
-        .select(fact_id, "__vpat", "__lastw", "dict_order")
-        .distinct()
-    )
-    # last-word token guard alongside the regexp: Java's \b is ASCII-only
-    # while the reference's Python \b is unicode-aware, so a term glued to
-    # a non-ASCII LETTER at its far end ('jakarta selatané') would pass
-    # the Java regex but not the reference. Requiring the term's last word
-    # to be a complete token (token_form keeps unicode letters glued)
-    # restores parity; the first word is already guarded by the equi-join.
-    hits_multi = (
-        cand.join(prepped, fact_id)
-        .filter(
-            F.expr("array_contains(split(__t, ' '), __lastw)")
-            & F.expr("__s RLIKE __vpat")
-        )
-        .select(fact_id, "dict_order")
-    )
-
-    resolve = F.broadcast(
-        spark.createDataFrame(
-            [(o, p, c) for p, c, o, _t in dim_rows],
-            "dict_order int, province string, city string",
-        )
-    )
-    best = (
-        hits_single.unionByName(hits_multi)
-        .groupBy(fact_id)
-        .agg(F.min("dict_order").alias("dict_order"))
-        .join(resolve, "dict_order")
-        .drop("dict_order")
-    )
-    return fact.join(best, fact_id, "left")
 
 
 def _sql_str(s: str) -> str:
@@ -371,17 +266,14 @@ def locate_compiled(
       present gates its own terms' ``IF(contains(s, term), IF(last-word
       token guard AND s RLIKE '\\bterm\\b', rank, NULL), NULL)``
       branches. The token guards (first word through the gate, last word
-      through ``array_contains(__tk, word)``) mirror locate_hybrid's
-      equi-join prefilter + last-word guard: Java's ASCII \\b would
-      accept a term glued to a unicode letter ('caféjakarta selatan')
-      that the reference's unicode \\b rejects (ADVICE r3);
+      through ``array_contains(__tk, word)``) matter because Java's ASCII
+      \\b would accept a term glued to a unicode letter ('caféjakarta
+      selatan') that the reference's unicode \\b rejects (ADVICE r3);
     - first match = ``least()`` of both minima;
     - (province, city) is read from a constant array indexed by rank.
 
-    The literals live in the plan, so this strategy caps at dims of a few
-    thousand terms — beyond that (or when the dim is itself distributed
-    data) use ``locate_hybrid``; both return identical results
-    (equivalence pinned in tests)."""
+    The literals live in the plan, which is sized by the dictionary: the
+    largest one in use is the reference's 602 terms."""
     ranked = _ranked(dim_rows)
     singles: dict[str, int] = {}
     groups: dict[str, dict[str, int]] = {}
@@ -433,7 +325,10 @@ def locate_compiled(
     best = prepped.withColumn(
         "__o", F.expr(f"least({single_min}, {multi_min})")
     )
-    out = best.withColumn("__hit", F.expr(f"element_at({hits}, __o)"))
+    # try_element_at, not element_at: with ANSI on, Spark 4.1's element_at
+    # returns the LAST element for a NULL index (no term matched) instead
+    # of NULL, so every unmatched row would be "located" at the last term
+    out = best.withColumn("__hit", F.expr(f"try_element_at({hits}, __o)"))
     return out.select(
         *fact.columns,
         F.col("__hit.province").alias("province"),

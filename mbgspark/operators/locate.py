@@ -6,10 +6,11 @@ strategies and first-match-wins; its fuzzy variant (utils.py:440-492) keeps
 the best-scoring match (arg-max).  Spark-first re-expression:
 
 - J1 = broadcast containment join: fact × broadcast(dim) filtered on
-  word-bounded containment, then ``row_number()`` over the pinned dictionary
+  token membership, then ``row_number()`` over the pinned dictionary
   order to reproduce first-match-wins.  Catalyst plans the 456-row dim as a
   BroadcastNestedLoopJoin — correct and cheap at that build size; the fact
-  side streams, so this scales to arbitrary row counts.
+  side streams, so this scales to arbitrary row counts.  The lifecycle's
+  matcher (multi-word terms, \\b boundaries) is ``locations.locate_compiled``.
 - J2 = similarity top-1: broadcast theta join scored by ``levenshtein``
   (the built-in stand-in for fuzz.partial_ratio), arg-max per row via window.
 - Two-pass plan (utils.py:509-511): exact containment first; fuzzy only on
@@ -29,27 +30,28 @@ def containment_join_first_match(
     text_col: str,
     term_col: str,
     order_col: str = "dict_order",
-    use_token_membership: bool = True,
     explode_tokens: bool = False,
 ) -> DataFrame:
-    """J1: first (by dict order) dim term contained word-bounded in the text.
+    """J1: first (by dict order) single-word dim term that is a whitespace
+    token of the lowercased text.
 
-    Three physical strategies, same semantics on single-space text:
+    Two physical strategies, same semantics:
 
-    - ``explode_tokens=True`` (the 100 TB path, single-word terms): explode
-      text tokens → hash equi-join on token = term → per-row argmin of
-      dict_order. Scales as O(tokens) per row instead of O(|dim|·tokens),
-      and the join is a shuffle-free BroadcastHashJoin.
-    - ``use_token_membership=True``: array_contains against the broadcast
-      dim (BroadcastNestedLoopJoin — fine for dims ≤ a few hundred rows).
-    - otherwise: literal \\b-bounded regex containment (utils.py:364-371) —
-      needed when terms are multi-word or text isn't token-normalized."""
+    - ``explode_tokens=True`` (the 100 TB path): explode text tokens → hash
+      equi-join on token = term → per-row argmin of dict_order. Scales as
+      O(tokens) per row instead of O(|dim|·tokens), and the join is a
+      shuffle-free BroadcastHashJoin.
+    - default: token membership, array_contains against the broadcast dim
+      (BroadcastNestedLoopJoin — fine for dims ≤ a few hundred rows).
+
+    Multi-word terms and punctuation-bounded matching (the reference's
+    \\b, utils.py:364-371) are ``locations.locate_compiled``'s job."""
     # withColumn silently REPLACES an existing column of the same name:
     # a caller whose fact/dim already carries one of the scratch names
     # would get corrupted output, not an error — fail loud instead
     # (ADVICE r11), matching the explode-path contract check below.
-    taken = [c for c in ("__toks", "__lc", "__rn") if c in fact.columns]
-    taken += [c for c in ("__pat", "__rn") if c in dim.columns]
+    taken = [c for c in ("__toks", "__rn") if c in fact.columns]
+    taken += ["__rn"] if "__rn" in dim.columns else []
     if taken:
         raise ValueError(
             f"containment_join_first_match: reserved scratch column(s) "
@@ -81,20 +83,21 @@ def containment_join_first_match(
         if probe["multi"]:
             raise ValueError(
                 "explode_tokens=True requires single-word terms; dim contains "
-                "multi-word terms — use use_token_membership/regex instead"
+                "multi-word terms — use locations.locate_compiled instead"
             )
         if probe["n_nonnull"] != probe["n_rows"]:
             raise ValueError(
                 "explode_tokens=True requires non-null order_col values in "
                 "dim (the argmin join-back is keyed on it; null keys never "
-                "join back) — fill or drop them, or use "
-                "use_token_membership/regex"
+                "join back) — fill or drop them, or use the default "
+                "token-membership strategy (explode_tokens=False)"
             )
         if probe["n_distinct"] != probe["n_nonnull"]:
             raise ValueError(
                 "explode_tokens=True requires unique order_col values in "
                 "dim (the argmin join-back is keyed on it); duplicates "
-                "found — dedupe dim or use use_token_membership/regex"
+                "found — dedupe dim or use the default token-membership "
+                "strategy (explode_tokens=False)"
             )
         other_cols = [c for c in dim.columns if c not in (term_col, order_col)]
         toks = fact.select(
@@ -121,131 +124,22 @@ def containment_join_first_match(
             .select(fact_id, order_col, term_col, *other_cols)
         )
         return fact.join(best, fact_id)
-    if use_token_membership:
-        # Tokenize ONCE per row, before the join: a BNLJ evaluates its
-        # condition per (row × term) pair, so split(lower(text)) inside
-        # the condition re-lowers and re-splits the full text |dim| times
-        # per row — the same recompute class as the r10 lambda-inlining
-        # bug, at the join-condition level (r11 BNLJ audit). Pre-projected,
-        # the per-pair work is one array_contains over a ready array.
-        joined = (
-            fact.withColumn(
-                "__toks", F.split(F.lower(F.col(text_col)), r"\s+")
-            )
-            .join(b, F.array_contains(F.col("__toks"), F.col(term_col)))
-            .drop("__toks")
-        )
-    else:
-        # rlike with a column-valued pattern needs the SQL form (the Python
-        # Column.rlike only accepts a literal pattern string). Same
-        # per-pair-recompute discipline as the membership branch: lower the
-        # text once per fact row and build the \b-bounded pattern once per
-        # dim row BEFORE the join, so the per-pair work is the regex match
-        # alone — not a re-lower of the full text per term.
-        lowered = fact.withColumn("__lc", F.lower(F.col(text_col)))
-        pat = b.withColumn(
-            "__pat", F.concat(F.lit("\\b"), F.col(term_col), F.lit("\\b"))
-        )
-        joined = (
-            lowered.crossJoin(pat)
-            .filter(F.expr("__lc rlike __pat"))
-            .drop("__lc", "__pat")
-        )
+    # Tokenize ONCE per row, before the join: a BNLJ evaluates its
+    # condition per (row × term) pair, so split(lower(text)) inside the
+    # condition re-lowers and re-splits the full text |dim| times per row
+    # — the same recompute class as the r10 lambda-inlining bug, at the
+    # join-condition level (r11 BNLJ audit). Pre-projected, the per-pair
+    # work is one array_contains over a ready array.
+    joined = (
+        fact.withColumn("__toks", F.split(F.lower(F.col(text_col)), r"\s+"))
+        .join(b, F.array_contains(F.col("__toks"), F.col(term_col)))
+        .drop("__toks")
+    )
     w = Window.partitionBy(fact_id).orderBy(F.col(order_col).asc())
     return (
         joined.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
-    )
-
-
-def first_match_case_expr(
-    dim_rows,
-    text: "F.Column",
-    term_field: str = "term",
-    order_field: str = "dict_order",
-    out_fields: tuple[str, ...] = ("province", "city"),
-) -> "F.Column":
-    """J1 compiled to a scalar expression: the dim (driver-small by the same
-    contract that makes it broadcast-able) becomes a priority-ordered
-    CASE WHEN rlike chain, evaluated as ONE codegen'd map over the fact —
-    zero joins, zero shuffles, single corpus scan. First match by
-    ``order_field`` wins, exactly like the join formulation.
-
-    Returns a struct column (null when nothing matches).
-
-    Strategy guidance (measured at sf0.1, 5k docs): at 500 terms the
-    compiled chain runs ~1.6 s vs ~0.6 s for the token equi-join
-    (containment_join_first_match(explode_tokens=True)) — so prefer the
-    token join when ALL terms are single words; the CASE chain is the
-    right plan for multi-word terms (regex containment is unavoidable
-    there) and for small dims where it folds into the surrounding map."""
-    import re as _re
-
-    null_struct = F.lit(None).cast(
-        "struct<" + ",".join(f"{f}:string" for f in out_fields) + ">"
-    )
-    ordered = sorted(dim_rows, key=lambda r: r[order_field])
-    # FLAT when-chaining (one CaseWhen node with N branches, first TRUE
-    # branch wins = lowest dict_order). Nesting N CaseWhens via otherwise()
-    # instead overflows the analyzer stack at the reference's real dim size
-    # (456 terms) — found by the 500-term regression test.
-    expr = None
-    for row in ordered:
-        pattern = r"\b" + _re.escape(row[term_field]) + r"\b"
-        hit = F.struct(*[F.lit(row[f]).alias(f) for f in out_fields])
-        cond = text.rlike(pattern)
-        expr = F.when(cond, hit) if expr is None else expr.when(cond, hit)
-    expr = expr.otherwise(null_struct) if expr is not None else null_struct
-    # single-alternation prefilter: rows that mention NO term (the common
-    # case on a real corpus) pay one regex instead of |dim| — the priority
-    # chain only runs on prefiltered hits, semantics unchanged
-    any_term = (
-        r"\b(?:" + "|".join(_re.escape(r[term_field]) for r in ordered) + r")\b"
-    )
-    return F.when(text.rlike(any_term), expr).otherwise(null_struct)
-
-
-def first_match_case_sql(
-    dim_rows,
-    text_sql: str,
-    term_field: str = "term",
-    order_field: str = "dict_order",
-    out_fields: tuple[str, ...] = ("province", "city"),
-) -> "F.Column":
-    """Same compiled CASE chain as ``first_match_case_expr``, but emitted as
-    ONE SQL string handed to ``F.expr`` — the JVM parser builds the 456-branch
-    CaseWhen in a single py4j round trip instead of ~4 calls per term.
-    Measured on the lifecycle pipeline: plan-build drops ~0.45 s → ~0.05 s
-    at the reference's real dim size; the physical plan is identical.
-
-    ``text_sql`` is the search expression as SQL text (the caller owns
-    quoting of column names)."""
-    import re as _re
-
-    def lit(s: str) -> str:
-        return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-    ordered = sorted(dim_rows, key=lambda r: r[order_field])
-    null_cast = (
-        "CAST(NULL AS STRUCT<"
-        + ", ".join(f"{f}: STRING" for f in out_fields)
-        + ">)"
-    )
-    branches = []
-    for row in ordered:
-        pattern = r"\b" + _re.escape(row[term_field]) + r"\b"
-        hit = "named_struct(" + ", ".join(
-            f"{lit(f)}, {lit(row[f])}" for f in out_fields
-        ) + ")"
-        branches.append(f"WHEN ({text_sql}) RLIKE {lit(pattern)} THEN {hit}")
-    chain = "CASE " + " ".join(branches) + f" ELSE {null_cast} END"
-    any_term = (
-        r"\b(?:" + "|".join(_re.escape(r[term_field]) for r in ordered) + r")\b"
-    )
-    return F.expr(
-        f"CASE WHEN ({text_sql}) RLIKE {lit(any_term)} THEN {chain} "
-        f"ELSE {null_cast} END"
     )
 
 

@@ -82,30 +82,6 @@ def deterministic_shuffle_shards(
     )
 
 
-def write_corpus_shards(
-    df: DataFrame,
-    path: str,
-    id_col: str,
-    seed: str,
-    n_shards: int,
-    mode: str = "overwrite",
-) -> None:
-    """Materialize the shuffled corpus as one parquet directory per shard
-    (``shard=K/``), each shard internally ordered by the shuffle key — a
-    trainer streams shard files in path order and sees the seeded global
-    shuffle. Repartition ON the shard column co-locates each shard into
-    one task (one file per shard); within-task sortWithinPartitions is a
-    local sort of corpus/N rows, never a global exchange."""
-    sharded = deterministic_shuffle_shards(df, id_col, seed, n_shards)
-    (
-        sharded.repartition(n_shards, F.col("shard"))
-        .sortWithinPartitions("shuffle_key", id_col)
-        .write.mode(mode)
-        .partitionBy("shard")
-        .parquet(path)
-    )
-
-
 def budget_sample(
     df: DataFrame,
     id_col: str,

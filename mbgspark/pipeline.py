@@ -18,13 +18,14 @@ from pyspark.sql import functions as F
 from mbgspark.functions.cleaning import clean_for_analysis
 from mbgspark.functions.lexicon import with_lexicon_sentiment
 from mbgspark.io import merge_by_key
-from mbgspark.operators.locate import first_match_case_sql
+from mbgspark.locations import LOCATION_SEPARATORS, locate_compiled
 from mbgspark.schema import DEFAULT_LOCATIONS, LOCATIONS_DIM_SCHEMA
 
 
 def locations_dim(spark: SparkSession, rows=None) -> DataFrame:
     """The (province, city, dict_order, term) dimension incl. alias rows
-    (utils.py:300-333 + 384-394). Tiny — always broadcast."""
+    (utils.py:300-333 + 384-394). Tiny — collected into the compiled
+    matcher."""
     return spark.createDataFrame(rows or DEFAULT_LOCATIONS, LOCATIONS_DIM_SCHEMA)
 
 
@@ -36,68 +37,33 @@ def apply_cleaning(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-_CASE_CHAIN_MAX_TERMS = 64
-
-
 def detect_locations(df: DataFrame, dim, id_col: str = "_id") -> DataFrame:
-    """J1 first-match containment join against text + author name
-    (utils.py:336-437; author concat per :351-352). Left join semantics:
-    unmatched tweets keep null province/city.
+    """J1 first-match location detection against text + author name
+    (utils.py:336-437; author concat per :351-352). Unmatched tweets keep
+    null province/city.
 
-    ``dim`` is a DataFrame (collected — it's driver-small by the same
-    contract that makes it broadcast-able) or an already-materialized list
-    of rows/tuples, which skips the collect job entirely.
+    ``dim`` is a DataFrame (collected — it's driver-small) or an
+    already-materialized list of rows/tuples, which skips the collect job
+    entirely.
 
-    Strategy dispatch by dim size: small dims compile to the first-match
-    CASE chain (one codegen'd pass, no join — right for the lifecycle's
-    12-term dim); past ``_CASE_CHAIN_MAX_TERMS`` the O(|dim|) per-row regex
-    chain loses to the O(tokens) bucketed-map projection
-    (locations.locate_compiled), which is how the full 602-term dictionary
-    runs, and past 4000 terms to the join-based locations.locate_hybrid.
-    All strategies search the separator-translated text
-    (utils.py:358-361) so 'jakarta-selatan' matches the multi-word term on
-    every path."""
-    from mbgspark.locations import LOCATION_SEPARATORS
-
+    Every dictionary, the lifecycle's 12 terms and the full 602, runs
+    through ``locations.locate_compiled``: one narrow projection over
+    bucketed constant maps, O(tokens) per row, zero joins. It searches the
+    separator-translated text (utils.py:358-361) so 'jakarta-selatan'
+    matches the multi-word term. "location_checked" is the analog of the
+    field EXISTING in Mongo; a tweet with no detectable location is still
+    processed."""
     seps = "".join(LOCATION_SEPARATORS)
     search = (
         "translate(concat_ws(' ', clean_text, lower(coalesce(author_name, ''))), "
         f"'{seps.replace(chr(92), chr(92) * 2)}', '{' ' * len(seps)}')"
     )
     rows = dim.collect() if isinstance(dim, DataFrame) else dim
-    fields = ("province", "city", "dict_order", "term")
-    dicts = [dict(zip(fields, r)) if isinstance(r, tuple) else r for r in rows]
-    if len(dicts) > _CASE_CHAIN_MAX_TERMS:
-        from mbgspark.locations import locate_compiled, locate_hybrid
-
-        tuples = [
-            (r["province"], r["city"], r["dict_order"], r["term"]) for r in dicts
-        ]
-        base = df.withColumn("__search", F.expr(search))
-        # compiled constant-map projection up to a few thousand terms (zero
-        # shuffles); the join-based hybrid beyond, where plan-embedded
-        # literal maps stop being reasonable
-        strategy = locate_compiled if len(dicts) <= 4000 else locate_hybrid
-        out = strategy(base, tuples, id_col, "__search")
-        return out.drop("__search").withColumn(
-            "location_detected", F.col("city").isNotNull()
-        ).withColumn("location_checked", F.lit(True))
-    hit = first_match_case_sql(dicts, search)
-    # embed the wide CASE tree ONCE (as a struct), then expand by field:
-    # every later Dataset creation re-runs the analyzer over the plan, so a
-    # plan carrying two copies of a 456-branch CaseWhen doubles every
-    # downstream withColumn's analysis cost (measured: ~0.45 s of driver
-    # time on the lifecycle build). "location_checked" is the analog of the
-    # field EXISTING in Mongo; a tweet with no detectable location is still
-    # processed.
-    base = df.select("*", hit.alias("__loc"))
-    return base.select(
-        *df.columns,
-        F.col("__loc.province").alias("province"),
-        F.col("__loc.city").alias("city"),
-        F.col("__loc.city").isNotNull().alias("location_detected"),
-        F.lit(True).alias("location_checked"),
-    )
+    base = df.withColumn("__search", F.expr(search))
+    out = locate_compiled(base, rows, id_col, "__search")
+    return out.drop("__search").withColumn(
+        "location_detected", F.col("city").isNotNull()
+    ).withColumn("location_checked", F.lit(True))
 
 
 def label_sentiment(df: DataFrame, text_col: str = "clean_text") -> DataFrame:

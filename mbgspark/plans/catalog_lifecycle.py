@@ -51,7 +51,7 @@ def etl_lifecycle(spark, sf_dir):
     # whole clean→locate→label map to 2 cores; a 5k-row shuffle buys wide
     # execution (measured at sf0.1: exec 0.77 s → 0.45 s). Production scans
     # have enough splits; this is a test-SF ergonomic.
-    # pass the dim as plain rows: the CASE-chain compiler needs driver-side
+    # pass the dim as plain rows: the compiled matcher needs driver-side
     # values anyway, so skip the createDataFrame+collect round trip
     out = run_etl(raw, DEFAULT_LOCATIONS, id_col="_id", event_ts_col="created_at")
     return (

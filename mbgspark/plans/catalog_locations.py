@@ -4,15 +4,15 @@ Runs first-match location detection over `documents` with the reference's
 real 38-province / 456-city dictionary (602 flattened term rows with the
 reference loop's two-tier break semantics — exact names first-wins,
 part/abbrev matches last-wins, province fallback below; locations.py),
-through the compiled map-lookup strategy (locate_compiled; the join-based
-locate_hybrid computes identical results — equivalence pinned in
-tests/test_locations_full.py). Documents
-get deterministic Indonesian location snippets injected (cycling doc_id % 8)
-so every matching tier — exact multi-word city, abbreviation, punctuation
-boundaries, province fallback, separator normalization, part shadowing,
-no-match — is exercised; the untouched English text also participates, so
-accidental matches (e.g. the token 'solo') are part of the checked surface
-on BOTH engines.
+through the compiled map-lookup matcher (locate_compiled, the same one the
+lifecycle's detect_locations runs; pinned against a literal
+re-implementation of the reference loop in tests/test_locations_full.py).
+Documents get deterministic Indonesian location snippets injected (cycling
+doc_id % 8) so every matching tier — exact multi-word city, abbreviation,
+punctuation boundaries, province fallback, separator normalization, part
+shadowing, no-match — is exercised; the untouched English text also
+participates, so accidental matches (e.g. the token 'solo') are part of the
+checked surface on BOTH engines.
 
 Oracle: the identical construction in DuckDB — same dim VALUES, same
 separator translate + non-word token split + \\b-regex multi-word verify,

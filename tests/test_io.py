@@ -200,37 +200,6 @@ def test_compact_store_reduces_files_preserves_rows(spark, tmp_path, fault_fs):
     assert after < before
 
 
-def test_orc_round_trip(spark, tmp_path):
-    from mbgspark.io import read_orc_docs, write_orc
-
-    df = spark.range(0, 100).selectExpr("id", "CAST(id * 1.5 AS DOUBLE) AS v",
-                                        "concat('r', id) AS s")
-    p = str(tmp_path / "orc_store")
-    write_orc(df, p)
-    back = read_orc_docs(spark, p)
-    # files read back nullable; compare names+types
-    assert [(f.name, f.dataType) for f in back.schema] == [
-        (f.name, f.dataType) for f in df.schema
-    ]
-    assert sorted(r["id"] for r in back.collect()) == list(range(100))
-
-
-def test_schema_evolution_merge_read(spark, tmp_path):
-    from mbgspark.io import read_store_evolved
-
-    p = str(tmp_path / "evolving")
-    spark.range(0, 10).selectExpr("id", "concat('a', id) AS name").write.parquet(p)
-    # v2 ingest adds a column; old files are never rewritten
-    spark.range(10, 20).selectExpr(
-        "id", "concat('b', id) AS name", "id * 2 AS score"
-    ).write.mode("append").parquet(p)
-    back = read_store_evolved(spark, p)
-    assert set(back.columns) == {"id", "name", "score"}
-    rows = {r["id"]: r["score"] for r in back.collect()}
-    assert rows[5] is None and rows[15] == 30
-    assert len(rows) == 20
-
-
 def test_partitioned_store_prunes_untouched_days(spark, tmp_path):
     """The store layout's core promise: a one-day query against a
     date-partitioned store plans PartitionFilters and reads ONE partition

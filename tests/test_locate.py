@@ -30,11 +30,9 @@ def test_abbreviation_alias_matches(spark):
 
 def test_regex_variant_word_bounded(spark):
     dim = locations_dim(spark)
-    # 'bdgx' must NOT match the 'bdg' alias when word-bounded
+    # 'bdgx' must NOT match the 'bdg' alias: matching is by whole token
     facts = spark.createDataFrame([(1, "kata bdgx bukan kota")], "id bigint, txt string")
-    out = containment_join_first_match(
-        facts, dim, "id", "txt", "term", use_token_membership=False
-    )
+    out = containment_join_first_match(facts, dim, "id", "txt", "term")
     assert out.count() == 0
 
 
@@ -131,27 +129,3 @@ def test_explode_tokens_rejects_null_order_values(spark):
         containment_join_first_match(
             fact, dim, "id", "text", "term", explode_tokens=True
         )
-
-
-def test_case_chain_compiles_at_reference_dim_size(spark):
-    # the reference dim is 456 (province, city) pairs + aliases; a 500-term
-    # CASE chain must survive codegen (or its interpreted fallback) and
-    # still return the right first match
-    from mbgspark.operators.locate import first_match_case_expr
-    from pyspark.sql import functions as F
-
-    rows = [
-        {"province": f"prov{i:03d}", "city": f"city{i:03d}",
-         "dict_order": i, "term": f"city{i:03d}"}
-        for i in range(1, 501)
-    ]
-    df = spark.createDataFrame(
-        [(1, "visiting city450 and city007 today"), (2, "no city here")],
-        "id int, text string",
-    )
-    hit = first_match_case_expr(rows, F.col("text"))
-    got = {
-        r["id"]: r["c"]
-        for r in df.select("id", hit["city"].alias("c")).collect()
-    }
-    assert got == {1: "city007", 2: None}  # lowest dict_order wins

@@ -1,4 +1,4 @@
-"""Full 38-province / 456-city dictionary + hybrid locate strategy.
+"""Full 38-province / 456-city dictionary + the compiled locate matcher.
 
 Pins the flattened semantics of detect_location_from_text
 (utils.py:336-437) at the real dim size, including the reference loop's
@@ -15,10 +15,10 @@ from mbgspark.locations import (
     CITY_ABBREVIATIONS,
     EMPTY_BUCKET_KEY,
     LOCATE_BUCKETS,
+    LOCATION_SEPARATORS,
     build_full_locations_dim,
     locate_bucket,
     locate_compiled,
-    locate_hybrid,
 )
 from mbgspark.locations_data import INDONESIA_LOCATIONS
 
@@ -67,7 +67,7 @@ def test_hybrid_first_match_semantics(spark):
     )
     got = {
         r["id"]: (r["province"], r["city"])
-        for r in locate_hybrid(fact, rows, "id", "text").collect()
+        for r in locate_compiled(fact, rows, "id", "text").collect()
     }
     # Case-1 exact match breaks the reference's city loop — it beats every
     # part row, so 'Jakarta Selatan' resolves exactly (utils.py:366-371)
@@ -90,11 +90,46 @@ def test_hybrid_first_match_semantics(spark):
     assert got[9] == ("dki jakarta", "jakarta timur")
 
 
+def test_compiled_unmatched_rows_stay_null_under_ansi(spark):
+    """No match must read as null (province, city) in an ANSI session too
+    (Spark's default): there Spark 4.1's ``element_at`` with a NULL index
+    returns the last array element, which would locate every unmatched
+    row at the dictionary's last term."""
+    from mbgspark.pipeline import run_etl
+    from mbgspark.schema import DEFAULT_LOCATIONS
+
+    prior = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        fact = spark.createDataFrame(
+            [(1, "tidak ada lokasi disini"), (2, "di bandung")],
+            "id bigint, text string",
+        )
+        got = {
+            r["id"]: (r["province"], r["city"])
+            for r in locate_compiled(
+                fact, build_full_locations_dim(), "id", "text"
+            ).collect()
+        }
+        assert got == {1: (None, None), 2: ("jawa barat", "bandung")}
+        raw = spark.createDataFrame(
+            [("1", "netral saja", None), ("2", "acara di sby", "user")],
+            "_id string, text string, author_name string",
+        ).selectExpr("*", "timestamp'2025-01-01 00:00:00' AS created_at")
+        got = {
+            r["_id"]: (r["city"], r["location_detected"])
+            for r in run_etl(raw, DEFAULT_LOCATIONS).collect()
+        }
+        assert got == {"1": (None, False), "2": ("surabaya", True)}
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prior)
+
+
 def test_compiled_and_hybrid_strategies_agree(spark):
-    """locate_compiled (constant-map projection) and locate_hybrid
-    (token/containment joins) are two physical plans of the same operator —
-    they must return identical (province, city) for every row, including on
-    natural text with no injected locations."""
+    """locate_compiled (constant-map projection) must return the
+    reference's (province, city) for every row, including on natural text
+    with no injected locations, and the plain first match for a dictionary
+    whose rows share dict_order values."""
     from pyspark.sql import functions as F
 
     from mbgspark.io import load_table
@@ -106,19 +141,21 @@ def test_compiled_and_hybrid_strategies_agree(spark):
         "doc_id bigint, text string",
     )
     fact = d.select("doc_id", F.col("text")).unionByName(edge)
+    texts = {r["doc_id"]: r["text"] for r in fact.collect()}
 
-    def run(strategy, dim):
+    def run(dim):
         return {
             r["doc_id"]: (r["province"], r["city"])
-            for r in strategy(fact, dim, "doc_id", "text").collect()
+            for r in locate_compiled(fact, dim, "doc_id", "text").collect()
         }
 
-    a = run(locate_compiled, rows)
-    assert a == run(locate_hybrid, rows) and len(a) > len(_EDGE_TEXTS)
+    a = run(rows)
+    assert a == {i: _ref_detect(t) for i, t in texts.items()}
+    assert len(a) > len(_EDGE_TEXTS)
     # dictionary rows that share a dict_order: each keeps its own
     # (province, city), and among tied matches the earlier row wins
     tied = [(p, c, o // 3, t) for p, c, o, t in rows]
-    assert run(locate_compiled, tied) == run(locate_hybrid, tied)
+    assert run(tied) == {i: _first_match(tied, t) for i, t in texts.items()}
     small = [
         ("pa", "ca", 1, "alpha"),
         ("pb", "cb", 1, "beta"),
@@ -129,18 +166,17 @@ def test_compiled_and_hybrid_strategies_agree(spark):
     tie_fact = spark.createDataFrame(
         list(enumerate(tie_texts)), "id bigint, text string"
     )
-    for strategy in (locate_compiled, locate_hybrid):
-        got = {
-            r["id"]: (r["province"], r["city"])
-            for r in strategy(tie_fact, small, "id", "text").collect()
-        }
-        assert got == {
-            0: ("pb", "cb"),
-            1: ("pa", "ca"),
-            2: ("pd", "cd"),
-            3: ("pc", None),
-            4: (None, None),
-        }, strategy.__name__
+    got = {
+        r["id"]: (r["province"], r["city"])
+        for r in locate_compiled(tie_fact, small, "id", "text").collect()
+    }
+    assert got == {
+        0: ("pb", "cb"),
+        1: ("pa", "ca"),
+        2: ("pd", "cd"),
+        3: ("pc", None),
+        4: (None, None),
+    }
 
 
 def _bucket_edge_tokens() -> list[str]:
@@ -189,7 +225,7 @@ _EDGE_TEXTS = [
 def _ref_detect(text):
     """Literal Python re-implementation of the reference's nested loop
     (utils.py:336-432, with the repo's documented working-alias Case 3) —
-    the parity truth both fuzz tests compare the Spark strategies against.
+    the parity truth both fuzz tests compare locate_compiled against.
     Python's unicode-aware \\b is the boundary semantics being mirrored."""
     import re
 
@@ -231,8 +267,24 @@ def _ref_detect(text):
     return (dp.lower() if dp else None, dc.lower() if dc else None)
 
 
+def _first_match(dim_rows, text):
+    """The plain first-match rule over any dictionary: rows in a stable
+    sort by dict_order, and the first term found \\b-bounded (Python's
+    unicode-aware ``re``) in the lowercased, separator-translated text
+    wins."""
+    import re
+
+    s = text.lower()
+    for sep in LOCATION_SEPARATORS:
+        s = s.replace(sep, " ")
+    for p, c, _o, t in sorted(dim_rows, key=lambda r: r[2]):
+        if re.search(r"\b" + re.escape(t) + r"\b", s):
+            return (p, c)
+    return (None, None)
+
+
 def test_reference_loop_parity_fuzz(spark):
-    """Drive BOTH Spark strategies against _ref_detect over texts that hit
+    """Drive locate_compiled against _ref_detect over texts that hit
     every break-path: exact-vs-part tiers, last-match overwrite,
     cross-province precedence, punctuation boundaries (ASCII and unicode),
     separator translation, province fallback."""
@@ -284,12 +336,11 @@ def test_reference_loop_parity_fuzz(spark):
         list(enumerate(texts)), "id bigint, text string"
     )
     expected = {i: ref_detect(t) for i, t in enumerate(texts)}
-    for strategy in (locate_compiled, locate_hybrid):
-        got = {
-            r["id"]: (r["province"], r["city"])
-            for r in strategy(fact, rows, "id", "text").collect()
-        }
-        assert got == expected, strategy.__name__
+    got = {
+        r["id"]: (r["province"], r["city"])
+        for r in locate_compiled(fact, rows, "id", "text").collect()
+    }
+    assert got == expected
 
 
 def test_reference_loop_parity_random_fuzz(spark):
@@ -297,7 +348,7 @@ def test_reference_loop_parity_random_fuzz(spark):
     extended with unicode punctuation): texts are random compositions of
     dictionary terms, noise words, ASCII/unicode punctuation glue, and —
     for single-word terms only — unicode LETTER glue (which must suppress
-    the match). Both Spark strategies must agree with _ref_detect on every
+    the match). locate_compiled must agree with _ref_detect on every
     one. Unicode-letter glue on multi-word terms is exercised by the
     curated cases instead: combined with the same term's words appearing
     free elsewhere in one text it hits the documented residual corner of
@@ -348,14 +399,98 @@ def test_reference_loop_parity_random_fuzz(spark):
         list(enumerate(texts)), "id bigint, text string"
     )
     expected = {i: _ref_detect(t) for i, t in enumerate(texts)}
-    for strategy in (locate_compiled, locate_hybrid):
-        got = {
-            r["id"]: (r["province"], r["city"])
-            for r in strategy(fact, rows, "id", "text").collect()
-        }
-        diffs = {
-            i: (got[i], expected[i], texts[i])
-            for i in expected
-            if got[i] != expected[i]
-        }
-        assert not diffs, (strategy.__name__, dict(list(diffs.items())[:5]))
+    got = {
+        r["id"]: (r["province"], r["city"])
+        for r in locate_compiled(fact, rows, "id", "text").collect()
+    }
+    diffs = {
+        i: (got[i], expected[i], texts[i])
+        for i in expected
+        if got[i] != expected[i]
+    }
+    assert not diffs, dict(list(diffs.items())[:5])
+
+
+def test_run_etl_locate_matches_python_first_match_fuzz(spark):
+    """pipeline.run_etl locates with locate_compiled for the lifecycle's
+    12-term DEFAULT_LOCATIONS as well: over seeded random tweets its
+    (province, city) must equal _first_match on the text it searches,
+    clean_text + ' ' + lower(author_name). The tweets mix terms with
+    ASCII and unicode punctuation glue, unicode-letter glue (single-word
+    terms only, as in the random fuzz above), separators, upper case, and
+    null or non-null author names."""
+    import datetime as dt
+    import random
+
+    from mbgspark.locations import UNICODE_BOUNDARY_CHARS
+    from mbgspark.pipeline import run_etl
+    from mbgspark.schema import DEFAULT_LOCATIONS
+
+    rng = random.Random(20261019)
+    singles = [t for _p, _c, _o, t in DEFAULT_LOCATIONS if " " not in t]
+    multis = [t for _p, _c, _o, t in DEFAULT_LOCATIONS if " " in t]
+    noise = ["program", "mbg", "bagus", "gagal", "di", "jakarta", "selatan",
+             "kota", "http://x.co/a", "@dinas", "#mbg", "12"]
+    punct_glue = list("!?()[]:#@'\"") + list(UNICODE_BOUNDARY_CHARS[:24])
+    letter_glue = ["\u00e9", "\u00fc", "\u00f1", "\u00df"]
+
+    def segment():
+        kind = rng.random()
+        if kind < 0.3:
+            w = rng.choice(singles)
+            g = rng.random()
+            if g < 0.25:
+                w = rng.choice(punct_glue) + w + rng.choice(punct_glue)
+            elif g < 0.35:
+                w = rng.choice(letter_glue) + w
+            elif g < 0.45:
+                w = w + rng.choice(letter_glue)
+        elif kind < 0.5:
+            w = rng.choice(multis)
+            g = rng.random()
+            if g < 0.25:
+                w = rng.choice(punct_glue) + w + rng.choice(punct_glue)
+            elif g < 0.45:
+                w = w.replace(" ", rng.choice(LOCATION_SEPARATORS), 1)
+            elif g < 0.55:
+                w = w.replace(" ", rng.choice(punct_glue), 1)
+        else:
+            w = rng.choice(noise)
+        return w.upper() if rng.random() < 0.2 else w
+
+    def phrase(lo, hi):
+        return " ".join(segment() for _ in range(rng.randint(lo, hi)))
+
+    ts = dt.datetime(2025, 1, 1)
+    raw = [
+        (
+            str(i),
+            phrase(1, 5),
+            None if rng.random() < 0.4 else phrase(1, 2),
+            ts + dt.timedelta(hours=i),
+        )
+        for i in range(1200)
+    ]
+    df = spark.createDataFrame(
+        raw, "_id string, text string, author_name string, created_at timestamp"
+    )
+    out = run_etl(df, DEFAULT_LOCATIONS).collect()
+    assert len(out) == len(raw)
+    authors = {i: a for i, _t, a, _ts in raw}
+    diffs = {}
+    for r in out:
+        search = r["clean_text"] + " " + (authors[r["_id"]] or "").lower()
+        want = _first_match(DEFAULT_LOCATIONS, search)
+        if (r["province"], r["city"]) != want:
+            diffs[r["_id"]] = ((r["province"], r["city"]), want, search)
+        assert r["location_detected"] == (r["city"] is not None)
+        assert r["location_checked"] is True
+    assert not diffs, dict(list(diffs.items())[:5])
+    located = [r for r in out if r["city"] is not None]
+    # both outcomes, and author-only hits, are exercised
+    assert 0 < len(located) < len(out)
+    assert any(
+        authors[r["_id"]] is not None
+        and _first_match(DEFAULT_LOCATIONS, r["clean_text"]) == (None, None)
+        for r in located
+    )

@@ -264,13 +264,15 @@ def test_search_url_c12_reference_encoding(spark):
 
 
 def test_locate_full_dim_is_narrow_no_joins(spark):
-    # the compiled-map strategy must stay ONE narrow projection: no join
-    # operators, no Python eval; the only exchanges are the test-SF width
-    # repartition and the final sort
-    plan = plan_of(spark, "locate_full_dim")
-    assert "Join" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert plan.count("FileScan") == 1
+    # the compiled-map matcher must stay ONE narrow projection: no join
+    # operators, no Python eval — on the 602-term dictionary and on the
+    # lifecycle's 12 terms alike; the only exchanges are the test-SF width
+    # repartition and the final sort or aggregation
+    for name in ("locate_full_dim", "etl_lifecycle"):
+        plan = plan_of(spark, name)
+        assert "Join" not in plan, name
+        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+        assert plan.count("FileScan") == 1, name
 
 
 def test_kmeans_assignment_stays_jvm_side(spark):

@@ -6,10 +6,7 @@ import hashlib
 
 from pyspark.sql import functions as F
 
-from mbgspark.operators.shuffle import (
-    deterministic_shuffle_shards,
-    write_corpus_shards,
-)
+from mbgspark.operators.shuffle import deterministic_shuffle_shards
 
 
 def _expected_ntile(ids, seed, n_shards):
@@ -72,22 +69,6 @@ def test_shuffle_plan_has_no_global_corpus_sort(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "global=true" not in plan
     assert "windowspecdefinition(__bk" in plan  # rank is bucket-partitioned
-
-
-def test_write_corpus_shards_one_dir_per_shard(spark, tmp_path):
-    path = str(tmp_path / "shards")
-    df = spark.createDataFrame(
-        [(i, f"doc{i}") for i in range(40)], "doc_id bigint, text string"
-    )
-    write_corpus_shards(df, path, "doc_id", "s1", 4)
-    back = spark.read.parquet(path)
-    sizes = {
-        r["shard"]: r["c"]
-        for r in back.groupBy("shard").agg(F.count("*").alias("c")).collect()
-    }
-    assert sizes == {1: 10, 2: 10, 3: 10, 4: 10}
-    assert back.count() == 40
-    assert sorted(r["doc_id"] for r in back.collect()) == list(range(40))
 
 
 def test_budget_sample_nested_and_exact(spark):

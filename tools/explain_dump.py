@@ -1,12 +1,24 @@
 """Regenerate PLANS.md: formatted physical plans of the flagship queries
 with the scale-relevant properties called out. Run after changing any plan.
 
+Each entry is planned in its own process, and the ids it borrows from
+process-wide counters — expression ids (``#N``), ``plan_id=N``, RDD ids and
+PySpark lambda names (``x_N``) — are renumbered in first-seen order, so an
+entry's text depends only on its own plan, not on the entries before it.
+(A fresh process matters beyond the text: Spark's distinct-aggregate
+rewrite orders its Expand projections by expression-id hashes.)
+
 Usage: python tools/explain_dump.py > PLANS.md
+       python tools/explain_dump.py NAME...   # just those plans' text
 """
 
 from __future__ import annotations
 
+import contextlib
+import io
 import os
+import re
+import subprocess
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -32,14 +44,15 @@ ANNOTATED = {
     "self-join); nothing in the plan is a CartesianProduct — pair volume "
     "is governed by banding and the bucket cap, not corpus²",
     "etl_lifecycle": "the whole clean → locate → label lifecycle is ONE "
-    "codegen'd map (locate is a compiled CASE chain, no join) followed by a "
-    "single aggregation shuffle; the leading round-robin exchange is the "
-    "test-SF width fix (small-file scan = 2 splits), not part of the shape",
+    "codegen'd map (locate is the compiled constant-map projection, no "
+    "join) followed by a single aggregation shuffle; the leading "
+    "round-robin exchange is the test-SF width fix (small-file scan = 2 "
+    "splits), not part of the shape",
     "locate_full_dim": "the full 602-term dictionary locate compiled to one "
     "narrow projection: constant-folded term→order map probed per token + "
     "a contains() branch array for multi-word terms — zero joins, zero "
-    "shuffles before the final sort; the join-based hybrid strategy "
-    "(locate_hybrid) is the >4k-term fallback with identical results",
+    "shuffles before the final sort; the lifecycle's detect_locations runs "
+    "the same matcher",
     "exists_shipped_priority": "correlated EXISTS planned as a LEFT SEMI "
     "join — one pass per side, the quarter filter pushed to the orders scan",
     "cust_order_histogram": "two cascaded aggregations; the second operates "
@@ -122,19 +135,51 @@ ANNOTATED = {
 }
 
 
+# one (prefix)(counter) pattern per counter family; lambda names share one
+# JVM counter across x/y/z, so they share one renumbering
+_COUNTERS = (
+    re.compile(r"(lambda \w+_)(\d+)(?=#)"),
+    re.compile(r"(#)(\d+)"),
+    re.compile(r"(plan_id=)(\d+)"),
+    re.compile(r"(RDD\[)(\d+)"),
+)
+
+
+def renumber(text: str) -> str:
+    """Each counter family's values → 1, 2, … in first-seen order."""
+    for pattern in _COUNTERS:
+        seen: dict[str, int] = {}
+        text = pattern.sub(
+            lambda m: m.group(1) + str(seen.setdefault(m.group(2), len(seen) + 1)),
+            text,
+        )
+    return text
+
+
 def main() -> None:
-    spark = get_spark("plans")
-    spark.sparkContext.setLogLevel("ERROR")
+    names = sys.argv[1:]
+    if names:
+        spark = get_spark("plans")
+        spark.sparkContext.setLogLevel("ERROR")
+        for name in names:
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                CATALOG[name][0](spark, SF).explain(mode="formatted")
+            print(renumber(buf.getvalue()), end="")
+        return
     print("# PLANS — physical plans of the flagship queries")
     print()
     print("Generated by `python tools/explain_dump.py` at sf0.001 (plan shape")
     print("is data-size independent; AQE may further coalesce at runtime).")
     print("Regression-guarded in `tests/test_plan_shapes.py`.")
     for name, note in ANNOTATED.items():
-        df = CATALOG[name][0](spark, SF)
-        print(f"\n## {name}\n\n{note}.\n\n```")
-        df.explain(mode="formatted")  # prints to stdout
-        print("```")
+        plan = subprocess.run(
+            [sys.executable, os.path.abspath(__file__), name],
+            check=True,
+            capture_output=True,
+            text=True,
+        ).stdout
+        print(f"\n## {name}\n\n{note}.\n\n```\n{plan}```")
 
 
 if __name__ == "__main__":

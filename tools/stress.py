@@ -61,11 +61,11 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     # Persisted: the generated corpus is a 20-way union with per-token md5
     # rewriting whose recompute (~1 s per consumer at n=20) would otherwise
-    # be billed to every operator — multi-consumer ops like locate_hybrid
-    # (token explode + padded text + final join = 3 lineage consumers) were
-    # overstated ~2.5×. Production inputs are parquet scans, where a
-    # re-scan is column-pruned and cheap; caching here restores that cost
-    # model so each timing is the OPERATOR's.
+    # be billed to every operator — an op whose plan consumes the corpus
+    # several times (e.g. a token explode + a final join) was overstated
+    # ~2.5×. Production inputs are parquet scans, where a re-scan is
+    # column-pruned and cheap; caching here restores that cost model so
+    # each timing is the OPERATOR's.
     corpus = scaled_corpus(spark, sf_dir, n).persist()
     n_rows = corpus.count()
     results: dict[str, dict] = {}
@@ -93,13 +93,12 @@ def main() -> None:
     run("token_counts", with_token_counts(corpus, "t"))
     run("fingerprints", with_fingerprint(corpus, "t"))
 
-    # full 602-term dictionary locate, both strategies (hash-rewritten
-    # tokens ≅ a corpus where almost nothing matches — the common case)
-    from mbgspark.locations import build_full_locations_dim, locate_compiled, locate_hybrid
+    # full 602-term dictionary locate (hash-rewritten tokens ≅ a corpus
+    # where almost nothing matches — the common case)
+    from mbgspark.locations import build_full_locations_dim, locate_compiled
 
     dim_rows = build_full_locations_dim()
     run("locate_compiled_602", locate_compiled(corpus, dim_rows, "id", "t"))
-    run("locate_hybrid_602", locate_hybrid(corpus, dim_rows, "id", "t"))
 
     # curation composite (quality gate + fingerprint dedup keep-first):
     # the catalog's curate_corpus minus langid, on the scaled corpus
