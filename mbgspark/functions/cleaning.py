@@ -47,11 +47,6 @@ def clean_at_ingest(c: Column) -> Column:
     return _collapse_ws(c)
 
 
-def normalize_separators(c: Column) -> Column:
-    """C8 (utils.py:358-361): map ``- / \\ | _ , ; .`` to spaces pre-match."""
-    return F.regexp_replace(c, r"[-/\\|_,;.]", " ")
-
-
 def normalized_text_key(c: Column) -> Column:
     """D2 dedup key (resilient_scraper.py:354): hash(lower(trim(text)))."""
     return F.xxhash64(F.lower(F.trim(c)))

@@ -39,16 +39,17 @@ Seams (pin tests co-located in ``tests/test_jvmseam.py``):
    UTF-8 sidecar reads/writes that travel with the store on any Hadoop-
    compatible FS (local, HDFS, S3A) instead of assuming ``os.path``.
    Failure direction: loud AttributeError at the call site.
-5. ``app_shuffle_write_records`` / ``last_stage_id`` /
-   ``retained_stages`` — the core ``AppStatusStore`` stage list via
+5. ``app_shuffle_write_records`` / ``stage_census`` / ``last_stage_id``
+   / ``retained_stages`` — the core ``AppStatusStore`` stage list via
    ``sc._jsc.sc().statusStore()``. Shuffle-write records (or any stage
    metric) of the stages after a stage-id marker, the per-BATCH work
    ledger for streaming soaks (``executed_plan_metrics`` covers plans
    the caller drives itself; a foreachBatch micro-batch's jobs are only
-   visible here). The store evicts its oldest stages first, so a unit of
-   work stays exact as long as it runs fewer than
-   ``spark.ui.retainedStages`` stages (default 1000). Failure direction:
-   loud Py4JError in the soak and its pin test.
+   visible here), and the stage count and task-active seconds of one
+   timed catalog row (``tools/row_bench.py``). The store evicts its
+   oldest stages first, so a unit of work stays exact as long as it runs
+   fewer than ``spark.ui.retainedStages`` stages (default 1000). Failure
+   direction: loud Py4JError in the soak, ``row_bench`` and the pin tests.
 """
 
 from __future__ import annotations
@@ -241,11 +242,49 @@ def app_shuffle_write_records(
     )
 
 
+def stage_census(spark: SparkSession, after_stage: int = -1) -> tuple[int, float]:
+    """``(n_stages, stage_sec)`` of the unit of work after a
+    ``last_stage_id`` marker: ``n_stages`` counts the retained stages above
+    ``after_stage`` that ran tasks; ``stage_sec`` is the length of the
+    union of their (firstTaskLaunchedTime, completionTime) intervals — the
+    time tasks were actually running, each second counted once however
+    many stages ran concurrently in it. A timed run's wall − stage_sec is
+    its driver/AQE re-planning and scheduling gaps. Same marker and
+    retention contract as ``app_shuffle_write_records``."""
+    _drain_listener_bus(spark)
+    intervals: list[tuple[float, float]] = []
+    for st in retained_stages(spark, after_stage):
+        t0, t1 = st.firstTaskLaunchedTime(), st.completionTime()
+        if t0.isDefined() and t1.isDefined():
+            intervals.append(
+                (t0.get().getTime() / 1000.0, t1.get().getTime() / 1000.0)
+            )
+    return len(intervals), union_length(intervals)
+
+
+def union_length(intervals: list[tuple[float, float]]) -> float:
+    """Length of the union of [start, end] intervals: overlapping stages
+    are counted once, not once per stage."""
+    total = 0.0
+    cur_a = cur_b = None
+    for a, b in sorted(intervals):
+        if cur_b is None or a > cur_b:
+            if cur_b is not None:
+                total += cur_b - cur_a
+            cur_a, cur_b = a, b
+        else:
+            cur_b = max(cur_b, b)
+    if cur_b is not None:
+        total += cur_b - cur_a
+    return total
+
+
 def last_stage_id(spark: SparkSession) -> int:
     """Highest stage id the AppStatusStore holds, -1 when it holds none:
-    the marker for ``app_shuffle_write_records``/``retained_stages``. The
-    listener bus is drained first, so a stage that already ran cannot
-    reach the store after the marker is taken and count as later work."""
+    the marker for ``app_shuffle_write_records``/``stage_census``/
+    ``retained_stages``. The listener bus is drained first, so a stage that
+    already ran cannot reach the store after the marker is taken and count
+    as later work."""
     _drain_listener_bus(spark)
     return max((s.stageId() for s in retained_stages(spark)), default=-1)
 

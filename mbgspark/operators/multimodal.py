@@ -165,64 +165,6 @@ def decode_image(content: bytes, fake: bool = False) -> list[float]:
     ]
 
 
-def decode_audio(content: bytes, fake: bool = False) -> list[float]:
-    """Decode audio to an 8-dim feature vector — the audio twin of
-    ``decode_image``, same tiering: ``fake=True`` is the bytes-derived
-    oracle stub; the real path reads PCM WAV through the stdlib ``wave``
-    module (16/8-bit integer PCM, any channel count — no codec library
-    needed), and anything outside that envelope raises NotImplementedError
-    naming the fake path. Features: [duration_s/3600, sample_rate/48000,
-    n_channels/8, mean |amplitude|, RMS amplitude, peak amplitude,
-    zero-crossing rate, DC offset (shifted to [0,1])] — amplitude terms
-    normalized to [0, 1] by the sample width's full scale, deterministic
-    for given bytes."""
-    if fake:
-        digest = hashlib.md5(content).digest()
-        return [b / 255.0 for b in digest[:8]]
-    import io
-    import struct
-    import wave
-
-    try:
-        with wave.open(io.BytesIO(content)) as wf:
-            nch, width, rate, nframes = (
-                wf.getnchannels(), wf.getsampwidth(), wf.getframerate(),
-                wf.getnframes(),
-            )
-            raw = wf.readframes(nframes)
-    except Exception as exc:
-        raise NotImplementedError(
-            "audio codecs are not installed in this environment and the "
-            "bytes are not stdlib-readable PCM WAV; "
-            "use fake=True for the deterministic stub"
-        ) from exc
-    if width == 2:
-        samples = struct.unpack(f"<{len(raw) // 2}h", raw)
-        full = 32768.0
-    elif width == 1:  # WAV 8-bit is unsigned, centered at 128
-        samples = [b - 128 for b in raw]
-        full = 128.0
-    else:
-        raise NotImplementedError(
-            f"unsupported WAV sample width {width}; use fake=True"
-        )
-    n = len(samples) or 1
-    norm = [s / full for s in samples]
-    crossings = sum(
-        1 for i in range(1, len(norm)) if (norm[i - 1] < 0) != (norm[i] < 0)
-    )
-    return [
-        min(nframes / max(rate, 1), 3600.0) / 3600.0,
-        min(rate, 48000) / 48000.0,
-        min(nch, 8) / 8.0,
-        sum(abs(s) for s in norm) / n,
-        (sum(s * s for s in norm) / n) ** 0.5,
-        max((abs(s) for s in norm), default=0.0),
-        crossings / max(len(norm) - 1, 1),
-        (sum(norm) / n + 1.0) / 2.0,
-    ]
-
-
 def extract_features(df: DataFrame, fake_decode: bool = True) -> DataFrame:
     """mapInPandas feature extraction over binary media rows.
 
@@ -250,38 +192,6 @@ def extract_features(df: DataFrame, fake_decode: bool = True) -> DataFrame:
     return df.mapInPandas(_extract, FEATURE_SCHEMA)
 
 
-def resize_media(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing via mapInPandas: output binary is exactly
-    width·height bytes per row. The resample itself is stubbed (real codecs
-    absent — bytes are cycled/truncated deterministically), but the batch
-    shape, binary-in/binary-out signature, and metadata columns are the
-    real contract a decoder plugs into."""
-    out_schema = "media_id bigint, media_type string, content binary, width int, height int"
-    n = width * height
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            def cycle(b: bytes | None) -> bytes | None:
-                if b is None:
-                    return None
-                if not b:
-                    return bytes(n)
-                reps = (n + len(b) - 1) // len(b)
-                return (b * reps)[:n]
-
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": pdf["media_type"],
-                    "content": pdf["content"].map(cycle),
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    return df.mapInPandas(_resize, out_schema)
-
-
 def frame_sample(df: DataFrame, every_n: int = 10) -> DataFrame:
     """Video frame-sampling plumbing: one row per sampled frame index.
     Frame decode is stubbed (NotImplementedError path in decode_image); the
@@ -291,15 +201,4 @@ def frame_sample(df: DataFrame, every_n: int = 10) -> DataFrame:
     return df.select(
         "media_id",
         F.explode(F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))).alias("frame_idx"),
-    )
-
-
-def binary_stats(df: DataFrame) -> DataFrame:
-    """Pure-JVM metadata pass (no Python): sizes + md5 per media row —
-    the cheap pre-filter a multimodal pipeline runs before any decode."""
-    return df.select(
-        "media_id",
-        "media_type",
-        F.length(F.col("content")).cast("bigint").alias("n_bytes"),
-        F.md5(F.col("content")).alias("content_hash"),
     )

@@ -482,12 +482,13 @@ def profile_numeric(
     # stops matching the histogram's — re-scanning the base table (the
     # r12 8-scan regression); (b) a struct-rider guard
     # (min(struct(__v, __cnt))) keeps the reuse but plans an
-    # immutable-buffer SortAggregate — the fat-agg class
-    # tools/agg_audit.py exists to catch. The arithmetic rider stays a
-    # double, so the whole rollup is one codegen HashAggregate. (Spark
-    # does not fold 0.0·x — unsound under null/NaN/Inf — and the
-    # plan-shape test pins both properties.) Null sentinel rows yield
-    # null (null+x) and are skipped by min/max, exactly as intended.
+    # immutable-buffer SortAggregate — the fat-agg class the
+    # sort-aggregate rule of tools/plan_lint.py exists to catch. The
+    # arithmetic rider stays a double, so the whole rollup is one codegen
+    # HashAggregate. (Spark does not fold 0.0·x — unsound under
+    # null/NaN/Inf — and the plan-shape test pins both properties.) Null
+    # sentinel rows yield null (null+x) and are skipped by min/max,
+    # exactly as intended.
     guarded_v = F.col("__v") + F.lit(0.0) * F.col("__cnt")
     stats = hist.groupBy("column_name").agg(
         F.coalesce(F.sum(nn_cnt), F.lit(0)).cast("bigint").alias("n_values"),

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from mbgspark.functions.cleaning import clean_for_analysis
 from mbgspark.functions.lexicon import with_lexicon_sentiment
 from mbgspark.io import merge_by_key
-from mbgspark.locations import LOCATION_SEPARATORS, locate_compiled
+from mbgspark.locations import locate_compiled
 from mbgspark.schema import DEFAULT_LOCATIONS, LOCATIONS_DIM_SCHEMA
 
 
@@ -48,18 +48,16 @@ def detect_locations(df: DataFrame, dim, id_col: str = "_id") -> DataFrame:
 
     Every dictionary, the lifecycle's 12 terms and the full 602, runs
     through ``locations.locate_compiled``: one narrow projection over
-    bucketed constant maps, O(tokens) per row, zero joins. It searches the
-    separator-translated text (utils.py:358-361) so 'jakarta-selatan'
-    matches the multi-word term. "location_checked" is the analog of the
-    field EXISTING in Mongo; a tweet with no detectable location is still
-    processed."""
-    seps = "".join(LOCATION_SEPARATORS)
-    search = (
-        "translate(concat_ws(' ', clean_text, lower(coalesce(author_name, ''))), "
-        f"'{seps.replace(chr(92), chr(92) * 2)}', '{' ' * len(seps)}')"
-    )
+    bucketed constant maps, O(tokens) per row, zero joins. It searches
+    text + author name; its own text prep translates the separators
+    (utils.py:358-361), so 'jakarta-selatan' matches the multi-word term.
+    "location_checked" is the analog of the field EXISTING in Mongo; a
+    tweet with no detectable location is still processed."""
     rows = dim.collect() if isinstance(dim, DataFrame) else dim
-    base = df.withColumn("__search", F.expr(search))
+    base = df.withColumn(
+        "__search",
+        F.expr("concat_ws(' ', clean_text, lower(coalesce(author_name, '')))"),
+    )
     out = locate_compiled(base, rows, id_col, "__search")
     return out.drop("__search").withColumn(
         "location_detected", F.col("city").isNotNull()

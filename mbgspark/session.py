@@ -26,7 +26,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) the engine SparkSession with engine defaults."""
+    """Build (or reuse) the engine SparkSession with engine defaults and
+    the pinned semantics of ``ensure_session_conf``, so every session the
+    engine builds runs the same way whatever ran on it before."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     shuffle = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
@@ -61,7 +63,9 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    ensure_session_conf(spark)
+    return spark
 
 
 def ensure_session_conf(spark: SparkSession) -> None:

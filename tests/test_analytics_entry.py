@@ -40,9 +40,11 @@ def test_entry_contract(spark):
 
 def test_multimodal_stub_contract(spark):
     """Real decode raises; fake decode is deterministic over bytes."""
+    import hashlib
+
     import pytest
 
-    from mbgspark.operators.multimodal import binary_stats, decode_image, extract_features
+    from mbgspark.operators.multimodal import decode_image, extract_features
 
     with pytest.raises(NotImplementedError):
         decode_image(b"abc")
@@ -55,8 +57,7 @@ def test_multimodal_stub_contract(spark):
     feats = extract_features(df).first()
     assert feats["n_bytes"] == 6
     assert len(feats["feat"]) == 8
-    stats = binary_stats(df).first()
-    assert stats["content_hash"] == feats["content_hash"]
+    assert feats["content_hash"] == hashlib.md5(b"pixels").hexdigest()
 
 
 def test_approx_count_distinct_within_tolerance(spark):

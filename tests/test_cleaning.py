@@ -7,9 +7,9 @@ from pyspark.sql import functions as F
 from mbgspark.functions.cleaning import (
     clean_at_ingest,
     clean_for_analysis,
-    normalize_separators,
     normalized_text_key,
 )
+from mbgspark.locations import prep_location_text
 
 RAW = "Cek  #MBG   @user http://x.co/a dan www.b.c  Bagus!"
 
@@ -34,10 +34,12 @@ def test_clean_at_ingest(spark):
 
 
 def test_normalize_separators(spark):
+    # C8 (utils.py:358-361): the location matcher's own text prep maps
+    # ``- / \ | _ , ; .`` to spaces pre-match
     assert (
         _one(
             spark,
-            normalize_separators(F.lit("a-b/c|d_e,f;g.h")),
+            prep_location_text(F.lit("a-b/c|d_e,f;g.h")),
         )
         == "a b c d e f g h"
     )

@@ -196,3 +196,41 @@ def test_app_shuffle_records_seam_pinned(spark):
     # seam drains the listener bus, so one read is exact
     delta = jvmseam.app_shuffle_write_records(spark, after_stage=marker)
     assert delta == 40, delta
+
+
+def test_stage_census_seam_pinned(spark):
+    """Seam 5's census on the same groupBy job: the partial and the final
+    aggregate each run as a stage with tasks, and the union of their task
+    intervals is positive and fits inside the job's wall time."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    marker = jvmseam.last_stage_id(spark)
+    t0 = time.time()
+    (
+        spark.range(0, 1000, 1, 4)
+        .withColumn("k", F.col("id") % 10)
+        .groupBy("k")
+        .count()
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
+    wall = time.time() - t0
+    n_stages, stage_sec = jvmseam.stage_census(spark, marker)
+    assert n_stages >= 2, n_stages
+    assert 0 < stage_sec <= wall, (stage_sec, wall)
+
+
+def test_union_length_counts_overlap_once():
+    """The census's stage time is the union of the stages' active
+    intervals, so concurrent stages are counted once."""
+    from mbgspark.jvmseam import union_length
+
+    assert union_length([]) == 0.0
+    assert union_length([(0.0, 1.0), (2.0, 4.0)]) == 3.0  # disjoint: sum
+    assert union_length([(0.0, 2.0), (1.0, 3.0)]) == 3.0  # overlapping
+    assert union_length([(0.0, 5.0), (1.0, 2.0)]) == 5.0  # nested
+    assert union_length([(0.0, 1.0), (1.0, 2.0)]) == 2.0  # touching
+    assert union_length([(4.0, 6.0), (0.0, 1.0), (0.5, 2.0)]) == 4.0  # unsorted

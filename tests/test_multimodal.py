@@ -1,15 +1,9 @@
 """Multimodal binary-column plumbing: decode gating, frame sampling shape,
-and the JVM-only stats pass vs the Python path agreeing byte-for-byte."""
+and the real stdlib PNG decode path."""
 
 import pytest
-from pyspark.sql import functions as F
 
-from mbgspark.operators.multimodal import (
-    binary_stats,
-    decode_image,
-    extract_features,
-    frame_sample,
-)
+from mbgspark.operators.multimodal import decode_image, frame_sample
 
 
 def _media(spark):
@@ -35,32 +29,6 @@ def test_frame_sample_shape(spark):
     # 3000 bytes -> ceil fake frame count 3; 5 bytes -> 1 frame
     assert by_id[1] == [0, 1, 2]
     assert by_id[2] == [0]
-
-
-def test_binary_stats_matches_python_path(spark):
-    media = _media(spark)
-    jvm = {
-        r["media_id"]: (r["n_bytes"], r["content_hash"])
-        for r in binary_stats(media).collect()
-    }
-    py = {
-        r["media_id"]: (r["n_bytes"], r["content_hash"])
-        for r in extract_features(media).collect()
-    }
-    assert jvm == py
-    assert jvm[2][0] == 5
-
-
-def test_resize_media_exact_output_size(spark):
-    from mbgspark.operators.multimodal import resize_media
-
-    out = {
-        r["media_id"]: r
-        for r in resize_media(_media(spark), width=4, height=3).collect()
-    }
-    assert len(out[1]["content"]) == 12 and len(out[2]["content"]) == 12
-    assert out[2]["content"] == (b"hello" * 3)[:12]  # deterministic cycle
-    assert (out[1]["width"], out[1]["height"]) == (4, 3)
 
 
 def test_real_decode_matches_fake_contract_when_pil_present(spark):
@@ -224,44 +192,6 @@ def test_real_decode_runs_ungated_on_stdlib_png(spark):
     row = real.collect()[0]
     assert row["feat"] == feats
     assert row["n_bytes"] == len(png)
-
-
-def test_real_audio_decode_runs_ungated_on_stdlib_wav(spark):
-    """decode_audio's real path executes IN THIS CONTAINER via the stdlib
-    wave tier: a struct-built 16-bit PCM WAV produces exactly computable
-    features (a known square wave), deterministic, with the loud fake-path
-    raise preserved for non-WAV bytes."""
-    import io
-    import struct
-    import wave
-
-    import pytest
-
-    from mbgspark.operators.multimodal import decode_audio
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(8000)
-        # 4-sample square wave at half scale: +16384 +16384 -16384 -16384
-        wf.writeframes(struct.pack("<4h", 16384, 16384, -16384, -16384))
-    wav = buf.getvalue()
-
-    f = decode_audio(wav, fake=False)
-    assert len(f) == 8
-    assert abs(f[0] - (4 / 8000) / 3600.0) < 1e-12  # duration
-    assert abs(f[1] - 8000 / 48000.0) < 1e-12  # sample rate
-    assert abs(f[2] - 1 / 8.0) < 1e-12  # channels
-    assert abs(f[3] - 0.5) < 1e-9  # mean |amp| of half-scale square
-    assert abs(f[4] - 0.5) < 1e-9  # RMS of a square wave = its amplitude
-    assert abs(f[5] - 0.5) < 1e-9  # peak
-    assert abs(f[6] - 1 / 3) < 1e-9  # one crossing among 3 transitions
-    assert decode_audio(wav, fake=False) == f  # deterministic
-    with pytest.raises(NotImplementedError, match="fake=True"):
-        decode_audio(b"not audio at all", fake=False)
-    # fake oracle path unchanged: bytes-derived, 8-dim
-    assert len(decode_audio(wav, fake=True)) == 8
 
 
 def test_corrupt_png_surfaces_documented_value_error():

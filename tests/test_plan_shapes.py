@@ -591,9 +591,11 @@ def test_tfidf_cosine_capped_blocking_is_equijoins_no_cartesian(spark):
 
 
 def test_plan_lint_clean(spark):
-    """The whole catalog stays free of the four lint anti-patterns
-    (cartesians, row-at-a-time Python, scan-fed global sorts, non-anchor
-    unlisted BNLJs) — tools/plan_lint.py run in-process over every entry.
+    """The whole catalog stays free of the lint anti-patterns (cartesians,
+    row-at-a-time Python, scan-fed global sorts and windows, non-anchor
+    unlisted BNLJs, per-pair and per-element recomputes, sort-class
+    aggregates outside the allowlist) — tools/plan_lint.py run in-process
+    over every entry.
     A new catalog query with any of these shapes fails here, not in a
     future round's manual audit."""
     import sys
@@ -911,48 +913,54 @@ def test_plan_lint_flags_scanfed_global_window(spark):
     ] == []
 
 
-def test_agg_audit_classifies_sort_class_aggregates(spark):
-    """tools/agg_audit.py is the standing SortAggregate detector (r12):
-    a NEW sort-class aggregate outside the audited allowlist must be
-    reported as unexplained; inherent packings (collect_list) and
-    allowlisted rows pass. Pins the classifier on constructed frames
-    plus a catalog spot-check (full-catalog run is a tool invocation:
-    `python tools/agg_audit.py` -> exit 1 on unexplained)."""
+def test_plan_lint_flags_sort_aggregate(spark):
+    """The sort-aggregate rule (the r12 SortAggregate detector) actually
+    FIRES: a NEW sort-class aggregate outside the audited allowlist is a
+    finding; inherent packings (collect_list) and allowlisted rows are
+    counted as allowlisted instead. The whole-catalog run is
+    test_plan_lint_clean."""
     import sys
 
     from pyspark.sql import functions as F
 
     sys.path.insert(0, TOOLS)
-    import agg_audit
+    import plan_lint
 
     orders = spark.read.parquet(f"{SF}/orders.parquet")
+
+    # min over a string column = immutable buffer -> sort-class -> flags;
+    # count over the same grouping = codegen HashAggregate -> clean
+    bad = orders.groupBy("o_custkey").agg(F.min("o_orderpriority").alias("m"))
+    finds = plan_lint.lint_plan(bad, "neg")
+    assert finds and all("neg: sort-aggregate" in f for f in finds), finds
+    good = orders.groupBy("o_custkey").agg(F.count("o_orderpriority").alias("n"))
+    allowed: list[str] = []
+    assert plan_lint.lint_plan(good, "ok", allowed) == [] and allowed == []
 
     # min over a struct = SortAggregate, not in any allowlist -> flags
     bad = orders.groupBy("o_custkey").agg(
         F.min(F.struct("o_orderpriority", "o_orderkey")).alias("b")
     )
-    u, e = agg_audit.classify("some_new_query", bad)
-    assert u and "SortAggregate" in u[0], (u, e)
+    finds = plan_lint.lint_plan(bad, "some_new_query")
+    assert finds and "SortAggregate" in finds[0], finds
 
-    # collect_list is inherent wherever it appears -> explained
+    # collect_list is inherent wherever it appears -> allowlisted
     packing = orders.groupBy("o_custkey").agg(
         F.collect_list("o_orderstatus").alias("v")
     )
-    u, e = agg_audit.classify("some_new_query", packing)
-    assert not u and e, (u, e)
+    allowed = []
+    assert plan_lint.lint_plan(packing, "some_new_query", allowed) == []
+    assert allowed, allowed
 
     # numeric min = codegen HashAggregate -> no sort-class nodes at all
     good = orders.groupBy("o_custkey").agg(F.min("o_orderkey").alias("m"))
-    u, e = agg_audit.classify("some_new_query", good)
-    assert not u and not e, (u, e)
+    allowed = []
+    assert plan_lint.lint_plan(good, "some_new_query", allowed) == []
+    assert allowed == []
 
     # catalog spot-check: the reshaped minhash row's only sort-class
     # aggregate is the candidate-restricted collect_list packing
-    from mbgspark.plans.catalog import CATALOG
-
-    u, e = agg_audit.classify(
-        "dedup_minhash_lsh",
-        CATALOG["dedup_minhash_lsh"][0](spark, SF),
-    )
-    assert not u, u
-    assert all("collect_list" in line for line in e), e
+    allowed = []
+    df = CATALOG["dedup_minhash_lsh"][0](spark, SF)
+    assert plan_lint.lint_plan(df, "dedup_minhash_lsh", allowed) == []
+    assert allowed and all("collect_list" in line for line in allowed), allowed

@@ -1,4 +1,6 @@
-"""Time the DuckDB oracles of the HEADLINE bench queries at a given SF dir.
+"""Time the DuckDB oracles of catalog queries (default: the HEADLINE bench
+set) at a given SF dir — the one home of oracle timing; tools/row_bench.py
+times the Spark side of any row.
 
 The bench bar is "Spark within ~2x of the driver's DuckDB oracle at the
 same SF" (VERDICT r4/r5 protocol), and VERDICT r5 item 7 asks for a
@@ -12,13 +14,13 @@ OS page cache matters at sf1), then BEST-OF-3 timed passes per query
 (VERDICT r13 #7: single-pass oracle numbers swung 6.58 s vs 9.27 s on
 locate_full_dim at the same SF purely from neighbor load, making the
 recorded Spark/oracle ratio noisy from the ORACLE side; min-of-3 is the
-same noise discipline bench.py applies to the Spark side). Headline
-queries with no SQL oracle (intentionally approximate ops) are skipped
-and listed.
+same noise discipline bench.py applies to the Spark side). Queries
+with no SQL oracle (intentionally approximate ops) are skipped and
+listed.
 
 Usage: python tools/bench_oracle.py [sf_dir] [names...]
-  # default sf_dir /root/testdata/sf0.1; names subset HEADLINE (isolated
-  # mode, mirroring bench.py's) — no names = the full headline set
+  # sf_dir defaults to the sf0.1 test corpus; names: any CATALOG rows (a
+  # name not in CATALOG exits with an error) — no names = the headline set
 Prints one JSON line: {"oracle_total": s, "queries": {...}, "skipped": [...]}.
 """
 
@@ -38,14 +40,14 @@ from tools.parity import duck_connection
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    subset = [a for a in sys.argv[2:] if a in set(HEADLINE)]
-    unknown = [a for a in sys.argv[2:] if a not in set(HEADLINE)]
+    names = sys.argv[2:] or HEADLINE
+    unknown = [n for n in names if n not in CATALOG]
     if unknown:
-        sys.stderr.write(f"bench_oracle: not in HEADLINE, ignoring {unknown}\n")
+        sys.exit(f"bench_oracle: not in CATALOG: {unknown}")
     con = duck_connection(sf_dir)
     timings: dict[str, float] = {}
     skipped: list[str] = []
-    for name in subset or HEADLINE:
+    for name in names:
         sql = CATALOG[name][1]
         if sql is None:
             skipped.append(name)

@@ -50,7 +50,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from mbgspark.operators.skew import salted_count_distinct, salted_join
-from mbgspark.session import ensure_session_conf, get_spark
+from mbgspark.session import get_spark
 
 HOT_KEY = 1  # an existing custkey in every make_sf1 corpus (copy 0)
 
@@ -78,7 +78,6 @@ def main() -> None:
     orders_path = build_skewed_orders(src, skew_dir)
 
     spark = get_spark("key_skew_octave")
-    ensure_session_conf(spark)
     spark.sparkContext.setLogLevel("ERROR")
 
     def orders():

@@ -37,7 +37,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from shuffle_ledger import ledger_for  # noqa: E402
 
 from mbgspark.plans.catalog import CATALOG  # noqa: E402
-from mbgspark.session import ensure_session_conf, get_spark  # noqa: E402
+from mbgspark.session import get_spark  # noqa: E402
 
 
 def main() -> int:
@@ -62,7 +62,6 @@ def main() -> int:
         sys.exit(f"ledger_scaling: not in CATALOG: {unknown}")
 
     spark = get_spark("ledger_scaling")
-    ensure_session_conf(spark)
     spark.sparkContext.setLogLevel("ERROR")
 
     rows: dict[str, list[dict]] = {n: [] for n in names}

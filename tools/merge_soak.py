@@ -62,7 +62,7 @@ from pyspark.sql import functions as F
 
 from mbgspark.io import retention_sweep
 from mbgspark.jvmseam import app_shuffle_write_records, last_stage_id
-from mbgspark.session import ensure_session_conf, get_spark
+from mbgspark.session import get_spark
 from mbgspark.streaming import start_merge_sink
 
 
@@ -166,10 +166,9 @@ def main() -> None:
     batches = int(sys.argv[2]) if len(sys.argv) > 2 else 8
     mrpf = int(sys.argv[3]) if len(sys.argv) > 3 else 5_000
 
+    # get_spark pins non-ANSI: the content checksum SUMs xxhash64 values,
+    # which must wrap, not raise
     spark = get_spark("merge_soak")
-    # non-ANSI like every engine entry point: the content checksum SUMs
-    # xxhash64 values, which must wrap, not raise
-    ensure_session_conf(spark)
     spark.sparkContext.setLogLevel("ERROR")
     shutil.rmtree(BASE, ignore_errors=True)
     src, store, ck = f"{BASE}/src", f"{BASE}/store", f"{BASE}/ck"

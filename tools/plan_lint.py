@@ -63,6 +63,44 @@ SF-invariant in shape for these rules) and flags:
                      is free; recomputing one is not. Subtrees inside an
                      ``aggregate()`` FINISH lambda are exempt (the finish
                      function runs once per ROW, not per element).
+- ``sort-aggregate``  a SortAggregate / ObjectHashAggregate outside the
+                     audited allowlist (r12 SortAggregate detector). An
+                     aggregate whose buffer type is immutable (strings,
+                     structs) cannot use whole-stage-codegen HashAggregate;
+                     it plans as ObjectHashAggregate — whose sort-based
+                     fallback (128-key default threshold) degenerates to a
+                     full partition sort — or directly as SortAggregate. On
+                     unbounded input that is a sort of EVERY row per
+                     aggregation pass (the 939 MB/pass minhash spill; the
+                     explode-path first-match argmin). Both were fixed by a
+                     numeric twin: min over a 60-bit window / min(order) +
+                     broadcast join-back. INHERENT uses are allowlisted
+                     (audited by hand in r12 — see NOTES_r12.md "aggregate
+                     sweep"):
+
+                     - list/set packing: collect_list / collect_set (the
+                       data IS the list);
+                     - exact percentiles (ObjectHash is Spark's
+                       exact-percentile home);
+                     - HLL sketches (typed-imperative by design);
+                     - first(...) inside the count-distinct EXPAND rewrite
+                       (post-aggregate rows, bounded by group count);
+                     - argmax/argmin over struct keys on inputs bounded by
+                       construction (keep_best pair sets, SCD2 dims, ANN
+                       probe assignments, label_noise's per-split winner);
+                     - exact min/max of full-width hex keys /
+                       dates-in-structs where no numeric isomorphism exists
+                       (corpus_shuffle_shards' 128-bit shard boundaries,
+                       scd2 validity structs, the profiler's
+                       arbitrary-string column min/max inside grouping
+                       sets).
+
+                     A NEW sort-class aggregate outside the allowlist
+                     flags: either give it a numeric twin (the
+                     minhash/argmin playbook) or, if it is genuinely
+                     inherent AND its input is bounded, extend ``_ALLOW``
+                     with a comment saying why. The summary line counts
+                     the allowlisted ones.
 
 Exit 1 on any finding. Run: ``python tools/plan_lint.py [sf_dir] [names...]``.
 Pinned green by tests/test_plan_shapes.py::test_plan_lint_clean.
@@ -71,6 +109,7 @@ Pinned green by tests/test_plan_shapes.py::test_plan_lint_clean.
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -103,6 +142,52 @@ BNLJ_ALLOWED = {
     "chi2_lang_source",  # expected-count grid: |langs|×|sources| marginals
     "rolling_distinct_users",  # 7-day interval join over the calendar-bounded daily-sketch frame
 }
+
+
+# sort-aggregate: function-level patterns that are inherent wherever they
+# appear
+_INHERENT_FN = re.compile(
+    r"collect_list|collect_set|percentile|hll_sketch_agg|merge_hll_sketch_agg"
+)
+
+# (query, function-substring) pairs audited as bounded-input/inherent (r12)
+_ALLOW: set[tuple[str, str]] = {
+    ("ann_ivf_topk", "min_by"),            # probe-cell assignments, fanout-bounded
+    ("ann_ivf_kmeans_topk", "min_by"),     # same, k-means cells
+    ("cardinality_sketch_users", "count(distinct"),  # rides the hll agg node
+    ("corpus_shuffle_shards", "min(shuffle_key"),    # exact 128-bit shard bounds
+    ("corpus_shuffle_shards", "max(shuffle_key"),
+    ("dedup_embedding_keep_best", "max_by"),  # near-dup cluster rows, pair-bounded
+    ("dedup_semantic_keep_best", "max_by"),
+    ("label_noise", "max_by"),             # per-(split,label) winners, group-bounded
+    ("profile_orders", "first("),          # count-distinct EXPAND, post-agg rows
+    ("profile_orders", "min(o_"),          # arbitrary-column profiler: string
+    ("profile_orders", "max(o_"),          #   min/max has no numeric twin
+    ("profile_orders", "sum(length"),      # rides the same grouping-sets agg node
+    ("profile_orders", "count("),
+    ("scd2_customer_dim", "max(struct"),   # SCD2 dim build, dim-bounded
+    ("scd2_asof_revenue", "max("),         # as-of validity struct, dim-bounded
+    ("user_features", "max_by"),           # last-event argmax; local sort beats a
+    ("user_features", "sum("),             #   self-join back into events (audited)
+    ("user_features", "count("),
+    ("user_features", "max("),
+    # r13: the q10/locate_full_dim "min(struct(kw" dim-dedupe entries were
+    # pruned — the argmin join-back now guards order_col uniqueness up
+    # front (ADVICE r12) and the dedupe aggregate no longer exists.
+}
+
+
+def _sort_aggregate(node, c: str, name: str) -> tuple[str, bool]:
+    """(description, allowlisted) for one SortAggregate/ObjectHashAggregate
+    node of query ``name``."""
+    s = node.simpleString(300)
+    m = re.search(r"functions=\[([^\]]*)", s)
+    fns = m.group(1) if m else "?"
+    core = re.sub(r"partial_", "", fns)
+    allowed = bool(_INHERENT_FN.search(core)) or any(
+        q == name and pat in core for q, pat in _ALLOW
+    )
+    return f"{c[:-4]} [{core[:100]}]", allowed
 
 
 # Nodes that put an exchange (and so a re-readable materialization
@@ -309,12 +394,20 @@ def _all_leaf_paths_bounded(node) -> bool:
     return all(_all_leaf_paths_bounded(ch.apply(i)) for i in range(ch.size()))
 
 
-def lint_plan(df, name: str) -> list[str]:
+def lint_plan(df, name: str, allowlisted: list[str] | None = None) -> list[str]:
+    """Findings for one plan. Sort-class aggregates the ``sort-aggregate``
+    rule allowlists are appended to ``allowlisted`` when one is given."""
     findings: list[str] = []
     root = physical_plan_root(df)
     for node in _walk(root):
         c = _cls(node)
-        if c == "CartesianProductExec":
+        if c in ("SortAggregateExec", "ObjectHashAggregateExec"):
+            desc, allowed = _sort_aggregate(node, c, name)
+            if not allowed:
+                findings.append(f"{name}: sort-aggregate ({desc})")
+            elif allowlisted is not None:
+                allowlisted.append(f"{name}: {desc}")
+        elif c == "CartesianProductExec":
             findings.append(f"{name}: cartesian")
         elif c == "BatchEvalPythonExec":
             findings.append(f"{name}: py-row-udf")
@@ -374,14 +467,14 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
     from mbgspark.plans.catalog import CATALOG
-    from mbgspark.session import ensure_session_conf, get_spark
+    from mbgspark.session import get_spark
 
     spark = get_spark(app_name="plan-lint")
-    ensure_session_conf(spark)
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
     spark.conf.set("spark.sql.debug.maxToStringFields", "200")
     all_findings: list[str] = []
+    allowlisted: list[str] = []
     names = [n for n in CATALOG if not only or n in only]
     for name in names:
         try:
@@ -389,10 +482,13 @@ def main() -> int:
         except Exception as e:  # plan build failure is itself a finding
             all_findings.append(f"{name}: plan-build-error ({e})")
             continue
-        all_findings.extend(lint_plan(df, name))
+        all_findings.extend(lint_plan(df, name, allowlisted))
     for f in all_findings:
         print("LINT", f)
-    print(f"{len(names)} plans linted, {len(all_findings)} findings")
+    print(
+        f"{len(names)} plans linted, {len(all_findings)} findings, "
+        f"{len(set(allowlisted))} allowlisted sort-class aggregates"
+    )
     return 1 if all_findings else 0
 
 

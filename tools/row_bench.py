@@ -1,26 +1,28 @@
-"""Time arbitrary CATALOG rows (Spark + DuckDB oracle) at a given SF dir.
+"""Time arbitrary CATALOG rows on Spark at a given SF dir, with each
+timed run's stage census.
 
-bench.py / bench_oracle.py are pinned to the driver's HEADLINE set; the
-scale octaves (VERDICT r9 items 2-4: the r9-mask embedding baseline, the
-key-skew octave, the split-layout sweep) need the same protocol on
-NON-headline rows (ann_ivf_topk, label_centroids, jl_projection, ...).
-This tool generalizes the pair: for each named catalog row it
+bench.py is pinned to the driver's HEADLINE set; the scale octaves
+(VERDICT r9 items 2-4: the r9-mask embedding baseline, the key-skew
+octave, the split-layout sweep) need the same protocol on NON-headline
+rows (ann_ivf_topk, label_centroids, jl_projection, ...). For each named
+catalog row this tool warms the Spark plan at sf0.001 (JIT/codegen, per
+bench.py's rationale), then times best-of-2 at the real SF with the noop
+sink (full compute, no collect cost) — byte-for-byte the bench.py
+measurement — and reports with the best run its ``jvmseam.stage_census``:
 
-- warms the Spark plan at sf0.001 (JIT/codegen, per bench.py's rationale),
-  then times best-of-2 at the real SF with the noop sink (full compute,
-  no collect cost) — byte-for-byte the bench.py measurement;
-- warms + times the row's DuckDB oracle on the same parquet (per
-  bench_oracle.py); rows with no SQL oracle report null.
+- ``n_stages``: stages of that run that ran tasks (the AppStatusStore
+  stages after a ``jvmseam.last_stage_id`` marker taken just before it);
+- ``stage_sec``: the union of those stages' task-active intervals.
+  wall − stage_sec ≈ driver/AQE re-planning + scheduling gaps (VERDICT
+  r14 items 1/7: dedup_minhash_lsh's inter-stage gaps were ~40% of its
+  sf0.1 wall).
 
-Usage: python tools/row_bench.py [--spark-only] SF_DIR NAME [NAME...]
+DuckDB oracle timings of the same rows: ``tools/bench_oracle.py``.
+
+Usage: python tools/row_bench.py SF_DIR NAME [NAME...]
 Prints one JSON line:
-  {"sf_dir": ..., "spark": {name: s}, "oracle": {name: s|null},
-   "spark_total": s, "oracle_total": s}
-
-``--spark-only`` skips the oracle pass (all-null oracle columns): when
-only Spark-side code changed against an UNCHANGED corpus, the prior
-round's oracle column is still the measurement of record and re-paying
-a 20-minute jl_projection oracle buys nothing (r11).
+  {"sf_dir": ..., "spark": {name: s}, "n_stages": {name: n},
+   "stage_sec": {name: s}, "spark_total": s, ...}
 """
 
 from __future__ import annotations
@@ -28,25 +30,22 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import ITERATIVE, run_one
+from mbgspark.jvmseam import last_stage_id, stage_census
 from mbgspark.plans.catalog import CATALOG
 from mbgspark.session import get_spark
-from tools.parity import duck_connection
 
 WARM_DIR = "/root/testdata/sf0.001"
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if a != "--spark-only"]
-    spark_only = "--spark-only" in sys.argv[1:]
-    if len(args) < 2:
-        sys.exit("usage: row_bench.py [--spark-only] SF_DIR NAME [NAME...]")
-    sf_dir = args[0]
-    names = args[1:]
+    if len(sys.argv) < 3:
+        sys.exit("usage: row_bench.py SF_DIR NAME [NAME...]")
+    sf_dir = sys.argv[1]
+    names = sys.argv[2:]
     unknown = [n for n in names if n not in CATALOG]
     if unknown:
         sys.exit(f"row_bench: not in CATALOG: {unknown}")
@@ -69,28 +68,27 @@ def main() -> None:
             )
             missed_warm.append(name)
     spark_times: dict[str, float] = {}
+    n_stages: dict[str, int] = {}
+    stage_sec: dict[str, float] = {}
     for name in names:
-        spark_times[name] = round(min(run_one(spark, name, sf_dir) for _ in range(2)), 3)
-
-    oracle_times: dict[str, float | None] = {name: None for name in names}
-    con = None if spark_only else duck_connection(sf_dir)
-    for name in [] if spark_only else names:
-        sql = CATALOG[name][1]
-        if sql is None:
-            continue
-        con.execute(sql).fetchall()  # warm (page cache + catalog)
-        t0 = time.time()
-        con.execute(sql).fetchall()
-        oracle_times[name] = round(time.time() - t0, 3)
+        runs = []
+        for _ in range(2):
+            marker = last_stage_id(spark)
+            sec = run_one(spark, name, sf_dir)
+            runs.append((sec, *stage_census(spark, marker)))
+        sec, n, active = min(runs)
+        spark_times[name] = round(sec, 3)
+        n_stages[name] = n
+        stage_sec[name] = round(active, 3)
 
     print(
         json.dumps(
             {
                 "sf_dir": sf_dir,
                 "spark": spark_times,
-                "oracle": oracle_times,
+                "n_stages": n_stages,
+                "stage_sec": stage_sec,
                 "spark_total": round(sum(spark_times.values()), 3),
-                "oracle_total": round(sum(v for v in oracle_times.values() if v), 3),
                 "iterative_cold": sorted(set(names) & ITERATIVE),
                 "missed_warm": missed_warm,
             }

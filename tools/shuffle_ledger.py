@@ -42,7 +42,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from bench import HEADLINE
 from mbgspark.jvmseam import executed_plan_metrics
 from mbgspark.plans.catalog import CATALOG
-from mbgspark.session import ensure_session_conf, get_spark
+from mbgspark.session import get_spark
 
 KEYS = ("shuffleBytesWritten", "shuffleRecordsWritten", "spillSize", "peakMemory")
 
@@ -135,7 +135,6 @@ def main() -> int:
             {"spark.sql.adaptive.enabled": "false"} if static_plan else None
         ),
     )
-    ensure_session_conf(spark)
     spark.sparkContext.setLogLevel("ERROR")
     totals = {k: 0 for k in KEYS}
     spilled = []
