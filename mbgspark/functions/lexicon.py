@@ -8,7 +8,9 @@ null/empty text → ('neutral', 0.0) (utils.py:81-92), input truncated to 512
 chars (utils.py:85-86).  Score = matched_tokens / total_tokens (FIXTURES.md §4).
 
 Pure column expressions (no UDF): tokens via split, polarity via
-higher-order-function filters — stays in whole-stage codegen and is
+higher-order-function filters. A lambda is interpreted (``filter`` is a
+CodegenFallback expression), so the projection holding the filters runs
+outside whole-stage codegen; no Python runs per row, and the rule is
 reproducible in an ANSI-SQL oracle.
 """
 

@@ -5,18 +5,23 @@ sample dim; this module ships the reference's actual 38-province / 456-city
 dictionary (``mbgspark.locations_data``, from ``config/indonesia_locations
 .json``) flattened into one priority-ordered term table, plus
 ``locate_compiled``, the one matcher every lifecycle dictionary runs
-through: one narrow projection over constant bucketed maps — each token is
-looked up in one small map, and the multi-word regexp verifies run only for
-rows holding the first word of some multi-word term; zero joins, zero
-shuffles, and a per-row cost that does not grow with the dictionary. It
-ranks the dim by dict_order (the tiered order encodes the reference's
-break structure — see build_full_locations_dim).
+through: one narrow projection whose dictionary is data — three folded
+constants (term ranks, multi-word candidates, hit rows), not code — so
+the plan Catalyst re-optimizes on every micro-batch is the same size for
+any dictionary. Each token is looked up in one small bucket map, and the
+multi-word regexp verifies run only for rows holding the first word of
+some multi-word term; zero joins, zero shuffles, and a per-row cost that
+does not grow with the dictionary. It ranks the dim by dict_order (the
+tiered order encodes the reference's break structure — see
+build_full_locations_dim).
 
 Matching semantics flattened from ``detect_location_from_text``
 (utils.py:336-437) — see ``build_full_locations_dim``.
 """
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -215,14 +220,19 @@ def _sql_str(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+def _const(value, ddl: str) -> str:
+    """SQL for one constant of type ``ddl`` holding ``value``:
+    ``from_json`` over a string literal. The analyzed plan carries two
+    nodes however large ``value`` is, and ConstantFolding turns them into
+    one ``Literal`` before the plan runs."""
+    return f"from_json({_sql_str(json.dumps(value))}, {_sql_str(ddl)})"
+
+
 # Single-word terms, and the first words of multi-word terms, are probed
-# through LOCATE_BUCKETS small map literals picked by a key that Python
-# (for the terms) and Spark SQL (for the tokens) compute alike: len/ord and
+# through LOCATE_BUCKETS small maps picked by a key that Python (for the
+# terms) and Spark SQL (for the tokens) compute alike: len/ord and
 # length/ascii all count Unicode code points.
 LOCATE_BUCKETS = 64
-# the one entry of an otherwise empty bucket map: tokens are split on ' ',
-# so no token can equal a key holding a space
-EMPTY_BUCKET_KEY = " "
 
 
 def locate_bucket(token: str) -> int:
@@ -230,18 +240,20 @@ def locate_bucket(token: str) -> int:
     return (len(token) * 31 + (ord(token[0]) if token else 0)) % LOCATE_BUCKETS
 
 
-def _bucket_probe(entries: dict[str, int], var: str) -> str:
-    """SQL for ``entries[var]`` (NULL when absent) as an O(1) bucket pick
-    from a constant array of small maps, then a scan of that one map."""
-    buckets: list[list[str]] = [[] for _ in range(LOCATE_BUCKETS)]
+def _buckets(entries: dict) -> list[dict]:
+    """``entries`` split into the LOCATE_BUCKETS maps ``_bucket_probe``
+    picks from (an empty bucket is an empty map)."""
+    buckets: list[dict] = [{} for _ in range(LOCATE_BUCKETS)]
     for k, v in entries.items():
-        buckets[locate_bucket(k)].append(f"{_sql_str(k)},{v}")
-    maps = ",".join(
-        "map(" + (",".join(b) or f"{_sql_str(EMPTY_BUCKET_KEY)},0") + ")"
-        for b in buckets
-    )
+        buckets[locate_bucket(k)][k] = v
+    return buckets
+
+
+def _bucket_probe(table: str, var: str) -> str:
+    """SQL for ``var``'s value in the bucketed constant ``table`` (NULL
+    when absent): an O(1) pick of one small map, then a lookup in it."""
     key = f"pmod(length({var}) * 31 + ascii({var}), {LOCATE_BUCKETS}) + 1"
-    return f"element_at(element_at(array({maps}), {key}), {var})"
+    return f"element_at(element_at({table}, {key}), {var})"
 
 
 def locate_compiled(
@@ -250,66 +262,62 @@ def locate_compiled(
     fact_id: str,
     text_col: str,
 ) -> DataFrame:
-    """First-match location detection compiled to ONE narrow projection —
-    zero joins, zero shuffles. Every dim row is ranked (``_ranked``), the
-    first match is the least matching rank, and its cost per row is
-    O(tokens), not O(tokens × dictionary):
+    """First-match location detection as ONE narrow projection — zero
+    joins, zero shuffles. Every dim row is ranked (``_ranked``), the first
+    match is the least matching rank, and its cost per row is O(tokens),
+    not O(tokens × dictionary). The dictionary is data: three constants
+    (``_const``), so the plan is the same size for 12 terms or 602.
 
     - single-word terms: each token of the translate-punctuation form
-      (the reference's \\b boundary, see ``token_form``) is probed in a
-      bucketed map literal (``_bucket_probe``: an O(1) key picks one of
-      ``LOCATE_BUCKETS`` maps of ~7 terms each, in place of a linear scan
-      of all 466);
+      (the reference's \\b boundary, see ``token_form``) is probed in the
+      bucketed ``array<map<string,int>>`` term → rank table
+      (``_bucket_probe``);
     - multi-word terms: ``__fw`` keeps the tokens that begin some
-      multi-word term (the same bucketed probe). Rows where it is empty —
-      most rows — skip every multi-word branch. Otherwise each first word
-      present gates its own terms' ``IF(contains(s, term), IF(last-word
-      token guard AND s RLIKE '\\bterm\\b', rank, NULL), NULL)``
-      branches. The token guards (first word through the gate, last word
-      through ``array_contains(__tk, word)``) matter because Java's ASCII
-      \\b would accept a term glued to a unicode letter ('caféjakarta
-      selatan') that the reference's unicode \\b rejects (ADVICE r3);
+      multi-word term, probed in the bucketed first word → candidates
+      table. Each candidate (term, rank, last word, \\b pattern) of those
+      words is kept when ``contains(s, term)``, its last word is a token
+      (``array_contains(__tk, word)``; null when it is the first word,
+      which ``__fw`` already holds) and ``s RLIKE '\\bterm\\b'``. The
+      token guards matter because Java's ASCII \\b would accept a term
+      glued to a unicode letter ('caféjakarta selatan') that the
+      reference's unicode \\b rejects (ADVICE r3). Rows with an empty
+      ``__fw`` — most rows — have no candidates;
     - first match = ``least()`` of both minima;
-    - (province, city) is read from a constant array indexed by rank.
+    - (province, city) is read from the constant hit table by rank.
 
-    The literals live in the plan, which is sized by the dictionary: the
-    largest one in use is the reference's 602 terms."""
+    The lambdas (``transform``/``filter``) are interpreted, not
+    whole-stage codegen'd: the projection holding them runs without a
+    ``*(n)`` codegen stage."""
     ranked = _ranked(dim_rows)
     singles: dict[str, int] = {}
-    groups: dict[str, dict[str, int]] = {}
+    firsts: dict[str, dict[str, dict]] = {}
     for _p, _c, r, t in ranked:
         if " " in t:
-            groups.setdefault(t.split(" ")[0], {}).setdefault(t, r)
+            words = t.split(" ")
+            firsts.setdefault(words[0], {}).setdefault(t, {
+                "t": t,
+                "r": r,
+                "l": words[-1] if words[-1] != words[0] else None,
+                "p": _term_pattern(t),
+            })
         else:
             singles.setdefault(t, r)
-    single_min = (
-        f"array_min(transform(__tk, t -> {_bucket_probe(singles, 't')}))"
+    term_rank = _const(_buckets(singles), "array<map<string,int>>")
+    candidates = _const(
+        _buckets({w: list(c.values()) for w, c in firsts.items()}),
+        "array<map<string,array<struct<t:string,r:int,l:string,p:string>>>>",
     )
-
-    def _branch(t: str, r: int) -> str:
-        words = t.split(" ")
-        guard = f"__s RLIKE {_sql_str(_term_pattern(t))}"
-        if words[-1] != words[0]:
-            guard = f"array_contains(__tk, {_sql_str(words[-1])}) AND {guard}"
-        return f"IF(contains(__s, {_sql_str(t)}), IF({guard}, {r}, NULL), NULL)"
-
-    multi_min = "CAST(NULL AS INT)"
-    if groups:
-        gated = ",".join(
-            f"IF(array_contains(__fw, {_sql_str(w)}), array_min(array("
-            + ",".join(_branch(t, r) for t, r in terms.items())
-            + ")), NULL)"
-            for w, terms in groups.items()
-        )
-        multi_min = f"IF(size(__fw) = 0, NULL, array_min(array({gated})))"
-    first_words = {w: 1 for w in groups}
-    hits = "array(" + ",".join(
-        "named_struct('province', {p}, 'city', {c})".format(
-            p=_sql_str(p),
-            c=_sql_str(c) if c is not None else "CAST(NULL AS STRING)",
-        )
-        for p, c, _r, _t in ranked
-    ) + ")"
+    hits = _const(
+        [{"province": p, "city": c} for p, c, _r, _t in ranked],
+        "array<struct<province:string,city:string>>",
+    )
+    single_min = f"array_min(transform(__tk, t -> {_bucket_probe(term_rank, 't')}))"
+    multi_min = (
+        "array_min(transform(filter(flatten(transform(__fw, w -> "
+        f"{_bucket_probe(candidates, 'w')})), c -> contains(__s, c.t) AND "
+        "(c.l IS NULL OR array_contains(__tk, c.l)) AND __s RLIKE c.p), "
+        "c -> c.r))"
+    )
     prepped = (
         fact.withColumn("__s", prep_location_text(F.col(text_col)))
         .withColumn("__t", token_form(F.col(text_col)))
@@ -317,7 +325,7 @@ def locate_compiled(
         .withColumn(
             "__fw",
             F.expr(
-                f"filter(__tk, t -> {_bucket_probe(first_words, 't')}"
+                f"filter(__tk, t -> {_bucket_probe(candidates, 't')}"
                 " IS NOT NULL)"
             ),
         )

@@ -928,8 +928,11 @@ def tfidf_cosine_pairs(
             "id_a",
             "id_b",
             "n_shared_terms",
+            # try_divide: when every idf is 0 the norms are 0, and the
+            # cosine is NULL (the pair drops) under ANSI as well
             F.floor(
-                F.col("__dot") / (F.col("__na") * F.col("__nb")) * 1000000
+                F.try_divide(F.col("__dot"), F.col("__na") * F.col("__nb"))
+                * 1000000
                 + F.lit(0.5)
             )
             .cast("bigint")

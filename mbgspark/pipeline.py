@@ -48,7 +48,7 @@ def detect_locations(df: DataFrame, dim, id_col: str = "_id") -> DataFrame:
 
     Every dictionary, the lifecycle's 12 terms and the full 602, runs
     through ``locations.locate_compiled``: one narrow projection over
-    bucketed constant maps, O(tokens) per row, zero joins. It searches
+    three constant tables, O(tokens) per row, zero joins. It searches
     text + author name; its own text prep translates the separators
     (utils.py:358-361), so 'jakarta-selatan' matches the multi-word term.
     "location_checked" is the analog of the field EXISTING in Mongo; a
@@ -93,12 +93,9 @@ def run_etl(
     id_col: str = "_id",
     event_ts_col: str = "created_at",
 ) -> DataFrame:
-    """§3.1 transform lineage on ingested flat records: clean → locate →
-    label → event_date partition column. Caller writes via
+    """§3.1 transform lineage on ingested flat records: clean → label →
+    event_date partition column → locate. Caller writes via
     io.write_partitioned / io.merge_by_key."""
-    # locate runs LAST: its compiled dictionary expression is by far the
-    # widest tree in the plan, and every Dataset created after it re-pays
-    # analyzer time over that tree — so all narrow stages go first
     out = apply_cleaning(raw)
     out = label_sentiment(out)
     out = out.withColumn("event_date", F.date_format(event_ts_col, "yyyy-MM-dd"))

@@ -216,6 +216,32 @@ def test_tfidf_cutoff_subset_and_score_preserving(spark, docs, cutoff):
         assert score == unc[pair]
 
 
+def test_tfidf_zero_norm_pairs_same_under_ansi(spark):
+    """When every idf is 0 (every doc holds every term) the norms are 0:
+    an ANSI session must return the rows the ANSI-off session does, not
+    fail with DIVIDE_BY_ZERO."""
+    from mbgspark.operators.textstats import tfidf_cosine_pairs
+
+    d = spark.createDataFrame(
+        [(i, " ".join(ws)) for i, ws in enumerate([["alpha"], ["alpha"]])],
+        "doc_id bigint, text string",
+    )
+
+    def pairs():
+        out = tfidf_cosine_pairs(d, "doc_id", "text", k=3, min_cos_e6=1)
+        return sorted(map(tuple, out.collect()))
+
+    prior = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        off = pairs()
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+        on = pairs()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prior)
+    assert on == off
+
+
 @given(
     n=st.integers(1, 10_000_000),
     dim=st.sampled_from([4, 8, 16, 64, 256]),

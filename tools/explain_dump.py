@@ -43,16 +43,20 @@ ANNOTATED = {
     "exchange and emits pairs row-locally (r14 — replaces the band "
     "self-join); nothing in the plan is a CartesianProduct — pair volume "
     "is governed by banding and the bucket cap, not corpus²",
-    "etl_lifecycle": "the whole clean → locate → label lifecycle is ONE "
-    "codegen'd map (locate is the compiled constant-map projection, no "
-    "join) followed by a single aggregation shuffle; the leading "
-    "round-robin exchange is the test-SF width fix (small-file scan = 2 "
-    "splits), not part of the shape",
-    "locate_full_dim": "the full 602-term dictionary locate compiled to one "
-    "narrow projection: constant-folded term→order map probed per token + "
-    "a contains() branch array for multi-word terms — zero joins, zero "
-    "shuffles before the final sort; the lifecycle's detect_locations runs "
-    "the same matcher",
+    "etl_lifecycle": "the whole clean → label → locate lifecycle is ONE "
+    "narrow chain of projections (locate is the constant-table projection, "
+    "no join; the lexicon filters and the locate lambdas are interpreted, "
+    "so their projections sit outside whole-stage codegen) followed by a "
+    "single aggregation shuffle; the leading exchange (hash on _id) is "
+    "the test-SF width fix (small-file scan = 2 splits), not part of the "
+    "shape",
+    "locate_full_dim": "the full 602-term dictionary locate as one narrow "
+    "projection over three folded constants (bucketed term→rank maps "
+    "probed per token, bucketed first-word→multi-word candidates checked "
+    "by contains + \\b RLIKE, hit rows read by rank) — the plan is the "
+    "same size for any dictionary; zero joins, and no shuffle but the "
+    "test-SF width exchange and the final sort; the lifecycle's "
+    "detect_locations runs the same matcher",
     "exists_shipped_priority": "correlated EXISTS planned as a LEFT SEMI "
     "join — one pass per side, the quarter filter pushed to the orders scan",
     "cust_order_histogram": "two cascaded aggregations; the second operates "
