@@ -377,7 +377,8 @@ def merge_by_key(
     partitions and the isin filter lands as a PartitionFilter on the store
     scan (plan-pinned). The returned frame then only covers touched
     partitions — pair with dynamic partition overwrite, exactly like the
-    sink.
+    sink — and its partition column has the updates' type, with or
+    without ANSI.
 
     Passing ``partition_col`` makes plan CONSTRUCTION eager: the touched
     partition values are collect()ed here (one tiny distinct over the
@@ -394,7 +395,15 @@ def merge_by_key(
         pred = F.col(partition_col).isin(non_null)
         if len(non_null) < len(touched):
             pred = pred | F.col(partition_col).isNull()
-        existing = existing.filter(pred)
+        # A store read infers its partition column's type (a day string
+        # reads back as DATE) while the updates carry the written type;
+        # without ANSI the union widens both to STRING, under ANSI it
+        # narrows to DATE. Cast to the updates' type AFTER the filter, so
+        # the filter stays on the raw column and prunes at the scan.
+        existing = existing.filter(pred).withColumn(
+            partition_col,
+            F.col(partition_col).cast(updates.schema[partition_col].dataType),
+        )
     ex = existing.withColumn("__is_update", F.lit(0))
     up = updates.withColumn("__is_update", F.lit(1))
     w = Window.partitionBy(key).orderBy(

@@ -795,73 +795,3 @@ def domain_cap(
         df.withColumn("domain_rank", F.row_number().over(w).cast("bigint"))
         .filter(F.col("domain_rank") <= cap)
     )
-
-
-def curate_neardup_observed(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.6,
-    max_bucket_size: int = 1000,
-    k: int = 3,
-    num_hashes: int = 8,
-    bands: int = 4,
-):
-    """The default near-dup curation lineage WITH drop observability wired
-    in (VERDICT r4 item 4): exact dedup (md5 fingerprint, keep lowest id)
-    → MinHash+LSH near-dup pair generation under the ``max_bucket_size``
-    skew cap → survivors (id_b of every verified pair dropped, keep-first
-    greedy — the batch convention). Returns ``(survivors, observation)``.
-
-    The cap's silent-drop trade-off (ADVICE r3) is closed here without
-    opt-in plumbing: the bucket-size aggregate the cap computes anyway
-    collapses to a ONE-ROW global metrics frame (``metrics_out``), which
-    is crossJoined — broadcast, ×1 cardinality — into the survivors
-    lineage and ``observe()``d there, so ``observation.get`` — read
-    after any action on the survivors — reports ``oversized_buckets`` /
-    ``oversized_rows`` as a side effect of the run itself, the
-    ``observed_ingest`` pattern. The global-agg + crossJoin shape is
-    deliberate: a global aggregate emits exactly one row even on empty
-    input, so AQE's empty-relation propagation can never fold the
-    metrics subtree away — observing the bucket frame inside the pair
-    plan instead (the first implementation) silently lost the metrics
-    whenever the candidate join or the drop anti-join came up
-    runtime-empty, i.e. precisely on the clean corpora that should
-    report zero. A mega-cluster of near-identical (non-exact) texts that
-    blows past the cap therefore shows up in the pipeline's own metrics
-    instead of vanishing; exact mega-clusters never reach LSH (the
-    fingerprint stage collapses them first, which has no quadratic
-    step). Edge (ADVICE r5): if the action's result is zero survivor
-    rows the crossJoin itself is empty-folded and the metrics never
-    arrive — the returned handle is a ``ResilientObservation``, whose
-    ``.get`` detects that case (JVM ``getRowOrEmpty`` probe) and
-    evaluates the one-row metrics aggregate directly, so a fully-empty
-    curation still reports true counts instead of an opaque assertion."""
-    from mbgspark.operators.dedup import minhash_near_dups, observe_oversized
-
-    w = Window.partitionBy(F.md5(F.lower(F.trim(F.col(text_col))))).orderBy(
-        id_col
-    )
-    uniq = (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    metrics: list[DataFrame] = []
-    pairs = minhash_near_dups(
-        uniq,
-        id_col,
-        text_col,
-        k=k,
-        num_hashes=num_hashes,
-        bands=bands,
-        threshold=threshold,
-        max_bucket_size=max_bucket_size,
-        metrics_out=metrics,
-    )
-    drop_ids = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return observe_oversized(
-        uniq.join(drop_ids, id_col, "left_anti"),
-        metrics[0],
-        "curation_neardup_metrics",
-    )

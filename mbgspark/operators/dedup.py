@@ -364,7 +364,6 @@ def lsh_candidate_pairs(
     bands: int = 4,
     rows_per_band: int = 2,
     max_bucket_size: int | None = 1000,
-    on_oversized=None,
     metrics_out: list | None = None,
 ) -> DataFrame:
     """Band the signature; docs sharing any band bucket become candidate pairs.
@@ -394,21 +393,22 @@ def lsh_candidate_pairs(
     keep the cap.
 
     Dropping is silent by design inside this LAZY plan (a warning would
-    need an action); to make drops observable without a second
-    band-row pass, pass ``on_oversized`` — a callable that receives the
-    (band_idx, band_key, bucket_n) monitoring lineage (the same frame
-    ``lsh_oversized_buckets`` returns) so the caller can count/log/route
-    it in its own action (ADVICE r3). Mega-clusters of IDENTICAL text are
-    not lost either way: exact dedup runs before LSH in the curation
-    pipeline; what the cap skips is near-identical (non-exact) clusters
-    above the cap, which is why production pipelines should monitor.
+    need an action); drops are made observable through two channels
+    (ADVICE r3). ``metrics_out`` carries the COUNTS on the caller's own
+    action, with no second band-row pass; ``lsh_oversized_buckets``
+    names WHICH buckets were dropped, (band_idx, band_key, bucket_n), in
+    a pass of its own, so the caller can log them or route their members
+    to exact dedup. Mega-clusters of IDENTICAL text are not lost either
+    way: exact dedup runs before LSH in the curation pipeline; what the
+    cap skips is near-identical (non-exact) clusters above the cap, which
+    is why production pipelines should monitor.
 
     ``metrics_out`` (VERDICT r4 item 4) is the zero-extra-pass monitoring
     channel: pass a list and a ONE-ROW metrics DataFrame —
     ``(oversized_buckets, oversized_rows)``, a global aggregate over the
     bucket-size frame the cap computes anyway — is appended for the
-    caller to fold into its own output lineage (crossJoin the broadcast
-    row, or ``observe()`` it; see ``curation.curate_neardup_observed``).
+    caller to fold into its own output lineage (``observe_oversized``
+    crossJoins the broadcast row and ``observe()``s it).
     A global aggregate is the one shape that survives AQE: its output is
     exactly one row even on empty input, so empty-relation propagation
     can never fold it away — whereas observing the pre-filter bucket
@@ -419,7 +419,7 @@ def lsh_candidate_pairs(
     notwithstanding."""
     eligible = _capped_bucket_rows(
         _lsh_band_rows(signatures, id_col, bands, rows_per_band),
-        max_bucket_size, on_oversized, metrics_out, signatures.sparkSession,
+        max_bucket_size, metrics_out, signatures.sparkSession,
     )
     # Pair generation (r14): pack each eligible bucket's ids into ONE
     # sorted array (a collect_list bounded by the cap when one is set —
@@ -455,13 +455,12 @@ def lsh_candidate_pairs(
 def _capped_bucket_rows(
     band_rows: DataFrame,
     max_bucket_size: int | None,
-    on_oversized,
     metrics_out: list | None,
     spark,
 ) -> DataFrame:
     """The band rows of buckets with 2 <= n <= cap (n >= 2 when the cap
     is None), with the oversized-bucket monitoring of
-    ``lsh_candidate_pairs`` (``on_oversized``, ``metrics_out``) —
+    ``lsh_candidate_pairs`` (``metrics_out``) —
     single-sourced so the candidate and incremental paths can't drift.
 
     Bucket sizes via a KEYED WINDOW over the one band exchange, not a
@@ -498,12 +497,6 @@ def _capped_bucket_rows(
                 " AS oversized_buckets",
                 "CAST(count(1) AS BIGINT) AS oversized_rows",
             )
-        )
-    if on_oversized is not None:
-        on_oversized(
-            over.selectExpr(
-                "band_idx", "band_key", "CAST(__n AS BIGINT) AS bucket_n"
-            ).distinct()
         )
     return counted.filter(f"__n >= 2 AND __n <= {max_bucket_size}").drop("__n")
 
@@ -773,7 +766,6 @@ def minhash_near_dups(
     bands: int = 4,
     threshold: float = 0.6,
     max_bucket_size: int | None = 1000,
-    on_oversized=None,
     metrics_out: list | None = None,
 ) -> DataFrame:
     """Full MinHash+LSH near-dup pipeline: shingle → signature → band buckets →
@@ -816,8 +808,7 @@ def minhash_near_dups(
     sig = minhash_signature(shingled, id_col, num_hashes)
     pairs = lsh_candidate_pairs(
         sig, id_col, bands, num_hashes // bands,
-        max_bucket_size=max_bucket_size, on_oversized=on_oversized,
-        metrics_out=metrics_out,
+        max_bucket_size=max_bucket_size, metrics_out=metrics_out,
     )
     # Build shingle arrays only for docs that appear in a candidate pair:
     # the row-local array map is filtered by a semi-join on the candidate
@@ -887,7 +878,6 @@ def minhash_near_dups_incremental(
     bands: int = 4,
     threshold: float = 0.6,
     max_bucket_size: int | None = 1000,
-    on_oversized=None,
     metrics_out: list | None = None,
     corpus_index: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
@@ -901,7 +891,8 @@ def minhash_near_dups_incremental(
     doc; match_source is 'corpus' (id_b in corpus) or 'batch' (batch-
     internal pair, id_a < id_b). Ids SHOULD be disjoint across sides;
     an id present in both pairs with itself (jaccard 1.0) and is
-    reported as a corpus match — the streaming near-dup gate relies on
+    reported as a corpus match — the streaming near-dup gate's
+    ``probe_minhash_index`` (pinned equal to this operator) relies on
     exactly this for replay idempotence (a re-delivered doc matches its
     stored copy and is rejected).
 
@@ -911,8 +902,11 @@ def minhash_near_dups_incremental(
     corpus — so per-batch cost is ~|batch| x bucket-overlap, independent
     of corpus pair volume. At production scale the corpus band rows and
     shingle arrays are a persisted index (write them once per ingest with
-    the batch's own signatures: the 'index' IS this lineage materialized);
-    recomputing them here keeps the operator self-contained for the gate.
+    the batch's own signatures: the 'index' IS this lineage materialized,
+    and the streaming gate probes exactly that with
+    ``probe_minhash_index``); recomputing them here keeps the operator
+    self-contained for one-shot checks such as the ``dedup_incremental``
+    catalog row.
     The ``max_bucket_size`` skew guard counts the COMBINED (batch+corpus)
     bucket population: a viral corpus bucket joined by even one batch row
     would otherwise emit bucket_n pairs per batch doc."""
@@ -955,7 +949,6 @@ def minhash_near_dups_incremental(
         c_bands,
         id_col,
         max_bucket_size=max_bucket_size,
-        on_oversized=on_oversized,
         metrics_out=metrics_out,
         spark=batch.sparkSession,
     )
@@ -968,7 +961,6 @@ def incremental_candidate_pairs(
     c_bands: DataFrame,
     id_col: str,
     max_bucket_size: int | None = 1000,
-    on_oversized=None,
     metrics_out: list | None = None,
     spark=None,
 ) -> DataFrame:
@@ -990,7 +982,7 @@ def incremental_candidate_pairs(
     # joined by even one batch row would emit bucket_n pairs per doc. The
     # n >= 2 filter drops singleton buckets before the join.
     band_rows = _capped_bucket_rows(
-        band_rows, max_bucket_size, on_oversized, metrics_out, spark
+        band_rows, max_bucket_size, metrics_out, spark
     )
     # ONE bucket join: batch rows against ALL rows
     a = band_rows.filter("__side = 'b'").selectExpr(
@@ -1657,14 +1649,11 @@ def embedding_near_dups(
         vec_norm(F.col(vec_col)).alias("__nb"),
     )
     if block_bits:
-        def bucket(v: Column) -> Column:
-            # sign of v[i] for the first block_bits dims — a crude but
-            # deterministic hyperplane family adequate for bucketing.
-            return F.concat_ws(
-                "", *[(F.element_at(v, i + 1) >= 0).cast("int").cast("string") for i in range(block_bits)]
-            )
-        a = a.withColumn("bk", bucket(F.col("va")))
-        b = b.withColumn("bk", bucket(F.col("vb")))
+        # signs of the first block_bits dims: a crude but deterministic
+        # hyperplane family adequate for bucketing
+        dims = list(range(block_bits))
+        a = a.withColumn("bk", _sign_bucket(F.col("va"), dims))
+        b = b.withColumn("bk", _sign_bucket(F.col("vb"), dims))
         joined = a.join(b, "bk").drop("bk")
     else:
         # CartesianProduct schedules left×right SPLIT-COUNT tasks, and the

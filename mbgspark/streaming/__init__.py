@@ -290,100 +290,6 @@ def start_etl_lifecycle_sink(
     )
 
 
-def start_neardup_gate_sink(
-    stream: DataFrame,
-    store_path: str,
-    checkpoint_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.6,
-    available_now: bool = False,
-    on_metrics=None,
-) -> StreamingQuery:
-    """Streaming near-duplicate ingest gate: each micro-batch is checked
-    against the accumulated store with ``minhash_near_dups_incremental``
-    (corpus-corpus pairs never regenerated — per-batch cost tracks the
-    batch) and against itself; only novel documents are appended. The
-    training-data composition of X5 (resumable ingest) with the
-    incremental dedup operator: a crawler feeding a 100 TB corpus admits
-    a document exactly once. Replay convergence comes from the gate
-    itself, not the sink: a re-delivered batch's docs are exact dups of
-    their already-stored copies (jaccard 1.0 ≥ any threshold), so the
-    replay appends nothing — the store is a fixpoint of the gate.
-
-    Dedup policy: a batch doc near-dupping ANY store doc is dropped; for
-    batch-internal pairs the lower id survives (greedy, matching the
-    keep-first convention of the batch dedup operators). The production
-    form is ``start_neardup_gate_sink_indexed``, which reads a persisted
-    MinHash index instead of re-reading raw text. This self-contained
-    re-read stays beside it for two reasons. It is the only gate whose
-    store is a fixpoint under a FRESH checkpoint: every batch reads the
-    whole store, so a restart that replays the source from the start
-    admits nothing twice, where the indexed gate can only refuse such a
-    restart. And it is the baseline ``tools/gate_bench.py`` measures the
-    indexed gate against.
-
-    ``on_metrics(batch_id, {"oversized_buckets": n, "oversized_rows": n})``
-    surfaces the LSH bucket-cap drops per micro-batch (VERDICT r4 item 4)
-    — the one-row global metrics frame (``metrics_out``, the
-    AQE-elimination-proof shape; see ``lsh_candidate_pairs``) is
-    crossJoined into each batch's survivors and observed there, so the
-    numbers ride the batch's own append action; a viral mega-cluster
-    arriving on the stream shows up in the gate's metrics channel the
-    batch it lands. An all-duplicates batch (routine under checkpoint
-    replay — the store is a fixpoint of the gate) appends zero rows,
-    which empty-folds the ride-along; that path falls back to evaluating
-    the metrics aggregate directly, so reported counts are always true.
-    Be honest about its cost: the aggregate's lineage is the
-    batch+corpus band-bucket frame, i.e. the same order of work as the
-    gate check itself — a zero-append batch with on_metrics wired pays
-    roughly 2× (second corpus pass in self-contained mode). Leave
-    on_metrics unset on replay-heavy deployments, or wire the persisted
-    MinHash index so both the gate and the metrics read the index
-    instead of re-shingling the store."""
-    from mbgspark.operators.dedup import (
-        incremental_drop_ids,
-        minhash_near_dups,
-        minhash_near_dups_incremental,
-        observe_oversized,
-        report_oversized,
-    )
-
-    def _gate(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_df = batch_df.dropDuplicates([id_col])
-        slim = batch_df.select(id_col, text_col)
-        metrics: list[DataFrame] = [] if on_metrics else None
-        if _store_exists(spark, store_path):
-            corpus = spark.read.parquet(store_path).select(id_col, text_col)
-            pairs = minhash_near_dups_incremental(
-                slim, corpus, id_col, text_col, threshold=threshold,
-                metrics_out=metrics,
-            )
-            drop_ids = incremental_drop_ids(pairs, id_col)
-        else:
-            pairs = minhash_near_dups(
-                slim, id_col, text_col, threshold=threshold,
-                metrics_out=metrics,
-            )
-            drop_ids = pairs.select(F.col("id_b").alias(id_col)).distinct()
-        survivors = batch_df.join(drop_ids, id_col, "left_anti")
-        handle = None
-        if on_metrics:
-            survivors, handle = observe_oversized(
-                survivors, metrics[0], f"neardup_gate_{batch_id}"
-            )
-        survivors.write.mode("append").parquet(store_path)
-        if handle is not None:
-            # a zero-append batch folds the ride-along away; the handle
-            # then evaluates the aggregate directly (TRUE capped counts;
-            # cost caveat in the docstring — this re-runs the band-bucket
-            # lineage)
-            report_oversized(handle, on_metrics, batch_id)
-
-    return _start_foreach_batch(stream, _gate, checkpoint_path, available_now)
-
-
 def start_neardup_gate_sink_indexed(
     stream: DataFrame,
     store_path: str,
@@ -397,17 +303,30 @@ def start_neardup_gate_sink_indexed(
     compact_every: int | None = None,
     compact_target_files: int = 1,
 ) -> StreamingQuery:
-    """The INDEX-MAINTAINING form of the near-dup ingest gate: the
-    plain gate's admission rule, checked against a persisted MinHash index
-    (``build_minhash_index`` band rows + shingle arrays) instead of the
-    store's text. The index format is ``dedup``'s; each batch:
+    """Streaming near-duplicate ingest gate: each micro-batch is checked
+    against everything already admitted and against itself, and only
+    novel documents are stored — a crawler feeding a 100 TB corpus admits
+    a document exactly once (the session-lifetime seen-id and seen-text
+    sets of the reference, resilient_scraper.py:55-56,352-358, made
+    durable).
+
+    ADMISSION POLICY: a batch doc that near-dups ANY stored doc (MinHash
+    jaccard ≥ ``threshold``) is dropped; for a batch-internal pair the
+    lower id survives (greedy, the keep-first convention of the batch
+    dedup operators). A re-delivered doc exact-matches its stored copy
+    (jaccard 1.0 ≥ any threshold) and is dropped too, so replaying a
+    batch admits nothing twice.
+
+    The check reads a persisted MinHash index (``build_minhash_index``
+    band rows + shingle arrays, ``dedup``'s format), never the store's
+    text. Each batch:
 
     1. probes the index with ``dedup.probe_minhash_index`` against the
        generations strictly before this one (``__gate_batch < N``),
        reading only the band buckets this batch probes and the shingle
        arrays of the CANDIDATES' buckets — near-dup candidates are rare,
        so the verify read touches a handful of bucket directories instead
-       of the whole arrays store; the corpus TEXT is never touched,
+       of the whole arrays store,
     2. writes the survivors to the store, partitioned by ``__gate_batch``
        = batch id, and their own index rows as generation N with
        ``dedup.write_minhash_index`` — each a static overwrite of this
@@ -424,41 +343,42 @@ def start_neardup_gate_sink_indexed(
     three paths may exist after a crash; the gate therefore takes the
     indexed branch only when every path that branch reads exists, and
     the index writer writes the branch-trigger path (bands) last (ADVICE
-    r5). THAT mechanism — partition-idempotent multi-sink writes, the
-    third exactly-once strategy in this module beside the merge sink's
-    keyed upsert and the sketch store's staged swap — is this variant's
-    distinctive value.
+    r5). Partition-idempotent multi-sink writes are the third
+    exactly-once strategy in this module, beside the merge sink's keyed
+    upsert and the sketch store's staged swap.
 
     FRESH-CHECKPOINT RULE: the batch ids come from the checkpoint, so a
     restart with a new checkpoint starts again at N = 0 and the ``< N``
     read would hide every stored batch. Batch N therefore fails fast when
     the store holds any ``__gate_batch`` partition above N; the compacted
     ``-1`` base never trips it. Resume with the original checkpoint, or
-    first fold the store and both index paths into that base with
-    ``compact_gate_store``, which every batch of a new checkpoint reads.
-    (A store holding only batch 0 cannot be told apart from a replay of
-    batch 0.)
+    first fold the store and both index paths (``<index_path>/bands`` and
+    ``/arrays``) into that base with ``compact_gate_store``, then
+    restart: every batch of the new checkpoint reads the base, so
+    replaying the whole source admits nothing — the store is a fixpoint
+    of the gate. (A store holding only batch 0 cannot be told apart from
+    a replay of batch 0.)
 
     MEASURED COST (see SCALE.md r6 row for the numbers of record):
     per-batch cost is the batch lineage + a band-row read of the probed
     buckets + an arrays read of the CANDIDATE buckets only, so it does
-    not grow with store text size, and the margin over the plain re-read
-    gate widens as the store grows. The survivors are persisted for the
+    not grow with store text size. The survivors are persisted for the
     batch (the metrics ride-along and all three writes read them) and
     unpersisted in a finally, with the probe's overflow candidates. Each
     batch writes at most min(rows, ``dedup.GATE_BUCKETS``) files per
-    index path.
+    index path. Store readers see one extra ``__gate_batch`` partition
+    column (ingestion metadata — drop it or use it as arrival lineage).
 
-    Store readers see one extra ``__gate_batch`` partition column
-    (ingestion metadata — drop it or use it as arrival lineage). Replay
-    idempotence additionally holds at the CONTENT level like the plain
-    gate's: re-delivered docs exact-match
-    their indexed copies and are rejected. ``on_metrics`` is the plain
-    gate's per-batch bucket-cap channel; under pruning its oversized
-    counts cover the PROBED buckets — the only buckets where pair
-    suppression can happen this batch — and its fallback evaluation is
-    cheap by construction (the metrics lineage reads the index, not the
-    corpus text).
+    ``on_metrics(batch_id, {"oversized_buckets": n, "oversized_rows": n})``
+    surfaces the LSH bucket-cap drops per micro-batch: the one-row
+    ``metrics_out`` frame rides the survivors' store write through
+    ``dedup.observe_oversized``, so a viral mega-cluster arriving on the
+    stream shows up the batch it lands. Its counts cover the PROBED
+    buckets — the only buckets where pair suppression can happen this
+    batch. A zero-survivor batch (routine under replay) folds the
+    ride-along away; the handle then evaluates the aggregate directly,
+    which is cheap here because the metrics lineage reads the index, not
+    the corpus text.
 
     LAYOUT RULE: the first batch of a query runs
     ``dedup.check_minhash_index`` before any data write: a fresh index

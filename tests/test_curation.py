@@ -450,6 +450,22 @@ def test_domain_cap_is_deterministic_and_nested(spark):
     assert all(r["n"] == 5 for r in per)
 
 
+def _observed_neardup_survivors(df, name, **kw):
+    """Near-dup survivors (``id_b`` of every verified pair anti-joined
+    away, keep-first) with the oversized-bucket metrics row from
+    ``metrics_out`` riding them through ``dedup.observe_oversized``."""
+    from pyspark.sql import functions as F
+
+    from mbgspark.operators.dedup import minhash_near_dups, observe_oversized
+
+    metrics: list = []
+    pairs = minhash_near_dups(df, "doc_id", "text", metrics_out=metrics, **kw)
+    drop_ids = pairs.select(F.col("id_b").alias("doc_id")).distinct()
+    return observe_oversized(
+        df.join(drop_ids, "doc_id", "left_anti"), metrics[0], name
+    )
+
+
 def test_curation_neardup_emits_oversized_metrics_without_extra_action(spark):
     """VERDICT r4 item 4: a planted mega-cluster of NEAR-identical
     (non-exact) texts that blows past the LSH bucket cap surfaces in the
@@ -459,13 +475,11 @@ def test_curation_neardup_emits_oversized_metrics_without_extra_action(spark):
     channel."""
     from pyspark.sql import functions as F
 
-    from mbgspark.operators.curation import curate_neardup_observed
-
     base = "shared viral boilerplate text repeated across the whole cluster"
     mega = spark.range(300).select(
         F.col("id").alias("doc_id"),
-        # unique trailing token: exact dedup must NOT collapse these,
-        # so they all reach LSH and land in the same band buckets
+        # unique trailing token: no two texts are equal, so they all
+        # reach LSH and land in the same band buckets
         F.concat(F.lit(base + " tail"), F.col("id").cast("string")).alias(
             "text"
         ),
@@ -476,8 +490,8 @@ def test_curation_neardup_emits_oversized_metrics_without_extra_action(spark):
     )
     corpus = mega.unionByName(clean)
 
-    survivors, obs = curate_neardup_observed(
-        corpus, "doc_id", "text", threshold=0.5, max_bucket_size=100
+    survivors, obs = _observed_neardup_survivors(
+        corpus, "mega", threshold=0.5, max_bucket_size=100
     )
     n = survivors.count()  # the ONE action; metrics ride it
     got = obs.get
@@ -487,13 +501,12 @@ def test_curation_neardup_emits_oversized_metrics_without_extra_action(spark):
     # intact (observable, not silently shrunk) and clean docs survive
     assert n == 305
 
-    s2, obs2 = curate_neardup_observed(
+    s2, obs2 = _observed_neardup_survivors(
         spark.createDataFrame(
             [(i, f"unique text {i} with its own words {i*7}") for i in range(20)],
             "doc_id bigint, text string",
         ),
-        "doc_id",
-        "text",
+        "clean",
         max_bucket_size=100,
     )
     assert s2.count() == 20
@@ -501,29 +514,26 @@ def test_curation_neardup_emits_oversized_metrics_without_extra_action(spark):
 
 
 def test_curation_neardup_metrics_survive_zero_survivor_fold(spark):
-    """ADVICE r5: when the curation's output is runtime-empty, AQE's
+    """ADVICE r5: when the survivors are runtime-empty, AQE's
     empty-relation propagation folds the metrics crossJoin and the
     Observation never fires — the returned handle must resolve to the
     TRUE metrics by direct evaluation instead of raising an opaque JVM
     assertion. Pinned on the empty corpus (the zero-survivor case) and
     on reading metrics BEFORE any action (defined as direct evaluation,
     not an indefinite block)."""
-    from mbgspark.operators.curation import curate_neardup_observed
-
     empty = spark.createDataFrame([], "doc_id bigint, text string")
-    survivors, obs = curate_neardup_observed(empty, "doc_id", "text")
+    survivors, obs = _observed_neardup_survivors(empty, "empty")
     assert survivors.count() == 0  # the action; ride-along folded
     got = obs.get
     assert got == {"oversized_buckets": 0, "oversized_rows": 0}
 
     # metrics read with NO prior action: direct evaluation, true zeros
-    _, obs2 = curate_neardup_observed(
+    _, obs2 = _observed_neardup_survivors(
         spark.createDataFrame(
             [(i, f"distinct text {i} about {i*13}") for i in range(5)],
             "doc_id bigint, text string",
         ),
-        "doc_id",
-        "text",
+        "no_action",
     )
     assert obs2.get["oversized_buckets"] == 0
 

@@ -85,18 +85,6 @@ def test_lsh_bucket_cap_bounds_viral_duplicate(spark):
     assert all(r["bucket_n"] == 50 for r in over.collect())
     assert over.count() == 4  # the viral text's 4 band buckets
 
-    # on_oversized hook: the default pipeline path can observe the drops
-    # without a separate lsh_oversized_buckets pass (ADVICE r3)
-    seen: list = []
-    hooked = dd.minhash_near_dups(
-        df, "id", "t", threshold=0.5, max_bucket_size=10,
-        on_oversized=seen.append,
-    )
-    assert [(p["id_a"], p["id_b"]) for p in hooked.collect()] == [(1, 2)]
-    assert len(seen) == 1
-    monitored = seen[0].collect()
-    assert len(monitored) == 4 and all(r["bucket_n"] == 50 for r in monitored)
-
 
 def _py_simhash32(text: str) -> int:
     """Python mirror of simhash32's portable construction (bit b = MSB of
@@ -424,13 +412,16 @@ def test_oversized_metrics_zero_not_null_on_shingleless_corpus(spark):
     """A corpus whose docs are all shorter than the shingle size yields
     an EMPTY bucket frame — the metrics row must still read (0, 0), not
     (NULL, NULL) (review r5: SUM over zero rows is NULL unguarded)."""
-    from mbgspark.operators.curation import curate_neardup_observed
-
     tiny = spark.createDataFrame(
         [(1, "one two"), (2, "three"), (3, "four five")],
         "doc_id bigint, text string",
     )
-    survivors, obs = curate_neardup_observed(tiny, "doc_id", "text")
+    metrics: list = []
+    pairs = dd.minhash_near_dups(tiny, "doc_id", "text", metrics_out=metrics)
+    drop_ids = pairs.select(F.col("id_b").alias("doc_id")).distinct()
+    survivors, obs = dd.observe_oversized(
+        tiny.join(drop_ids, "doc_id", "left_anti"), metrics[0], "shingleless"
+    )
     assert survivors.count() == 3
     assert obs.get == {"oversized_buckets": 0, "oversized_rows": 0}
 

@@ -114,6 +114,40 @@ def test_merge_by_key_partition_prune_hits_store_scan(spark, tmp_path):
     assert rows[8] == "old8" and len(rows) == 11
 
 
+def test_merge_by_key_partition_col_keeps_update_type_under_ansi(spark, tmp_path):
+    """A store read infers its day partition column as DATE while the
+    updates carry it as STRING. The merged column must be the updates'
+    STRING with ANSI on as it is with ANSI off, not narrowed to DATE."""
+    store_path = str(tmp_path / "store")
+    write_partitioned(
+        _store(spark, [("a", 1, dt.datetime(2025, 1, 1), "2025-01-01"),
+                       ("b", 1, dt.datetime(2025, 1, 2), "2025-01-02")]),
+        store_path,
+        "event_date",
+    )
+    updates = _store(spark, [("a", 2, dt.datetime(2025, 1, 3), "2025-01-01"),
+                             ("c", 3, dt.datetime(2025, 1, 3), "2025-01-01")])
+
+    def merged():
+        out = merge_by_key(
+            spark.read.parquet(store_path), updates, partition_col="event_date"
+        )
+        rows = sorted((r["_id"], r["v"], r["event_date"]) for r in out.collect())
+        return out.schema["event_date"].dataType.simpleString(), rows
+
+    prior = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        off = merged()
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+        on = merged()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prior)
+    want = ("string", [("a", 2, "2025-01-01"), ("c", 3, "2025-01-01")])
+    assert off == want
+    assert on == want
+
+
 def test_merge_by_key_null_partition_updates_not_duplicated(spark):
     """An update row with a NULL partition value must still MERGE against
     the existing NULL-partition rows — plain isin(touched) never matches

@@ -279,64 +279,6 @@ def test_stream_curation_gate_composes_with_dedup_and_merge(spark, tmp_path):
     assert rows[0]["ws_tokens"] == 13 and rows[0]["quality_score"] >= 0.2
 
 
-def test_neardup_gate_admits_each_document_once(spark, tmp_path):
-    from mbgspark.streaming import start_neardup_gate_sink
-
-    src = tmp_path / "gate_src"
-    store = str(tmp_path / "gate_store")
-    ck = tmp_path / "gate_ck"
-
-    base = "the quick brown fox jumps over the lazy dog near the river bank"
-    near = "quick brown fox jumps over the lazy dog near the river bank"  # 1st tok dropped
-    other = "completely unrelated text about catalyst physical plan pruning rules"
-
-    metrics: list = []
-
-    def run(batch_rows, ckpt):
-        _write_batch(src, batch_rows)
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .json(str(src))
-        )
-        q = start_neardup_gate_sink(
-            stream, store, str(ckpt), threshold=0.5, available_now=True,
-            on_metrics=lambda bid, m: metrics.append((bid, m)),
-        )
-        q.awaitTermination(120)
-        return sorted(r["doc_id"] for r in spark.read.parquet(store).collect())
-
-    # batch 1: doc 1 + its batch-internal near-dup 2 (lower id wins) + 3
-    got = run(
-        [
-            {"doc_id": 1, "text": base},
-            {"doc_id": 2, "text": near},
-            {"doc_id": 3, "text": other},
-        ],
-        ck / "1",
-    )
-    assert got == [1, 3]
-
-    # batch 2: near-dup of stored doc 1 is rejected, novel doc admitted
-    got = run(
-        [
-            {"doc_id": 10, "text": near},
-            {"doc_id": 11, "text": "fresh novel content with entirely new vocabulary tokens"},
-        ],
-        ck / "2",
-    )
-    assert got == [1, 3, 11]
-
-    # replay the same source with a fresh checkpoint: the store is a
-    # fixpoint of the gate (exact self-dups all rejected)
-    got = run([], ck / "3")
-    assert got == [1, 3, 11]
-
-    # the per-batch LSH-cap metrics channel fired for every micro-batch
-    # and reports zero drops on this un-viral corpus
-    assert len(metrics) >= 2
-    assert all(m["oversized_buckets"] == 0 for _, m in metrics)
-
-
 def test_cardinality_sink_folds_sketches_and_replay_is_noop(spark, tmp_path):
     """Per-day HLL sketch rows accumulate across micro-batches; replaying
     the same keys leaves every estimate unchanged (HLL union idempotence
@@ -619,11 +561,16 @@ def test_indexed_neardup_gate_admits_once_and_replays_idempotently(spark, tmp_pa
     scoped idempotent overwrites, no append duplication. A restart with a
     FRESH checkpoint would start again at batch 0 and hide every stored
     batch behind the __gate_batch < N read; it fails fast instead of
-    re-admitting doc 11."""
+    re-admitting doc 11. Once the store and both index paths are folded
+    into the -1 base with compact_gate_store, a fresh checkpoint replays
+    the whole source to the same store: it is a fixpoint of the gate."""
     import pytest
     from pyspark.errors import StreamingQueryException
 
-    from mbgspark.streaming import start_neardup_gate_sink_indexed
+    from mbgspark.streaming import (
+        compact_gate_store,
+        start_neardup_gate_sink_indexed,
+    )
 
     src = tmp_path / "ig_src"
     store = str(tmp_path / "ig_store")
@@ -688,6 +635,18 @@ def test_indexed_neardup_gate_admits_once_and_replays_idempotently(spark, tmp_pa
         run(tmp_path / "ig_ck_fresh")
     assert sorted(r["doc_id"] for r in spark.read.parquet(store).collect()) == [
         1, 3, 11,
+    ]
+
+    # the fresh-checkpoint recipe: fold the store and both index paths
+    # into the -1 base, then replay the whole source under a new
+    # checkpoint — every doc exact-matches its folded copy
+    for path in (store, f"{index}/bands", f"{index}/arrays"):
+        compact_gate_store(spark, path)
+    reported = len(gate_metrics)
+    assert run(tmp_path / "ig_ck_compacted") == [1, 3, 11]
+    # the zero-survivor batch folds the ride-along away and still reports
+    assert gate_metrics[reported:] == [
+        (0, {"oversized_buckets": 0, "oversized_rows": 0})
     ]
 
 

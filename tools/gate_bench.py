@@ -1,18 +1,16 @@
-"""Streaming near-dup gate cost comparison: plain re-read vs indexed
-(the bucket-pruned index) vs pruned with in-line compaction
-(compact_every=2 — the fold fires after batch 1, so batch 2's time is the
-post-compaction cost and the final store counts must equal the plain
-pruned mode's).
+"""Streaming near-dup gate cost: the bucket-pruned index gate, alone and
+with in-line compaction (compact_every=2 — the fold fires in batch 1, so
+batch 2's time is the post-compaction cost).
 
-Methodology (r5 protocol, r6 pruned form added): seed a store of N docs
-(~40 random words each from a 40k-word vocab), then time THREE consecutive
+Methodology (r5 protocol, r6 pruned form): seed a store of N docs (~40
+random words each from a 40k-word vocab), then time THREE consecutive
 100-doc availableNow batches per mode (90 novel docs + 10 near-dups of
 stored docs) against the same seeded corpus state per mode. The seed is
-written directly in each mode's on-disk layout (plain: bare parquet;
-indexed: a __gate_batch=-1 store partition, and the index written as
-generation -1 by dedup's check_minhash_index + write_minhash_index, the
-routines the gate itself uses). Reported per-batch seconds include the
-availableNow stream start/stop overhead, identically for all modes.
+a __gate_batch=-1 store partition, and its index generation -1 written by
+dedup's check_minhash_index + write_minhash_index, the routines the gate
+itself uses. Per-batch seconds include the availableNow stream start/stop.
+Each mode must end batch b at N + 90·(b+1) stored docs (novel docs
+admitted, near-dups rejected); otherwise the script exits 1.
 
 Usage: python tools/gate_bench.py [N_docs ...]   (default: 50000 200000)
 Prints one JSON line per (store_size, mode). Scratch stores go under
@@ -39,7 +37,7 @@ from mbgspark.operators.dedup import (
     write_minhash_index,
 )
 from mbgspark.session import get_spark
-from mbgspark.streaming import start_neardup_gate_sink, start_neardup_gate_sink_indexed
+from mbgspark.streaming import start_neardup_gate_sink_indexed
 
 # under the checkout (git-ignored), so two checkouts can run side by side
 BASE = os.path.join(REPO, ".bench_work", "gate_bench")
@@ -81,16 +79,13 @@ def write_batch_file(src_dir: str, batch_no: int, docs: list[dict]) -> None:
             f.write(json.dumps(d) + "\n")
 
 
-def seed_mode(spark, texts: list[str], mode: str, root: str) -> None:
+def seed_mode(spark, texts: list[str], root: str) -> None:
     docs = spark.createDataFrame(
         list(zip(range(len(texts)), texts)), "doc_id long, text string"
     ).repartition(32)
     store = f"{root}/store"
-    if mode == "plain":
-        docs.write.mode("overwrite").parquet(store)
-        return
-    # indexed layouts: __gate_batch=-1 so a fresh checkpoint's batch 0
-    # (filter __gate_batch < 0) still sees the seed
+    # __gate_batch=-1 so a fresh checkpoint's batch 0 (filter
+    # __gate_batch < 0) still sees the seed
     docs.withColumn("__gate_batch", F.lit(-1)).write.mode("overwrite").partitionBy(
         "__gate_batch"
     ).parquet(store)
@@ -103,7 +98,7 @@ def seed_mode(spark, texts: list[str], mode: str, root: str) -> None:
 def run_mode(spark, texts: list[str], mode: str, n: int) -> dict:
     root = f"{BASE}/{mode}_{n}"
     shutil.rmtree(root, ignore_errors=True)
-    seed_mode(spark, texts, mode, root)
+    seed_mode(spark, texts, root)
     times = []
     admitted = []
     for b in range(3):
@@ -112,20 +107,14 @@ def run_mode(spark, texts: list[str], mode: str, n: int) -> dict:
             f"{root}/src"
         )
         t0 = time.time()
-        if mode == "plain":
-            q = start_neardup_gate_sink(
-                stream, f"{root}/store", f"{root}/ck", threshold=0.5,
-                available_now=True,
-            )
-        else:
-            q = start_neardup_gate_sink_indexed(
-                stream, f"{root}/store", f"{root}/index", f"{root}/ck",
-                threshold=0.5, available_now=True,
-                # the compact mode folds mid-stream after 2 live batch
-                # partitions accumulate — batch 2's time is then the
-                # post-compaction cost of record (VERDICT r6 item 3)
-                compact_every=2 if mode == "pruned_compact" else None,
-            )
+        q = start_neardup_gate_sink_indexed(
+            stream, f"{root}/store", f"{root}/index", f"{root}/ck",
+            threshold=0.5, available_now=True,
+            # the compact mode folds mid-stream after 2 live batch
+            # partitions accumulate — batch 2's time is then the
+            # post-compaction cost of record (VERDICT r6 item 3)
+            compact_every=2 if mode == "pruned_compact" else None,
+        )
         q.awaitTermination(600)
         times.append(round(time.time() - t0, 2))
         admitted.append(spark.read.parquet(f"{root}/store").count())
@@ -136,10 +125,16 @@ def main() -> None:
     sizes = [int(a) for a in sys.argv[1:]] or [50_000, 200_000]
     spark = get_spark("gate_bench")
     spark.sparkContext.setLogLevel("ERROR")
+    bad = []
     for n in sizes:
         texts = make_texts(n)
-        for mode in ("plain", "pruned", "pruned_compact"):
-            print(json.dumps(run_mode(spark, texts, mode, n)), flush=True)
+        for mode in ("pruned", "pruned_compact"):
+            res = run_mode(spark, texts, mode, n)
+            print(json.dumps(res), flush=True)
+            if res["store_counts"] != [n + 90 * (b + 1) for b in range(3)]:
+                bad.append(f"{mode} at N={n}")
+    if bad:
+        sys.exit(f"store counts other than N + 90·(b+1): {', '.join(bad)}")
 
 
 if __name__ == "__main__":

@@ -91,7 +91,7 @@ def main() -> None:
     shutil.rmtree(root, ignore_errors=True)
     t0 = time.time()
     texts = make_texts(n)
-    seed_mode(spark, texts, "pruned", root)
+    seed_mode(spark, texts, root)
     print(
         json.dumps({"phase": "seed", "n": n, "secs": round(time.time() - t0, 1)}),
         flush=True,
