@@ -3,11 +3,10 @@ between pair detection (MinHash/LSH, n-gram Jaccard) and canonical-document
 selection in a dedup pipeline: pairs only say "these two match"; keeping
 exactly one doc per duplicate CLUSTER needs the transitive closure.
 
-Three strategies, same output contract (component id = min node id,
-deterministic, no RNG):
+One output contract (component id = min node id, deterministic, no RNG)
+and two physical paths, picked by the size of the edge frame:
 
-- ``algorithm="auto"`` (default): cap-guarded driver union-find with a
-  distributed fallback — the same idiom as the streaming gate's
+- cap-guarded driver union-find — the same idiom as the streaming gate's
   ``limit(cap+1)`` candidate fetch. Near-dup edge frames are bounded by
   construction (LSH bucket caps, per-pair thresholds), so the common case
   fits comfortably on the driver, where union-find labels the whole graph
@@ -15,26 +14,22 @@ deterministic, no RNG):
   (measured: the bounded dup graph spent ~2.5 s on round scheduling for
   <1k edges). One ``limit(cap+1)`` action probes the size AND fetches the
   edges — no separate count, no second execution of the (expensive) pair
-  pipeline when the fast path applies; on overflow the collected rows are
-  discarded and the star loop runs distributed.
-- ``algorithm="star"``: alternating large-star/small-star
-  (Kiveris et al., "Connected Components in MapReduce and Beyond",
-  SoCC'14). Each round re-wires edges toward neighborhood minima:
-  large-star connects every strictly-larger neighbor of u to
-  min(Γ(u) ∪ {u}); small-star connects u's smaller neighbors and u itself
-  to that minimum. Converges in O(log n) rounds on ANY graph shape —
-  including the adversarial long chain (templated spam drifting one token
-  per doc) where label propagation needs diameter rounds.
-- ``algorithm="propagate"``: min-label propagation (each node repeatedly
-  adopts the smallest label among itself and its neighbors). Rounds =
-  graph diameter; kept for shallow near-dup graphs (small cliques/chains)
-  where it does fewer total joins.
+  pipeline when the fast path applies.
+- past ``_DRIVER_EDGE_CAP`` edges the collected rows are discarded and
+  alternating large-star/small-star runs distributed (Kiveris et al.,
+  "Connected Components in MapReduce and Beyond", SoCC'14). Each round
+  re-wires edges toward neighborhood minima: large-star connects every
+  strictly-larger neighbor of u to min(Γ(u) ∪ {u}); small-star connects
+  u's smaller neighbors and u itself to that minimum. Converges in
+  O(log n) rounds on ANY graph shape — including the adversarial long
+  chain (templated spam drifting one token per doc) where label
+  propagation would need diameter rounds.
 
-Both truncate lineage per iteration (localCheckpoint — the standard Spark
-idiom for iterative graph algorithms, keeps the plan from doubling each
-round) and RAISE if ``max_iterations`` is hit without reaching the
-fixpoint: silently returning unconverged labels would merge/split clusters
-with no signal (VERDICT r2 item 5).
+The star loop truncates lineage per round (localCheckpoint — the standard
+Spark idiom for iterative graph algorithms, keeps the plan from doubling
+each round) and RAISES if ``_MAX_STAR_ROUNDS`` is hit without reaching
+the fixpoint: silently returning unconverged labels would merge/split
+clusters with no signal (VERDICT r2 item 5).
 """
 
 from __future__ import annotations
@@ -44,7 +39,7 @@ from pyspark.sql import functions as F
 
 
 class ConvergenceError(RuntimeError):
-    """Iterative algorithm hit max_iterations before its fixpoint."""
+    """The star loop hit ``_MAX_STAR_ROUNDS`` before its fixpoint."""
 
 
 # auto's driver-path edge cap: 1M (src, dst) bigint pairs ≈ 32 MB of rows
@@ -58,10 +53,15 @@ class ConvergenceError(RuntimeError):
 # heap assumption survives two cap-sized queries with headroom.
 _DRIVER_EDGE_CAP = 1_000_000
 
+# star-loop round budget: the loop converges in O(log n) rounds on any
+# graph shape, so 25 leaves wide headroom; hitting it raises
+# ConvergenceError
+_MAX_STAR_ROUNDS = 25
+
 
 def _driver_union_find(rows) -> list[tuple[int, int]]:
     """Min-id union-find over collected (src, dst) pairs: same labels the
-    distributed algorithms produce (component = min node id), one pass,
+    star loop produces (component = min node id), one pass,
     pure Python. Deterministic by construction."""
     parent: dict[int, int] = {}
 
@@ -135,10 +135,10 @@ def _small_star(e: DataFrame) -> DataFrame:
     return _dedup_edges(nbrs.union(self_edges))
 
 
-def _star_components(und: DataFrame, max_iterations: int) -> DataFrame:
+def _star_components(und: DataFrame) -> DataFrame:
     # Self-loop-only nodes: (a, a) edges are dropped by _dedup_edges, so a
     # node whose ONLY edges are self-loops would vanish from the star
-    # output while algorithm='propagate' keeps it as its own component
+    # output while the driver union-find keeps it as its own component
     # (ADVICE r3). Union them back as singletons — the self-loop node set
     # is empty on real dedup-pair input, so the anti-join below is
     # near-free (broadcast of an empty build side under AQE).
@@ -147,7 +147,7 @@ def _star_components(und: DataFrame, max_iterations: int) -> DataFrame:
     )
     edges = _dedup_edges(und).localCheckpoint()
     prev_cnt = edges.count()
-    for _ in range(max_iterations):
+    for _ in range(_MAX_STAR_ROUNDS):
         nxt = _small_star(_large_star(edges)).localCheckpoint()
         # fixpoint test on the deduped edge set: same cardinality and no
         # edge outside the previous set (count + one bounded anti-join
@@ -162,7 +162,7 @@ def _star_components(und: DataFrame, max_iterations: int) -> DataFrame:
             break
     else:
         raise ConvergenceError(
-            f"large-star/small-star did not converge in {max_iterations} rounds"
+            f"large-star/small-star did not converge in {_MAX_STAR_ROUNDS} rounds"
         )
     # converged edge set is a union of stars rooted at component minima:
     # every non-root points straight at its root
@@ -182,86 +182,40 @@ def connected_components(
     edges: DataFrame,
     a_col: str = "id_a",
     b_col: str = "id_b",
-    max_iterations: int = 25,
-    algorithm: str = "auto",
 ) -> DataFrame:
     """Component id (= min node id in the component) for every node that
     appears in ``edges`` (undirected). Deterministic: min-based labels, no
-    RNG, no partitioning sensitivity. Raises ``ConvergenceError`` instead
-    of returning silently-wrong labels when ``max_iterations`` is hit.
-    ``algorithm="auto"`` (default) runs a driver union-find when the edge
-    frame fits under ``_DRIVER_EDGE_CAP`` (one ``limit(cap+1)`` action
-    both probes and fetches) and falls back to the star loop on overflow —
-    see the module docstring for the sizing argument."""
-    if algorithm == "auto":
-        fetched = (
-            edges.select(
-                F.col(a_col).cast("bigint").alias("src"),
-                F.col(b_col).cast("bigint").alias("dst"),
-            )
-            # match the star path's effective null handling: its
-            # null-propagating src != dst / src == dst filters drop any
-            # edge with a null endpoint entirely (ADVICE r7 — without
-            # this, None reaches union-find's `ra < rb` and TypeErrors)
-            .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .limit(_DRIVER_EDGE_CAP + 1)
-            .collect()
-        )
-        if len(fetched) <= _DRIVER_EDGE_CAP:
-            from mbgspark.session import local_result_df
-
-            labeled = _driver_union_find(
-                [(r[0], r[1]) for r in fetched]
-            )
-            return local_result_df(
-                edges.sparkSession, labeled, "id bigint, component bigint"
-            )
-        algorithm = "star"  # overflow: discard the probe, run distributed
-    und = edges.select(
+    RNG, no partitioning sensitivity. Runs a driver union-find when the
+    edge frame fits under ``_DRIVER_EDGE_CAP`` (one ``limit(cap+1)``
+    action both probes and fetches) and the distributed star loop on
+    overflow — see the module docstring for the sizing argument. Raises
+    ``ConvergenceError`` instead of returning silently-wrong labels when
+    the star loop hits ``_MAX_STAR_ROUNDS``."""
+    pairs = edges.select(
         F.col(a_col).cast("bigint").alias("src"),
         F.col(b_col).cast("bigint").alias("dst"),
-    ).union(
-        edges.select(
-            F.col(b_col).cast("bigint").alias("src"),
-            F.col(a_col).cast("bigint").alias("dst"),
-        )
     )
-    if algorithm == "star":
-        return _star_components(und, max_iterations)
-    if algorithm != "propagate":
-        raise ValueError(f"unknown algorithm={algorithm!r} (star|propagate)")
-    labels = (
-        und.select(F.col("src").alias("id")).distinct().withColumn("comp", F.col("id"))
+    fetched = (
+        # match the star path's effective null handling: its
+        # null-propagating src != dst / src == dst filters drop any
+        # edge with a null endpoint entirely (ADVICE r7 — without
+        # this, None reaches union-find's `ra < rb` and TypeErrors)
+        pairs.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .limit(_DRIVER_EDGE_CAP + 1)
+        .collect()
     )
-    for _ in range(max_iterations):
-        nbr = (
-            und.join(labels, und["dst"] == labels["id"])
-            .select(und["src"].alias("id"), F.col("comp").alias("__nc"))
-            .groupBy("id")
-            .agg(F.min("__nc").alias("__nbr_min"))
+    if len(fetched) <= _DRIVER_EDGE_CAP:
+        from mbgspark.session import local_result_df
+
+        labeled = _driver_union_find([(r[0], r[1]) for r in fetched])
+        return local_result_df(
+            edges.sparkSession, labeled, "id bigint, component bigint"
         )
-        stepped = labels.join(nbr, "id", "left").select(
-            "id",
-            F.col("comp").alias("__prev"),
-            F.least(F.col("comp"), F.coalesce("__nbr_min", "comp")).alias("comp"),
-        )
-        # truncate lineage (iterative-join plans otherwise double per round)
-        stepped = stepped.localCheckpoint()
-        # fixpoint probe: count of CHANGED labels this round (VERDICT r5 —
-        # the earlier sum(comp)-equality probe could in principle alias
-        # across distinct label states at bigint scale; a changed-row
-        # probe is exact by construction). limit(1) short-circuits the
-        # scan: one cheap action per round, 0 ⟺ converged.
-        changed = stepped.filter(F.col("comp") != F.col("__prev")).limit(1).count()
-        labels = stepped.drop("__prev")
-        if changed == 0:
-            break
-    else:
-        raise ConvergenceError(
-            f"min-label propagation did not converge in {max_iterations} "
-            "rounds (graph diameter exceeds the cap — use algorithm='star')"
-        )
-    return labels.select("id", F.col("comp").alias("component"))
+    # overflow: discard the probe, run distributed
+    und = pairs.union(
+        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    return _star_components(und)
 
 
 def canonical_best_by_component(

@@ -519,7 +519,6 @@ def embedding_contamination(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    strategy: str = "fold",
 ) -> DataFrame:
     """Embedding-space benchmark decontamination: for every corpus vector,
     the max cosine similarity against the (broadcast) benchmark set, plus a
@@ -531,47 +530,44 @@ def embedding_contamination(
     vectors); the corpus is scanned ONCE, scored against the replicated
     bench set, then max-reduced per corpus id. The corpus is never
     self-joined and never collected. An EMPTY benchmark yields an empty
-    result (inner-cross-join semantics in BOTH strategies), not all-clean
+    result (inner-cross-join semantics on BOTH paths), not all-clean
     rows — callers should treat "no benchmark" as "skip the check", not
     call this with zero bench rows.
 
-    Two physical strategies, same logical result (pair-scoring sums can
-    differ in the last ulp; both surfaces round to 4 decimals, and the
-    equivalence is property-pinned in tests):
+    Two physical paths, same logical result (pair-scoring sums can differ
+    in the last ulp; both surfaces round to 4 decimals, and the
+    equivalence is property-pinned in tests), picked by the measured
+    crossover ``_VECTORIZED_PAIR_CROSSOVER`` on |corpus|·|bench|:
 
-    - ``"fold"``: broadcast nested-loop crossJoin, cosine via
+    - below it, the fold: broadcast nested-loop crossJoin, cosine via
       zip_with/aggregate (JVM interpreted higher-order fold), map-side
       partial max so the shuffle carries one narrow row per corpus vector.
       Zero Python in the plan; the bench frame itself is broadcast by
       Spark's own machinery.
-    - ``"vectorized"``: the bench matrix (bounded by the SAME eval-suite
-      size contract that justifies broadcasting it) is collected once and
-      shipped in the mapInPandas closure; each Arrow batch of corpus rows
-      scores as ONE numpy matmul (B×d @ d×N) and emits its own row-local
-      max — no pair rows ever exist, no shuffle at all. Interpreted HOFs
-      don't codegen, so at 10^2+ bench vectors per corpus row the C-loop
-      matmul wins by an order of magnitude (sf1 measured: SCALE.md r7).
-    - ``"auto"``: pick by measured crossover. The Python stage carries a
-      ~1.3 s session-fixed floor (bench-collect job + Arrow round trip)
-      that the fold path doesn't pay, while the fold pays ~0.5 µs per
-      PAIR that the matmul doesn't; equal at ~2e6 pairs on the r7
-      container (fold: 78k pairs 0.46 s / 7.8M pairs 4.5 s; vectorized
-      flat ~1.3 s at both — SCALE.md). Costs one ``corpus.count()`` job
-      at plan-build time — a single-column scan that is noise next to
-      either scoring pass, and at real scale the answer is always
-      "vectorized" anyway.
+    - at or above it, the vectorized path: the bench matrix (bounded by
+      the SAME eval-suite size contract that justifies broadcasting it) is
+      collected once and shipped in the mapInPandas closure; each Arrow
+      batch of corpus rows scores as ONE numpy matmul (B×d @ d×N) and
+      emits its own row-local max — no pair rows ever exist, no shuffle at
+      all. Interpreted HOFs don't codegen, so at 10^2+ bench vectors per
+      corpus row the C-loop matmul wins by an order of magnitude (sf1
+      measured: SCALE.md r7).
+
+    The Python stage carries a ~1.3 s session-fixed floor (bench-collect
+    job + Arrow round trip) that the fold doesn't pay, while the fold pays
+    ~0.5 µs per PAIR that the matmul doesn't; equal at ~2e6 pairs on the
+    r7 container (fold: 78k pairs 0.46 s / 7.8M pairs 4.5 s; vectorized
+    flat ~1.3 s at both — SCALE.md). The selection costs two count jobs
+    at plan-build time — single-column scans that are noise next to
+    either scoring pass, and at real scale the answer is always
+    "vectorized" anyway.
     """
     from mbgspark.operators.dedup import cosine_sim_prenorm, vec_norm
 
-    if strategy == "auto":
-        pairs = corpus.count() * bench.count()
-        strategy = "vectorized" if pairs >= _VECTORIZED_PAIR_CROSSOVER else "fold"
-    if strategy == "vectorized":
+    if corpus.count() * bench.count() >= _VECTORIZED_PAIR_CROSSOVER:
         return _embedding_contamination_vectorized(
             corpus, bench, id_col, vec_col, threshold
         )
-    if strategy != "fold":
-        raise ValueError(f"unknown embedding_contamination strategy: {strategy!r}")
 
     # self-norms hoisted per ROW on each side (vec_norm) — the pair loop
     # then folds only the dot product: 1 interpreted array fold per pair
@@ -619,7 +615,7 @@ def _embedding_contamination_vectorized(
     vec_col: str,
     threshold: float,
 ) -> DataFrame:
-    """``embedding_contamination(strategy="vectorized")`` body: one numpy
+    """``embedding_contamination``'s vectorized body: one numpy
     matmul per Arrow batch against the closure-shipped bench matrix.
 
     Semantics mirrored from the fold path exactly:
@@ -627,13 +623,13 @@ def _embedding_contamination_vectorized(
       nulls) — dropped from the matrix here;
     - a null CORPUS vector has every pair-sim null (fold: max over all-null
       → null row) — emitted with a null ``max_bench_sim`` here;
-    - zero-norm vectors score 0/0 = NaN in both strategies, but the Arrow
+    - zero-norm vectors score 0/0 = NaN on both paths, but the Arrow
       transfer maps pandas NaN to SQL null, so this path emits null where
       the fold emits NaN — both read "no meaningful similarity", and no
       finite-norm input can hit it;
     - rounding stays ON THE PLAN SIDE (``F.round`` HALF_UP — numpy rounds
       half-even, a real knife-edge difference), so only the raw fp sums
-      differ between strategies (last-ulp, order of summation).
+      differ between paths (last-ulp, order of summation).
     """
     import numpy as np
     import pandas as pd
@@ -656,7 +652,7 @@ def _embedding_contamination_vectorized(
     if not bench_rows:
         # bench rows exist but every VECTOR is null: the fold still pairs
         # them, max over all-null sims → one null-sim row per corpus id
-        # (ADVICE r7 — the strategies must agree on this input)
+        # (ADVICE r7 — the two paths must agree on this input)
         return base.select(
             id_col,
             F.lit(None).cast("double").alias("max_bench_sim"),

@@ -690,59 +690,54 @@ def ngram_jaccard_pairs(
     text_col: str,
     k: int = 3,
     threshold: float = 0.5,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Exact n-gram (k-word shingle) Jaccard similarity join: candidate
     pairs = any shared shingle (equi-join on shingle, no LSH), verified
     ``>= threshold``. Columns ``(id_a, id_b, jaccard)``, id_a < id_b,
     unordered.
 
-    ``strategy="distributed"`` is the scale path: shingle arrays stay
-    per-row, BOTH self-join sides alias the SAME exploded subtree so
-    Spark shares the shingle-keyed shuffle (measured 2.0 → 1.8 s warm,
-    5.8 → 1.8 s cold at sf0.1), and the verify is a pair→doc join +
-    array_intersect.
-
-    ``strategy="auto"`` (default) mirrors ``connected_components``'
-    cap-guarded driver idiom: exact-Jaccard corpora are bounded by
-    construction in every pipeline that uses this operator (the LSH
-    variant is the scale path for open-ended corpora — this join is
-    inherently quadratic in shared-shingle buckets on ANY engine), so a
-    corpus under ``NGRAM_DRIVER_ROW_CAP`` rows is probe-fetched with one
+    Mirrors ``connected_components``' cap-guarded driver idiom:
+    exact-Jaccard corpora are bounded by construction in every pipeline
+    that uses this operator (the LSH variant is the scale path for
+    open-ended corpora — this join is inherently quadratic in
+    shared-shingle buckets on ANY engine), so a corpus under
+    ``NGRAM_DRIVER_ROW_CAP`` rows is probe-fetched with one
     ``limit(cap+1)`` action and joined on the driver (~10 sequential
-    sub-second Spark stages collapse to one scan), falling back to the
-    distributed join on row OR candidate-pair overflow. The driver twin
-    is row-for-row identical — see ``_ngram_jaccard_driver`` for the
-    tokenization/rounding equivalence argument; ``tests/test_dedup.py``
-    pins both strategies against each other."""
-    if strategy == "auto":
-        fetched = (
-            df.select(F.col(id_col), F.col(text_col))
-            .limit(NGRAM_DRIVER_ROW_CAP + 1)
-            .collect()
-        )
-        if len(fetched) <= NGRAM_DRIVER_ROW_CAP:
-            try:
-                out = _ngram_jaccard_driver(
-                    [(r[0], r[1]) for r in fetched],
-                    k,
-                    threshold,
-                    NGRAM_DRIVER_PAIR_CAP,
-                )
-            except _PairOverflow:
-                out = None
-            if out is not None:
-                from mbgspark.session import local_result_df
+    sub-second Spark stages collapse to one scan). The driver twin is
+    row-for-row identical — see ``_ngram_jaccard_driver`` for the
+    tokenization/rounding equivalence argument.
 
-                id_type = df.schema[id_col].dataType.simpleString()
-                return local_result_df(
-                    df.sparkSession,
-                    out,
-                    f"id_a {id_type}, id_b {id_type}, jaccard double",
-                )
-        strategy = "distributed"
-    if strategy != "distributed":
-        raise ValueError(f"unknown ngram_jaccard_pairs strategy: {strategy!r}")
+    On row OR candidate-pair overflow the distributed join runs instead:
+    shingle arrays stay per-row, BOTH self-join sides alias the SAME
+    exploded subtree so Spark shares the shingle-keyed shuffle (measured
+    2.0 → 1.8 s warm, 5.8 → 1.8 s cold at sf0.1), and the verify is a
+    pair→doc join + array_intersect. ``tests/test_dedup.py`` pins both
+    paths against each other (the caps patched to 0 force the
+    distributed one)."""
+    fetched = (
+        df.select(F.col(id_col), F.col(text_col))
+        .limit(NGRAM_DRIVER_ROW_CAP + 1)
+        .collect()
+    )
+    if len(fetched) <= NGRAM_DRIVER_ROW_CAP:
+        try:
+            out = _ngram_jaccard_driver(
+                [(r[0], r[1]) for r in fetched],
+                k,
+                threshold,
+                NGRAM_DRIVER_PAIR_CAP,
+            )
+        except _PairOverflow:
+            out = None
+        if out is not None:
+            from mbgspark.session import local_result_df
+
+            id_type = df.schema[id_col].dataType.simpleString()
+            return local_result_df(
+                df.sparkSession,
+                out,
+                f"id_a {id_type}, id_b {id_type}, jaccard double",
+            )
     shingled = with_shingle_array(df, id_col, text_col, k)
     ex = shingled.select(id_col, F.explode("shingles").alias("shingle"))
     a, b = ex.alias("a"), ex.alias("b")
@@ -851,9 +846,8 @@ def build_minhash_index(
 ) -> tuple[DataFrame, DataFrame]:
     """The ingest-time MinHash index: (band_rows, shingle_arrays) for a
     corpus — the two lineages every incremental near-dup lookup needs.
-    Production persists BOTH (on disk with ``write_minhash_index``, probed
-    with ``probe_minhash_index``; or .persist() for a resident corpus):
-    Spark's ReuseExchange only collapses duplicated subtrees whose
+    Production persists BOTH on disk with ``write_minhash_index`` and
+    probes them with ``probe_minhash_index``: Spark's ReuseExchange only collapses duplicated subtrees whose
     canonical plans are identical, and per-consumer column pruning makes
     them differ, so an UN-persisted corpus lineage is recomputed once per
     plan consumer (measured: the self-contained incremental path pays ~6
@@ -879,7 +873,6 @@ def minhash_near_dups_incremental(
     threshold: float = 0.6,
     max_bucket_size: int | None = 1000,
     metrics_out: list | None = None,
-    corpus_index: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """Incremental near-dup detection — the production mode at 100 TB: a
     new ingest batch is checked against the EXISTING corpus (and against
@@ -915,14 +908,12 @@ def minhash_near_dups_incremental(
     # — Spark's ReuseExchange only collapses subtrees whose CANONICAL
     # plans are identical, and per-consumer column pruning (one consumer
     # needs min-hash windows, another shingle arrays) makes every copy
-    # unique, so the self-contained path pays ~6 corpus passes (~20 s,
-    # 2x the full non-incremental pipeline at that scale). Production
-    # therefore materializes the corpus index ONCE at ingest and passes
-    # it here (``corpus_index`` from ``build_minhash_index`` — persisted
-    # or parquet-backed): a batch lookup then touches the corpus
-    # lineage zero times, and cost scales with the BATCH. The
-    # self-contained fallback (corpus_index=None) stays for bounded
-    # gate-SF runs and one-shot jobs.
+    # unique, so this self-contained path pays ~6 corpus passes (~20 s,
+    # 2x the full non-incremental pipeline at that scale). It stays for
+    # bounded runs and one-shot jobs; production materializes the corpus
+    # index ONCE at ingest (``write_minhash_index``) and probes it with
+    # ``probe_minhash_index``, so a batch lookup touches the corpus
+    # lineage zero times and its cost scales with the BATCH.
     # Same non-null-id contract as minhash_near_dups (r15): the verify
     # joins push isnotnull(id) below the arrays lineage but not the
     # bands lineage, which de-canonicalized the two copies of the corpus
@@ -930,19 +921,15 @@ def minhash_near_dups_incremental(
     # constraint once up front restores ReuseExchange (ledger at sf0.1:
     # 35,360 → 30,360 rec, −29% shuffle bytes; sf1 interleaved A/B mean
     # 2.45 → 2.34 s). Output-invariant: null-id rows can never reach the
-    # output (the verify equi-joins drop them). A caller-provided
-    # corpus_index is trusted as built.
+    # output (the verify equi-joins drop them).
     batch = batch.filter(f"{_q(id_col)} IS NOT NULL")
+    corpus = corpus.filter(f"{_q(id_col)} IS NOT NULL")
     b_bands, b_arrays = build_minhash_index(
         batch, id_col, text_col, k, num_hashes, bands
     )
-    if corpus_index is None:
-        corpus = corpus.filter(f"{_q(id_col)} IS NOT NULL")
-        c_bands, c_arrays = build_minhash_index(
-            corpus, id_col, text_col, k, num_hashes, bands
-        )
-    else:
-        c_bands, c_arrays = corpus_index
+    c_bands, c_arrays = build_minhash_index(
+        corpus, id_col, text_col, k, num_hashes, bands
+    )
 
     pairs = incremental_candidate_pairs(
         b_bands,

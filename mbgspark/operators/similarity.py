@@ -124,62 +124,33 @@ def _brute_force_topk_vectorized(
     k: int,
     id_col: str,
     vec_col: str,
-    label_col: str | None = None,
 ) -> DataFrame:
-    """``brute_force_topk(strategy="vectorized")`` body — and, with
-    ``label_col``, the ``hard_negative_topk`` variant (pairs sharing a
-    label are masked exactly like self-matches, and both labels ride the
-    output). Bounded collect of the query side (same size contract as its
-    broadcast in the fold path); per-batch matmul + local top-k; global
-    rank over the tiny candidate union. See brute_force_topk for
-    semantics."""
+    """``brute_force_topk(strategy="vectorized")`` body. Bounded collect
+    of the query side (same size contract as its broadcast in the fold
+    path); per-batch matmul + local top-k; global rank over the tiny
+    candidate union. See brute_force_topk for semantics."""
     import numpy as np
     import pandas as pd
 
-    qcols = [id_col, vec_col] + ([label_col] if label_col else [])
-    qsel = queries.select(*qcols).where(F.col(vec_col).isNotNull())
-    if label_col:
-        # The fold's `match_label != query_label` join filter is
-        # null-propagating: a NULL label on EITHER side drops the pair.
-        # Mirror that by excluding null-label rows from both sides up
-        # front (ADVICE r7, medium).
-        qsel = qsel.where(F.col(label_col).isNotNull())
     # Query-side collect bounded by the broadcast contract (no fixed row
     # cap). Measured (tools/drivercap_audit.py, r9): 20k × 64-float
     # queries against a 100k corpus peaks at 0.36 GB python RSS — the
     # query matrix, not this collect, is the footprint that matters.
-    rows = qsel.collect()
+    rows = (
+        queries.select(id_col, vec_col).where(F.col(vec_col).isNotNull()).collect()
+    )
     id_type = corpus.schema[id_col].dataType.simpleString()
     cand_schema = f"query_id {id_type}, match_id {id_type}, __sim_e4 bigint"
     base = corpus.select(
         F.col(id_col).alias("match_id"), F.col(vec_col).alias("cv")
     ).where(F.col("cv").isNotNull())
-    if label_col:
-        lab_type = corpus.schema[label_col].dataType.simpleString()
-        cand_schema += f", match_label {lab_type}"
-        base = corpus.select(
-            F.col(id_col).alias("match_id"),
-            F.col(vec_col).alias("cv"),
-            F.col(label_col).alias("match_label"),
-        ).where(F.col("cv").isNotNull() & F.col("match_label").isNotNull())
-    out_cols = (
-        ["query_id", "query_label", "match_id", "match_label"]
-        if label_col
-        else ["query_id", "match_id"]
-    )
-    empty_sel = [F.col("match_id").alias("query_id")]
-    if label_col:
-        empty_sel.append(F.col("match_label").alias("query_label"))
-    empty_sel += [F.col("match_id")] + (
-        [F.col("match_label")] if label_col else []
-    )
-    empty = base.limit(0).select(
-        *empty_sel,
-        F.lit(None).cast("double").alias("cos_sim"),
-        F.lit(None).cast("bigint").alias("rnk"),
-    )
     if not rows:
-        return empty
+        return base.limit(0).select(
+            F.col("match_id").alias("query_id"),
+            F.col("match_id"),
+            F.lit(None).cast("double").alias("cos_sim"),
+            F.lit(None).cast("bigint").alias("rnk"),
+        )
     qids = [r[0] for r in rows]
     qmat = np.asarray([r[1] for r in rows], dtype=np.float64)  # (Q, d)
     qnorm = np.sqrt((qmat * qmat).sum(axis=1))  # (Q,)
@@ -189,9 +160,6 @@ def _brute_force_topk_vectorized(
     with np.errstate(divide="ignore", invalid="ignore"):
         qmat_n = qmat / qnorm[:, None]  # (Q, d)
     qid_arr = np.asarray(qids)
-    qlabels = [r[2] for r in rows] if label_col else None
-    qlab_arr = np.asarray(qlabels, dtype=object) if label_col else None
-    cand_schema_cols = [c.split()[0] for c in cand_schema.split(", ")]
 
     def _score(batches):
         for pdf in batches:
@@ -207,15 +175,9 @@ def _brute_force_topk_vectorized(
             # floor(x*1e4+0.5) rounds -0.64995 toward +inf).
             sim_e4 = np.sign(sims) * np.floor(np.abs(sims) * 1e4 + 0.5)
             mids = pdf["match_id"].to_numpy()
-            # exclusions mirror the fold's join filter exactly
-            mask = mids[:, None] == qid_arr[None, :]
-            if label_col:
-                mlab = pdf["match_label"].to_numpy(dtype=object)
-                mask |= mlab[:, None] == qlab_arr[None, :]
-            sim_e4[mask] = np.nan
+            # the self-match exclusion mirrors the fold's join filter
+            sim_e4[mids[:, None] == qid_arr[None, :]] = np.nan
             out = {c: [] for c in ("query_id", "match_id", "__sim_e4")}
-            if label_col:
-                out["match_label"] = []
             kk = min(k, sim_e4.shape[0])
             for j in range(sim_e4.shape[1]):
                 col = sim_e4[:, j]
@@ -229,16 +191,9 @@ def _brute_force_topk_vectorized(
                 out["query_id"].extend([qids[j]] * len(sel))
                 out["match_id"].extend(mids[sel])
                 out["__sim_e4"].extend(col[sel].astype(np.int64))
-                if label_col:
-                    out["match_label"].extend(mlab[sel])
-            yield pd.DataFrame(out, columns=list(cand_schema_cols))
+            yield pd.DataFrame(out)
 
     cands = ensure_width(base).mapInPandas(_score, cand_schema)
-    if label_col:
-        qmap = F.create_map(
-            *[x for qid, ql in zip(qids, qlabels) for x in (F.lit(qid), F.lit(ql))]
-        )
-        cands = cands.withColumn("query_label", qmap[F.col("query_id")])
     w = Window.partitionBy("query_id").orderBy(
         F.desc("__sim_e4"), F.asc("match_id")
     )
@@ -246,7 +201,8 @@ def _brute_force_topk_vectorized(
         cands.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select(
-            *out_cols,
+            "query_id",
+            "match_id",
             (F.col("__sim_e4") / 1e4).alias("cos_sim"),
             F.col("rnk").cast("bigint").alias("rnk"),
         )
@@ -638,12 +594,10 @@ def quantized_topk(
     k: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    strategy: str = "fold",
 ) -> DataFrame:
     """Cosine top-k over int8-quantized vectors (``quantize_int8`` on both
-    sides, then the same broadcast-query scoring as ``brute_force_topk`` —
-    ``strategy`` passes through, and the numpy path casts the int8 arrays
-    to float64 exactly as the fold's lambda does).
+    sides, then ``brute_force_topk``'s fold scoring: broadcast query side,
+    the fold's lambda casting the int8 arrays to double).
     The ranking surface this proves out is what a product-quantization
     first pass looks like at scale: score candidates on the 4x-smaller
     representation, re-rank survivors on full precision if needed.
@@ -654,9 +608,7 @@ def quantized_topk(
     qq = quantize_int8(queries, vec_col, "__q").select(
         F.col(id_col), F.col("__q").alias(vec_col)
     )
-    return brute_force_topk(
-        qc, qq, k=k, id_col=id_col, vec_col=vec_col, strategy=strategy
-    )
+    return brute_force_topk(qc, qq, k=k, id_col=id_col, vec_col=vec_col)
 
 
 def hard_negative_topk(
@@ -666,32 +618,19 @@ def hard_negative_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    strategy: str = "fold",
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: per query vector,
     the top-k most-similar corpus vectors carrying a DIFFERENT label —
     the examples a contrastive or reranker loss learns the most from
     (near the decision boundary, not random negatives). Same
     broadcast-query scoring shape as ``brute_force_topk`` with the label
-    inequality fused into the join filter, so mismatched-label pairs are
-    dropped before the window ranks anything — and the same
-    fold/vectorized/auto ``strategy`` family (the numpy path masks
-    same-label pairs exactly like self-matches). At corpus scale, swap
-    the scoring source for the IVF probe join (``ivf_topk``'s
-    cell-bucketed candidates) exactly as for plain top-k — the mining
-    step only changes the filter and the ranking, not the
+    inequality fused into the join filter, so same-label pairs are
+    dropped before the window ranks anything. The filter is
+    null-propagating: a NULL label on either side drops the pair. At
+    corpus scale, swap the scoring source for the IVF probe join
+    (``ivf_topk``'s cell-bucketed candidates) exactly as for plain top-k
+    — the mining step only changes the filter and the ranking, not the
     candidate-generation shape."""
-    if strategy == "auto":
-        from mbgspark.operators.dedup import VECTORIZED_PAIR_CROSSOVER
-
-        pairs = corpus.count() * queries.count()
-        strategy = "vectorized" if pairs >= VECTORIZED_PAIR_CROSSOVER else "fold"
-    if strategy == "vectorized":
-        return _brute_force_topk_vectorized(
-            corpus, queries, k, id_col, vec_col, label_col
-        )
-    if strategy != "fold":
-        raise ValueError(f"unknown hard_negative_topk strategy: {strategy!r}")
     q = F.broadcast(
         queries.select(
             F.col(id_col).alias("query_id"),

@@ -411,7 +411,7 @@ def gopher_quality_filter(
 
 
 #: Bigram-model rows fetched to the driver by ``bigram_surprise``'s
-#: vectorized strategy — the cap-guarded probe-fetch bound (same idiom as
+#: vectorized path — the cap-guarded probe-fetch bound (same idiom as
 #: the dedup/components driver strategies): collect ``limit(cap+1)`` in
 #: ONE action, fall back to the fold join on overflow. 2M (w1, w2, int)
 #: rows is a few hundred MB of driver dict, comfortably under the bound
@@ -437,12 +437,11 @@ def bigram_surprise(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    strategy: str = "auto",
 ) -> DataFrame:
-    """Corpus-bigram-LM quality score. NOTE: ``strategy="vectorized"`` (and
-    ``"auto"`` when it picks vectorized) runs the model-build job EAGERLY
-    at plan-build time — one collect per invocation, O(model-build), not
-    the usual lazy builder contract.
+    """Corpus-bigram-LM quality score. NOTE: when the vectorized path is
+    picked (see below) the model-build job runs EAGERLY at plan-build
+    time — one collect per invocation, O(model-build), not the usual lazy
+    builder contract.
 
     The conditional-probability upgrade
     of ``unigram_surprise`` and the closest deterministic analog of the
@@ -493,11 +492,11 @@ def bigram_surprise(
     core (sf1 measured: the whole 5.2 s runtime was single-task). At real
     scale the guard is a pass-through.
 
-    ``strategy``: ``"fold"`` is the all-JVM plan above. ``"vectorized"``
-    keeps the model build (explode → groupBy → window) but replaces the
-    SECOND occurrence explode + model join + per-doc rollup with a
-    cap-guarded driver fetch of the |bigram-vocab| model
-    (``limit(LM_MODEL_DRIVER_CAP+1)`` — ONE action) broadcast into a
+    Two physical paths, same rows. The fold is the all-JVM plan above.
+    The vectorized path keeps the model build (explode → groupBy →
+    window) but replaces the SECOND occurrence explode + model join +
+    per-doc rollup with a cap-guarded driver fetch of the |bigram-vocab|
+    model (``limit(LM_MODEL_DRIVER_CAP+1)`` — ONE action) broadcast into a
     single ``mapInPandas`` scoring pass: each task tokenizes its docs
     (``re.ASCII \\s+`` + trim-space-only + lower — the pinned Python twin
     of the JVM tokenizer, see ``dedup._ngram_jaccard_driver``) and sums
@@ -506,27 +505,20 @@ def bigram_surprise(
     JVM-computed model frame, so no libm divergence is introduced; a
     tokenization divergence would KeyError loudly rather than mis-score.
     Same-process A/B at sf1: fold 3.8–4.9 s, vectorized 1.7–2.4 s
-    (SCALE.md r8); model overflow falls back to the fold join, which is
-    the 100 TB path (open-vocabulary corpora blow the driver cap — the
-    cap IS the legality bound, exactly like the broadcast families).
-    ``"auto"`` (default) picks vectorized when the corpus leaf bytes
+    (SCALE.md r8). The vectorized path runs when the corpus leaf bytes
     clear ``LM_VECTORIZED_MIN_BYTES`` (the measured crossover; the probe
     is the same footer-stats read ``ensure_width``'s floor uses, no job)
-    and the model fits the cap.
+    and the model fits the cap; model overflow falls back to the fold
+    join, which is the 100 TB path (open-vocabulary corpora blow the
+    driver cap — the cap IS the legality bound, exactly like the
+    broadcast families).
     """
     from pyspark.sql import Window
 
     from mbgspark import jvmseam
 
-    if strategy not in ("auto", "fold", "vectorized"):
-        raise ValueError(f"unknown bigram_surprise strategy: {strategy!r}")
-    if strategy == "auto":
-        leaf = jvmseam.leaf_size_bytes(df.select(id_col, text_col))
-        strategy = (
-            "vectorized"
-            if leaf is not None and leaf >= LM_VECTORIZED_MIN_BYTES
-            else "fold"
-        )
+    leaf = jvmseam.leaf_size_bytes(df.select(id_col, text_col))
+    vectorized = leaf is not None and leaf >= LM_VECTORIZED_MIN_BYTES
 
     df = ensure_width(df.select(id_col, text_col), min_bytes=_FANOUT_MIN_BYTES)
     toks = F.filter(_tokens(F.col(text_col)), lambda x: x != "")
@@ -557,7 +549,7 @@ def bigram_surprise(
         )
         .select("w1", "w2", "__sup")
     )
-    if strategy == "vectorized":
+    if vectorized:
         fetched = sup.limit(LM_MODEL_DRIVER_CAP + 1).collect()
         if len(fetched) <= LM_MODEL_DRIVER_CAP:
             return _bigram_score_vectorized(df, id_col, text_col, fetched)
@@ -582,7 +574,7 @@ def bigram_surprise(
 def _bigram_score_vectorized(
     df: DataFrame, id_col: str, text_col: str, model_rows
 ) -> DataFrame:
-    """The scoring half of ``bigram_surprise(strategy="vectorized")``:
+    """The scoring half of ``bigram_surprise``'s vectorized path:
     broadcast the driver-fetched (w1, w2, sup_micronats) model and score
     every doc in one ``mapInPandas`` pass. ``df`` is the already
     width-ensured (id, text) projection; output schema and absent-row
@@ -667,7 +659,7 @@ def _bigram_score_vectorized(
     # Null-id branch: partial sums per batch (id column dropped BEFORE
     # the pandas pass — Arrow would hand an all-null bigint column to
     # pandas as float64 NaN), one global fold into the single null-group
-    # row the fold strategy would emit. The isNull filter pushes to the
+    # row the fold would emit. The isNull filter pushes to the
     # scan (parquet null_count stats skip clean row groups), so a corpus
     # with no null ids pays ~nothing for this.
     null_group = (

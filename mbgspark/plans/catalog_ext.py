@@ -582,7 +582,7 @@ SELECT id_a, id_b, jaccard FROM jac WHERE jaccard >= 0.5
 
 def dup_components(spark, sf_dir):
     """Duplicate-cluster identification: the n-gram Jaccard pairs become an
-    undirected graph and min-label propagation assigns each doc its
+    undirected graph and ``connected_components`` assigns each doc its
     cluster (= min doc id in its connected component) plus the cluster
     size — the step that turns pairwise matches into one-keeper-per-group
     semantic dedup. Oracle: DuckDB recursive-CTE transitive closure."""

@@ -231,7 +231,7 @@ def contamination_embedding(spark, sf_dir):
     corpus = e.filter(F.col("vec_id") % 50 != 0)
     bench = e.filter(F.col("vec_id") % 50 == 0)
     return embedding_contamination(
-        corpus, bench, "vec_id", "embedding", threshold=0.30, strategy="auto"
+        corpus, bench, "vec_id", "embedding", threshold=0.30
     )
 
 

@@ -15,6 +15,48 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def bigram_on():
+    """``bigram_surprise`` on one forced path: a leaf-byte floor of 0 picks
+    the vectorized scorer (a ``createDataFrame`` leaf reports
+    Long.MaxValue bytes, so only the fold needs an unreachable floor).
+    The MapInPandas plan marker makes a patch that stops steering fail."""
+    from unittest.mock import patch
+
+    from mbgspark.operators import textstats
+
+    def run(df, vectorized: bool):
+        floor = 0 if vectorized else float("inf")
+        with patch.object(textstats, "LM_VECTORIZED_MIN_BYTES", floor):
+            out = textstats.bigram_surprise(df)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert ("MapInPandas" in plan) == vectorized, plan
+        return out
+
+    return run
+
+
+@pytest.fixture(scope="session")
+def ngram_on():
+    """Sorted ``ngram_jaccard_pairs`` rows of an ``(id, t)`` frame on one
+    forced path: a row cap of 0 sends every non-empty corpus to the
+    distributed join. Only that join explodes shingles, so the Generate
+    plan marker makes a patch that stops steering fail."""
+    from unittest.mock import patch
+
+    from mbgspark.operators import dedup
+
+    def run(df, distributed: bool, **kw):
+        cap = 0 if distributed else dedup.NGRAM_DRIVER_ROW_CAP
+        with patch.object(dedup, "NGRAM_DRIVER_ROW_CAP", cap):
+            out = dedup.ngram_jaccard_pairs(df, "id", "t", **kw)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert ("Generate" in plan) == distributed, plan
+        return sorted(tuple(r) for r in out.collect())
+
+    return run
+
+
+@pytest.fixture(scope="session")
 def tweets_raw(spark):
     """FIXTURES.md §1-shaped inline fixture: dup ids, dup texts, short texts,
     URLs/mentions/hashtags/city names, late data."""

@@ -1,5 +1,7 @@
 """chunk_documents edge semantics: short docs, exact boundaries, overlap."""
 
+from unittest.mock import patch
+
 from mbgspark.operators.textstats import chunk_documents
 
 
@@ -110,8 +112,8 @@ def test_bigram_surprise_flags_shuffled_transitions(spark):
     )
 
 
-def test_bigram_vectorized_matches_fold(spark):
-    """bigram_surprise's vectorized strategy (driver-model broadcast +
+def test_bigram_vectorized_matches_fold(spark, bigram_on):
+    """bigram_surprise's vectorized path (driver-model broadcast +
     mapInPandas scoring, r8) is a physical rewrite only: identical rows
     to the fold join across the doc-shape edge cases — null text, empty,
     0/1-token, tab/padding whitespace, case folding, repeated bigrams —
@@ -131,56 +133,37 @@ def test_bigram_vectorized_matches_fold(spark):
         (8, "beta alpha"),
     ]
     d = spark.createDataFrame(rows, "doc_id bigint, text string")
-    fold = ts.bigram_surprise(d, strategy="fold").collect()
-    vec = ts.bigram_surprise(d, strategy="vectorized").collect()
     key = lambda r: r["doc_id"]  # noqa: E731
+    fold = bigram_on(d, vectorized=False).collect()
+    vec = bigram_on(d, vectorized=True).collect()
     assert sorted(fold, key=key) == sorted(vec, key=key)
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "text"
     )
-    f2 = ts.bigram_surprise(docs, strategy="fold").collect()
-    v2 = ts.bigram_surprise(docs, strategy="vectorized").collect()
+    f2 = bigram_on(docs, vectorized=False).collect()
+    v2 = bigram_on(docs, vectorized=True).collect()
     assert sorted(f2, key=key) == sorted(v2, key=key)
     assert len(f2) > 0
 
-    plan_vec = (
-        ts.bigram_surprise(docs, strategy="vectorized")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    # cap overflow: the vectorized probe-fetch falls back to the fold join
+    with patch.object(ts, "LM_VECTORIZED_MIN_BYTES", 0), patch.object(
+        ts, "LM_MODEL_DRIVER_CAP", 1
+    ):
+        capped = ts.bigram_surprise(docs)
+    assert "MapInPandas" not in (
+        capped._jdf.queryExecution().executedPlan().toString()
     )
-    plan_fold = (
-        ts.bigram_surprise(docs, strategy="fold")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "MapInPandas" in plan_vec
-    assert "MapInPandas" not in plan_fold
-
-    # cap overflow: vectorized probe-fetch falls back to the fold join
-    old = ts.LM_MODEL_DRIVER_CAP
-    ts.LM_MODEL_DRIVER_CAP = 1
-    try:
-        capped = ts.bigram_surprise(docs, strategy="vectorized")
-        assert "MapInPandas" not in (
-            capped._jdf.queryExecution().executedPlan().toString()
-        )
-        assert sorted(capped.collect(), key=key) == sorted(f2, key=key)
-    finally:
-        ts.LM_MODEL_DRIVER_CAP = old
+    assert sorted(capped.collect(), key=key) == sorted(f2, key=key)
 
 
-def test_bigram_vectorized_null_id_group(spark):
+def test_bigram_vectorized_null_id_group(spark, bigram_on):
     """Null doc_ids with scoreable text get the fold's null-GROUP
-    semantics in the vectorized strategy too (ADVICE r8): every null-id
+    semantics on the vectorized path too (ADVICE r8): every null-id
     doc folds into ONE null-id output row, and the bigint id column
     never round-trips through pandas as NaN-bearing float64. Covers
     multiple null-id docs (merged), a null-id doc with <2 tokens
     (ignored), and the all-null and no-null corpus edges."""
-    from mbgspark.operators import textstats as ts
-
     rows = [
         (1, "one two one two one"),
         (None, "one two one"),         # scoreable, null id
@@ -190,25 +173,23 @@ def test_bigram_vectorized_null_id_group(spark):
     ]
     d = spark.createDataFrame(rows, "doc_id bigint, text string")
     key = lambda r: (r["doc_id"] is None, r["doc_id"] or 0)  # noqa: E731
-    fold = sorted(ts.bigram_surprise(d, strategy="fold").collect(), key=key)
-    vec = sorted(
-        ts.bigram_surprise(d, strategy="vectorized").collect(), key=key
-    )
+    fold = sorted(bigram_on(d, vectorized=False).collect(), key=key)
+    vec = sorted(bigram_on(d, vectorized=True).collect(), key=key)
     assert fold == vec
     nulls = [r for r in vec if r["doc_id"] is None]
     assert len(nulls) == 1 and nulls[0]["n_bigrams"] == 4
 
-    # all-null corpus: exactly the one null-group row, both strategies
+    # all-null corpus: exactly the one null-group row on both paths
     d2 = spark.createDataFrame(
         [(None, "alpha beta"), (None, "beta alpha")], "doc_id bigint, text string"
     )
-    f2 = sorted(ts.bigram_surprise(d2, strategy="fold").collect(), key=key)
-    v2 = sorted(ts.bigram_surprise(d2, strategy="vectorized").collect(), key=key)
+    f2 = sorted(bigram_on(d2, vectorized=False).collect(), key=key)
+    v2 = sorted(bigram_on(d2, vectorized=True).collect(), key=key)
     assert f2 == v2 and len(v2) == 1 and v2[0]["doc_id"] is None
 
     # no-null corpus: the null branch must not emit a phantom row
     d3 = spark.createDataFrame([(7, "alpha beta")], "doc_id bigint, text string")
-    v3 = ts.bigram_surprise(d3, strategy="vectorized").collect()
+    v3 = bigram_on(d3, vectorized=True).collect()
     assert [r["doc_id"] for r in v3] == [7]
 
 

@@ -4,6 +4,8 @@ domain mixture)."""
 
 from __future__ import annotations
 
+from unittest.mock import patch
+
 from pyspark.sql import functions as F
 
 from mbgspark.operators.curation import (
@@ -237,46 +239,53 @@ def test_apply_domain_mixture_downsamples_only_over_target(spark):
     )
 
 
+def _components(edges, star):
+    """``connected_components`` labels on one forced path: an edge cap of
+    0 sends every non-empty edge frame to the distributed star loop. The
+    driver path returns a one-slice local frame, so a plan with no
+    Exchange marks it — a patch that stops steering fails here."""
+    from mbgspark.operators import components as C
+
+    cap = 0 if star else C._DRIVER_EDGE_CAP
+    with patch.object(C, "_DRIVER_EDGE_CAP", cap):
+        out = C.connected_components(edges)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert ("Exchange" in plan) == star, plan
+    return {r["id"]: r["component"] for r in out.collect()}
+
+
 def test_star_components_long_chain_converges_logarithmically(spark):
     """A 60-node path (diameter 59) — the adversarial shape for label
-    propagation (templated spam drifting one token per doc). The default
-    large-star/small-star algorithm must converge well inside 25 rounds
-    (O(log n)); propagation must RAISE at a too-small cap instead of
-    returning silently-wrong labels, and still agree when given enough
-    rounds."""
+    propagation (templated spam drifting one token per doc). The star
+    loop must converge well inside its round budget (O(log n)) and agree
+    with the driver union-find."""
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(60)], "id_a bigint, id_b bigint"
+    )
+    star = _components(chain, star=True)
+    assert star == {i: 0 for i in range(61)}
+    assert _components(chain, star=False) == star
+
+
+def test_star_components_raise_when_round_budget_runs_out(spark):
+    """The star loop RAISES ConvergenceError instead of returning
+    silently-wrong labels when its fixpoint is not reached within
+    ``_MAX_STAR_ROUNDS``: one round cannot collapse the 60-node chain."""
     import pytest
 
-    from mbgspark.operators.components import (
-        ConvergenceError,
-        connected_components,
-    )
+    from mbgspark.operators import components as C
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(60)], "id_a bigint, id_b bigint"
     )
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components(chain, algorithm="star").collect()
-    }
-    assert got == {i: 0 for i in range(61)}
-
-    with pytest.raises(ConvergenceError):
-        connected_components(
-            chain, max_iterations=5, algorithm="propagate"
-        ).collect()
-
-    prop = {
-        r["id"]: r["component"]
-        for r in connected_components(
-            chain, max_iterations=80, algorithm="propagate"
-        ).collect()
-    }
-    assert prop == got
+    with patch.object(C, "_MAX_STAR_ROUNDS", 1), patch.object(
+        C, "_DRIVER_EDGE_CAP", 0
+    ):
+        with pytest.raises(C.ConvergenceError):
+            C.connected_components(chain)
 
 
-def test_star_and_propagate_agree_on_mixed_graph(spark):
-    from mbgspark.operators.components import connected_components
-
+def test_star_and_union_find_agree_on_mixed_graph(spark):
     edges = spark.createDataFrame(
         # two cliques bridged by a chain + a separate cycle + a pair
         [(1, 2), (2, 3), (1, 3), (3, 10), (10, 11), (11, 12), (12, 20),
@@ -284,12 +293,9 @@ def test_star_and_propagate_agree_on_mixed_graph(spark):
          (40, 41)],
         "id_a bigint, id_b bigint",
     )
-    a = {r["id"]: r["component"]
-         for r in connected_components(edges, algorithm="star").collect()}
-    b = {r["id"]: r["component"]
-         for r in connected_components(edges, algorithm="propagate").collect()}
-    assert a == b
-    assert set(a.values()) == {1, 30, 40}
+    star = _components(edges, star=True)
+    assert _components(edges, star=False) == star
+    assert set(star.values()) == {1, 30, 40}
 
 
 def test_canonical_best_by_component_keeps_highest_score(spark):
@@ -316,21 +322,14 @@ def test_canonical_best_by_component_keeps_highest_score(spark):
     assert got == {2: 1, 10: 10, 99: 99}
 
 
-def test_star_and_propagate_agree_on_self_loops(spark):
+def test_star_and_union_find_agree_on_self_loops(spark):
     """A node whose ONLY edge is a self-loop must survive as its own
-    component in BOTH algorithms (ADVICE r3: star dropped it, propagate
-    kept it — the two algorithms disagreed on the same input)."""
-    from mbgspark.operators.components import connected_components
-
+    component on BOTH paths (ADVICE r3: the star loop dropped it)."""
     edges = spark.createDataFrame(
         [(1, 2), (5, 5), (2, 2)], "id_a bigint, id_b bigint"
     )
-    for algo in ("star", "propagate"):
-        got = {
-            r["id"]: r["component"]
-            for r in connected_components(edges, algorithm=algo).collect()
-        }
-        assert got == {1: 1, 2: 1, 5: 5}, algo
+    for star in (True, False):
+        assert _components(edges, star) == {1: 1, 2: 1, 5: 5}, star
 
 
 def test_canonical_best_guards(spark):
@@ -539,53 +538,28 @@ def test_curation_neardup_metrics_survive_zero_survivor_fold(spark):
 
 
 def test_connected_components_auto_matches_star_and_falls_back(spark):
-    """auto's driver union-find produces the exact star labels on every
+    """The driver union-find produces the exact star labels on every
     fixture shape (chain + pair + cycle + self-loops), and above the edge
-    cap it falls back to the distributed star loop (same labels again —
-    pinned by shrinking the cap to 0 via monkeypatch)."""
-    from mbgspark.operators import components as C
-
+    cap the operator falls back to the distributed star loop (pinned by
+    patching the cap to 0)."""
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (4, 5), (6, 7), (7, 8), (8, 6), (9, 9)],
         "id_a bigint, id_b bigint",
     )
-    star = {
-        r["id"]: r["component"]
-        for r in C.connected_components(edges, algorithm="star").collect()
-    }
-    auto = {
-        r["id"]: r["component"]
-        for r in C.connected_components(edges, algorithm="auto").collect()
-    }
-    assert auto == star == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6, 7: 6, 8: 6, 9: 9}
-    cap = C._DRIVER_EDGE_CAP
-    try:
-        C._DRIVER_EDGE_CAP = 0  # force the overflow path
-        fallback = {
-            r["id"]: r["component"]
-            for r in C.connected_components(edges, algorithm="auto").collect()
-        }
-    finally:
-        C._DRIVER_EDGE_CAP = cap
-    assert fallback == star
+    star = _components(edges, star=True)
+    driver = _components(edges, star=False)
+    assert driver == star == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6, 7: 6, 8: 6, 9: 9}
 
 
 def test_connected_components_auto_null_endpoints(spark):
-    """Default auto must tolerate null edge endpoints exactly like the
+    """The driver path must tolerate null edge endpoints exactly like the
     star path's null-propagating filters: the edge is dropped entirely
     (ADVICE r7 — None used to reach the driver union-find and TypeError).
-    Labels from auto and star agree on the same frame."""
-    from mbgspark.operators.components import connected_components
-
+    Labels from both paths agree on the same frame."""
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (None, 4), (5, None), (None, None), (6, 7)],
         "id_a bigint, id_b bigint",
     )
-    auto = {
-        r["id"]: r["component"] for r in connected_components(edges).collect()
-    }
-    star = {
-        r["id"]: r["component"]
-        for r in connected_components(edges, algorithm="star").collect()
-    }
-    assert auto == star == {1: 1, 2: 1, 3: 1, 6: 6, 7: 6}
+    driver = _components(edges, star=False)
+    star = _components(edges, star=True)
+    assert driver == star == {1: 1, 2: 1, 3: 1, 6: 6, 7: 6}

@@ -292,40 +292,32 @@ def test_incremental_bucket_cap_counts_combined_population(spark):
     assert uncapped == 30
 
 
-def test_incremental_indexed_mode_never_rescans_corpus(spark):
-    """With a persisted ingest-time index, a batch lookup's plan must not
-    contain a single scan of the corpus parquet — the whole corpus side
-    reads from the cached index frames."""
-    from mbgspark.operators.dedup import (
-        build_minhash_index,
-        minhash_near_dups_incremental,
-    )
-
+def test_incremental_indexed_mode_never_rescans_corpus(spark, tmp_path):
+    """The indexed incremental route — the corpus index written once with
+    ``write_minhash_index``, each batch probed with
+    ``probe_minhash_index`` — reads only the index: the lookup plan holds
+    no scan of the corpus parquet, yet still finds a batch doc's stored
+    copy."""
     corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         F.col("doc_id").alias("id"), F.col("text").alias("t")
     )
-    bands, arrays = build_minhash_index(corpus, "id", "t")
-    bands, arrays = bands.persist(), arrays.persist()
-    try:
-        batch = spark.createDataFrame(
-            [(9_000_001, "some fresh batch document text here")], "id: long, t: string"
-        )
-        df = minhash_near_dups_incremental(
-            batch, corpus, "id", "t", corpus_index=(bands, arrays)
-        )
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        # InMemoryTableScan's toString embeds the CACHED child plan (its
-        # original FileScan included), so "no FileScan substring" is not
-        # the right pin. The invariant: every parquet-scan string in the
-        # plan belongs to a cached-relation description — live rescans
-        # would make FileScan occurrences exceed InMemoryRelation ones.
-        assert plan.count("InMemoryTableScan") > 0
-        assert plan.count("FileScan parquet") == plan.count("InMemoryRelation"), (
-            "corpus parquet rescanned outside the cached index in indexed mode"
-        )
-    finally:
-        bands.unpersist()
-        arrays.unpersist()
+    index = str(tmp_path / "index")
+    dd.check_minhash_index(spark, index)
+    dd.write_minhash_index(index, -1, *dd.build_minhash_index(corpus, "id", "t"), "id")
+    doc_id, text = (
+        corpus.filter(F.size(F.split("t", " ")) >= 10).orderBy("id").first()
+    )
+    batch = spark.createDataFrame(
+        [(9_000_001, text), (9_000_002, "some fresh batch document text here")],
+        "id: long, t: string",
+    )
+    pairs = dd.probe_minhash_index(
+        index, 0, *dd.build_minhash_index(batch, "id", "t"), "id", 0.6, []
+    )
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "documents.parquet" not in plan
+    assert plan.count("FileScan parquet") > 0  # the index arrays read
+    assert (9_000_001, doc_id, 1.0, "corpus") in [tuple(r) for r in pairs.collect()]
 
 
 def test_mask_spans_removes_boilerplate_longest_first(spark):
@@ -442,8 +434,8 @@ def test_auto_multiprobe_rejects_unfittable_explicit_values(spark):
         dd.auto_multiprobe_params(narrow, tables=16)
 
 
-def test_ngram_jaccard_driver_matches_distributed(spark):
-    """ngram_jaccard_pairs' driver strategy (auto under the row cap) is a
+def test_ngram_jaccard_driver_matches_distributed(spark, ngram_on):
+    """ngram_jaccard_pairs' driver path (under the row cap) is a
     physical rewrite only: identical (id_a, id_b, jaccard) sets to the
     distributed join — same tokenization (ASCII \\s+, trim-space-only,
     leading/trailing empty tokens), same truncated tail shingles, same
@@ -461,32 +453,19 @@ def test_ngram_jaccard_driver_matches_distributed(spark):
         (10, "one two three four"),
     ]
     df = spark.createDataFrame(rows, "id bigint, t string")
-    drv = sorted(
-        tuple(r)
-        for r in dd.ngram_jaccard_pairs(df, "id", "t", threshold=0.1).collect()
-    )
-    dist = sorted(
-        tuple(r)
-        for r in dd.ngram_jaccard_pairs(
-            df, "id", "t", threshold=0.1, strategy="distributed"
-        ).collect()
-    )
+    drv = ngram_on(df, distributed=False, threshold=0.1)
+    dist = ngram_on(df, distributed=True, threshold=0.1)
     assert drv == dist
     assert drv  # non-degenerate
     assert (5, 6, 1.0) in drv  # case folding unified the shingles
 
 
-def test_ngram_jaccard_auto_overflow_falls_back(spark, monkeypatch):
-    """auto falls back to the distributed join on row overflow AND on
-    candidate-pair overflow, producing the same rows either way."""
+def test_ngram_jaccard_auto_overflow_falls_back(spark, ngram_on, monkeypatch):
+    """The driver path falls back to the distributed join on row overflow
+    AND on candidate-pair overflow, producing the same rows either way."""
     texts = [(i, f"w{i} common one two three shared tail") for i in range(1, 9)]
     df = spark.createDataFrame(texts, "id bigint, t string")
-    want = sorted(
-        tuple(r)
-        for r in dd.ngram_jaccard_pairs(
-            df, "id", "t", threshold=0.2, strategy="distributed"
-        ).collect()
-    )
+    want = ngram_on(df, distributed=True, threshold=0.2)
     monkeypatch.setattr(dd, "NGRAM_DRIVER_ROW_CAP", 3)  # 8 rows overflow
     got = sorted(
         tuple(r) for r in dd.ngram_jaccard_pairs(df, "id", "t", threshold=0.2).collect()

@@ -453,7 +453,7 @@ def test_lm_bigram_two_pass_explode(spark):
     assert plan.count("CartesianProduct") == 0
 
 
-def test_lm_bigram_vectorized_scoring_has_no_shuffle(spark):
+def test_lm_bigram_vectorized_scoring_has_no_shuffle(spark, bigram_on):
     """The r8 vectorized scoring pass is shuffle-FREE on the hot path:
     once the model is fetched at plan build, the non-null lineage is
     scan → (fanout) → MapInPandas → row-local projections — nothing
@@ -461,10 +461,8 @@ def test_lm_bigram_vectorized_scoring_has_no_shuffle(spark):
     null-id-group branch's SinglePartition scalar fold (one partial row
     per task crosses it, never occurrence-scale data). Any other
     exchange means the scoring half regressed toward the fold's join."""
-    from mbgspark.operators.textstats import bigram_surprise
-
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
-    vec = bigram_surprise(docs, strategy="vectorized")
+    vec = bigram_on(docs, vectorized=True)
     plan = vec._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas _sums(" in plan  # hot path present
     exch = [ln for ln in plan.splitlines() if "Exchange" in ln]
@@ -715,7 +713,7 @@ def test_scorer_bnlj_stream_sides_fanned(spark):
     partition count, and a single-file corpus arrives as ONE split, so an
     unfanned scorer serializes millions of per-pair folds onto one task
     (VERDICT r10 item 4 mechanized). Expected counts per scorer row at
-    sf0.001 (where strategy='auto' resolves to the fold/BNLJ side):
+    sf0.001 (where the size-selected scorers resolve to the fold/BNLJ side):
     (fanned, bounded-unfanned). The only legitimate unfanned BNLJs are
     the IVF PROBE joins, whose stream is the bounded query frame —
     |queries| x n_cells pairs, where a fanout would cost more than the

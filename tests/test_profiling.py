@@ -2,8 +2,11 @@
 parquet can't produce (nulls, tiny groups, boundary buckets) plus the
 100 TB plan-shape pins for the new suite."""
 
+from unittest.mock import patch
+
 from pyspark.sql import functions as F
 
+from mbgspark.operators import curation
 from mbgspark.operators.curation import embedding_contamination
 from mbgspark.operators.profiling import (
     group_sample,
@@ -187,26 +190,34 @@ def test_embedding_contamination_flags_planted_copy(spark):
     assert out[1001]["max_bench_sim"] == 1.0
 
 
+def _contamination(corpus, bench, vectorized):
+    """``embedding_contamination`` (threshold 0.30) on one forced path: a
+    pair crossover of 0 picks the numpy matmul, an unreachable one the
+    fold. Only the fold joins (its bench broadcast nested loop), so that
+    plan marker makes a patch that stops steering fail."""
+    crossover = 0 if vectorized else float("inf")
+    with patch.object(curation, "_VECTORIZED_PAIR_CROSSOVER", crossover):
+        df = embedding_contamination(corpus, bench, "vec_id", "embedding", 0.30)
+    assert ("NestedLoopJoin" in _plan(df)) != vectorized
+    return df
+
+
+def _sims(df):
+    return {
+        r["vec_id"]: (r["max_bench_sim"], r["is_contaminated"])
+        for r in df.collect()
+    }
+
+
 def test_embedding_contamination_vectorized_matches_fold(spark):
-    """The numpy-matmul strategy is a physical rewrite only: every
+    """The numpy-matmul path is a physical rewrite only: every
     (max_bench_sim, is_contaminated) pair equals the fold path's after the
     shared round-4 surface (raw sums may differ in the last ulp)."""
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
     corpus = e.filter(F.col("vec_id") % 50 != 0)
     bench = e.filter(F.col("vec_id") % 50 == 0)
-    fold = {
-        r["vec_id"]: (r["max_bench_sim"], r["is_contaminated"])
-        for r in embedding_contamination(
-            corpus, bench, "vec_id", "embedding", 0.30, strategy="fold"
-        ).collect()
-    }
-    vec = {
-        r["vec_id"]: (r["max_bench_sim"], r["is_contaminated"])
-        for r in embedding_contamination(
-            corpus, bench, "vec_id", "embedding", 0.30, strategy="vectorized"
-        ).collect()
-    }
-    assert fold == vec
+    fold = _sims(_contamination(corpus, bench, vectorized=False))
+    assert fold == _sims(_contamination(corpus, bench, vectorized=True))
 
 
 def test_embedding_contamination_vectorized_plan_has_no_pairs(spark):
@@ -219,18 +230,16 @@ def test_embedding_contamination_vectorized_plan_has_no_pairs(spark):
         F.when(F.col("vec_id") == 1, F.lit(None)).otherwise(F.col("embedding")),
     )
     bench = e.filter(F.col("vec_id") % 50 == 0)
-    df = embedding_contamination(
-        corpus, bench, "vec_id", "embedding", 0.30, strategy="vectorized"
-    )
+    df = _contamination(corpus, bench, vectorized=True)
     plan = _plan(df)
     assert "Join" not in plan and "CartesianProduct" not in plan
     assert "MapInPandas" in plan
     rows = {r["vec_id"]: r for r in df.collect()}
     assert rows[1]["max_bench_sim"] is None
     assert rows[1]["is_contaminated"] is None
-    empty = embedding_contamination(
-        corpus, bench.limit(0), "vec_id", "embedding", 0.30, strategy="vectorized"
-    )
+    # zero bench rows: the vectorized body returns its empty frame
+    # before any Python stage
+    empty = _contamination(corpus, bench.limit(0), vectorized=True)
     assert empty.count() == 0
     assert [f.name for f in empty.schema.fields] == [
         "vec_id", "max_bench_sim", "is_contaminated",
@@ -238,18 +247,14 @@ def test_embedding_contamination_vectorized_plan_has_no_pairs(spark):
 
 
 def test_embedding_contamination_auto_crossover(spark):
-    """auto picks fold below the measured pair crossover (this corpus) and
-    would pick vectorized above it — pinned via the module constant so a
-    future re-measurement updates one number, not this test."""
-    from mbgspark.operators import curation
-
+    """The operator picks the fold below the measured pair crossover (this
+    corpus) — pinned via the module constant so a future re-measurement
+    updates one number, not this test."""
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
     corpus = e.filter(F.col("vec_id") % 50 != 0)
     bench = e.filter(F.col("vec_id") % 50 == 0)
     assert corpus.count() * bench.count() < curation._VECTORIZED_PAIR_CROSSOVER
-    df = embedding_contamination(
-        corpus, bench, "vec_id", "embedding", 0.30, strategy="auto"
-    )
+    df = embedding_contamination(corpus, bench, "vec_id", "embedding", 0.30)
     assert "MapInPandas" not in _plan(df)  # fold side of the crossover
 
 
@@ -740,7 +745,7 @@ def test_mad_zero_guard_flat_series_yields_null_in_both_engines(spark, tmp_path)
 def test_embedding_contamination_all_null_bench_matches_fold(spark):
     """A bench with ROWS but all-null VECTORS is not an empty bench: the
     fold still cross-joins it and emits one null-sim row per corpus id.
-    The vectorized strategy must agree (ADVICE r7), while a bench with
+    The vectorized path must agree (ADVICE r7), while a bench with
     zero rows stays the empty-result inner-join contract on both."""
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
     corpus = e.filter(F.col("vec_id") % 50 != 0).limit(20)
@@ -749,18 +754,8 @@ def test_embedding_contamination_all_null_bench_matches_fold(spark):
         .limit(3)
         .withColumn("embedding", F.lit(None).cast("array<double>"))
     )
-    fold = {
-        r["vec_id"]: (r["max_bench_sim"], r["is_contaminated"])
-        for r in embedding_contamination(
-            corpus, null_bench, "vec_id", "embedding", 0.30, strategy="fold"
-        ).collect()
-    }
-    vec = {
-        r["vec_id"]: (r["max_bench_sim"], r["is_contaminated"])
-        for r in embedding_contamination(
-            corpus, null_bench, "vec_id", "embedding", 0.30, strategy="vectorized"
-        ).collect()
-    }
+    fold = _sims(_contamination(corpus, null_bench, vectorized=False))
+    vec = _sims(_contamination(corpus, null_bench, vectorized=True))
     assert fold == vec
     assert len(fold) == 20
     assert all(v == (None, None) for v in fold.values())

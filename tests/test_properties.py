@@ -410,23 +410,17 @@ def test_driver_union_find_matches_bruteforce(edges):
     )
 )
 @SETTINGS
-def test_bigram_vectorized_property_equivalence(spark, texts):
+def test_bigram_vectorized_property_equivalence(spark, bigram_on, texts):
     """bigram_surprise fold ≡ vectorized on ANY doc list within the
     documented ASCII envelope (random whitespace runs incl. every char of
     Java's default \\s class, nulls, empties) — the hypothesis upgrade of
     the fixed-fixture pin: the Python re.ASCII tokenizer twin and the
     absent-row semantics must agree for arbitrary token shapes."""
-    from mbgspark.operators.textstats import bigram_surprise
-
     rows = list(enumerate(texts))
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    fold = sorted(
-        bigram_surprise(df, strategy="fold").collect(), key=lambda r: r["doc_id"]
-    )
-    vec = sorted(
-        bigram_surprise(df, strategy="vectorized").collect(),
-        key=lambda r: r["doc_id"],
-    )
+    key = lambda r: r["doc_id"]  # noqa: E731
+    fold = sorted(bigram_on(df, vectorized=False).collect(), key=key)
+    vec = sorted(bigram_on(df, vectorized=True).collect(), key=key)
     assert fold == vec
 
 
@@ -441,26 +435,16 @@ def test_bigram_vectorized_property_equivalence(spark, texts):
     )
 )
 @SETTINGS
-def test_ngram_driver_property_equivalence(spark, texts):
+def test_ngram_driver_property_equivalence(spark, ngram_on, texts):
     """ngram_jaccard_pairs driver ≡ distributed on ANY doc list in the
     ASCII envelope — random short docs over a 2-letter alphabet maximize
     candidate-pair collisions, the regime where a tokenization or
     rounding divergence would actually surface."""
-    from mbgspark.operators.dedup import ngram_jaccard_pairs
-
     rows = list(enumerate(texts))
     df = spark.createDataFrame(rows, "id bigint, t string")
-    key = lambda r: (r["id_a"], r["id_b"])  # noqa: E731
-    drv = sorted(
-        ngram_jaccard_pairs(df, "id", "t", k=2, threshold=0.3).collect(), key=key
+    assert ngram_on(df, distributed=False, k=2, threshold=0.3) == ngram_on(
+        df, distributed=True, k=2, threshold=0.3
     )
-    dist = sorted(
-        ngram_jaccard_pairs(
-            df, "id", "t", k=2, threshold=0.3, strategy="distributed"
-        ).collect(),
-        key=key,
-    )
-    assert drv == dist
 
 
 @given(

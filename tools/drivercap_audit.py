@@ -4,19 +4,20 @@ The four cap-guarded driver strategies each argue "cap-sized data fits
 comfortably on the driver" — but each argument implicitly assumes ONE
 query owns the driver heap:
 
-- ``components.connected_components`` auto: 1M (src, dst) edges
+- ``components.connected_components``: 1M (src, dst) edges
   (``_DRIVER_EDGE_CAP``);
-- ``dedup.ngram_jaccard_pairs`` auto: 100k (id, text) rows + shingle
+- ``dedup.ngram_jaccard_pairs``: 100k (id, text) rows + shingle
   dicts (``NGRAM_DRIVER_ROW_CAP`` / ``NGRAM_DRIVER_PAIR_CAP``);
-- ``textstats.bigram_surprise`` vectorized: 2M (w1, w2, int) model rows
-  (``LM_MODEL_DRIVER_CAP``);
+- ``textstats.bigram_surprise`` vectorized path: 2M (w1, w2, int) model
+  rows (``LM_MODEL_DRIVER_CAP``);
 - ``similarity.brute_force_topk`` vectorized: the query-side matrix
   (bounded by the broadcast contract, no fixed row cap — audited at a
   representative 20k × 64 floats).
 
 This script builds a cap-SIZED workload for each (synthetic, generated
-JVM-side — no files), runs each alone and then the two heaviest
-CONCURRENTLY in one session (Spark supports concurrent actions from
+JVM-side; the bigram corpus round-trips through a scratch parquet under
+``.bench_work/drivercap_audit`` so its leaf reports file bytes), runs
+each alone and then the two heaviest CONCURRENTLY in one session (Spark supports concurrent actions from
 threads), and samples VmRSS of the Python driver AND the JVM child at
 50 ms to report the true peak per phase. The output is the sizing
 evidence each module docstring cites.
@@ -28,13 +29,18 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import threading
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
+
+# scratch parquet under the checkout (git-ignored)
+WORK = os.path.join(REPO, ".bench_work", "drivercap_audit")
 
 
 def _rss_kb(pid: int) -> int:
@@ -102,7 +108,7 @@ def phase_components(spark):
     edges = spark.range(1_000_000).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
-    out = connected_components(edges, algorithm="auto")
+    out = connected_components(edges)
     n = out.count()
     assert n == 1_000_001, n
     return {"rows_fetched": 1_000_000, "nodes": n}
@@ -130,17 +136,25 @@ def phase_ngram(spark):
 def phase_bigram(spark):
     """100k docs x 21 globally-unique tokens -> exactly 2M distinct
     bigrams = LM_MODEL_DRIVER_CAP model rows collected + dict + pickled
-    broadcast — the heaviest single driver allocation of the four."""
+    broadcast — the heaviest single driver allocation of the four. The
+    docs round-trip through parquet: ``bigram_surprise`` picks its path
+    from the leaf's file bytes, and a ``spark.range`` leaf reports far
+    less than ``LM_VECTORIZED_MIN_BYTES``, so it would audit the fold."""
+    from mbgspark.jvmseam import node_class, physical_plan_root, walk_plan
     from mbgspark.operators.textstats import bigram_surprise
 
-    docs = spark.range(100_000).select(
+    path = os.path.join(WORK, "bigram_docs")
+    spark.range(100_000).select(
         F.col("id").alias("doc_id"),
         F.expr(
             "concat_ws(' ', transform(sequence(0, 20), j -> concat('t', id * 21 + j)))"
         ).alias("text"),
-    )
-    out = bigram_surprise(docs, strategy="vectorized")
+    ).write.mode("overwrite").parquet(path)
+    out = bigram_surprise(spark.read.parquet(path))
+    plan = walk_plan(physical_plan_root(out))
+    assert any(node_class(n) == "MapInPandasExec" for n in plan), "fold path"
     n = out.count()
+    shutil.rmtree(path)
     assert n == 100_000, n
     return {"model_rows": 2_000_000, "docs_scored": n}
 
