@@ -377,8 +377,16 @@ def merge_by_key(
     partitions and the isin filter lands as a PartitionFilter on the store
     scan (plan-pinned). The returned frame then only covers touched
     partitions — pair with dynamic partition overwrite, exactly like the
-    sink — and its partition column has the updates' type, with or
-    without ANSI.
+    sink.
+
+    Every column the two sides share comes back with the updates' type,
+    with or without ANSI and with or without ``partition_col``: a store
+    read infers its partition column's type (a day string reads back as
+    DATE) while the updates carry the written type, and without ANSI the
+    union widens both to STRING where under ANSI it narrows to DATE. The
+    cast compares ``simpleString()`` so nullability never adds one, and
+    it runs AFTER the prune, so the filter stays on the raw column and
+    prunes at the scan.
 
     Passing ``partition_col`` makes plan CONSTRUCTION eager: the touched
     partition values are collect()ed here (one tiny distinct over the
@@ -395,15 +403,16 @@ def merge_by_key(
         pred = F.col(partition_col).isin(non_null)
         if len(non_null) < len(touched):
             pred = pred | F.col(partition_col).isNull()
-        # A store read infers its partition column's type (a day string
-        # reads back as DATE) while the updates carry the written type;
-        # without ANSI the union widens both to STRING, under ANSI it
-        # narrows to DATE. Cast to the updates' type AFTER the filter, so
-        # the filter stays on the raw column and prunes at the scan.
-        existing = existing.filter(pred).withColumn(
-            partition_col,
-            F.col(partition_col).cast(updates.schema[partition_col].dataType),
-        )
+        existing = existing.filter(pred)
+    up_types = {f.name: f.dataType for f in updates.schema.fields}
+    recast = {
+        f.name: F.col(f.name).cast(up_types[f.name])
+        for f in existing.schema.fields
+        if f.name in up_types
+        and f.dataType.simpleString() != up_types[f.name].simpleString()
+    }
+    if recast:
+        existing = existing.withColumns(recast)
     ex = existing.withColumn("__is_update", F.lit(0))
     up = updates.withColumn("__is_update", F.lit(1))
     w = Window.partitionBy(key).orderBy(
@@ -437,13 +446,25 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
+def store_exists(spark: SparkSession, path: str) -> bool:
+    """True iff the store path exists on the session's Hadoop filesystem —
+    the explicit check that replaces catch-any-exception-as-missing."""
+    fs, p = jvmseam.hadoop_fs(spark, path)
+    return bool(fs.exists(p))
+
+
 def existing_partition_values(spark: SparkSession, path: str, partition_col: str) -> DataFrame:
     """F6 skip-scan support: list partition values already materialized, for
-    the incremental loader's anti-join (resilient_etl.py:304-318)."""
-    try:
-        return spark.read.parquet(path).select(partition_col).distinct()
-    except Exception:
-        return spark.createDataFrame([], f"{partition_col} string")
+    the incremental loader's anti-join (resilient_etl.py:304-318). A missing
+    store has none, and neither has an empty one (``retention_sweep``
+    leaves that when every day expired); any other read failure (a
+    corrupt footer, an unreadable file) raises rather than reporting a
+    clean store."""
+    if store_exists(spark, path):
+        fs, p = jvmseam.hadoop_fs(spark, path)
+        if len(fs.listStatus(p)):
+            return spark.read.parquet(path).select(partition_col).distinct()
+    return spark.createDataFrame([], f"{partition_col} string")
 
 
 def interleave_bits(qa, qb, bits: int = 8):

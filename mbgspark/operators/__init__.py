@@ -4,7 +4,6 @@ from mbgspark.operators.dedup import (
     keep_latest_per_key,
 )
 from mbgspark.operators.locate import containment_join_first_match, fuzzy_top1_join
-from mbgspark.operators.similarity import similarity_topk
 
 __all__ = [
     "dedup_by_key",
@@ -12,5 +11,4 @@ __all__ = [
     "keep_latest_per_key",
     "containment_join_first_match",
     "fuzzy_top1_join",
-    "similarity_topk",
 ]

@@ -1,6 +1,5 @@
 """As-of (point-in-time) join — an operator Spark lacks natively, built as a
-composition of DataFrame ops per the "custom operators" ladder (compose >
-pandas UDF > mapPartitions).
+composition of DataFrame ops (one window pass, no pandas round trip).
 
 For each left row, find the right row with the greatest ``right_ts`` ≤
 ``left_ts`` within the same key — the standard time-series enrichment join
@@ -41,8 +40,8 @@ def as_of_join(
     # a null-timestamp right row can never be "the most recent at-or-
     # before" anything, but under asc-nulls-first ordering it would sort
     # ahead of EVERYTHING in the window and leak its values into
-    # null-timestamp left rows — exclude it (found by the cogrouped-
-    # equality null test, review r4)
+    # null-timestamp left rows — exclude it (pinned by
+    # tests/test_asof.py::test_cogrouped_asof_handles_null_timestamps)
     r_tagged = right.filter(F.col(right_ts).isNotNull()).select(
         F.col(key),
         F.col(right_ts).alias("__ts"),
@@ -69,110 +68,3 @@ def as_of_join(
     drop = ["__ts", "__side"] + [f"__r_{v}" for v in right_vals] + [f"__asof_{v}" for v in right_vals]
     return out.drop(*drop)
 
-
-def as_of_join_cogrouped(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    right_vals: list[str],
-) -> DataFrame:
-    """The same as-of semantics via the cogrouped-pandas path
-    (``groupBy().cogroup().applyInPandas`` + ``pandas.merge_asof``) —
-    the rung BELOW the compositional default on the custom-operator
-    ladder, kept as a pinned-equal alternative for two reasons: it
-    exercises the cogroup API end-to-end (both sides of a key arrive in
-    one Arrow batch pair), and it is the escape hatch when per-key logic
-    outgrows window semantics (irregular interpolation, per-key models).
-    Same shuffle cost as the window formulation (both sides hash on
-    key); the difference is an Arrow round trip and a per-key pandas
-    sort instead of codegen — prefer ``as_of_join`` in the hot path.
-    ``tests/test_asof.py`` pins the two formulations row-identical.
-
-    Key-type contract: pandas merge_asof requires numeric/datetime
-    ordering keys and rejects nulls, where the window form is total —
-    NULL-timestamp left rows are therefore routed AROUND the merge
-    (emitted with null asof values, matching the window form's
-    last(ignorenulls) result) and null right timestamps are dropped
-    (they can never be "the most recent at-or-before" anything).
-
-    The right timestamp is renamed to the reserved ``__r_ts`` before the
-    merge (ADVICE r4): with the raw name, a left column spelled like
-    ``right_ts`` — including the common same-name-both-sides layout —
-    makes pandas suffix the collision ``_x``/``_y`` and the output
-    projection KeyErrors, where the window form handles same-name
-    columns fine. Left columns named ``__r_ts`` or colliding with an
-    ``asof_*`` output are rejected eagerly with the rename guidance."""
-    import pandas as pd
-
-    reserved = {"__r_ts"} | {f"asof_{v}" for v in right_vals}
-    clash = sorted(reserved & set(left.columns))
-    if clash:
-        raise ValueError(
-            f"as_of_join_cogrouped: left columns {clash} collide with "
-            "reserved merge names (__r_ts / asof_*); rename them first"
-        )
-    if len(set(right_vals)) != len(right_vals):
-        raise ValueError(
-            "as_of_join_cogrouped: right_vals contains duplicates — the "
-            "output would carry ambiguous duplicate asof_* columns"
-        )
-    if right_ts in right_vals:
-        # the rename dict would collapse ({right_ts: __r_ts} and
-        # {right_ts: asof_*} share a key) and the merge key vanishes —
-        # the window form handles this layout; use it, or alias the
-        # timestamp to a second column on the right first
-        raise ValueError(
-            f"as_of_join_cogrouped: right_vals must not contain the "
-            f"right timestamp column {right_ts!r}; select it under a "
-            "second alias on the right side, or use as_of_join"
-        )
-
-    out_fields = [f for f in left.schema.fields]
-    r_types = {v: right.schema[v].dataType.simpleString() for v in right_vals}
-    schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in out_fields]
-        + [f"`asof_{v}` {r_types[v]}" for v in right_vals]
-    )
-    l_cols = [f.name for f in out_fields]
-
-    out_cols = l_cols + [f"asof_{v}" for v in right_vals]
-
-    def with_null_asof(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = pdf.copy()
-        for v in right_vals:
-            out[f"asof_{v}"] = None
-        return out[out_cols]
-
-    def merge(l_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
-        null_left = l_pdf[l_pdf[left_ts].isna()]
-        l_live = l_pdf[l_pdf[left_ts].notna()]
-        r_live = r_pdf[r_pdf[right_ts].notna()] if not r_pdf.empty else r_pdf
-        if l_live.empty or r_live.empty:
-            return with_null_asof(l_pdf)
-        l_sorted = l_live.sort_values(left_ts, kind="mergesort")
-        r_sorted = (
-            r_live[[right_ts] + right_vals]
-            .rename(
-                columns={right_ts: "__r_ts", **{v: f"asof_{v}" for v in right_vals}}
-            )
-            .sort_values("__r_ts", kind="mergesort")
-        )
-        out = pd.merge_asof(
-            l_sorted,
-            r_sorted,
-            left_on=left_ts,
-            right_on="__r_ts",
-            direction="backward",
-            allow_exact_matches=True,
-        )[out_cols]
-        if null_left.empty:
-            return out
-        return pd.concat([out, with_null_asof(null_left)], ignore_index=True)
-
-    return (
-        left.groupBy(key)
-        .cogroup(right.groupBy(key))
-        .applyInPandas(merge, schema=schema)
-    )

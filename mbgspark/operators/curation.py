@@ -777,10 +777,8 @@ def domain_cap(
     survivor set is reproducible, stable under partitioning, and NESTED
     (a larger cap keeps a superset). One window per domain partition —
     the partition key is the skew axis itself, but the window only ranks
-    and truncates (no buffering beyond the running count), and a
-    two-stage guard for pathological mega-domains is the same hash-range
-    prefilter documented on group_sample. Emits the surviving rows +
-    their rank."""
+    and truncates (no buffering beyond the running count). Emits the
+    surviving rows + their rank."""
     from pyspark.sql import Window
 
     w = Window.partitionBy(domain_col).orderBy(

@@ -165,29 +165,20 @@ def group_sample(
     id_col: str,
     k: int = 5,
     salt: str = "",
-    prefilter_rate: float | None = None,
 ) -> DataFrame:
     """Deterministic per-group inspection sample: the k rows whose
     md5(id || salt) sorts first within each group — a reproducible
     "reservoir" (same k docs every run, engine-independent) for eyeballing
     each language/domain slice.
 
-    Plan shape: row_number over (group, hash) — a per-group sort. For
-    groups of ~anything up to millions that is fine (sort is within the
-    group's shuffle partitions); for a 100 TB group pass
-    ``prefilter_rate`` to hash-filter first (keep ~rate of rows row-locally,
-    THEN rank) — since rank order IS hash order, the k smallest hashes
-    survive any prefilter that keeps ≥ k rows per group; the trade is that
-    a group smaller than ~k/rate may return < k rows.
+    Plan shape: row_number over (group, hash) — a per-group sort within
+    the group's shuffle partitions.
     """
     h = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(salt)))
-    out = df.withColumn("__h", h)
-    if prefilter_rate is not None:
-        cutoff = f"{max(0, int(prefilter_rate * 65536)):04x}"
-        out = out.filter(F.substring(F.col("__h"), 1, 4) < F.lit(cutoff))
     w = Window.partitionBy(group_col).orderBy(F.col("__h"), F.col(id_col))
     return (
-        out.withColumn("sample_rank", F.row_number().over(w).cast("bigint"))
+        df.withColumn("__h", h)
+        .withColumn("sample_rank", F.row_number().over(w).cast("bigint"))
         .filter(F.col("sample_rank") <= k)
         .drop("__h")
     )
@@ -388,12 +379,7 @@ def _quantiles_from_histogram(
     return cum.groupBy("column_name").agg(*sel[1:]).select("column_name", *post)
 
 
-def profile_numeric(
-    df: DataFrame,
-    columns: list[str],
-    exact: bool = True,
-    approx_accuracy: int = 10000,
-) -> DataFrame:
+def profile_numeric(df: DataFrame, columns: list[str]) -> DataFrame:
     """Numeric twin of ``profile_table``: per-column count/nulls/min/max/
     mean plus EXACT median and p95 — deterministic and engine-portable,
     which approx sketches are not. All float surfaces rounded to 4 dp so
@@ -415,62 +401,9 @@ def profile_numeric(
     which would fork the scan again. Semantically identical — ``__cnt``
     is count(1), always ≥ 1.
 
-    ``exact=False`` is the 100 TB budget path: when even a
-    cardinality-bounded exact quantile is too heavy (near-unique
-    doubles at petabyte row counts), the whole profile collapses to a
-    SINGLE codegen aggregation pass — moments plus
-    ``percentile_approx(col, [0.5, 0.95], approx_accuracy)`` per column
-    (the KLL-style fixed-size sketch: O(accuracy) memory per function
-    regardless of cardinality, mergeable map-side) — one FileScan, one
-    partial/final agg pair, no histogram, no windows. Same output
-    schema; median/p95 are then approximate (rank error ≤ n/accuracy),
-    so the exact path stays the parity/oracle surface.
-
     Empty-input contract (ADVICE r13): profiling an EMPTY table yields
-    an EMPTY profile — zero rows, stable schema — on BOTH paths. The
-    exact path gets this for free (no histogram rows); the approx path
-    drops its per-column rows when the table-wide row count is 0 (the
-    filter below) rather than emitting n_values=0 stubs, so the two
-    paths can never diverge at the schema level based on the flag."""
-    if not exact:
-        aggs = []
-        for c in columns:
-            col = F.col(c).cast("double")
-            aggs += [
-                F.count(col).alias(f"__n_{c}"),
-                F.count(F.lit(1)).alias(f"__r_{c}"),
-                F.min(col).alias(f"__mn_{c}"),
-                F.max(col).alias(f"__mx_{c}"),
-                F.avg(col).alias(f"__av_{c}"),
-                F.percentile_approx(
-                    col, [0.5, 0.95], approx_accuracy
-                ).alias(f"__pq_{c}"),
-            ]
-        row = df.agg(*aggs)
-        per_col = [
-            F.struct(
-                F.lit(c).alias("column_name"),
-                F.col(f"__n_{c}").cast("bigint").alias("n_values"),
-                (F.col(f"__r_{c}") - F.col(f"__n_{c}"))
-                .cast("bigint").alias("n_null"),
-                F.round(F.col(f"__mn_{c}"), 4).alias("min_val"),
-                F.round(F.col(f"__mx_{c}"), 4).alias("max_val"),
-                F.round(F.col(f"__av_{c}"), 4).alias("avg_val"),
-                F.round(F.col(f"__pq_{c}")[0], 4).alias("median_val"),
-                F.round(F.col(f"__pq_{c}")[1], 4).alias("p95_val"),
-            )
-            for c in columns
-        ]
-        return (
-            row.select(F.explode(F.array(*per_col)).alias("p"))
-            .select("p.*")
-            # empty-input contract: n_values + n_null == count(1) == the
-            # table-wide row count for every column, so this drops ALL
-            # rows iff the input was empty and NO rows otherwise —
-            # matching the exact path's empty histogram.
-            .filter((F.col("n_values") + F.col("n_null")) > 0)
-            .orderBy("column_name")
-        )
+    an EMPTY profile — zero rows, stable schema — for free, since an
+    empty table has no histogram rows."""
     hist = _value_histogram(df, columns)
     nn_cnt = F.when(F.col("__v").isNotNull(), F.col("__cnt"))
     # min/max take __v + 0.0·__cnt — value-identical (__cnt is count(1):

@@ -23,15 +23,6 @@ from mbgspark.io import ensure_width
 from mbgspark.operators.dedup import cosine_sim, cosine_sim_prenorm, vec_norm
 
 
-def similarity_topk(*args, **kwargs) -> DataFrame:
-    """Default similarity-search entry point = the scale path (``ivf_topk``).
-    The exact scan is available only by explicitly calling
-    ``brute_force_topk`` — a user reaching for "top-k similar vectors"
-    should land on the cell-bucketed plan, not an accidental corpus-sized
-    nested loop (VERDICT r1 item 6)."""
-    return ivf_topk(*args, **kwargs)
-
-
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -231,29 +222,11 @@ def build_ivf_index(
     vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
-    """The ingest-time IVF index: every corpus vector assigned to its
-    nearest centroid cell — ``(match_id, cv, cell_id)``. The ANN analog of
-    ``dedup.build_minhash_index`` and subject to the same plan reality:
-    an un-materialized assignment lineage is recomputed by every consumer
-    (per-consumer pruning defeats ReuseExchange), so production persists
-    this frame (parquet partitioned by cell_id — then a probe reads ONLY
-    its nprobe cell partitions) and passes it to ``ivf_topk`` via
-    ``corpus_index``; re-centering (new k-means centroids) is an offline
-    rebuild, exactly like a FAISS IVF retrain. ``n_cells=None`` (the
-    default) auto-sizes to √n via ``auto_ivf_cells``; explicit
-    ``centroids`` fix the cell count themselves, so no auto count runs.
-
-    PROVENANCE: a DEFAULT-built index (centroids derived from corpus
-    rows, cell_id = the centroid's ``id_col``) carries the marker column
-    ``__default_cells`` — the zero-cost provenance bit that lets
-    ``ivf_topk(corpus_index=…)`` reconstruct the centroid table from
-    cell_ids safely, and that an explicit-centroid (kmeans) index does
-    NOT get (its cell_ids are list indices; a self-assignment heuristic
-    was tried first and defeated by seeded kmeans, whose centroid j
-    stays nearest its seed vector j — provenance must be recorded, not
-    inferred; review r5 third pass). The marker is a constant column, so
-    it survives parquet persistence and costs nothing to check."""
-    default_built = centroids is None
+    """The IVF index: every corpus vector assigned to its nearest
+    centroid cell — ``(match_id, cv, cell_id)``, the corpus side of
+    ``ivf_topk``'s cell-bucketed join. ``n_cells=None`` (the default)
+    auto-sizes to √n via ``auto_ivf_cells``; explicit ``centroids`` fix
+    the cell count themselves, so no auto count runs."""
     if n_cells is None and centroids is None:
         n_cells = auto_ivf_cells(corpus)
     cents = _centroid_table(corpus, n_cells, id_col, vec_col, centroids)
@@ -290,15 +263,12 @@ def build_ivf_index(
             ),
         )
     )
-    out = scored.groupBy("match_id").agg(
+    return scored.groupBy("match_id").agg(
         F.min_by(
             F.col("cell_id"), F.struct((-F.col("a_sim")).alias("ns"), F.col("cell_id"))
         ).alias("cell_id"),
         F.first("cv").alias("cv"),
     ).select("match_id", "cv", "cell_id")
-    if default_built:
-        out = out.withColumn("__default_cells", F.lit(True))
-    return out
 
 
 def _centroid_table(
@@ -331,7 +301,6 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
-    corpus_index: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k via IVF cells.
 
@@ -344,8 +313,7 @@ def ivf_topk(
     plan-build time (``auto_ivf_cells`` — the cell-count analog of the
     embedding-multiprobe block_bits rule); pass an explicit value to pin
     a configuration (the catalog gate queries do, so their oracles
-    replay the same cells). With a prebuilt ``corpus_index``, the cells
-    come from the INDEX, never re-derived — see below.
+    replay the same cells).
 
     Default centroids are the ``n_cells`` lowest-id corpus vectors —
     deterministic and cheap. Pass ``centroids`` (e.g. from
@@ -357,52 +325,12 @@ def ivf_topk(
     true neighbors concentrate in fewer probed cells, which is where IVF
     recall comes from at a fixed nprobe. Assignment and probing are
     broadcast joins against the tiny centroid table; the candidate join is
-    an equi-join on cell id. Pass ``corpus_index`` (a materialized
-    ``build_ivf_index`` frame) to skip corpus assignment entirely — the
-    same ingest-time-index contract as incremental dedup; centroids must
-    then match the ones the index was built with.
-
-    ``corpus_index`` + default cells derives the centroid table FROM THE
-    INDEX (review r5, second pass): default centroids are identified by
-    their corpus id (cell_id = the centroid row's ``id_col``), so the
-    index's distinct cell_ids joined back to the corpus reconstruct
-    exactly the build-time centroid set — immune to corpus growth, where
-    re-deriving √n cells from the CURRENT count would probe cells the
-    persisted index never assigned and recall would silently collapse.
-    The derivation is gated on the index's ``__default_cells``
-    provenance marker (see ``build_ivf_index`` — recorded at build
-    time, free to check): an explicit-centroid (kmeans) index lacks it,
-    so the call raises with guidance instead of silently joining its
-    list-index cell_ids against unrelated corpus rows (review r5, third
-    pass — a self-assignment heuristic was tried and defeated by seeded
-    kmeans). NOT detected: centroid rows deleted from the corpus after
-    the build (the index can't see the corpus) — keep centroid rows, or
-    rebuild."""
-    if corpus_index is not None and n_cells is None and centroids is None:
-        if "__default_cells" not in corpus_index.columns:
-            raise ValueError(
-                "corpus_index carries no __default_cells provenance marker "
-                "(explicit-centroid/kmeans index, or built before the marker "
-                "existed): its cell_ids cannot be mapped back to corpus "
-                "rows. Pass the centroids (kmeans index) or the n_cells the "
-                "index was built with."
-            )
-        cents = F.broadcast(
-            corpus.join(
-                corpus_index.select(F.col("cell_id").alias(id_col)).distinct(),
-                id_col,
-            ).select(F.col(id_col).alias("cell_id"), F.col(vec_col).alias("cent"))
-        )
-    else:
-        if n_cells is None and centroids is None:
-            n_cells = auto_ivf_cells(corpus)
-        cents = _centroid_table(corpus, n_cells, id_col, vec_col, centroids)
-    # corpus → nearest cell (top-1 by cosine), or the prebuilt index
-    assigned = (
-        corpus_index
-        if corpus_index is not None
-        else build_ivf_index(corpus, n_cells, id_col, vec_col, centroids)
-    )
+    an equi-join on cell id."""
+    if n_cells is None and centroids is None:
+        n_cells = auto_ivf_cells(corpus)
+    cents = _centroid_table(corpus, n_cells, id_col, vec_col, centroids)
+    # corpus → nearest cell (top-1 by cosine)
+    assigned = build_ivf_index(corpus, n_cells, id_col, vec_col, centroids)
     # query → nprobe nearest cells. This broadcast crossJoin deliberately
     # does NOT fan out its stream side: the stream is the QUERY frame,
     # bounded by the same contract that justifies broadcasting it
@@ -432,9 +360,9 @@ def ivf_topk(
         .select("query_id", "qv", "__qn", "cell_id")
     )
     scored = (
-        # the index may be a persisted frame without norms: attach cv's
-        # norm row-locally (candidates per query ≈ n·nprobe/cells — still
-        # far fewer folds than re-deriving both norms per pair)
+        # attach cv's norm row-locally (candidates per query ≈
+        # n·nprobe/cells — still far fewer folds than re-deriving both
+        # norms per pair)
         assigned.withColumn("__cvn", vec_norm(F.col("cv")))
         .join(probes, "cell_id")
         .filter(F.col("match_id") != F.col("query_id"))
@@ -758,9 +686,9 @@ def label_noise_flags(
     (id, label, neighbor_label, n_agree, is_suspect).
 
     ``neighbors`` injects a precomputed (query_id, match_id) top-k frame
-    — pass ``ivf_topk(df, df, k=k, ...)`` (or a persisted index lookup)
-    to run the audit at corpus scale without the exact all-pairs scan;
-    the vote logic is identical either way. The default exact scan runs
+    — pass ``ivf_topk(df, df, k=k, ...)`` to run the audit at corpus
+    scale without the exact all-pairs scan; the vote logic is identical
+    either way. The default exact scan runs
     ``strategy="auto"``: it is a SELF top-k (|corpus|² pairs), so on
     anything beyond a toy corpus the vectorized matmul path wins by
     construction."""

@@ -1,22 +1,20 @@
 """Text-analysis operators for a training-data pipeline: language ID,
-quality scoring, token counting, document fingerprinting.
+quality scoring, token counting, chunking, document fingerprinting,
+n-gram surprise, BM25 and TF-IDF similarity.
 
-All pure column expressions (whole-stage codegen), deterministic, and
-reproducible in an ANSI-SQL oracle — no model weights, no Python hot path.
+Column expressions (whole-stage codegen), deterministic, and reproducible
+in an ANSI-SQL oracle — no model weights and no table-generating
+functions. Python runs in two places only: ``normalize_unicode``'s
+pandas UDF (Spark has no Unicode normalizer) and the size-selected
+vectorized side of ``bigram_surprise``.
 """
 
 from __future__ import annotations
-
-import itertools
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mbgspark.io import _FANOUT_MIN_BYTES, ensure_width
-
-# per-process id source for registered UDTF/view names — deterministic,
-# monotonic, and unique across concurrent chunk_documents_udtf calls
-_UDTF_CALL_IDS = itertools.count()
 
 # Tiny per-language marker-word lists (n-gram heuristic stand-in). On real
 # corpora swap for charset n-gram profiles; the operator shape is identical.
@@ -805,7 +803,6 @@ def tfidf_cosine_pairs(
     k: int = 3,
     min_cos_e6: int = 100000,
     max_block_df: int | None = 100,
-    terms_index: DataFrame | None = None,
 ) -> DataFrame:
     """Sparse TF-IDF cosine similarity between documents — the
     sparse-vector member of the near-dup family (Jaccard sees token SETS,
@@ -835,26 +832,10 @@ def tfidf_cosine_pairs(
     integer-micro weights: products are exact in double, the cosine is
     quantized to e6 before the driver hash.
 
-    INDEX CONTRACT (the ``build_minhash_index`` precedent): this plan
-    consumes the top-terms frame from SIX branches (blocking-df window,
-    both candidate sides, both dot sides, norms), and Spark's
-    ReuseExchange only merges canonically identical subtrees — so an
-    un-materialized lineage re-runs the TF/DF/pack aggregates once per
-    consumer (visible as six copies of the 1-row corpus-count broadcast
-    in the executed plan, pinned in test_plan_shapes). Production
-    materializes ``tfidf_top_terms`` once at ingest (parquet or
-    ``persist()`` — k rows per doc, far smaller than the corpus) and
-    passes it via ``terms_index``; results are pinned identical either
-    way. The self-contained default stays for bounded gate-SF runs.
-
     Emits (id_a, id_b, n_shared_terms, cos_e6 >= min_cos_e6)."""
     from pyspark.sql import Window
 
-    t = (
-        terms_index
-        if terms_index is not None
-        else tfidf_top_terms(df, id_col, text_col, k)
-    )
+    t = tfidf_top_terms(df, id_col, text_col, k)
     # accumulate norms/dots in DOUBLE, mirroring the oracle exactly: a
     # corpus-unique term repeated ~220+ times at web-scale N pushes
     # score_micro^2 past 2^63, where a bigint sum would wrap silently
@@ -973,76 +954,3 @@ def augment_word_dropout(
         .drop("__toks", "__pairs")
     )
 
-
-def chunk_documents_udtf(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    chunk_tokens: int = 20,
-    stride: int = 15,
-) -> DataFrame:
-    """``chunk_documents`` re-expressed as a Python UDTF (lateral
-    table-valued function, Spark 3.5+) — the rung BELOW the
-    compositional default on the custom-operator ladder, kept as a
-    pinned-equal alternative for the same reasons as the cogrouped
-    as-of join: it exercises the UDTF API end-to-end (one input row →
-    many output rows from Python), and it is the escape hatch when
-    per-row expansion logic outgrows sequence/explode expressions
-    (stateful tokenizers, model-driven segmentation). Row-at-a-time
-    Python — prefer ``chunk_documents`` (pure codegen) in any hot path;
-    ``tests/test_chunking.py`` pins the two row-identical.
-
-    Registered names are derived from a per-process counter (ADVICE r4:
-    fixed global ``__chunk_in``/``__chunk_udtf`` names let two
-    concurrent or nested calls in one session clobber each other's
-    view), and the interpolated column names are backtick-quoted so
-    non-identifier names (spaces, dashes, keywords) parse."""
-    import re
-
-    from pyspark.sql.functions import udtf
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    if "`" in id_col or "`" in text_col:
-        raise ValueError("column names containing backticks are not supported")
-
-    # mirror the JVM semantics EXACTLY (the pin depends on it): Spark
-    # trim() strips only ' ' (not tabs/newlines, unlike Python strip()),
-    # and Java \s is the ASCII class [ \t\n\x0b\f\r] (Python's \s
-    # would also split on NBSP); a leading separator yields a leading ''
-    # token in both engines, so empties are NOT dropped
-    _java_ws = re.compile("[ \t\n\x0b\f\r]+")
-
-    @udtf(returnType=f"`{id_col}` {id_type}, chunk_idx int, chunk_text string, chunk_len bigint")
-    class Chunk:
-        def eval(self, doc_id, text):
-            toks = _java_ws.split((text or "").strip(" ").lower())
-            n = len(toks)
-            n_chunks = 1 + max(0, -(-(max(0, n - chunk_tokens)) // stride))
-            for i in range(n_chunks):
-                window = toks[i * stride : i * stride + chunk_tokens]
-                yield doc_id, i, " ".join(window), min(
-                    chunk_tokens, n - i * stride
-                )
-
-    spark = df.sparkSession
-    call_id = next(_UDTF_CALL_IDS)
-    udtf_name = f"__chunk_udtf_{call_id}"
-    view_name = f"__chunk_in_{call_id}"
-    spark.udtf.register(udtf_name, Chunk)
-    df.createOrReplaceTempView(view_name)
-    try:
-        # classic PySpark's spark.sql analyzes eagerly (this repo
-        # requires classic — io.py drives the JVM directly), so the
-        # resolved plan no longer needs the registrations — drop both
-        # immediately or a long-lived session (streaming driver calling
-        # this per batch) accumulates one view + one function per call
-        # (review r5). Under Spark Connect (unsupported here) analysis
-        # is deferred and this drop would have to move after the first
-        # action instead.
-        return spark.sql(
-            f"SELECT c.* FROM {view_name}, "
-            f"LATERAL {udtf_name}(`{id_col}`, `{text_col}`) AS c"
-        )
-    finally:
-        spark.catalog.dropTempView(view_name)
-        spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {udtf_name}")

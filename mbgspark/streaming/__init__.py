@@ -25,19 +25,13 @@ from mbgspark.io import (
     merge_by_key,
     recover_store_swap,
     staged_path,
+    store_exists,
     swap_store,
     unfinished_swap,
     write_partitioned,
 )
 from mbgspark.operators.dedup import keep_latest_per_key
 from mbgspark.schema import TWEET_RAW_SCHEMA
-
-
-def _store_exists(spark: SparkSession, path: str) -> bool:
-    """True iff the store path exists on the session's Hadoop filesystem —
-    the explicit check that replaces catch-any-exception-as-missing."""
-    fs, p = jvmseam.hadoop_fs(spark, path)
-    return bool(fs.exists(p))
 
 
 def _start_foreach_batch(
@@ -211,7 +205,7 @@ def start_merge_sink(
             # Only a genuinely-missing store means "first batch"; any other
             # read failure (transient FS error, corrupt footer) must surface,
             # not silently drop previously stored rows via the overwrite.
-            if _store_exists(spark, store_path):
+            if store_exists(spark, store_path):
                 existing = spark.read.parquet(store_path)
                 # Partition-scoped merge: the window only needs to see store
                 # rows in the partitions this batch touches (a re-delivered
@@ -453,7 +447,7 @@ def start_neardup_gate_sink_indexed(
         # the only batch that can be missing a path (later batches write
         # every path per batch, and partial partition N is invisible
         # behind the < N filter).
-        indexed_ready = _store_exists(spark, bands_path) and _store_exists(
+        indexed_ready = store_exists(spark, bands_path) and store_exists(
             spark, arrays_path
         )
         keep: list[DataFrame] = []
@@ -690,7 +684,7 @@ def start_cardinality_sink(
                 F.date_format(ts_col, "yyyy-MM-dd"), F.lit("__unknown__")
             ).alias("day")
         ).agg(F.hll_sketch_agg(key_col).alias("hll_sketch"))
-        if _store_exists(spark, store_path):
+        if store_exists(spark, store_path):
             existing = spark.read.parquet(store_path)
             touched = [r["day"] for r in day_sketches.select("day").distinct().collect()]
             hit = existing.filter(F.col("day").isin(touched))

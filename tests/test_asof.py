@@ -32,38 +32,6 @@ def test_asof_semantics(spark):
     assert out == {1: 200.0, 2: 100.0, 3: None, 4: None}
 
 
-def test_cogrouped_asof_matches_window_formulation(spark):
-    """The cogrouped-pandas merge_asof variant is row-identical to the
-    window carry-forward default on real events (same at-or-before
-    semantics, same nulls when no prior right row), including a key
-    present only on the left."""
-    from pyspark.sql import functions as F
-
-    from mbgspark.io import load_table
-    from mbgspark.operators.asof import as_of_join, as_of_join_cogrouped
-
-    e = load_table(spark, "/root/testdata/sf0.001", "events")
-    clicks = e.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", "event_id"
-    )
-    views = e.filter(F.col("event_type") == "view").select(
-        "user_id", F.col("ts").alias("vts"), F.col("value").alias("vval")
-    )
-
-    a = as_of_join(clicks, views, "user_id", "ts", "vts", ["vval"])
-    b = as_of_join_cogrouped(clicks, views, "user_id", "ts", "vts", ["vval"])
-    got_a = sorted(
-        (r["user_id"], r["event_id"], str(r["ts"]), r["asof_vval"])
-        for r in a.collect()
-    )
-    got_b = sorted(
-        (r["user_id"], r["event_id"], str(r["ts"]), r["asof_vval"])
-        for r in b.collect()
-    )
-    assert len(got_a) == len(got_b) > 0
-    assert got_a == got_b
-
-
 def test_scd2_apply_semantics_and_idempotence(spark):
     """Changed keys close+reopen, unchanged-attr updates are no-ops,
     new keys insert, history passes through — and replaying the SAME
@@ -106,11 +74,11 @@ def test_scd2_apply_semantics_and_idempotence(spark):
 
 
 def test_cogrouped_asof_handles_null_timestamps(spark):
-    """NULL-timestamp left rows get null asof values (like the window
-    form) instead of crashing pandas merge_asof; null right timestamps
-    are ignored."""
-    from mbgspark.operators.asof import as_of_join, as_of_join_cogrouped
-
+    """NULL-timestamp left rows get null asof values, and a null-timestamp
+    right row never leaks its value into them (under asc-nulls-first
+    ordering it would sort ahead of every left row of its key). The name
+    is kept from the deleted cogrouped-pandas twin; the rows below are
+    the ones that twin was pinned to."""
     left = spark.createDataFrame(
         [(1, 100, 10), (1, None, 11), (2, 50, 20)],
         "user_id bigint, ts bigint, event_id bigint",
@@ -119,18 +87,11 @@ def test_cogrouped_asof_handles_null_timestamps(spark):
         [(1, 90, 1.0), (1, None, 9.9), (2, 60, 2.0)],
         "user_id bigint, vts bigint, vval double",
     )
-    a = sorted(
+    got = sorted(
         (r["user_id"], r["event_id"], r["asof_vval"])
         for r in as_of_join(left, right, "user_id", "ts", "vts", ["vval"]).collect()
     )
-    b = sorted(
-        (r["user_id"], r["event_id"], r["asof_vval"])
-        for r in as_of_join_cogrouped(
-            left, right, "user_id", "ts", "vts", ["vval"]
-        ).collect()
-    )
-    assert b == [(1, 10, 1.0), (1, 11, None), (2, 20, None)]
-    assert a == b
+    assert got == [(1, 10, 1.0), (1, 11, None), (2, 20, None)]
 
 
 def test_scd2_rejects_late_arriving_updates(spark):
@@ -153,11 +114,9 @@ def test_scd2_rejects_late_arriving_updates(spark):
 
 def test_cogrouped_asof_same_name_timestamps(spark):
     """Left and right timestamp columns sharing a name (the common
-    layout) work in the cogrouped form — the right ts is renamed to the
-    reserved __r_ts before merge_asof, so pandas never suffixes a
-    collision (ADVICE r4). Pinned equal to the window form."""
-    from mbgspark.operators.asof import as_of_join, as_of_join_cogrouped
-
+    layout) join at-or-before like distinct names do. The name is kept
+    from the deleted cogrouped-pandas twin; the rows below are the ones
+    that twin was pinned to."""
     left = spark.createDataFrame(
         [(1, 100, 10), (1, 80, 11), (2, 50, 20)],
         "user_id bigint, ts bigint, event_id bigint",
@@ -166,66 +125,21 @@ def test_cogrouped_asof_same_name_timestamps(spark):
         [(1, 90, 1.0), (1, 100, 2.0), (2, 60, 3.0)],
         "user_id bigint, ts bigint, vval double",
     )
-    a = sorted(
+    got = sorted(
         (r["user_id"], r["event_id"], r["asof_vval"])
         for r in as_of_join(left, right, "user_id", "ts", "ts", ["vval"]).collect()
     )
-    b = sorted(
-        (r["user_id"], r["event_id"], r["asof_vval"])
-        for r in as_of_join_cogrouped(
-            left, right, "user_id", "ts", "ts", ["vval"]
-        ).collect()
-    )
-    assert b == [(1, 10, 2.0), (1, 11, None), (2, 20, None)]
-    assert a == b
-
-
-def test_cogrouped_asof_rejects_reserved_left_columns(spark):
-    """A left column colliding with the reserved merge names raises
-    eagerly with rename guidance instead of KeyErroring inside pandas."""
-    import pytest
-
-    from mbgspark.operators.asof import as_of_join_cogrouped
-
-    left = spark.createDataFrame(
-        [(1, 100, 5.0)], "user_id bigint, ts bigint, asof_vval double"
-    )
-    right = spark.createDataFrame(
-        [(1, 90, 1.0)], "user_id bigint, vts bigint, vval double"
-    )
-    with pytest.raises(ValueError, match="asof_vval"):
-        as_of_join_cogrouped(left, right, "user_id", "ts", "vts", ["vval"])
+    assert got == [(1, 10, 2.0), (1, 11, None), (2, 20, None)]
 
 
 def test_cogrouped_asof_rejects_right_ts_in_right_vals(spark):
-    """right_vals containing the right timestamp column would collapse
-    the rename dict and KeyError inside the executor — rejected eagerly
-    with guidance (review r5); the window form handles the same request."""
-    import pytest
-
-    from mbgspark.operators.asof import as_of_join, as_of_join_cogrouped
-
+    """right_vals may carry the right timestamp column itself: the join
+    returns it as ``asof_ts``. (The deleted cogrouped-pandas twin had to
+    reject this request, hence the name.)"""
     left = spark.createDataFrame(
         [(1, 100, 10)], "user_id bigint, lts bigint, event_id bigint"
     )
     right = spark.createDataFrame([(1, 90)], "user_id bigint, ts bigint")
-    with pytest.raises(ValueError, match="right_vals"):
-        as_of_join_cogrouped(left, right, "user_id", "lts", "ts", ["ts"])
-    # the window form serves the same request fine
     got = as_of_join(left, right, "user_id", "lts", "ts", ["ts"]).collect()
     assert got[0]["asof_ts"] == 90
 
-
-def test_cogrouped_asof_rejects_duplicate_right_vals(spark):
-    import pytest
-
-    from mbgspark.operators.asof import as_of_join_cogrouped
-
-    left = spark.createDataFrame(
-        [(1, 100, 10)], "user_id bigint, lts bigint, event_id bigint"
-    )
-    right = spark.createDataFrame(
-        [(1, 90, 1.0)], "user_id bigint, ts bigint, vval double"
-    )
-    with pytest.raises(ValueError, match="duplicates"):
-        as_of_join_cogrouped(left, right, "user_id", "lts", "ts", ["vval", "vval"])

@@ -264,47 +264,6 @@ def test_word_dropout_rate_determinism_and_seed_variation(spark):
     assert diff > 0
 
 
-def test_udtf_chunker_matches_compositional(spark):
-    """The Python-UDTF chunker is row-identical to the sequence/explode
-    default — the API-ladder equality pin (same device as the cogrouped
-    as-of join)."""
-    from mbgspark.io import load_table
-    from mbgspark.operators.textstats import chunk_documents, chunk_documents_udtf
-
-    d = load_table(spark, "/root/testdata/sf0.001", "documents")
-
-    def norm(df):
-        return sorted(map(tuple, df.collect()))
-
-    a = norm(chunk_documents(d, "doc_id", "text", 20, 15))
-    b = norm(chunk_documents_udtf(d, "doc_id", "text", 20, 15))
-    assert len(a) == len(b) > 0
-    assert a == b
-
-
-def test_udtf_chunker_concurrent_calls_do_not_clobber(spark):
-    """Two chunker plans built before either is evaluated stay distinct:
-    registered view/UDTF names are per-call (ADVICE r4 — fixed global
-    names let the second call rebind the first plan's view)."""
-    from mbgspark.operators.textstats import chunk_documents_udtf
-
-    d1 = spark.createDataFrame(
-        [(1, "a b c d e f")], "doc_id bigint, text string"
-    )
-    d2 = spark.createDataFrame(
-        [(2, "x y z")], "doc_id bigint, text string"
-    )
-    out1 = chunk_documents_udtf(d1, "doc_id", "text", chunk_tokens=4, stride=2)
-    out2 = chunk_documents_udtf(d2, "doc_id", "text", chunk_tokens=4, stride=2)
-    # evaluate AFTER both are built — with shared names, out1 would now
-    # read d2's rows
-    r1 = sorted(map(tuple, out1.collect()))
-    r2 = sorted(map(tuple, out2.collect()))
-    assert {t[0] for t in r1} == {1}
-    assert {t[0] for t in r2} == {2}
-    assert r1[0][2].startswith("a b")
-
-
 def test_tfidf_cosine_stop_term_cutoff_bounds_blocks_not_scores(spark):
     """The max_block_df blocking cutoff (VERDICT r4 item 3): a pair
     sharing ONLY an over-cutoff stop term never forms, a pair sharing
@@ -354,24 +313,3 @@ def test_tfidf_cosine_stop_term_cutoff_bounds_blocks_not_scores(spark):
     }
     assert wide == uncapped
 
-
-def test_tfidf_cosine_terms_index_path_is_identical(spark):
-    """The materialized-terms-index path (the build_minhash_index
-    contract applied to sparse cosine) returns row-identical results to
-    the self-contained default — and is what production passes so the
-    six-consumer plan stops re-running the TF/DF aggregates."""
-    from mbgspark.io import load_table
-    from mbgspark.operators.textstats import tfidf_cosine_pairs, tfidf_top_terms
-
-    d = load_table(spark, "/root/testdata/sf0.001", "documents")
-    direct = tfidf_cosine_pairs(d, "doc_id", "text", k=3, min_cos_e6=1).collect()
-    idx = tfidf_top_terms(d, "doc_id", "text", k=3).persist()
-    try:
-        idx.count()
-        indexed = tfidf_cosine_pairs(
-            d, "doc_id", "text", k=3, min_cos_e6=1, terms_index=idx
-        ).collect()
-        assert len(direct) == len(indexed) > 0
-        assert direct == indexed
-    finally:
-        idx.unpersist()

@@ -148,6 +148,45 @@ def test_merge_by_key_partition_col_keeps_update_type_under_ansi(spark, tmp_path
     assert on == want
 
 
+def test_merge_and_reprocess_keep_update_type_under_ansi(spark, tmp_path, tweets_raw):
+    """Without ``partition_col`` too, a store read's DATE-inferred
+    ``event_date`` comes back as the updates' STRING under ANSI — for a
+    plain ``merge_by_key`` and for ``pipeline.reprocess``, which merges
+    the whole store."""
+    from mbgspark.pipeline import locations_dim, reprocess, run_etl
+    from mbgspark.sources.ingest import dedup_ingest_batch
+
+    store_path = str(tmp_path / "store")
+    write_partitioned(
+        _store(spark, [("a", 1, dt.datetime(2025, 1, 1), "2025-01-01")]),
+        store_path,
+        "event_date",
+    )
+    updates = _store(spark, [("a", 2, dt.datetime(2025, 1, 3), "2025-01-01")])
+    dim = locations_dim(spark)
+    etl_path = str(tmp_path / "etl")
+    write_partitioned(run_etl(dedup_ingest_batch(tweets_raw), dim), etl_path, "event_date")
+
+    prior = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+        merged = merge_by_key(spark.read.parquet(store_path), updates)
+        stored = spark.read.parquet(etl_path)
+        assert stored.schema["event_date"].dataType.simpleString() == "date"
+        _, updated = reprocess(
+            stored.withColumn("sentiment_label", F.lit(None).cast("string")), dim
+        )
+        assert merged.schema["event_date"].dataType.simpleString() == "string"
+        assert [(r["_id"], r["v"], r["event_date"]) for r in merged.collect()] == [
+            ("a", 2, "2025-01-01")
+        ]
+        assert updated.schema["event_date"].dataType.simpleString() == "string"
+        want = {str(r["event_date"]) for r in stored.collect()}
+        assert {r["event_date"] for r in updated.collect()} == want
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prior)
+
+
 def test_merge_by_key_null_partition_updates_not_duplicated(spark):
     """An update row with a NULL partition value must still MERGE against
     the existing NULL-partition rows — plain isin(touched) never matches
@@ -372,6 +411,27 @@ def test_retention_sweep_rejects_mixed_width_partition_values(spark, tmp_path):
     write_partitioned(df, store, "event_date")
     with pytest.raises(ValueError, match="fixed-width"):
         retention_sweep(spark, store, "event_date", "2020-01-06")
+
+
+def test_retention_sweep_raises_on_unreadable_store(spark, tmp_path):
+    """Only a missing or empty store lists no partitions. A store whose
+    one file has a corrupt footer must raise, not report a clean store
+    while an expired day is still on disk."""
+    import pytest
+
+    from mbgspark.io import retention_sweep
+
+    day = tmp_path / "store" / "event_date=2020-01-01"
+    day.mkdir(parents=True)
+    (day / "part-00000.parquet").write_bytes(b"PAR1 not a parquet footer")
+    with pytest.raises(Exception, match="readParquetFooters"):
+        retention_sweep(spark, str(tmp_path / "store"), "event_date",
+                        "2020-01-05", dry_run=True)
+    assert retention_sweep(spark, str(tmp_path / "missing"), "event_date",
+                           "2020-01-05", dry_run=True) == []
+    (tmp_path / "emptied").mkdir()
+    assert retention_sweep(spark, str(tmp_path / "emptied"), "event_date",
+                           "2020-01-05", dry_run=True) == []
 
 
 # ---------------------------------------------- Mongo migration contract ----

@@ -74,31 +74,6 @@ def test_ivf_accepts_kmeans_centroids_same_shape_and_sane_recall(spark):
     assert recall_trained >= 0.5
 
 
-def test_ivf_corpus_index_mode_matches_and_skips_assignment(spark):
-    """A materialized build_ivf_index frame slots into ivf_topk without
-    changing results, and the lookup plan reads the cached assignment
-    instead of re-scoring the corpus against centroids."""
-    from pyspark.sql import functions as F
-
-    from mbgspark.operators.similarity import build_ivf_index, ivf_topk
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = e.filter(F.col("vec_id") < 5)
-    direct = ivf_topk(e, q, k=3, n_cells=8, nprobe=2).collect()
-    idx = build_ivf_index(e, n_cells=8).persist()
-    try:
-        idx.count()
-        indexed = ivf_topk(e, q, k=3, n_cells=8, nprobe=2, corpus_index=idx)
-        assert indexed.collect() == direct
-        plan = indexed._jdf.queryExecution().executedPlan().toString()
-        # same invariant as the dedup index pin: every parquet-scan string
-        # in the plan belongs to a cached-relation description, except the
-        # query/centroid side which reads the (tiny) embeddings directly
-        assert "InMemoryTableScan" in plan
-    finally:
-        idx.unpersist()
-
-
 def test_quantized_topk_recall_and_int8_range(spark):
     """int8-quantized cosine top-k (the 4x-memory PQ-style first pass)
     recovers the float-exact top-3 at high recall on real embeddings, the
@@ -250,73 +225,6 @@ def test_auto_ivf_cells_sqrt_rule_and_default_recall(spark):
     assert len(auto & exact) / len(exact) >= 0.6, (cells, len(auto & exact))
 
 
-def test_ivf_index_default_cells_derive_from_index_and_survive_growth(spark):
-    """corpus_index + default cells probes the INDEX's centroid set
-    (cell_ids joined back to the corpus), not a re-derived sqrt(n) of
-    the CURRENT corpus — so a query against a persisted index stays
-    correct after the corpus grows (review r5: the re-derive would rank
-    against cells the index never assigned)."""
-    from pyspark.sql import functions as F
-
-    from mbgspark.io import load_table
-    from mbgspark.operators.similarity import build_ivf_index, ivf_topk
-
-    e = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    idx = build_ivf_index(e, n_cells=8).persist()
-    try:
-        idx.count()
-        q = e.filter(F.col("vec_id") < 3)
-        explicit = ivf_topk(e, q, k=3, n_cells=8, corpus_index=idx).collect()
-        derived = ivf_topk(e, q, k=3, corpus_index=idx).collect()
-        assert derived == explicit and len(derived) > 0
-
-        # corpus grows AFTER the index was persisted: the derived-cells
-        # path still probes exactly the original 8 cells (new high-id
-        # vectors are simply not in the index; nothing mis-ranks)
-        base = e.select("vec_id", "embedding")
-        grown = base.unionByName(
-            base.select((F.col("vec_id") + 100000).alias("vec_id"), "embedding")
-        )
-        after_growth = ivf_topk(grown, q, k=3, corpus_index=idx).collect()
-        assert after_growth == explicit
-    finally:
-        idx.unpersist()
-
-
-def test_ivf_index_derived_cells_reject_kmeans_built_index(spark):
-    """An index built with EXPLICIT (kmeans) centroids carries list-index
-    cell_ids and no __default_cells provenance marker — the
-    derive-from-index convenience path raises with guidance instead of
-    silently joining cell ids against unrelated corpus rows (review r5,
-    third pass; recorded provenance, because a self-assignment heuristic
-    is defeated by seeded kmeans keeping centroid j nearest its seed)."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from mbgspark.io import load_table
-    from mbgspark.operators.similarity import (
-        build_ivf_index,
-        ivf_topk,
-        kmeans_centroids,
-    )
-
-    e = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    cents = kmeans_centroids(e, k=8, iterations=2)
-    idx = build_ivf_index(e, centroids=cents).persist()
-    try:
-        idx.count()
-        with pytest.raises(ValueError, match="provenance"):
-            ivf_topk(e, e.filter(F.col("vec_id") < 3), k=3, corpus_index=idx)
-        # the documented correct call still works
-        ok = ivf_topk(
-            e, e.filter(F.col("vec_id") < 3), k=3,
-            corpus_index=idx, centroids=cents,
-        )
-        assert ok.count() > 0
-    finally:
-        idx.unpersist()
-
-
 def test_brute_force_topk_vectorized_matches_fold(spark):
     """The numpy strategy is a physical rewrite only: identical
     (query_id, match_id, cos_sim, rnk) rows — same 4-dp scores, same
@@ -414,5 +322,3 @@ def test_ivf_index_string_id_tiebreak_deterministic(spark):
     cells = {r["match_id"]: r["cell_id"] for r in idx}
     for i in range(8):
         assert cells[f"doc_{i:02d}"] == "doc_00", cells
-    # and the marker column survives
-    assert all(r["__default_cells"] for r in idx)

@@ -127,22 +127,6 @@ def test_group_sample_deterministic_and_bounded(spark):
     assert ids1 == ids2
 
 
-def test_group_sample_prefilter_matches_exact_when_generous(spark):
-    # rank order IS hash order, so any prefilter keeping >= k rows per
-    # group preserves the exact sample
-    df = spark.read.parquet(f"{SF}/documents.parquet")
-    exact = sorted(
-        r["doc_id"]
-        for r in group_sample(df, "lang", "doc_id", k=2).select("doc_id").collect()
-    )
-    pre = sorted(
-        r["doc_id"]
-        for r in group_sample(df, "lang", "doc_id", k=2, prefilter_rate=0.8)
-        .select("doc_id").collect()
-    )
-    assert pre == exact
-
-
 # ----------------------------------------------------- length histogram ----
 
 
@@ -419,56 +403,17 @@ def test_profile_numeric_stats_rollup_maps_once(spark):
     assert plan.count("partial_min") == 1, plan
 
 
-def test_profile_numeric_approx_path_single_agg(spark):
-    """exact=False is the 100 TB budget path: same schema, quantiles
-    within sketch tolerance of exact, and the plan is ONE FileScan with
-    ONE partial/final aggregate pair — no histogram, no windows."""
-    from mbgspark.operators.profiling import profile_numeric
-
-    df = spark.read.parquet(f"{SF}/lineitem.parquet")
-    cols = ["l_quantity", "l_discount"]
-    ex = profile_numeric(df, cols)
-    ap = profile_numeric(df, cols, exact=False)
-    assert ap.columns == ex.columns
-    e = {r["column_name"]: r for r in ex.collect()}
-    a = {r["column_name"]: r for r in ap.collect()}
-    for c in cols:
-        assert a[c]["n_values"] == e[c]["n_values"]
-        assert a[c]["n_null"] == e[c]["n_null"]
-        assert a[c]["min_val"] == e[c]["min_val"]
-        assert a[c]["max_val"] == e[c]["max_val"]
-        # avg is summed in different orders on the two paths (Σv·cnt/Σcnt
-        # vs running avg), so post-round 4-dp equality is data-dependent;
-        # compare with a half-ulp-of-rounding band instead (ADVICE r13)
-        assert abs(a[c]["avg_val"] - e[c]["avg_val"]) <= 1e-4
-        # rank error ≤ n/accuracy; these columns' spreads make that a
-        # loose absolute band
-        assert abs(a[c]["median_val"] - e[c]["median_val"]) <= 1.0
-        assert abs(a[c]["p95_val"] - e[c]["p95_val"]) <= 1.0
-    plan = _plan(ap).split("== Initial Plan ==")[0]
-    assert plan.count("FileScan parquet") == 1, plan
-    assert "Window" not in plan, plan
-
-
 def test_profile_numeric_empty_input_both_paths_agree(spark):
     """Empty-input contract (ADVICE r13): an empty table profiles to an
-    EMPTY result — zero rows, stable schema — on BOTH the exact and the
-    approx path, so the `exact` flag can never flip schema-level
-    behavior. (The approx path used to emit one n_values=0 stub per
-    column while the exact path emitted nothing.)"""
+    EMPTY result — zero rows — while a one-row frame still
+    yields one row per column. (The name is kept from when an approx
+    path was checked against the same contract; that path is deleted.)"""
     from mbgspark.operators.profiling import profile_numeric
 
     df = spark.createDataFrame([], "a: double, b: double")
-    ex = profile_numeric(df, ["a", "b"])
-    ap = profile_numeric(df, ["a", "b"], exact=False)
-    assert ex.columns == ap.columns
-    assert ex.count() == 0
-    assert ap.count() == 0
-    # and a NON-empty single-row frame still yields one row per column
-    # on both paths (the filter only bites on truly empty input)
+    assert profile_numeric(df, ["a", "b"]).count() == 0
     one = spark.createDataFrame([(1.0, None)], "a: double, b: double")
     assert profile_numeric(one, ["a", "b"]).count() == 2
-    assert profile_numeric(one, ["a", "b"], exact=False).count() == 2
 
 
 def test_split_leakage_flags_planted_cross_split_duplicates(spark):
